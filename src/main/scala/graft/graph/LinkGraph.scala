@@ -1,5 +1,8 @@
 package graft.graph
 
+import org.apache.spark.{NarrowDependency, Partition, TaskContext}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -9,6 +12,33 @@ import graft.model._
 /** A fully prepared link graph: compacted ids, duplicate-folded weighted edges,
   * degree tables, and the partitioned destination-block adjacency used by the
   * superstep kernel.
+  *
+  * '''The build is one block-routed pipeline, with no joins.''' Block b owns
+  * vids `[b·blockSize, (b+1)·blockSize)`.
+  *  1. The sorted dictionary is cut into per-block slices of external ids
+  *     (narrowly, from the dictionary build's own sorted runs).
+  *  1. Folded edges are routed by their `src` id to that block's slice, which
+  *     remaps `src`; then by their `dst` id, which remaps `dst` (a
+  *     driver-resident dictionary is broadcast instead, and both ends are
+  *     remapped before the one `dst` route). Rows cross every exchange as
+  *     per-(map task, block) primitive batches.
+  *  1. After the `dst` route, partition b holds exactly block b's in-edges:
+  *     that is the [[edges]] cache, sorted by (dst, src).
+  *  1. The per-block kernel ([[LinkGraph.blockParts]]) turns partition b into
+  *     the dst-major parts where it lies: each vertex's in-degree is the sum
+  *     over its sorted run, `wNorm = w / inDeg`, and the run is split into parts
+  *     of at most [[LinkGraph.MaxEdgesPerPart]] edges. Both [[adjParts]] and
+  *     [[adjPartsByBlock]] read this one result.
+  *  1. The same wNorm rows cross one src-block exchange, and the same kernel
+  *     (without normalizing) gives the gather parts [[gatherPartsRdd]].
+  * Edges that were not laid out by this build (the resident fold, the public
+  * constructor, [[LinkGraph.fromDenseWeighted]], dense-by-max) are routed by
+  * dst block once before the kernel. Under [[LinkGraph.ResidentAssembleBytes]] the same kernel
+  * runs on the driver over [[edgesLocal]].
+  *
+  * Per-task memory of the kernel is about 32 B × the edges in one block: a
+  * packed (slot, vid) long and a weight per edge, plus the parts it emits.
+  * Packing needs vids below 2³² and blocks below 2³¹ slots (required).
   *
   * @param vertexDict  (extId, vid) dictionary; vid dense 0..n-1 ascending by extId
   *                    (reference: `enumerate(np.unique(edges))`, pagerank.py:622-627)
@@ -24,9 +54,22 @@ final class LinkGraph(
     val numVertices: Long,
     val numBlocks: Int,
     val blockSize: Long,
-    private[graft] val knownNumEdges: Long = -1L
+    private[graft] val knownNumEdges: Long = -1L,
+    /** partition b of the [[edges]] cache holds exactly block b's in-edges */
+    private[graft] val edgesByDstBlock: Boolean = false
 ) extends Serializable {
   import spark.implicits._
+
+  /** The dictionary's own slice count, fixed when the dictionary was built
+    * (every builder sets it explicitly), not the session's parallelism now:
+    * the resident degree table lays its rows out in the same slices.
+    */
+  private lazy val dictSlices: Int = vertexDict.rdd.getNumPartitions
+
+  // the kernel packs (slot, vid) into one long; refuse rather than mis-sort
+  require(numVertices <= (1L << 32) && blockSize <= Int.MaxValue.toLong,
+    s"block adjacency packs (slot, vid) into one long: needs numVertices ≤ 2^32 and " +
+      s"blockSize < 2^31, got numVertices=$numVertices blockSize=$blockSize")
 
   /** Bench/restore hooks: a pre-assembled blocked adjacency (e.g. read back
     * from parquet written by a prior process) replaces the fold+sort+assemble
@@ -34,8 +77,8 @@ final class LinkGraph(
     * must be the SAME AdjPart layout this graph's (numBlocks, blockSize)
     * would produce — [[LinkGraph.fromPrebuiltParts]] is the entry point.
     */
-  @volatile private[graft] var prebuiltDstParts: Option[org.apache.spark.rdd.RDD[AdjPart]] = None
-  @volatile private[graft] var prebuiltGatherParts: Option[org.apache.spark.rdd.RDD[AdjPart]] = None
+  @volatile private[graft] var prebuiltDstParts: Option[RDD[AdjPart]] = None
+  @volatile private[graft] var prebuiltGatherParts: Option[RDD[AdjPart]] = None
 
   /** Stronger prebuilt hooks: parts that are ALREADY in the build's layout —
     * partition b = block b's parts in (blockId, partId) assembler order, with
@@ -44,8 +87,8 @@ final class LinkGraph(
     * shuffled every adjacency byte once per leg); the supplier guarantees the
     * layout (see graft.tools.PartIO.readLaidOut).
     */
-  @volatile private[graft] var prebuiltDstPartsLaidOut: Option[org.apache.spark.rdd.RDD[(Int, AdjPart)]] = None
-  @volatile private[graft] var prebuiltGatherPartsLaidOut: Option[org.apache.spark.rdd.RDD[AdjPart]] = None
+  @volatile private[graft] var prebuiltDstPartsLaidOut: Option[RDD[(Int, AdjPart)]] = None
+  @volatile private[graft] var prebuiltGatherPartsLaidOut: Option[RDD[AdjPart]] = None
 
   lazy val numEdges: Long = if (knownNumEdges >= 0) knownNumEdges else edges.count()
 
@@ -57,11 +100,15 @@ final class LinkGraph(
   @volatile private[graft] var edgesLocalPre: Option[Array[Edge]] = None
   lazy val edgesLocal: Array[Edge] = edgesLocalPre.getOrElse(edges.collect())
 
+  /** Broadcasts this graph's caches read; destroyed by [[unpersistAll]]. */
+  @transient private val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
+
+  private def track[T](b: Broadcast[T]): Broadcast[T] = { broadcasts += b; b }
+
   /** True when the blocked adjacency can be ASSEMBLED on the driver: no
     * prebuilt injection, adjacency bytes under the gate, vids in Int range.
-    * The driver assembly is bit-identical to [[buildParts]] (same wNorm from
-    * the same distributed inDegrees cache, same total sort order, same
-    * assembler) — see [[assembleLocal]].
+    * The driver runs the same per-block kernel as the cluster build, so the
+    * parts are bit-identical.
     */
   private def residentAssembleOk: Boolean =
     prebuiltDstParts.isEmpty && prebuiltGatherParts.isEmpty &&
@@ -69,56 +116,36 @@ final class LinkGraph(
       numVertices <= Int.MaxValue.toLong &&
       numEdges * 16 < LinkGraph.ResidentAssembleBytes
 
-  /** Driver twin of [[buildParts]]. deg comes from a collect of the SAME
-    * distributed inDegrees cache (so wNorm is the identical IEEE division on
-    * identical deg values for ANY weights); rows are sorted by (key, other) —
-    * blockId = key/blockSize is monotone in key, so this is the identical
-    * total order the per-block sortWithinPartitions produces — and fed to the
-    * same streaming assembler. Caveat: duplicate (src, dst) rows (possible
-    * only through fromDenseWeighted's caller) have an undefined relative
-    * order in BOTH paths; every fold-built graph is duplicate-free.
+  /** Dst-major parts assembled on the driver: [[edgesLocal]] bucketed by dst
+    * block, each block through [[LinkGraph.blockParts]]. Block order, partId
+    * order within a block — the cluster layout's partition order.
     */
-  private def assembleLocal(dstMajor: Boolean): Array[AdjPart] = {
-    val degRows = inDegrees.select($"vid", $"deg").as[(Long, Double)].collect()
-    val degMap = new java.util.HashMap[Long, java.lang.Double](degRows.length * 2)
-    degRows.foreach { case (vid, deg) => degMap.put(vid, deg) }
-    val es = edgesLocal
-    val m = es.length
-    // primitive dual-array sort: (key, other) packed into one long (vids are
-    // dense < 2³¹ under the residentAssembleOk gate) with wNorm carried
-    // alongside — an object sort of millions of Edge rows cost ~1.5 s per
-    // orientation at the 2M-edge repo graph, ~10× this
-    val packed = new Array[Long](m)
-    val wn = new Array[Double](m)
-    var i = 0
-    while (i < m) {
-      val e = es(i)
-      val key = if (dstMajor) e.dst else e.src
-      val other = if (dstMajor) e.src else e.dst
-      packed(i) = (key << 32) | other
-      wn(i) = e.weight / degMap.get(e.dst).doubleValue()
-      i += 1
+  @transient private lazy val dstAssembled: Option[Array[AdjPart]] =
+    if (!residentAssembleOk) None
+    else {
+      val rows = new Array[LinkGraph.Rows](numBlocks)
+      edgesLocal.foreach(e => LinkGraph.addByDst(rows, blockSize, e.src, e.dst, e.weight))
+      Some(LinkGraph.partsOf(rows, normalize = true))
     }
-    LinkGraph.dualSort(packed, wn, 0, m - 1)
-    val bs = blockSize
-    val it = Iterator.range(0, m).map { j =>
-      val key = packed(j) >>> 32
-      val other = packed(j) & 0xffffffffL
-      (key, other, wn(j), (key / bs).toInt)
+
+  /** Src-major parts assembled on the driver from [[dstAssembled]]'s wNorm rows
+    * (shared by [[gatherPartsLocal]] and [[gatherPartsRdd]]).
+    */
+  @transient private lazy val gatherAssembled: Option[Array[AdjPart]] =
+    dstAssembled.map { parts =>
+      LinkGraph.partsOf(LinkGraph.rowsBySrc(parts.iterator, blockSize, numBlocks), normalize = false)
     }
-    new AdjPartAssembler(it, bs, LinkGraph.MaxEdgesPerPart).toArray
-  }
 
   /** Distribute driver-assembled parts in the build's exact layout: partition
-    * b = block b's parts in assembler order (the data rides a broadcast; the
-    * establishing shuffle moves numBlocks ints).
+    * b = block b's parts in assembler order (the data rides a broadcast,
+    * destroyed by [[unpersistAll]]; the establishing shuffle moves numBlocks ints).
     */
-  private def laidOutRdd(parts: Array[AdjPart]): org.apache.spark.rdd.RDD[AdjPart] = {
+  private def laidOutRdd(parts: Array[AdjPart]): RDD[AdjPart] = {
     val nb = numBlocks
     val byBlock = Array.fill(nb)(scala.collection.mutable.ArrayBuffer.empty[AdjPart])
     parts.foreach(p => byBlock(p.blockId) += p)
     val grouped: Array[Array[AdjPart]] = byBlock.map(_.toArray)
-    val b = spark.sparkContext.broadcast(grouped)
+    val b = track(spark.sparkContext.broadcast(grouped))
     spark.sparkContext
       .parallelize(0 until nb, nb)
       .map(i => (i, i))
@@ -128,11 +155,16 @@ final class LinkGraph(
         preservesPartitioning = true)
   }
 
-  /** Src-major parts assembled on the driver when the gate allows (shared by
-    * [[gatherPartsLocal]] and [[gatherPartsRdd]]).
+  /** Restore the build's layout for parts read back in arbitrary order:
+    * partition b = block b's parts in (blockId, partId) order (parquet splits
+    * neither partition nor order them). The order fixes the scatter-add
+    * summation order, so ranks match a directly-built graph.
     */
-  @transient private lazy val gatherAssembled: Option[Array[AdjPart]] =
-    if (residentAssembleOk) Some(assembleLocal(dstMajor = false)) else None
+  private def restoreLayout(parts: RDD[AdjPart]): RDD[AdjPart] =
+    parts
+      .map(p => (p.blockId, p))
+      .partitionBy(blockPartitioner)
+      .mapPartitions(it => it.map(_._2).toArray.sortBy(_.partId).iterator)
 
   /** Weighted in-degree c[j] (the kernel's normalizer). Vertices absent here have
     * c = 0 and contribute nothing — the reference's zero-guard `where(c!=0,c,1)`
@@ -153,11 +185,12 @@ final class LinkGraph(
     * every weight is a (magnitude-bounded) integer, the degree sums are exact
     * in any order, so one driver pass over [[edgesLocal]] replaces the
     * two-broadcast-join build. Rows are emitted vid-ascending in the SAME
-    * even parallelize slices the dictionary uses — the identical partition
-    * layout the join build produced (broadcast joins preserve the streamed
-    * dict's rows) — so even downstream DOUBLE aggregations (e.g. the
-    * imbalance-ratio mean) see the identical per-partition sequences.
-    * Fractional weights take the join path: their sums are order-sensitive.
+    * even slices the dictionary was built with (captured on the graph) — the
+    * identical partition layout the join build produced (broadcast joins
+    * preserve the streamed dict's rows) — so even downstream DOUBLE
+    * aggregations (e.g. the imbalance-ratio mean) see the identical
+    * per-partition sequences. Fractional weights take the join path: their
+    * sums are order-sensitive.
     */
   @volatile private var degreeTableBuilt = false
   lazy val degreeTable: DataFrame = {
@@ -200,58 +233,62 @@ final class LinkGraph(
     val rows = new Array[(Long, Long, Double, Double)](n)
     var i = 0
     while (i < n) { rows(i) = (i.toLong, ext(i), inD(i), outD(i)); i += 1 }
-    val p = math.max(1, spark.sparkContext.defaultParallelism)
     spark
       .createDataset(spark.sparkContext.parallelize(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(rows), p))
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(rows), dictSlices))
       .toDF("vid", "extId", "inDeg", "outDeg")
   }
 
-  /** Blocked adjacency with precomputed wNorm = w / c[dst] (D hoisted out of
-    * the loop exactly like pagerank.py:173-174) — the one-time sparse-build
-    * analog of pagerank.py:638-640, cached and reused by every superstep.
-    * Key column selects the orientation: dst-major (scatter, distributed
-    * regime) or src-major (gather, vector-resident regime).
+  /** The cluster build of the dst-major parts: block-laid edges go straight
+    * through the per-block kernel; any other edge frame is routed by dst block
+    * once first. Partition b = block b's parts in partId order.
     */
-  private def buildParts(keyCol: String, otherCol: String): Dataset[AdjPart] = {
+  private def buildDstLayout(): RDD[AdjPart] = {
     val bs = blockSize
-    val maxEdgesPerPart = LinkGraph.MaxEdgesPerPart
-    val withNorm = edges
-      .join(inDegrees.withColumnRenamed("vid", "dst"), Seq("dst"))
-      .select(
-        col(keyCol).as("key"),
-        col(otherCol).as("other"),
-        ($"weight" / $"deg").as("wNorm"),
-        (col(keyCol) / lit(bs)).cast("int").as("blockId"))
-    withNorm
-      .repartition(numBlocks, $"blockId")
-      .sortWithinPartitions($"blockId", $"key", $"other")
-      .select($"key", $"other", $"wNorm", $"blockId")
-      .as[(Long, Long, Double, Int)]
-      .mapPartitions { it =>
-        new AdjPartAssembler(it, bs, maxEdgesPerPart)
-      }
+    val nb = numBlocks
+    val rows = edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd
+    val byBlock: RDD[(Int, LinkGraph.Rows)] =
+      if (edgesByDstBlock) {
+        require(rows.getNumPartitions == nb,
+          s"block-laid edges need $nb partitions, found ${rows.getNumPartitions}")
+        rows.mapPartitionsWithIndex { (b, it) =>
+          val out = new Array[LinkGraph.Rows](nb)
+          it.foreach { r =>
+            val dst = r.getLong(1)
+            if (dst / bs != b)
+              throw new IllegalStateException(s"edge to vid $dst found in partition $b of the block-laid edges")
+            LinkGraph.addByDst(out, bs, r.getLong(0), dst, r.getDouble(2))
+          }
+          Option(out(b)).iterator.map(r => (b, r))
+        }
+      } else
+        rows
+          .mapPartitions { it =>
+            val out = new Array[LinkGraph.Rows](nb)
+            it.foreach(r => LinkGraph.addByDst(out, bs, r.getLong(0), r.getLong(1), r.getDouble(2)))
+            LinkGraph.batches(out)
+          }
+          .partitionBy(blockPartitioner)
+    LinkGraph.kernel(byBlock, normalize = true)
   }
 
-  /** dst-major (CSC-like) parts: keys = dst slots, adj = srcs. Columnar cache
-    * (general-purpose; the distributed superstep uses [[adjPartsByBlock]]).
+  /** Dst-major parts, one result for every consumer: partition b = block b's
+    * parts in partId order, cached deserialized.
     */
-  @volatile private var adjPartsBuilt = false
-  lazy val adjParts: Dataset[AdjPart] = {
-    if (residentAssembleOk) {
-      // broadcast-backed: every consumption is a flatMap over the broadcast —
-      // cheaper than encoding millions of array-rows into a columnar cache
-      // that is only ever counted or written once
-      val ds = spark.createDataset(laidOutRdd(assembleLocal(dstMajor = true)))
-      ds.count()
-      ds
-    } else {
-      val cached = buildParts("dst", "src").persist(StorageLevel.MEMORY_AND_DISK)
-      cached.count()
-      adjPartsBuilt = true
-      cached
-    }
+  @volatile private var dstLayoutBuilt = false
+  private lazy val dstLayout: RDD[AdjPart] = {
+    val rdd = prebuiltDstPartsLaidOut.map(_.values)
+      .orElse(prebuiltDstParts.map(restoreLayout))
+      .orElse(dstAssembled.map(laidOutRdd))
+      .getOrElse(buildDstLayout())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    rdd.count()
+    dstLayoutBuilt = true
+    rdd
   }
+
+  /** dst-major (CSC-like) parts: keys = dst slots, adj = srcs. */
+  lazy val adjParts: Dataset[AdjPart] = spark.createDataset(dstLayout)
 
   /** Identity partitioner for vertex blocks: blockId b → partition b.
     * (HashPartitioner on non-negative Int keys is the identity mod numBlocks,
@@ -260,63 +297,43 @@ final class LinkGraph(
   def blockPartitioner: org.apache.spark.HashPartitioner =
     new org.apache.spark.HashPartitioner(numBlocks)
 
-  /** dst-major parts CO-PARTITIONED by blockId: partition b holds exactly the
-    * parts of block b, cached DESERIALIZED once. The distributed superstep
-    * zipPartitions this against identically-laid-out rank chunks, so the
-    * adjacency NEVER moves after this one build-time shuffle — only the
-    * O(n)-sized rank/contribution chunks cross the wire each superstep.
-    * (Round-1 regression: joining the cached `adjParts` Dataset per superstep
-    * erased its partitioning through MapPartitions and the planner broadcast /
-    * sort-merged the whole adjacency every iteration.)
+  /** dst-major parts keyed by blockId: partition b holds exactly the parts of
+    * block b. The distributed superstep zipPartitions this against
+    * identically-laid-out rank chunks, so the adjacency NEVER moves after the
+    * build — only the O(n)-sized rank/contribution chunks cross the wire each
+    * superstep. (Round-1 regression: joining the cached `adjParts` Dataset per
+    * superstep erased its partitioning through MapPartitions and the planner
+    * broadcast / sort-merged the whole adjacency every iteration.)
     */
-  @volatile private var adjPartsByBlockBuilt = false
-  lazy val adjPartsByBlock: org.apache.spark.rdd.RDD[(Int, AdjPart)] = {
-    val rdd = prebuiltDstPartsLaidOut
-      .getOrElse {
-        val base = prebuiltDstParts.getOrElse(buildParts("dst", "src").rdd)
-        base
-          .map(p => (p.blockId, p))
-          .partitionBy(blockPartitioner)
-          // prebuilt parts arrive in parquet-split order; restore the assembler's
-          // (blockId, partId) order so the scatter-add summation order — and hence
-          // every contribution slab's VALUES — matches a directly-built graph
-          // (ranks then agree to the accumulator-merge-order ulp; see the
-          // roundtrip test in ResumeAndSourcesSpec)
-          .mapPartitions(
-            it => it.toArray.sortBy(t => (t._2.blockId, t._2.partId)).iterator,
-            preservesPartitioning = true)
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
-    adjPartsByBlockBuilt = true
-    rdd
-  }
+  lazy val adjPartsByBlock: RDD[(Int, AdjPart)] = dstLayout.map(p => (p.blockId, p))
 
   /** Lay a chunk RDD out on [[blockPartitioner]]: partition b = block b's
     * single chunk. All per-superstep transforms are partition-local, so the
     * layout survives the whole loop without further shuffles.
     */
-  def toBlockLayout(ds: Dataset[RankChunk]): org.apache.spark.rdd.RDD[RankChunk] =
+  def toBlockLayout(ds: Dataset[RankChunk]): RDD[RankChunk] =
     ds.rdd.map(c => (c.blockId, c)).partitionBy(blockPartitioner).values
 
-  /** src-major (CSR-like) parts: keys = src slots, adj = dsts — persisted as a
-    * DESERIALIZED object RDD: the resident-regime kernel scans it every
-    * superstep, and re-inflating 16B/edge arrays from a columnar cache each
-    * iteration costs hundreds of MB of allocation + GC per superstep.
+  /** src-major (CSR-like) parts: keys = src slots, adj = dsts — the dst-major
+    * parts' wNorm rows through one src-block exchange and the per-block
+    * kernel. Persisted as a DESERIALIZED object RDD: the resident-regime kernel
+    * scans it every superstep, and re-inflating 16B/edge arrays from a columnar
+    * cache each iteration costs hundreds of MB of allocation + GC per superstep.
     */
   @volatile private var gatherPartsBuilt = false
-  lazy val gatherPartsRdd: org.apache.spark.rdd.RDD[AdjPart] = {
-    val base = prebuiltGatherPartsLaidOut.getOrElse(prebuiltGatherParts match {
-      case None if gatherAssembled.isDefined => laidOutRdd(gatherAssembled.get)
-      case Some(pre) =>
-        // restore the direct build's layout: partition b = block b's parts in
-        // assembler order (parquet splits neither partition nor order them)
-        pre.map(p => (p.blockId, p))
-          .partitionBy(blockPartitioner)
-          .mapPartitions(it => it.toArray.sortBy(t => (t._2.blockId, t._2.partId)).iterator)
-          .map(_._2)
-      case None => buildParts("src", "dst").rdd
-    })
+  lazy val gatherPartsRdd: RDD[AdjPart] = {
+    val base = prebuiltGatherPartsLaidOut
+      .orElse(prebuiltGatherParts.map(restoreLayout))
+      .orElse(gatherAssembled.map(laidOutRdd))
+      .getOrElse {
+        val bs = blockSize
+        val nb = numBlocks
+        LinkGraph.kernel(
+          dstLayout
+            .mapPartitions(parts => LinkGraph.batches(LinkGraph.rowsBySrc(parts, bs, nb)))
+            .partitionBy(blockPartitioner),
+          normalize = false)
+      }
     val rdd = base.persist(StorageLevel.MEMORY_AND_DISK)
     rdd.count()
     gatherPartsBuilt = true
@@ -412,61 +429,21 @@ final class LinkGraph(
     LinkGraph.fromDenseWeighted(spark, edges.filter($"src" < kk && $"dst" < kk), kk)
   }
 
-  /** Release every cache this graph MATERIALIZED. Each lazy layout checks its
-    * built flag first — unconditionally touching the lazy vals used to FORCE
-    * a full build of layouts the caller never used (e.g. a resident-regime
-    * run paid for the dst-major columnar build inside its own teardown).
+  /** Release every cache and broadcast this graph MATERIALIZED. Each lazy
+    * layout checks its built flag first — unconditionally touching the lazy
+    * vals used to FORCE a full build of layouts the caller never used (e.g. a
+    * resident-regime run paid for the dst-major columnar build inside its own
+    * teardown).
     */
   def unpersistAll(): Unit = {
-    if (adjPartsBuilt) adjParts.unpersist()
-    if (adjPartsByBlockBuilt) adjPartsByBlock.unpersist(false)
-    if (gatherPartsBuilt) gatherPartsRdd.unpersist()
+    if (dstLayoutBuilt) dstLayout.unpersist(false)
+    if (gatherPartsBuilt) gatherPartsRdd.unpersist(false)
     if (inDegreesBuilt) inDegrees.unpersist()
     if (degreeTableBuilt) degreeTable.unpersist()
     edges.unpersist()
     vertexDict.unpersist()
-  }
-}
-
-/** Streaming assembler: turns (key, other, wNorm, blockId) rows sorted by
-  * (blockId, key, other) into AdjPart rows without materializing a whole
-  * partition, splitting parts at maxEdgesPerPart (skew salting).
-  */
-private final class AdjPartAssembler(
-    it: Iterator[(Long, Long, Double, Int)],
-    blockSize: Long,
-    maxEdgesPerPart: Int
-) extends Iterator[AdjPart] {
-  private val in = it.buffered
-  private val partSeq = scala.collection.mutable.Map.empty[Int, Int]
-
-  override def hasNext: Boolean = in.hasNext
-
-  override def next(): AdjPart = {
-    val blockId = in.head._4
-    val lo = blockId.toLong * blockSize
-    val keys = new scala.collection.mutable.ArrayBuffer[Int]
-    val offsets = new scala.collection.mutable.ArrayBuffer[Int]
-    val adj = new scala.collection.mutable.ArrayBuffer[Long]
-    val wNorm = new scala.collection.mutable.ArrayBuffer[Double]
-    var lastKey = -1L
-    offsets += 0
-    var n = 0
-    while (in.hasNext && in.head._4 == blockId && n < maxEdgesPerPart) {
-      val (key, other, w, _) = in.next()
-      if (key != lastKey) {
-        if (lastKey >= 0) offsets += adj.length
-        keys += (key - lo).toInt
-        lastKey = key
-      }
-      adj += other
-      wNorm += w
-      n += 1
-    }
-    offsets += adj.length
-    val seq = partSeq.getOrElse(blockId, 0)
-    partSeq(blockId) = seq + 1
-    AdjPart(blockId, seq, keys.toArray, offsets.toArray, adj.toArray, wNorm.toArray)
+    broadcasts.foreach(_.destroy())
+    broadcasts.clear()
   }
 }
 
@@ -476,18 +453,17 @@ object LinkGraph {
 
   /** Below this bound on the folded edge frame (~24 B/row) the vertex
     * dictionary of [[fromFoldedEdgeList]] is built DRIVER-RESIDENT from one
-    * partial-aggregated distinct job (same two-regime pattern as
-    * PageRankEngine.BroadcastThresholdBytes); the 100 TB path keeps the
-    * two-phase global-sort dictionary. The remap join is distributed in both
-    * regimes. Mutable test hook — set 0 to force the distributed build.
+    * partial-aggregated distinct job and broadcast for the remap (same
+    * two-regime pattern as PageRankEngine.BroadcastThresholdBytes); the
+    * 100 TB path keeps the two-phase global-sort dictionary and remaps through
+    * its block slices. Mutable test hook — set 0 to force the distributed build.
     */
   var ResidentBuildBytes: Long = 96L * 1024 * 1024
 
   /** Below this bound on the folded edge set (~16 B/edge) the blocked
-    * adjacency is assembled ON THE DRIVER (bit-identical — see
-    * [[LinkGraph.assembleLocal]]) instead of paying join + exchange + sort +
-    * cache jobs per orientation. Mutable test hook — 0 forces the cluster
-    * build.
+    * adjacency is assembled ON THE DRIVER by the same per-block kernel
+    * (bit-identical parts) instead of paying the cluster build's jobs.
+    * Mutable test hook — 0 forces the cluster build.
     */
   var ResidentAssembleBytes: Long = 64L * 1024 * 1024
 
@@ -497,27 +473,168 @@ object LinkGraph {
     */
   var ResidentFoldRows: Long = 2L * 1024 * 1024
 
-  /** Quicksort `keys` ascending, permuting `vals` alongside (median-of-three
-    * pivot, insertion sort below 32). Deterministic for a given input order;
-    * ties (duplicate keys) keep an arbitrary relative order, exactly like the
-    * cluster sort they replace.
+  /** Growable primitive edge rows, and the batch one map task ships to one
+    * block. Packed rows carry `(local slot << 32) | vid` in `a` and leave `b`
+    * null; triple rows carry two ids in `a` and `b`. Shipped trimmed.
     */
-  private[graph] def dualSort(keys: Array[Long], vals: Array[Double], lo0: Int, hi0: Int): Unit = {
+  private[graft] final class Rows(packed: Boolean) extends Serializable {
+    var n = 0
+    var a = new Array[Long](16)
+    var b: Array[Long] = if (packed) null else new Array[Long](16)
+    var w = new Array[Double](16)
+
+    private def grow(): Unit = {
+      val c = math.max(16, a.length + (a.length >> 1))
+      a = java.util.Arrays.copyOf(a, c)
+      if (b != null) b = java.util.Arrays.copyOf(b, c)
+      w = java.util.Arrays.copyOf(w, c)
+    }
+    def add(x: Long, v: Double): Unit = {
+      if (n == a.length) grow()
+      a(n) = x; w(n) = v; n += 1
+    }
+    def add(x: Long, y: Long, v: Double): Unit = {
+      if (n == a.length) grow()
+      a(n) = x; b(n) = y; w(n) = v; n += 1
+    }
+    def trimmed: Rows = {
+      if (a.length != n) {
+        a = java.util.Arrays.copyOf(a, n)
+        if (b != null) b = java.util.Arrays.copyOf(b, n)
+        w = java.util.Arrays.copyOf(w, n)
+      }
+      this
+    }
+  }
+
+  /** Appends rows `more` to `acc` (null = none yet); returns the accumulator. */
+  private def append(acc: Rows, more: Rows): Rows =
+    if (acc == null) more
+    else {
+      var i = 0
+      if (more.b == null) while (i < more.n) { acc.add(more.a(i), more.w(i)); i += 1 }
+      else while (i < more.n) { acc.add(more.a(i), more.b(i), more.w(i)); i += 1 }
+      acc
+    }
+
+  /** The non-empty per-block rows of one task, as (block, batch) records. */
+  private def batches(rows: Array[Rows]): Iterator[(Int, Rows)] =
+    rows.iterator.zipWithIndex.collect { case (r, b) if r != null => (b, r.trimmed) }
+
+  private def rowsAt(rows: Array[Rows], b: Int, packed: Boolean): Rows = {
+    if (rows(b) == null) rows(b) = new Rows(packed)
+    rows(b)
+  }
+
+  /** Packs edge (src, dst, w) into its dst block's rows, keyed (dst slot, src). */
+  private def addByDst(rows: Array[Rows], bs: Long, src: Long, dst: Long, w: Double): Unit = {
+    val b = (dst / bs).toInt
+    rowsAt(rows, b, packed = true).add(((dst - b * bs) << 32) | src, w)
+  }
+
+  /** The wNorm rows of dst-major parts, packed (src slot, dst) by src block. */
+  private def rowsBySrc(parts: Iterator[AdjPart], bs: Long, nb: Int): Array[Rows] = {
+    val rows = new Array[Rows](nb)
+    parts.foreach { p =>
+      val lo = p.blockId.toLong * bs
+      var i = 0
+      while (i < p.keys.length) {
+        val dst = lo + p.keys(i)
+        var j = p.offsets(i)
+        while (j < p.offsets(i + 1)) {
+          val src = p.adj(j)
+          val b = (src / bs).toInt
+          rowsAt(rows, b, packed = true).add(((src - b * bs) << 32) | dst, p.wNorm(j))
+          j += 1
+        }
+        i += 1
+      }
+    }
+    rows
+  }
+
+  /** The kernel over every block of a driver-side bucketing, in block order. */
+  private def partsOf(rows: Array[Rows], normalize: Boolean): Array[AdjPart] =
+    rows.indices.iterator.filter(rows(_) != null)
+      .flatMap(b => blockParts(b, rows(b), normalize, MaxEdgesPerPart)).toArray
+
+  /** The kernel over every partition of a block-partitioned batch RDD. */
+  private def kernel(byBlock: RDD[(Int, Rows)], normalize: Boolean): RDD[AdjPart] = {
+    val cap = MaxEdgesPerPart
+    byBlock.mapPartitionsWithIndex { (b, it) =>
+      val rows = merged(it)
+      if (rows == null) Iterator.empty else blockParts(b, rows, normalize, cap).iterator
+    }
+  }
+
+  /** The per-block kernel: sort one block's packed `(slot << 32) | other` rows
+    * with their values, optionally normalize each slot's run by its sum
+    * (dst-major: the value is the weight and the sum the in-degree, so it
+    * yields wNorm = w / c[dst], D hoisted out of the loop exactly like
+    * pagerank.py:173-174 — the one-time sparse-build analog of
+    * pagerank.py:638-640), and split the sorted rows into parts of at most
+    * `cap` edges — a hub's run may continue in the next part. Rows are sorted
+    * in place; an already-sorted block (the build's own edge cache) skips the
+    * sort.
+    */
+  private[graft] def blockParts(blockId: Int, rows: Rows, normalize: Boolean, cap: Int): Array[AdjPart] = {
+    val ks = rows.a
+    val vs = rows.w
+    val n = rows.n
+    var sorted = true
+    var i = 1
+    while (sorted && i < n) { sorted = ks(i - 1) <= ks(i); i += 1 }
+    if (!sorted) dualSort(ks, vs, 0, n - 1)
+    if (normalize) {
+      i = 0
+      while (i < n) {
+        val slot = ks(i) >>> 32
+        var j = i
+        var deg = 0.0
+        while (j < n && (ks(j) >>> 32) == slot) { deg += vs(j); j += 1 }
+        while (i < j) { vs(i) = vs(i) / deg; i += 1 }
+      }
+    }
+    val parts = scala.collection.mutable.ArrayBuffer.empty[AdjPart]
+    var s = 0
+    while (s < n) {
+      val e = if (n - s > cap) s + cap else n
+      var slots = 1
+      i = s + 1
+      while (i < e) { if ((ks(i) >>> 32) != (ks(i - 1) >>> 32)) slots += 1; i += 1 }
+      val keys = new Array[Int](slots)
+      val offsets = new Array[Int](slots + 1)
+      val adj = new Array[Long](e - s)
+      var k = -1
+      i = s
+      while (i < e) {
+        val slot = (ks(i) >>> 32).toInt
+        if (k < 0 || keys(k) != slot) { k += 1; keys(k) = slot; offsets(k) = i - s }
+        adj(i - s) = ks(i) & 0xffffffffL
+        i += 1
+      }
+      offsets(slots) = e - s
+      parts += AdjPart(blockId, parts.length, keys, offsets, adj, java.util.Arrays.copyOfRange(vs, s, e))
+      s = e
+    }
+    parts.toArray
+  }
+
+  /** Quicksort `keys` ascending, permuting `vals` alongside (median-of-three
+    * pivot, insertion sort below 32). Recurses only into the smaller side and
+    * loops on the larger, so the stack depth stays below log₂(n) for any key
+    * order. Deterministic for a given input order; ties (duplicate keys) keep
+    * an arbitrary relative order, exactly like the cluster sort they replace.
+    */
+  private[graft] def dualSort(keys: Array[Long], vals: Array[Double], lo0: Int, hi0: Int): Unit = {
     def swap(a: Int, b: Int): Unit = {
       val k = keys(a); keys(a) = keys(b); keys(b) = k
       val v = vals(a); vals(a) = vals(b); vals(b) = v
     }
-    def sort(lo: Int, hi: Int): Unit =
-      if (hi - lo < 32) {
-        var i = lo + 1
-        while (i <= hi) {
-          val k = keys(i); val v = vals(i)
-          var j = i - 1
-          while (j >= lo && keys(j) > k) { keys(j + 1) = keys(j); vals(j + 1) = vals(j); j -= 1 }
-          keys(j + 1) = k; vals(j + 1) = v
-          i += 1
-        }
-      } else {
+    def sort(lo0: Int, hi0: Int): Unit = {
+      var lo = lo0
+      var hi = hi0
+      while (hi - lo >= 32) {
         val mid = (lo + hi) >>> 1
         if (keys(mid) < keys(lo)) swap(mid, lo)
         if (keys(hi) < keys(lo)) swap(hi, lo)
@@ -530,9 +647,18 @@ object LinkGraph {
           while (keys(j) > pivot) j -= 1
           if (i <= j) { swap(i, j); i += 1; j -= 1 }
         }
-        if (lo < j) sort(lo, j)
-        if (i < hi) sort(i, hi)
+        if (j - lo < hi - i) { if (lo < j) sort(lo, j); lo = i }
+        else { if (i < hi) sort(i, hi); hi = j }
       }
+      var i = lo + 1
+      while (i <= hi) {
+        val k = keys(i); val v = vals(i)
+        var j = i - 1
+        while (j >= lo && keys(j) > k) { keys(j + 1) = keys(j); vals(j + 1) = vals(j); j -= 1 }
+        keys(j + 1) = k; vals(j + 1) = v
+        i += 1
+      }
+    }
     if (lo0 < hi0) sort(lo0, hi0)
   }
 
@@ -551,6 +677,12 @@ object LinkGraph {
     math.max(1, math.min(
       spark.sparkContext.defaultParallelism * 2L,
       math.max(math.max(1L, n / 1024L), edges / TargetEdgesPerBlock)).toInt)
+
+  /** (blocks, blockSize) for n vertices: `numBlocks` when positive, else auto. */
+  private def geometry(spark: SparkSession, n: Long, m: Long, numBlocks: Int): (Int, Long) = {
+    val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, m)
+    (blocks, math.max(1L, (n + blocks - 1) / blocks))
+  }
 
   /** Vertex-id sizing policy (SURVEY §1.3): the shared-patterns project
     * compacts ids to 0..n−1 over the OBSERVED vertices (pagerank.py:622-627);
@@ -571,7 +703,7 @@ object LinkGraph {
     * exactly load_graph (pagerank.py:617-640). `idMode` selects compacted
     * (default, reference shared-patterns behavior) or dense-by-max vertex
     * numbering (the original solver's `n = max(id)+1`; ids must be ≥ 0 and
-    * vid = extId, no remap join at all).
+    * vid = extId, no remap at all).
     */
   def fromEdgeList(
       spark: SparkSession,
@@ -583,8 +715,8 @@ object LinkGraph {
     if (idMode == IdMode.Compacted && ResidentFoldRows > 0) {
       // Resident-fold probe (guide §1.2 step 1): ONE incremental limit-collect
       // of the raw pairs replaces the fold aggregation, the dictionary
-      // distinct, and the two remap joins — three whole plan shapes whose
-      // cold Catalyst/Janino time dominated the contract-scale build. Under
+      // distinct, and the remap — three whole plan shapes whose cold
+      // Catalyst/Janino time dominated the contract-scale build. Under
       // the cap the collect is the COMPLETE pair multiset (set-complete
       // regardless of which partitions filled the limit first; fold counts
       // are order-insensitive integers). Over the cap, CollectLimit stops
@@ -673,9 +805,8 @@ object LinkGraph {
       scala.collection.immutable.ArraySeq.unsafeWrapArray(remapped), p))
       .persist(StorageLevel.MEMORY_AND_DISK)
     edges.count()
-    val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, m)
-    val bs = (n + blocks - 1) / math.max(blocks, 1)
-    val g = new LinkGraph(spark, dict, edges, n, blocks, math.max(bs, 1), m)
+    val (blocks, bs) = geometry(spark, n, m, numBlocks)
+    val g = new LinkGraph(spark, dict, edges, n, blocks, bs, m)
     g.edgesLocalPre = Some(remapped) // the resident consumers' copy, no collect
     g
   }
@@ -695,14 +826,15 @@ object LinkGraph {
     import spark.implicits._
 
     // The folded frame is consumed several times during the build (the
-    // dictionary reads src and dst incidence separately; the remap reads it
-    // again) — without this scoped cache, every consumer re-executed the
-    // ENTIRE upstream plan (e.g. the orders⋈lineitem fold, or the repo-token
-    // self-join) 3-4×. Released in the finally once the graph's own edge
+    // dictionary reads src and dst incidence; the remap reads it again) —
+    // without this scoped cache, every consumer re-executed the ENTIRE
+    // upstream plan (e.g. the orders⋈lineitem fold, or the repo-token
+    // self-join) 2-3×. Released in the finally once the graph's own edge
     // cache is materialized.
     val folded = foldedEdges
       .select($"src".cast("long"), $"dst".cast("long"), $"weight".cast("double"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    var runs: RDD[Array[Long]] = null
 
     try idMode match {
       case IdMode.DenseByMax =>
@@ -719,55 +851,157 @@ object LinkGraph {
 
       case IdMode.Compacted =>
         val foldedCount = folded.count() // materializes the scoped cache once
-        val (dict, n) =
-          if (foldedCount * 24 < ResidentBuildBytes) {
-            // Driver-resident dictionary (guide §1.2 step 1: remove passes):
-            // one partial-aggregated distinct job collects the ≤ 2·|E| ids
-            // (the exchange carries only per-partition-distinct rows, never
-            // the 2|E| incidence frame the global-sort path sorts), the sort
-            // rank is assigned on the driver, and the n-row dictionary is
-            // parallelized back. Pure id plumbing — no floating-point
-            // arithmetic, so vid assignment (ascending-extId rank) and every
-            // downstream value are identical to buildDictionary's.
-            val idsArr = folded
-              .select($"src")
-              .union(folded.select($"dst"))
-              .distinct()
-              .as[Long]
-              .collect()
-            java.util.Arrays.sort(idsArr)
-            val mappings = new Array[VertexMapping](idsArr.length)
-            var i = 0
-            while (i < idsArr.length) {
-              mappings(i) = VertexMapping(idsArr(i), i.toLong); i += 1
+        val sc = spark.sparkContext
+        // (src, dst, weight) rows of the cached frame, in the select's column order
+        val rows = folded.select($"src", $"dst", $"weight").queryExecution.toRdd
+        if (foldedCount * 24 < ResidentBuildBytes) {
+          // Driver-resident dictionary (guide §1.2 step 1: remove passes):
+          // one partial-aggregated distinct job collects the ≤ 2·|E| ids
+          // (the exchange carries only per-partition-distinct rows, never
+          // the 2|E| incidence frame the global-sort path sorts), the sort
+          // rank is assigned on the driver, and the n-row dictionary is
+          // parallelized back. The sorted ids are broadcast, so both ends
+          // are remapped map-side and the dst route is the only exchange.
+          val ids = folded.select($"src").union(folded.select($"dst")).distinct().as[Long].collect()
+          java.util.Arrays.sort(ids)
+          val p = math.max(1, sc.defaultParallelism)
+          val dict = spark.createDataset(sc.parallelize(
+            scala.collection.immutable.ArraySeq.unsafeWrapArray(
+              Array.tabulate(ids.length)(i => VertexMapping(ids(i), i.toLong))), p))
+          val (blocks, bs) = geometry(spark, ids.length, foldedCount, numBlocks)
+          val bIds = sc.broadcast(ids)
+          val byDst = rows
+            .mapPartitions { it =>
+              val sorted = bIds.value
+              val out = new Array[Rows](blocks)
+              it.foreach { r =>
+                addByDst(out, bs, vidIn(sorted, r.getLong(0), 0L), vidIn(sorted, r.getLong(1), 0L), r.getDouble(2))
+              }
+              batches(out)
             }
-            val p = math.max(1, spark.sparkContext.defaultParallelism)
-            val d = spark.createDataset(spark.sparkContext.parallelize(
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(mappings), p))
-            d.persist(StorageLevel.MEMORY_AND_DISK)
-            d.count()
-            (d, idsArr.length.toLong)
-          } else {
-            val d = buildDictionary(spark, folded)
-            (d, d.count()) // already persisted by buildDictionary
-          }
+            .partitionBy(new org.apache.spark.HashPartitioner(blocks))
+            .mapPartitions(it => Iterator.single(merged(it)))
+          blockLaidGraph(spark, dict, ids.length, foldedCount, blocks, bs, byDst, Some(bIds))
+        } else {
+          // Distributed dictionary: its sorted runs are cut into block slices
+          // (no exchange), and two routed exchanges remap src, then dst
+          val (r, starts) = sortedIdRuns(spark, folded)
+          runs = r
+          val n = starts.last
+          val (blocks, bs) = geometry(spark, n, foldedCount, numBlocks)
+          val hp = new org.apache.spark.HashPartitioner(blocks)
+          val slices = new BlockSliceRDD(r, starts, bs, blocks)
+          // first external id of every non-empty block: the routing boundaries
+          val firstIds = slices.mapPartitions(_.filter(_.nonEmpty).map(_(0))).collect()
+          // route 1: by src id to its block's slice, which remaps src
+          val bySrc = rows
+            .mapPartitions { it =>
+              val out = new Array[Rows](blocks)
+              it.foreach { r =>
+                rowsAt(out, blockOfId(firstIds, r.getLong(0)), packed = false)
+                  .add(r.getLong(0), r.getLong(1), r.getDouble(2))
+              }
+              batches(out)
+            }
+            .partitionBy(hp)
+          // route 2: by dst id to its block's slice, which remaps dst
+          val byDst = bySrc
+            .zipPartitions(slices) { (it, sl) =>
+              val slice = sl.next()
+              val out = new Array[Rows](blocks)
+              it.foreach { case (b, t) =>
+                val lo = b * bs
+                var i = 0
+                while (i < t.n) {
+                  rowsAt(out, blockOfId(firstIds, t.b(i)), packed = false)
+                    .add(vidIn(slice, t.a(i), lo), t.b(i), t.w(i))
+                  i += 1
+                }
+              }
+              batches(out)
+            }
+            .partitionBy(hp)
+            .zipPartitions(slices) { (it, sl) =>
+              val slice = sl.next()
+              val out = new Rows(packed = true)
+              it.foreach { case (b, t) =>
+                val lo = b * bs
+                var i = 0
+                while (i < t.n) {
+                  out.add(((vidIn(slice, t.b(i), lo) - lo) << 32) | t.a(i), t.w(i))
+                  i += 1
+                }
+              }
+              Iterator.single(out)
+            }
+          val dict = dictionaryOf(spark, r, starts)
+          blockLaidGraph(spark, dict, n, foldedCount, blocks, bs, byDst, None)
+        }
+    } finally {
+      folded.unpersist(false)
+      if (runs != null) runs.unpersist(false)
+    }
+  }
 
-        val srcDict = dict.toDF("extId", "vid")
-        val remapped = folded
-          .join(srcDict.withColumnRenamed("extId", "src").withColumnRenamed("vid", "srcVid"), Seq("src"))
-          .join(srcDict.withColumnRenamed("extId", "dst").withColumnRenamed("vid", "dstVid"), Seq("dst"))
-          .select($"srcVid".as("src"), $"dstVid".as("dst"), $"weight")
-          .as[Edge]
+  /** Persists the dictionary and the block-laid edge cache `byDst` feeds
+    * (partition b: block b's packed (dst slot, src vid) rows, or null), and
+    * wraps the graph around them. Materializes both while the caller's scoped
+    * caches are still held.
+    */
+  private def blockLaidGraph(
+      spark: SparkSession,
+      dict: Dataset[VertexMapping],
+      n: Long,
+      m: Long,
+      blocks: Int,
+      bs: Long,
+      byDst: RDD[Rows],
+      remapIds: Option[Broadcast[Array[Long]]]
+  ): LinkGraph = {
+    import spark.implicits._
+    dict.persist(StorageLevel.MEMORY_AND_DISK)
+    dict.count()
+    val edges = spark.createDataset(byDst.mapPartitionsWithIndex { (b, it) =>
+      val rows = it.next()
+      if (rows == null) Iterator.empty
+      else {
+        val ks = rows.a
+        dualSort(ks, rows.w, 0, rows.n - 1) // (dst, src): the kernel's order
+        val lo = b * bs
+        Iterator.range(0, rows.n).map(i => Edge(ks(i) & 0xffffffffL, lo + (ks(i) >>> 32), rows.w(i)))
+      }
+    }).persist(StorageLevel.MEMORY_AND_DISK)
+    val g = new LinkGraph(spark, dict, edges, n, blocks, bs, m, edgesByDstBlock = true)
+    remapIds.foreach(g.track) // the edge cache's lineage reads it
+    edges.count()
+    g
+  }
 
-        val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, foldedCount)
-        val bs = (n + blocks - 1) / math.max(blocks, 1)
+  /** All rows one task received for its block, merged (null when none). */
+  private def merged(it: Iterator[(Int, Rows)]): Rows =
+    it.foldLeft(null: Rows)((acc, r) => append(acc, r._2))
 
-        val edges = remapped.persist(StorageLevel.MEMORY_AND_DISK)
-        // inner joins on a complete dictionary keep every folded row
-        val g = new LinkGraph(spark, dict, edges, n, blocks, math.max(bs, 1), foldedCount)
-        edges.count() // materialize the edge cache while `folded` is still held
-        g
-    } finally folded.unpersist(false)
+  /** The vid of external id `id` in the ascending `slice` whose first vid is
+    * `lo`; an id missing from its slice means the dictionary and the edges
+    * disagree, which is never silently dropped.
+    */
+  private def vidIn(slice: Array[Long], id: Long, lo: Long): Long = {
+    val i = java.util.Arrays.binarySearch(slice, id)
+    if (i < 0) throw new IllegalStateException(s"external id $id is missing from its dictionary slice")
+    lo + i
+  }
+
+  /** The block whose slice can hold external id `id`: the last block whose
+    * first id is ≤ `id` (signed comparison, so any 64-bit id routes).
+    */
+  private def blockOfId(firstIds: Array[Long], id: Long): Int = {
+    var lo = 0
+    var hi = firstIds.length - 1
+    while (lo < hi) {
+      val mid = (lo + hi + 1) >>> 1
+      if (firstIds(mid) <= id) lo = mid else hi = mid - 1
+    }
+    lo
   }
 
   /** Same, but edges are already (src, dst, weight) in dense vid space 0..n-1.
@@ -783,9 +1017,8 @@ object LinkGraph {
       numVertices: Long,
       numBlocks: Int = 0
   ): LinkGraph = {
-    import spark.implicits._
-    val dict = spark.range(numVertices).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
-    val positive = edges.filter(col("weight") > 0).as[Edge] // column filter: stays codegen'd
+    val p = math.max(1, spark.sparkContext.defaultParallelism)
+    val positive = edges.filter(col("weight") > 0) // column filter: stays codegen'd
       .persist(StorageLevel.MEMORY_AND_DISK)
     // auto path routes through the same edge-aware autoBlocks as fromEdgeList:
     // the old vertex-only n/1024 fallback gave a small-but-dense graph (e.g. a
@@ -793,19 +1026,24 @@ object LinkGraph {
     // materializes the persisted edge cache `numEdges` would count anyway —
     // and is passed through so numEdges never re-counts.
     val cnt = if (numBlocks > 0) -1L else positive.count()
-    val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, numVertices, cnt)
-    val bs = (numVertices + blocks - 1) / math.max(blocks, 1)
-    new LinkGraph(spark, dict, positive, numVertices, blocks, math.max(bs, 1), cnt)
+    val (blocks, bs) = geometry(spark, numVertices, cnt, numBlocks)
+    new LinkGraph(spark, identityDict(spark, numVertices, p), positive, numVertices, blocks, bs, cnt)
+  }
+
+  /** The identity dictionary of a dense vid space, in `p` explicit slices. */
+  private def identityDict(spark: SparkSession, n: Long, p: Int): Dataset[VertexMapping] = {
+    import spark.implicits._
+    spark.range(0, n, 1, p).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
   }
 
   /** Graph whose blocked adjacency was PRE-ASSEMBLED by a prior process and
     * persisted (e.g. Dataset[AdjPart] parquet written by the bench prep, or a
     * checkpoint restore): vertex ids dense 0..n-1, geometry (numBlocks /
-    * blockSize) must match what produced the parts. Skips the fold + sort +
-    * assemble build entirely — the injected rows only pay the one co-location
-    * shuffle inside adjPartsByBlock. The edge frame is intentionally absent
-    * (callers of degree/edge analytics need a fully built graph); the folded
-    * edge count is passed in so throughput accounting still works.
+    * blockSize) must match what produced the parts. Skips the build
+    * entirely — the injected rows only pay the one co-location shuffle of the
+    * layout restore. The edge frame is intentionally absent (callers of
+    * degree/edge analytics need a fully built graph); the folded edge count is
+    * passed in so throughput accounting still works.
     */
   def fromPrebuiltParts(
       spark: SparkSession,
@@ -817,70 +1055,105 @@ object LinkGraph {
   ): LinkGraph = {
     import spark.implicits._
     require(numBlocks > 0, "fromPrebuiltParts needs the geometry the parts were built with")
-    val dict = spark.range(numVertices).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
+    val p = math.max(1, spark.sparkContext.defaultParallelism)
     val bs = (numVertices + numBlocks - 1) / numBlocks
-    val g = new LinkGraph(
-      spark, dict, spark.emptyDataset[Edge], numVertices, numBlocks, math.max(bs, 1), numEdges)
+    val g = new LinkGraph(spark, identityDict(spark, numVertices, p), spark.emptyDataset[Edge],
+      numVertices, numBlocks, math.max(bs, 1), numEdges)
     g.prebuiltDstParts = dstParts.map(_.rdd)
     g.prebuiltGatherParts = gatherParts.map(_.rdd)
     g
   }
 
-  /** Deterministic compacted vertex dictionary: dense vids 0..n-1 in ascending
-    * extId order — the distributed analog of `enumerate(np.unique(edges))`
-    * (pagerank.py:622-627). Two-phase global-sort indexing: range-partition +
-    * sort, count per partition, then offset per-partition row_numbers. Ids
-    * depend only on the global sort order, so the assignment is deterministic
-    * at any parallelism (SURVEY.md §7.3.5).
+  /** The distinct external ids in ascending order, as one array per range
+    * partition (cached; the caller releases it), and the first vid of every
+    * run plus n at the end. Range-partition + sort gives the ascending order;
+    * dedup happens AFTER the range sort as an adjacent-equal skip (range
+    * partitioning puts equal ids in one partition, sorted adjacent), so the
+    * 2|E| incidence frame crosses one exchange; the run lengths give every
+    * run's first vid. Vids depend only on the global sort order, so the
+    * assignment is deterministic at any parallelism (SURVEY.md §7.3.5).
     */
-  def buildDictionary(spark: SparkSession, folded: DataFrame): Dataset[VertexMapping] = {
+  private def sortedIdRuns(spark: SparkSession, folded: DataFrame): (RDD[Array[Long]], Array[Long]) = {
     import spark.implicits._
-    val ids = folded
+    val p = math.max(1, spark.sparkContext.defaultParallelism)
+    val runs = folded
       .select($"src".as("extId"))
       .union(folded.select($"dst".as("extId")))
-    val p = math.max(1, spark.sparkContext.defaultParallelism)
-    // Global-sort indexing via zipWithIndex: range-partition + sort gives the
-    // ascending-extId order; zipWithIndex assigns the global 0-based index in
-    // partition order (= range order), which IS the vid. Identical assignment
-    // to the previous per-partition-count + offset-broadcast + row_number
-    // pipeline (vid depends only on the global sort order, so it stays
-    // deterministic at any parallelism and any sampled range boundaries), but
-    // in ONE extra job over the sorted frame instead of a counts collect plus
-    // a pid-partitioned window shuffle plus a broadcast join. Dedup happens
-    // AFTER the range sort as an adjacent-equal skip (range partitioning puts
-    // equal ids in one partition, sorted adjacent), replacing the previous
-    // hash-distinct's extra full exchange of the 2|E| incidence frame with a
-    // streaming pass (guide §2.4); set semantics are unchanged.
-    val sorted = ids
       .repartitionByRange(p, $"extId")
       .sortWithinPartitions($"extId")
       .select($"extId".cast("long"))
       .as[Long]
+      .rdd
       .mapPartitions { it =>
-        new Iterator[Long] {
-          private var has = false
-          private var cur = 0L
-          advance()
-          private def advance(): Unit = {
-            while (it.hasNext) {
-              val v = it.next()
-              if (!has || v != cur) { has = true; cur = v; return }
-            }
-            has = false
-          }
-          override def hasNext: Boolean = has
-          override def next(): Long = { val v = cur; advance(); v }
-        }
+        val out = new scala.collection.mutable.ArrayBuilder.ofLong
+        var last = 0L
+        var first = true
+        it.foreach { v => if (first || v != last) { out += v; last = v; first = false } }
+        Iterator.single(out.result())
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dict = spark.createDataset(
-      sorted.rdd.zipWithIndex.map { case (extId, vid) => VertexMapping(extId, vid) })
-    // materialize the dictionary BEFORE releasing the sorted scratch cache —
-    // round 3 left `sorted` persisted for the session (an n-row residue per
+    val lengths = runs.map(_.length.toLong).collect()
+    (runs, lengths.scanLeft(0L)(_ + _))
+  }
+
+  /** (extId, vid) rows of the sorted runs, in the runs' partitions. */
+  private def dictionaryOf(spark: SparkSession, runs: RDD[Array[Long]], starts: Array[Long]): Dataset[VertexMapping] = {
+    import spark.implicits._
+    spark.createDataset(runs.mapPartitionsWithIndex { (k, it) =>
+      it.flatMap(run => Iterator.range(0, run.length).map(i => VertexMapping(run(i), starts(k) + i)))
+    })
+  }
+
+  /** Deterministic compacted vertex dictionary: dense vids 0..n-1 in ascending
+    * extId order — the distributed analog of `enumerate(np.unique(edges))`
+    * (pagerank.py:622-627), built from [[sortedIdRuns]].
+    */
+  def buildDictionary(spark: SparkSession, folded: DataFrame): Dataset[VertexMapping] = {
+    val (runs, starts) = sortedIdRuns(spark, folded)
+    val dict = dictionaryOf(spark, runs, starts)
+    // materialize the dictionary BEFORE releasing the sorted runs — round 3
+    // left its sorted scratch persisted for the session (an n-row residue per
     // graph build)
     dict.persist(StorageLevel.MEMORY_AND_DISK)
     dict.count()
-    sorted.unpersist(false)
+    runs.unpersist(false)
     dict
+  }
+}
+
+/** Block b's slice of the sorted dictionary: the ascending external ids of
+  * vids `[b·bs, min((b+1)·bs, n))`, cut from the sorted runs (`starts(k)` =
+  * first vid of run k, `starts.last` = n) through a narrow dependency on the
+  * runs that overlap the block — no exchange.
+  */
+private[graph] final class BlockSliceRDD(runs: RDD[Array[Long]], starts: Array[Long], bs: Long, nb: Int)
+    extends RDD[Array[Long]](runs.context, Nil) {
+
+  private def range(b: Int): (Long, Long) = {
+    val lo = math.min(b * bs, starts.last)
+    (lo, math.min(lo + bs, starts.last))
+  }
+
+  private def runsOf(b: Int): Seq[Int] = {
+    val (lo, hi) = range(b)
+    (0 until runs.getNumPartitions).filter(k => starts(k) < hi && starts(k + 1) > lo)
+  }
+
+  override protected def getDependencies: Seq[org.apache.spark.Dependency[_]] =
+    Seq(new NarrowDependency(runs) { override def getParents(b: Int): Seq[Int] = runsOf(b) })
+
+  override protected def getPartitions: Array[Partition] =
+    Array.tabulate[Partition](nb)(i => new Partition { override def index: Int = i })
+
+  override def compute(split: Partition, ctx: TaskContext): Iterator[Array[Long]] = {
+    val (lo, hi) = range(split.index)
+    val out = new Array[Long]((hi - lo).toInt)
+    runsOf(split.index).foreach { k =>
+      val run = runs.iterator(runs.partitions(k), ctx).next()
+      val from = math.max(lo, starts(k))
+      val to = math.min(hi, starts(k + 1))
+      System.arraycopy(run, (from - starts(k)).toInt, out, (from - lo).toInt, (to - from).toInt)
+    }
+    Iterator.single(out)
   }
 }

@@ -208,61 +208,192 @@ class GraphAlgoSpec extends GraftSuite {
     g.unpersistAll()
   }
 
+  /** Sparse signed 64-bit ids (negatives, values past 2³², both extremes) over
+    * 4 blocks of 10 vids. The 10 smallest ids are only ever sources, so
+    * block 0 has no in-edges; duplicate pairs fold into weights.
+    */
+  private val signedIds: Seq[(Long, Long)] = {
+    val rng = new scala.util.Random(83)
+    val ids = (Seq(Long.MinValue + 5, -(1L << 40), -1L, 0L, (1L << 32) + 7, Long.MaxValue - 3) ++
+      Seq.fill(60)(rng.nextLong() >> rng.nextInt(40))).distinct.take(40).sorted
+    val (srcOnly, rest) = ids.splitAt(10)
+    val ring = rest.zip(rest.tail :+ rest.head)
+    val fromSrcOnly = srcOnly.flatMap(s => Seq.fill(3)((s, rest(rng.nextInt(rest.length)))))
+    val random = Seq.fill(120)((ids(rng.nextInt(ids.length)), rest(rng.nextInt(rest.length))))
+    ring ++ fromSrcOnly ++ random
+  }
+
+  /** Runs `f` with the build's resident gates at 0: `fold` forces the
+    * distributed fold and dictionary (block-laid edges from the routed remap),
+    * `assemble` the cluster adjacency kernel.
+    */
+  private def forced[T](fold: Boolean, assemble: Boolean)(f: => T): T = {
+    val (wasB, wasF, wasA) =
+      (LinkGraph.ResidentBuildBytes, LinkGraph.ResidentFoldRows, LinkGraph.ResidentAssembleBytes)
+    if (fold) { LinkGraph.ResidentBuildBytes = 0L; LinkGraph.ResidentFoldRows = 0L }
+    if (assemble) LinkGraph.ResidentAssembleBytes = 0L // read at lazy-layout build time
+    try f
+    finally {
+      LinkGraph.ResidentBuildBytes = wasB
+      LinkGraph.ResidentFoldRows = wasF
+      LinkGraph.ResidentAssembleBytes = wasA
+    }
+  }
+
+  private def partsOf(ps: Array[graft.model.AdjPart]) = ps
+    .map(p => (p.blockId, p.partId, p.keys.toSeq, p.offsets.toSeq, p.adj.toSeq, p.wNorm.toSeq))
+    .sortBy(t => (t._1, t._2)).toSeq
+
+  /** Dst-major and gather parts, both compared bit-for-bit (incl. wNorm). */
+  private def layoutsOf(g: LinkGraph) =
+    (partsOf(g.adjParts.collect()), partsOf(g.gatherPartsRdd.collect()))
+
+  private def ranksOf(g: LinkGraph) = {
+    val out = PageRank.run(g, tolerance = 0.0, maxIterations = 6)
+    val v = out.toVertexDf(g).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
+    out.free(); v
+  }
+
   test("driver-resident build finish produces the identical graph") {
     val rng = new scala.util.Random(47)
     // sparse external ids (gaps + duplicates) exercise dictionary compaction
-    val edges = Seq.fill(400)((rng.nextInt(5000).toLong * 7, rng.nextInt(5000).toLong * 7))
-    def build() = LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"))
-    val a = build() // default gates: resident fold (the whole build on the driver)
-    val (wasB, wasF) = (LinkGraph.ResidentBuildBytes, LinkGraph.ResidentFoldRows)
-    LinkGraph.ResidentBuildBytes = 0L // distributed dictionary AND
-    LinkGraph.ResidentFoldRows = 0L // distributed fold: the full cluster build
-    val b =
-      try build()
-      finally {
-        LinkGraph.ResidentBuildBytes = wasB
-        LinkGraph.ResidentFoldRows = wasF
-      }
-    assert(a.numVertices == b.numVertices && a.numBlocks == b.numBlocks)
-    def dictOf(g: LinkGraph) =
-      g.vertexDict.collect().map(m => (m.extId, m.vid)).sortBy(_._1).toSeq
-    def edgesOf(g: LinkGraph) =
-      g.edges.collect().map(e => (e.src, e.dst, e.weight)).sorted.toSeq
-    assert(dictOf(a) == dictOf(b))
-    assert(edgesOf(a) == edgesOf(b))
-    // ranks bit-identical through the whole downstream pipeline
-    val ra = PageRank.run(a, tolerance = 0.0, maxIterations = 6)
-    val rb = PageRank.run(b, tolerance = 0.0, maxIterations = 6)
-    val va = ra.toVertexDf(a).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1)
-    val vb = rb.toVertexDf(b).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1)
-    assert(va.toSeq == vb.toSeq)
-    ra.free(); rb.free(); a.unpersistAll(); b.unpersistAll()
+    val sparse = Seq.fill(400)((rng.nextInt(5000).toLong * 7, rng.nextInt(5000).toLong * 7))
+    for ((edges, blocks) <- Seq((sparse, 0), (signedIds, 4))) {
+      def build() = graphOf(edges, numBlocks = blocks)
+      val a = build() // default gates: resident fold (the whole build on the driver)
+      val b = forced(fold = true, assemble = false)(build()) // the full cluster build
+      assert(a.numVertices == b.numVertices && a.numBlocks == b.numBlocks)
+      def dictOf(g: LinkGraph) =
+        g.vertexDict.collect().map(m => (m.extId, m.vid)).sortBy(_._1).toSeq
+      def edgesOf(g: LinkGraph) =
+        g.edges.collect().map(e => (e.src, e.dst, e.weight)).sorted.toSeq
+      assert(dictOf(a) == dictOf(b))
+      assert(edgesOf(a) == edgesOf(b))
+      assert(layoutsOf(a) == layoutsOf(b))
+      // ranks bit-identical through the whole downstream pipeline
+      assert(ranksOf(a) == ranksOf(b))
+      a.unpersistAll(); b.unpersistAll()
+    }
   }
 
   test("driver-assembled adjacency parts match the cluster build bit-for-bit") {
-    val edges = DenseReference.randomEdges(150, 0.05, seed = 53).map(e => (e._1.toLong, e._2.toLong))
-    def partsOf(g: LinkGraph) = g.adjParts.collect()
-      .map(p => (p.blockId, p.partId, p.keys.toSeq, p.offsets.toSeq, p.adj.toSeq, p.wNorm.toSeq))
-      .sortBy(t => (t._1, t._2)).toSeq
-    def ranksOf(g: LinkGraph) = {
-      val out = PageRank.run(g, tolerance = 0.0, maxIterations = 6)
-      val v = out.toVertexDf(g).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
-      out.free(); v
+    val random = DenseReference.randomEdges(150, 0.05, seed = 53).map(e => (e._1.toLong, e._2.toLong))
+    for ((edges, blocks) <- Seq((random, 3), (signedIds, 4))) {
+      val a = graphOf(edges, blocks) // default gates: driver-assembled
+      val want = (layoutsOf(a), ranksOf(a))
+      // cluster kernel over edges routed by dst block (resident fold), then
+      // over the routed remap's block-laid edge cache
+      for (fold <- Seq(false, true)) {
+        val got = forced(fold, assemble = true) {
+          val b = graphOf(edges, blocks)
+          assert(b.edgesByDstBlock == fold)
+          val r = (layoutsOf(b), ranksOf(b))
+          b.unpersistAll()
+          r
+        }
+        assert(got == want) // identical keys/offsets/adjacency AND wNorm doubles
+      }
+      if (edges == signedIds) {
+        val (dst, gather) = want._1
+        assert(!dst.exists(_._1 == 0), "block 0 has no in-edges")
+        assert(gather.exists(_._1 == 0))
+      }
+      a.unpersistAll()
     }
-    val a = graphOf(edges) // default gate: driver-assembled
-    val (pa, va) = (partsOf(a), ranksOf(a))
-    val was = LinkGraph.ResidentAssembleBytes
-    LinkGraph.ResidentAssembleBytes = 0L // gate is read at lazy-layout build time
-    val (pb, vb) =
-      try {
-        val b = graphOf(edges)
-        val r = (partsOf(b), ranksOf(b))
-        b.unpersistAll()
-        r
-      } finally LinkGraph.ResidentAssembleBytes = was
-    assert(pb == pa) // identical keys/offsets/adjacency AND wNorm doubles
-    assert(vb == va)
-    a.unpersistAll()
+  }
+
+  test("per-block kernel sorts, normalizes per destination and splits at the part cap") {
+    // block 1 of a blockSize-10 graph: slot 3 (vid 13) has 5 in-edges, slot 7 has 2
+    val rows = new LinkGraph.Rows(packed = true)
+    Seq((3, 9L, 1.0), (7, 2L, 2.0), (3, 5L, 1.0), (3, 7L, 2.0), (7, 1L, 2.0), (3, 6L, 1.0), (3, 8L, 3.0))
+      .foreach { case (slot, src, w) => rows.add((slot.toLong << 32) | src, w) }
+    val parts = LinkGraph.blockParts(1, rows, normalize = true, cap = 3)
+    // slot 3's run (in-degree 8) continues in the second part
+    assert(partsOf(parts) == Seq(
+      (1, 0, Seq(3), Seq(0, 3), Seq(5L, 6L, 7L), Seq(1.0 / 8, 1.0 / 8, 2.0 / 8)),
+      (1, 1, Seq(3, 7), Seq(0, 2, 3), Seq(8L, 9L, 1L), Seq(3.0 / 8, 1.0 / 8, 2.0 / 4)),
+      (1, 2, Seq(7), Seq(0, 1), Seq(2L), Seq(2.0 / 4))))
+    // uncapped (and already sorted now): one part, the concatenation; no
+    // normalizing keeps the values as they are
+    val whole = LinkGraph.blockParts(1, rows, normalize = false, cap = 100)
+    assert(partsOf(whole) == Seq((1, 0, Seq(3, 7), Seq(0, 5, 7),
+      Seq(5L, 6L, 7L, 8L, 9L, 1L, 2L), parts.flatMap(_.wNorm).toSeq)))
+  }
+
+  test("dualSort keeps a shallow stack on an adversarial key order") {
+    // McIlroy's adversary ("A killer adversary for quicksort", 1999) answers
+    // the comparisons of the sort's own pivot and partition steps, fixing
+    // values so that every pivot lands at the low end of its range: the keys
+    // it leaves drive the median-of-three quicksort to n/4-deep recursion
+    // when both sides recurse.
+    val n = 20000
+    val gas = n.toLong
+    val value = Array.fill(n)(gas)
+    var solid = 0L
+    var candidate = 0
+    def cmp(x: Int, y: Int): Int = {
+      if (value(x) == gas && value(y) == gas) {
+        if (x == candidate) value(x) = solid else value(y) = solid
+        solid += 1
+      }
+      if (value(x) == gas) candidate = x else if (value(y) == gas) candidate = y
+      java.lang.Long.compare(value(x), value(y))
+    }
+    val a = Array.range(0, n) // position → item
+    def swap(i: Int, j: Int): Unit = { val t = a(i); a(i) = a(j); a(j) = t }
+    val todo = scala.collection.mutable.Stack((0, n - 1))
+    while (todo.nonEmpty) {
+      val (lo, hi) = todo.pop()
+      if (hi - lo < 32) {
+        var i = lo + 1
+        while (i <= hi) {
+          val k = a(i); var j = i - 1
+          while (j >= lo && cmp(a(j), k) > 0) { a(j + 1) = a(j); j -= 1 }
+          a(j + 1) = k; i += 1
+        }
+      } else {
+        val mid = (lo + hi) >>> 1
+        if (cmp(a(mid), a(lo)) < 0) swap(mid, lo)
+        if (cmp(a(hi), a(lo)) < 0) swap(hi, lo)
+        if (cmp(a(hi), a(mid)) < 0) swap(hi, mid)
+        val pivot = a(mid)
+        var i = lo; var j = hi
+        while (i <= j) {
+          while (cmp(a(i), pivot) < 0) i += 1
+          while (cmp(a(j), pivot) > 0) j -= 1
+          if (i <= j) { swap(i, j); i += 1; j -= 1 }
+        }
+        if (lo < j) todo.push((lo, j))
+        if (i < hi) todo.push((i, hi))
+      }
+    }
+    val keys = value.clone() // item i starts at position i
+    val vals = keys.map(_.toDouble)
+    var failure: Throwable = null
+    // a 256 KB stack holds a few thousand sort frames, far below n/4
+    val t = new Thread(null, () =>
+      try LinkGraph.dualSort(keys, vals, 0, n - 1) catch { case e: Throwable => failure = e },
+      "dualSort", 256L * 1024)
+    t.start(); t.join()
+    assert(failure == null, s"dualSort failed: $failure")
+    assert(keys.toSeq == value.sorted.toSeq)
+    assert(vals.toSeq == keys.map(_.toDouble).toSeq)
+  }
+
+  test("unpersistAll leaves no cached RDD of the graph behind") {
+    val edges = DenseReference.randomEdges(120, 0.05, seed = 71).map(e => (e._1.toLong, e._2.toLong))
+    for ((fold, assemble) <- Seq((false, false), (true, true))) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      forced(fold, assemble) {
+        val g = graphOf(edges)
+        g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
+        g.degreeTable.count(); g.inDegrees.count()
+        PageRank.run(g, tolerance = 0.0, maxIterations = 2).free()
+        g.unpersistAll()
+      }
+      val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      assert(left.isEmpty, s"left cached (fold=$fold, assemble=$assemble): ${left.values.mkString(", ")}")
+    }
   }
 
   test("driver-resident degree table matches the join build exactly") {
