@@ -4,6 +4,7 @@ import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,15 +14,23 @@ import graft.model._
   * degree tables, and the partitioned destination-block adjacency used by the
   * superstep kernel.
   *
-  * '''The build is one block-routed pipeline, with no joins.''' Block b owns
+  * '''The build is one primitive, block-routed pipeline, with no joins.''' Block b owns
   * vids `[b·blockSize, (b+1)·blockSize)`.
-  *  1. The sorted dictionary is cut into per-block slices of external ids
-  *     (narrowly, from the dictionary build's own sorted runs).
-  *  1. Folded edges are routed by their `src` id to that block's slice, which
-  *     remaps `src`; then by their `dst` id, which remaps `dst` (a
-  *     driver-resident dictionary is broadcast instead, and both ends are
-  *     remapped before the one `dst` route). Rows cross every exchange as
-  *     per-(map task, block) primitive batches.
+  *  1. One scan caches the input pairs as per-task primitive arrays; its count
+  *     picks the regime (under [[LinkGraph.ResidentFoldRows]] raw pairs are
+  *     folded and remapped on the driver).
+  *  1. Each task sorts and deduplicates its own endpoint ids; splitters from a
+  *     sample of those arrays cut them for one exchange, and each task merges
+  *     what it receives into one ascending run of the dictionary.
+  *  1. Route 1 sends every pair by its `src` id to the run that holds it, which
+  *     remaps `src` and sums the weights of each pair's copies (all of them
+  *     land in that task), so the folded edge count is known before the block
+  *     geometry.
+  *  1. The runs are cut into per-block slices of external ids (narrowly), and
+  *     route 2 sends every folded edge by its `dst` id to its block's slice,
+  *     which remaps `dst` (a driver-resident dictionary is broadcast instead,
+  *     and both ends are remapped before the one `dst` route). Rows cross every
+  *     exchange as per-(map task, target) primitive batches.
   *  1. After the `dst` route, partition b holds exactly block b's in-edges:
   *     that is the [[edges]] cache, sorted by (dst, src).
   *  1. The per-block kernel ([[LinkGraph.blockParts]]) turns partition b into
@@ -38,6 +47,8 @@ import graft.model._
   *
   * Per-task memory of the kernel is about 32 B × the edges in one block: a
   * packed (slot, vid) long and a weight per edge, plus the parts it emits.
+  * Route 1's fold holds about 44 B × the raw pairs of one run: the received
+  * pairs and the counting sort by `src`.
   * Packing needs vids below 2³² and blocks below 2³¹ slots (required).
   *
   * @param vertexDict  (extId, vid) dictionary; vid dense 0..n-1 ascending by extId
@@ -467,41 +478,57 @@ object LinkGraph {
     */
   var ResidentAssembleBytes: Long = 64L * 1024 * 1024
 
-  /** Raw-pair cap for [[fromEdgeList]]'s resident-fold probe (a limit-collect
-    * of the unfolded pairs; ~16 B/row, so the default caps the probe at
-    * ~32 MB). 0 disables the probe entirely. Mutable test hook.
+  /** Cap on the raw pairs [[fromEdgeList]] folds on the driver: the build's
+    * one scan counts the pairs, and at or under the cap its primitive arrays
+    * (~16 B/pair, so ~32 MB at the default) are collected and folded there.
+    * Above it the same cached scan feeds the distributed build. Mutable test
+    * hook — 0 sends every non-empty input to the distributed build.
     */
   var ResidentFoldRows: Long = 2L * 1024 * 1024
 
   /** Growable primitive edge rows, and the batch one map task ships to one
-    * block. Packed rows carry `(local slot << 32) | vid` in `a` and leave `b`
-    * null; triple rows carry two ids in `a` and `b`. Shipped trimmed.
+    * block or dictionary run. Packed rows carry `(local slot << 32) | vid` in
+    * `a` and leave `b` null; triple rows carry two ids in `a` and `b`. Unweighted
+    * rows (raw pairs) leave `w` null: every weight is 1. Shipped trimmed.
     */
-  private[graft] final class Rows(packed: Boolean) extends Serializable {
+  private[graft] final class Rows(packed: Boolean, weighted: Boolean = true) extends Serializable {
     var n = 0
     var a = new Array[Long](16)
     var b: Array[Long] = if (packed) null else new Array[Long](16)
-    var w = new Array[Double](16)
+    var w: Array[Double] = if (weighted) new Array[Double](16) else null
 
     private def grow(): Unit = {
       val c = math.max(16, a.length + (a.length >> 1))
       a = java.util.Arrays.copyOf(a, c)
       if (b != null) b = java.util.Arrays.copyOf(b, c)
-      w = java.util.Arrays.copyOf(w, c)
+      if (w != null) w = java.util.Arrays.copyOf(w, c)
     }
     def add(x: Long, v: Double): Unit = {
       if (n == a.length) grow()
       a(n) = x; w(n) = v; n += 1
     }
+    def add(x: Long, y: Long): Unit = {
+      if (n == a.length) grow()
+      a(n) = x; b(n) = y; n += 1
+    }
     def add(x: Long, y: Long, v: Double): Unit = {
       if (n == a.length) grow()
       a(n) = x; b(n) = y; w(n) = v; n += 1
     }
+    /** Appends row `i` of `r`, which has this shape. */
+    def add(r: Rows, i: Int): Unit = {
+      if (n == a.length) grow()
+      a(n) = r.a(i)
+      if (b != null) b(n) = r.b(i)
+      if (w != null) w(n) = r.w(i)
+      n += 1
+    }
+    def weight(i: Int): Double = if (w == null) 1.0 else w(i)
     def trimmed: Rows = {
       if (a.length != n) {
         a = java.util.Arrays.copyOf(a, n)
         if (b != null) b = java.util.Arrays.copyOf(b, n)
-        w = java.util.Arrays.copyOf(w, n)
+        if (w != null) w = java.util.Arrays.copyOf(w, n)
       }
       this
     }
@@ -512,8 +539,7 @@ object LinkGraph {
     if (acc == null) more
     else {
       var i = 0
-      if (more.b == null) while (i < more.n) { acc.add(more.a(i), more.w(i)); i += 1 }
-      else while (i < more.n) { acc.add(more.a(i), more.b(i), more.w(i)); i += 1 }
+      while (i < more.n) { acc.add(more, i); i += 1 }
       acc
     }
 
@@ -712,93 +738,68 @@ object LinkGraph {
       idMode: IdMode = IdMode.Compacted
   ): LinkGraph = {
     import spark.implicits._
-    if (idMode == IdMode.Compacted && ResidentFoldRows > 0) {
-      // Resident-fold probe (guide §1.2 step 1): ONE incremental limit-collect
-      // of the raw pairs replaces the fold aggregation, the dictionary
-      // distinct, and the remap — three whole plan shapes whose cold
-      // Catalyst/Janino time dominated the contract-scale build. Under
-      // the cap the collect is the COMPLETE pair multiset (set-complete
-      // regardless of which partitions filled the limit first; fold counts
-      // are order-insensitive integers). Over the cap, CollectLimit stops
-      // after a handful of partitions (executeTake grows 1, 2, 4, … tasks),
-      // so a 100 TB caller pays one cheap probe and takes the distributed
-      // pipeline unchanged.
-      val cap = math.min(ResidentFoldRows, Int.MaxValue.toLong - 2).toInt
-      val probe = rawEdges
-        .select($"src".cast("long"), $"dst".cast("long"))
-        .limit(cap + 1)
-        .as[(Long, Long)]
-        .collect()
-      if (probe.length <= cap) return residentFromPairs(spark, probe, numBlocks)
+    val pairs = rawEdges.select($"src".cast("long"), $"dst".cast("long"))
+    idMode match {
+      case IdMode.DenseByMax =>
+        fromFoldedEdgeList(spark,
+          pairs.groupBy($"src", $"dst").agg(count(lit(1)).cast("double").as("weight")), numBlocks, idMode)
+      case IdMode.Compacted =>
+        // the one pass over the input: every later step reads this cache, and
+        // its count picks the regime
+        val scan = scanOf(pairs.queryExecution.toRdd, weighted = false)
+        try {
+          val total = scan.map(_.n.toLong).fold(0L)(_ + _)
+          if (total <= math.min(ResidentFoldRows, Int.MaxValue / 2 - 8))
+            residentFromPairs(spark, scan.collect(), numBlocks)
+          else routedGraph(spark, scan, numBlocks)
+        } finally scan.unpersist(false)
     }
-    fromFoldedEdgeList(
-      spark,
-      rawEdges
-        .select($"src".cast("long"), $"dst".cast("long"))
-        .groupBy($"src", $"dst")
-        .agg(count(lit(1)).cast("double").as("weight")),
-      numBlocks,
-      idMode)
   }
 
-  /** Driver fold + dictionary + remap of a collected raw pair multiset —
-    * value-identical to the distributed build: fold weights are duplicate
-    * counts (exact integers, order-insensitive), vids are the ascending
-    * sort rank of the distinct external ids, and the remapped edges are
-    * parallelized back in a deterministic (src, dst) vid-sorted order.
+  /** One cached batch per task of the (src, dst[, weight]) leading columns of `rows`. */
+  private def scanOf(rows: RDD[InternalRow], weighted: Boolean): RDD[Rows] =
+    rows.mapPartitions { it =>
+      val r = new Rows(packed = false, weighted)
+      it.foreach { row =>
+        require(!row.isNullAt(0) && !row.isNullAt(1), "edge ids must not be null")
+        if (weighted) r.add(row.getLong(0), row.getLong(1), row.getDouble(2)) else r.add(row.getLong(0), row.getLong(1))
+      }
+      Iterator.single(r.trimmed)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Driver fold + dictionary + remap of the collected raw pairs —
+    * value-identical to the distributed build: vids are the ascending sort
+    * rank of the distinct external ids, fold weights are duplicate counts
+    * (exact integers, order-insensitive), and the remapped edges are
+    * parallelized back in (src, dst) vid order.
     */
-  private def residentFromPairs(
-      spark: SparkSession,
-      pairs: Array[(Long, Long)],
-      numBlocks: Int
-  ): LinkGraph = {
+  private def residentFromPairs(spark: SparkSession, chunks: Array[Rows], numBlocks: Int): LinkGraph = {
     import spark.implicits._
-    val counts = new java.util.HashMap[(Long, Long), Array[Long]](pairs.length * 2)
-    pairs.foreach { p =>
-      val c = counts.get(p)
-      if (c == null) counts.put(p, Array(1L)) else c(0) += 1
-    }
-    val m = counts.size()
-    // dictionary: ascending distinct external ids
-    val idSet = new java.util.HashSet[java.lang.Long](m * 2)
-    pairs.foreach { case (s, d) => idSet.add(s); idSet.add(d); () }
-    val ids = new Array[Long](idSet.size())
-    var i = 0
-    val idIt = idSet.iterator()
-    while (idIt.hasNext) { ids(i) = idIt.next().longValue(); i += 1 }
-    java.util.Arrays.sort(ids)
+    val total = chunks.map(_.n).sum
+    val ids = sortedDistinct(Array.concat(chunks.flatMap(c => Seq(c.a, c.b)).toSeq: _*))
     val n = ids.length
-    val vidOf = new java.util.HashMap[Long, Long](n * 2)
-    val mappings = new Array[VertexMapping](n)
-    i = 0
-    while (i < n) {
-      vidOf.put(ids(i), i.toLong)
-      mappings(i) = VertexMapping(ids(i), i.toLong)
-      i += 1
+    // remapped (src, dst) vid pairs packed into one long (vids dense < 2³¹):
+    // sorted, every copy of a pair is adjacent, and the run length is its weight
+    val packed = new Array[Long](total)
+    var k = 0
+    chunks.foreach { c =>
+      var i = 0
+      while (i < c.n) { packed(k) = (vidIn(ids, c.a(i), 0L) << 32) | vidIn(ids, c.b(i), 0L); k += 1; i += 1 }
     }
-    // remap + deterministic (src, dst) vid order via the primitive dual sort
-    val packed = new Array[Long](m)
-    val w = new Array[Double](m)
-    i = 0
-    val entryIt = counts.entrySet().iterator()
-    while (entryIt.hasNext) {
-      val e = entryIt.next()
-      val sv = vidOf.get(e.getKey._1)
-      val dv = vidOf.get(e.getKey._2)
-      packed(i) = (sv << 32) | dv // vids dense < 2³¹
-      w(i) = e.getValue()(0).toDouble
-      i += 1
+    java.util.Arrays.sort(packed)
+    val folded = scala.collection.mutable.ArrayBuffer.empty[Edge]
+    var i = 0
+    while (i < total) {
+      var j = i + 1
+      while (j < total && packed(j) == packed(i)) j += 1
+      folded += Edge(packed(i) >>> 32, packed(i) & 0xffffffffL, (j - i).toDouble)
+      i = j
     }
-    dualSort(packed, w, 0, m - 1)
-    val remapped = new Array[Edge](m)
-    i = 0
-    while (i < m) {
-      remapped(i) = Edge(packed(i) >>> 32, packed(i) & 0xffffffffL, w(i))
-      i += 1
-    }
+    val remapped = folded.toArray
+    val m = remapped.length
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     val dict = spark.createDataset(spark.sparkContext.parallelize(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(mappings), p))
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(Array.tabulate(n)(v => VertexMapping(ids(v), v.toLong))), p))
     dict.persist(StorageLevel.MEMORY_AND_DISK)
     dict.count()
     val edges = spark.createDataset(spark.sparkContext.parallelize(
@@ -834,7 +835,6 @@ object LinkGraph {
     val folded = foldedEdges
       .select($"src".cast("long"), $"dst".cast("long"), $"weight".cast("double"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var runs: RDD[Array[Long]] = null
 
     try idMode match {
       case IdMode.DenseByMax =>
@@ -858,10 +858,10 @@ object LinkGraph {
           // Driver-resident dictionary (guide §1.2 step 1: remove passes):
           // one partial-aggregated distinct job collects the ≤ 2·|E| ids
           // (the exchange carries only per-partition-distinct rows, never
-          // the 2|E| incidence frame the global-sort path sorts), the sort
-          // rank is assigned on the driver, and the n-row dictionary is
-          // parallelized back. The sorted ids are broadcast, so both ends
-          // are remapped map-side and the dst route is the only exchange.
+          // the 2|E| incidence frame), the sort rank is assigned on the
+          // driver, and the n-row dictionary is parallelized back. The sorted
+          // ids are broadcast, so both ends are remapped map-side and the dst
+          // route is the only exchange.
           val ids = folded.select($"src").union(folded.select($"dst")).distinct().as[Long].collect()
           java.util.Arrays.sort(ids)
           val p = math.max(1, sc.defaultParallelism)
@@ -883,64 +883,200 @@ object LinkGraph {
             .mapPartitions(it => Iterator.single(merged(it)))
           blockLaidGraph(spark, dict, ids.length, foldedCount, blocks, bs, byDst, Some(bIds))
         } else {
-          // Distributed dictionary: its sorted runs are cut into block slices
-          // (no exchange), and two routed exchanges remap src, then dst
-          val (r, starts) = sortedIdRuns(spark, folded)
-          runs = r
-          val n = starts.last
-          val (blocks, bs) = geometry(spark, n, foldedCount, numBlocks)
-          val hp = new org.apache.spark.HashPartitioner(blocks)
-          val slices = new BlockSliceRDD(r, starts, bs, blocks)
-          // first external id of every non-empty block: the routing boundaries
-          val firstIds = slices.mapPartitions(_.filter(_.nonEmpty).map(_(0))).collect()
-          // route 1: by src id to its block's slice, which remaps src
-          val bySrc = rows
-            .mapPartitions { it =>
-              val out = new Array[Rows](blocks)
-              it.foreach { r =>
-                rowsAt(out, blockOfId(firstIds, r.getLong(0)), packed = false)
-                  .add(r.getLong(0), r.getLong(1), r.getDouble(2))
-              }
-              batches(out)
-            }
-            .partitionBy(hp)
-          // route 2: by dst id to its block's slice, which remaps dst
-          val byDst = bySrc
-            .zipPartitions(slices) { (it, sl) =>
-              val slice = sl.next()
-              val out = new Array[Rows](blocks)
-              it.foreach { case (b, t) =>
-                val lo = b * bs
-                var i = 0
-                while (i < t.n) {
-                  rowsAt(out, blockOfId(firstIds, t.b(i)), packed = false)
-                    .add(vidIn(slice, t.a(i), lo), t.b(i), t.w(i))
-                  i += 1
-                }
-              }
-              batches(out)
-            }
-            .partitionBy(hp)
-            .zipPartitions(slices) { (it, sl) =>
-              val slice = sl.next()
-              val out = new Rows(packed = true)
-              it.foreach { case (b, t) =>
-                val lo = b * bs
-                var i = 0
-                while (i < t.n) {
-                  out.add(((vidIn(slice, t.b(i), lo) - lo) << 32) | t.a(i), t.w(i))
-                  i += 1
-                }
-              }
-              Iterator.single(out)
-            }
-          val dict = dictionaryOf(spark, r, starts)
-          blockLaidGraph(spark, dict, n, foldedCount, blocks, bs, byDst, None)
+          // the distributed build over a primitive scan of the cached frame
+          // (pre-folded rows: route 1's fold finds no copies to sum)
+          val scan = scanOf(rows, weighted = true)
+          try routedGraph(spark, scan, numBlocks) finally scan.unpersist(false)
         }
-    } finally {
-      folded.unpersist(false)
-      if (runs != null) runs.unpersist(false)
+    } finally folded.unpersist(false)
+  }
+
+  /** Samples per map task for the dictionary's splitters, per run. */
+  private val SamplesPerRun = 64
+
+  /** The distributed Compacted build over a cached `scan` of (src, dst[, w])
+    * rows in external ids: the dictionary's sorted runs from one exchange of
+    * per-task distinct ids, route 1 (remap `src`, fold) to the runs, route 2
+    * (remap `dst`) to the block slices cut from them. Every intermediate cache
+    * is released once the graph's dictionary and edge cache are built.
+    */
+  private def routedGraph(spark: SparkSession, scan: RDD[Rows], numBlocks: Int): LinkGraph = {
+    val p = math.max(1, spark.sparkContext.defaultParallelism)
+    val runPartitioner = new org.apache.spark.HashPartitioner(p) // identity on run indices
+    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def hold[T](r: RDD[T]): RDD[T] = { held += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
+    try {
+      // every task's distinct endpoint ids, sorted
+      val local = hold(scan.map(c => sortedDistinct(Array.concat(c.a, c.b))))
+      val splitters = splittersOf(local.map(sampleOf(_, SamplesPerRun * p)).collect(), p)
+      // the dictionary: one exchange of the ids cut at the splitters; run k
+      // merges what its task receives into the ascending ids in
+      // (splitters(k−1), splitters(k)]
+      val runs = hold(local
+        .flatMap(ids => cuts(ids, splitters))
+        .partitionBy(runPartitioner)
+        .mapPartitions(it => Iterator.single(sortedDistinct(Array.concat(it.map(_._2).toSeq: _*)))))
+      val starts = runs.map(_.length.toLong).collect().scanLeft(0L)(_ + _)
+      val n = starts.last
+      // route 1: every pair by its src id to the run that holds it, which
+      // remaps src and folds the pair's copies
+      val bySrc = hold(scan
+        .mapPartitions { it =>
+          val out = new Array[Rows](p)
+          it.foreach { c =>
+            var i = 0
+            while (i < c.n) {
+              val k = runOf(splitters, c.a(i))
+              if (out(k) == null) out(k) = new Rows(packed = false, c.w != null)
+              out(k).add(c, i)
+              i += 1
+            }
+          }
+          batches(out)
+        }
+        .partitionBy(runPartitioner)
+        .zipPartitions(runs)((it, run) => Iterator.single(foldRun(it.map(_._2).toArray, run.next()))))
+      val m = bySrc.map(_.n.toLong).fold(0L)(_ + _)
+      val (blocks, bs) = geometry(spark, n, m, numBlocks)
+      val hp = new org.apache.spark.HashPartitioner(blocks)
+      val slices = new BlockSliceRDD(runs, starts, bs, blocks)
+      // first external id of every non-empty block: the routing boundaries
+      val firstIds = slices.mapPartitions(_.filter(_.nonEmpty).map(_(0))).collect()
+      // route 2: every folded edge by its dst id to its block's slice, which remaps dst
+      val byDst = bySrc
+        .mapPartitionsWithIndex { (k, it) =>
+          val t = it.next()
+          val out = new Array[Rows](blocks)
+          var i = 0
+          while (i < t.n) {
+            rowsAt(out, blockOfId(firstIds, t.b(i)), packed = false).add(starts(k) + t.a(i), t.b(i), t.w(i))
+            i += 1
+          }
+          batches(out)
+        }
+        .partitionBy(hp)
+        .zipPartitions(slices) { (it, sl) =>
+          val slice = sl.next()
+          val out = new Rows(packed = true)
+          it.foreach { case (b, t) =>
+            val lo = b * bs
+            var i = 0
+            while (i < t.n) {
+              out.add(((vidIn(slice, t.b(i), lo) - lo) << 32) | t.a(i), t.w(i))
+              i += 1
+            }
+          }
+          Iterator.single(out)
+        }
+      blockLaidGraph(spark, dictionaryOf(spark, runs, starts), n, m, blocks, bs, byDst, None)
+    } finally held.foreach(_.unpersist(false))
+  }
+
+  /** The ascending distinct values of `xs`, which it sorts in place. */
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var k = 0
+    var i = 0
+    while (i < xs.length) {
+      if (k == 0 || xs(i) != xs(k - 1)) { xs(k) = xs(i); k += 1 }
+      i += 1
     }
+    java.util.Arrays.copyOf(xs, k)
+  }
+
+  /** Up to `k` evenly spaced ids of one task's sorted distinct ids, and how
+    * many ids they stand for.
+    */
+  private def sampleOf(ids: Array[Long], k: Int): (Int, Array[Long]) = {
+    val s = math.min(k, ids.length)
+    (ids.length, Array.tabulate(s)(i => ids((i.toLong * ids.length / s).toInt)))
+  }
+
+  /** `p − 1` ascending splitters from the tasks' samples: run k holds the ids
+    * in (splitters(k−1), splitters(k)], each about an equal share of the
+    * sampled weight. Splitters may repeat, which leaves a run empty. Vids
+    * depend only on the ids' global order, never on the splitters.
+    */
+  private def splittersOf(samples: Array[(Int, Array[Long])], p: Int): Array[Long] = {
+    val weighted = samples.flatMap { case (len, s) => s.map(v => (v, len.toDouble / s.length)) }.sortBy(_._1)
+    val total = weighted.map(_._2).sum
+    var cum = 0.0
+    var i = 0
+    Array.tabulate(p - 1) { j =>
+      while (i < weighted.length - 1 && cum + weighted(i)._2 < total * (j + 1) / p) { cum += weighted(i)._2; i += 1 }
+      if (weighted.isEmpty) 0L else weighted(i)._1
+    }
+  }
+
+  /** The run that holds external id `id`: the number of splitters below it. */
+  private def runOf(splitters: Array[Long], id: Long): Int = {
+    var lo = 0
+    var hi = splitters.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (splitters(mid) < id) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** One task's sorted ids cut into (run, ids) pieces at the splitters. */
+  private def cuts(ids: Array[Long], splitters: Array[Long]): Iterator[(Int, Array[Long])] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Long])]
+    var from = 0
+    while (from < ids.length) {
+      val k = runOf(splitters, ids(from))
+      var to = from + 1
+      while (to < ids.length && (k == splitters.length || ids(to) <= splitters(k))) to += 1
+      out += ((k, java.util.Arrays.copyOfRange(ids, from, to)))
+      from = to
+    }
+    out.iterator
+  }
+
+  /** Route 1's reduce side for one dictionary run: the pairs whose `src` the
+    * run holds, `src` remapped to its index in the run, and the weights of
+    * each (src, dst) pair's copies summed — every copy routes to this task, so
+    * the fold is exact. Rows come out ordered by (src index, dst).
+    */
+  private def foldRun(in: Array[Rows], run: Array[Long]): Rows = {
+    val n = in.map(_.n).sum
+    // counting sort by src index: start(s) = first row of src s
+    val idx = new Array[Int](n)
+    val start = new Array[Int](run.length + 1)
+    var k = 0
+    in.foreach { t =>
+      var i = 0
+      while (i < t.n) { idx(k) = vidIn(run, t.a(i), 0L).toInt; start(idx(k) + 1) += 1; k += 1; i += 1 }
+    }
+    var s = 0
+    while (s < run.length) { start(s + 1) += start(s); s += 1 }
+    val next = java.util.Arrays.copyOf(start, run.length)
+    val dst = new Array[Long](n)
+    val w = new Array[Double](n)
+    k = 0
+    in.foreach { t =>
+      var i = 0
+      while (i < t.n) {
+        val j = next(idx(k)); next(idx(k)) += 1
+        dst(j) = t.b(i); w(j) = t.weight(i); k += 1; i += 1
+      }
+    }
+    // sort each src's dsts, then fold equal neighbours in place
+    val out = new Rows(packed = false)
+    out.a = new Array[Long](n); out.b = dst; out.w = w
+    s = 0
+    while (s < run.length) {
+      if (start(s + 1) - start(s) > 1) dualSort(dst, w, start(s), start(s + 1) - 1)
+      var i = start(s)
+      while (i < start(s + 1)) {
+        val d = dst(i)
+        var sum = 0.0
+        while (i < start(s + 1) && dst(i) == d) { sum += w(i); i += 1 }
+        out.a(out.n) = s; dst(out.n) = d; w(out.n) = sum; out.n += 1
+      }
+      s += 1
+    }
+    out.trimmed
   }
 
   /** Persists the dictionary and the block-laid edge cache `byDst` feeds
@@ -1064,60 +1200,12 @@ object LinkGraph {
     g
   }
 
-  /** The distinct external ids in ascending order, as one array per range
-    * partition (cached; the caller releases it), and the first vid of every
-    * run plus n at the end. Range-partition + sort gives the ascending order;
-    * dedup happens AFTER the range sort as an adjacent-equal skip (range
-    * partitioning puts equal ids in one partition, sorted adjacent), so the
-    * 2|E| incidence frame crosses one exchange; the run lengths give every
-    * run's first vid. Vids depend only on the global sort order, so the
-    * assignment is deterministic at any parallelism (SURVEY.md §7.3.5).
-    */
-  private def sortedIdRuns(spark: SparkSession, folded: DataFrame): (RDD[Array[Long]], Array[Long]) = {
-    import spark.implicits._
-    val p = math.max(1, spark.sparkContext.defaultParallelism)
-    val runs = folded
-      .select($"src".as("extId"))
-      .union(folded.select($"dst".as("extId")))
-      .repartitionByRange(p, $"extId")
-      .sortWithinPartitions($"extId")
-      .select($"extId".cast("long"))
-      .as[Long]
-      .rdd
-      .mapPartitions { it =>
-        val out = new scala.collection.mutable.ArrayBuilder.ofLong
-        var last = 0L
-        var first = true
-        it.foreach { v => if (first || v != last) { out += v; last = v; first = false } }
-        Iterator.single(out.result())
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val lengths = runs.map(_.length.toLong).collect()
-    (runs, lengths.scanLeft(0L)(_ + _))
-  }
-
   /** (extId, vid) rows of the sorted runs, in the runs' partitions. */
   private def dictionaryOf(spark: SparkSession, runs: RDD[Array[Long]], starts: Array[Long]): Dataset[VertexMapping] = {
     import spark.implicits._
     spark.createDataset(runs.mapPartitionsWithIndex { (k, it) =>
       it.flatMap(run => Iterator.range(0, run.length).map(i => VertexMapping(run(i), starts(k) + i)))
     })
-  }
-
-  /** Deterministic compacted vertex dictionary: dense vids 0..n-1 in ascending
-    * extId order — the distributed analog of `enumerate(np.unique(edges))`
-    * (pagerank.py:622-627), built from [[sortedIdRuns]].
-    */
-  def buildDictionary(spark: SparkSession, folded: DataFrame): Dataset[VertexMapping] = {
-    val (runs, starts) = sortedIdRuns(spark, folded)
-    val dict = dictionaryOf(spark, runs, starts)
-    // materialize the dictionary BEFORE releasing the sorted runs — round 3
-    // left its sorted scratch persisted for the session (an n-row residue per
-    // graph build)
-    dict.persist(StorageLevel.MEMORY_AND_DISK)
-    dict.count()
-    runs.unpersist(false)
-    dict
   }
 }
 

@@ -19,9 +19,15 @@ import graft.model.AdjPart
   * shuffling 64 ints instead of 1.3 GB (guide §2.4: remove the shuffle
   * outright). Restore is bit-identical: same parts, same order, same layout.
   *
-  * Format per file: [numParts][per part: blockId partId lens + raw arrays].
+  * Format per file: [magic][version][numParts][per part: blockId partId
+  * lens (keys, offsets, adj, wNorm) + raw arrays]. The writer emits one file
+  * per block, so a missing file, a short or over-long one, a foreign or stale
+  * format, a part of another block or a wNorm length that is not adj's all
+  * raise on read: the restore never comes back with a partial adjacency.
   */
 object PartIO {
+  private val Magic = 0x47504152 // "GPAR"
+  private val Version = 2
 
   def writeBlockFiles(rdd: RDD[AdjPart], dir: String): Unit = {
     new File(dir).mkdirs()
@@ -30,25 +36,27 @@ object PartIO {
         val f = new File(dir, f"block-$i%05d")
         val out = new DataOutputStream(
           new BufferedOutputStream(new FileOutputStream(f), 1 << 20))
-        var count = 0
         val parts = it.toArray
-        out.writeInt(parts.length)
-        parts.foreach { p =>
-          out.writeInt(p.blockId); out.writeInt(p.partId)
-          out.writeInt(p.keys.length); out.writeInt(p.offsets.length)
-          out.writeInt(p.adj.length)
-          var j = 0
-          while (j < p.keys.length) { out.writeInt(p.keys(j)); j += 1 }
-          j = 0
-          while (j < p.offsets.length) { out.writeInt(p.offsets(j)); j += 1 }
-          j = 0
-          while (j < p.adj.length) { out.writeLong(p.adj(j)); j += 1 }
-          j = 0
-          while (j < p.wNorm.length) { out.writeDouble(p.wNorm(j)); j += 1 }
-          count += 1
-        }
-        out.close()
-        Iterator.single(count)
+        try {
+          out.writeInt(Magic); out.writeInt(Version)
+          out.writeInt(parts.length)
+          parts.foreach { p =>
+            require(p.blockId == i && p.wNorm.length == p.adj.length,
+              s"part ${p.blockId}/${p.partId} in partition $i: needs blockId $i and one wNorm per adj entry")
+            out.writeInt(p.blockId); out.writeInt(p.partId)
+            out.writeInt(p.keys.length); out.writeInt(p.offsets.length)
+            out.writeInt(p.adj.length); out.writeInt(p.wNorm.length)
+            var j = 0
+            while (j < p.keys.length) { out.writeInt(p.keys(j)); j += 1 }
+            j = 0
+            while (j < p.offsets.length) { out.writeInt(p.offsets(j)); j += 1 }
+            j = 0
+            while (j < p.adj.length) { out.writeLong(p.adj(j)); j += 1 }
+            j = 0
+            while (j < p.wNorm.length) { out.writeDouble(p.wNorm(j)); j += 1 }
+          }
+        } finally out.close()
+        Iterator.single(parts.length)
       }
       .count()
     ()
@@ -56,16 +64,24 @@ object PartIO {
 
   private def readBlockFile(dir: String, block: Int): Array[AdjPart] = {
     val f = new File(dir, f"block-$block%05d")
-    if (!f.isFile) return Array.empty
+    def corrupt(why: String) = new java.io.IOException(s"block file $f: $why")
+    if (!f.isFile) throw new java.io.FileNotFoundException(s"block file $f is missing")
     val in = new DataInputStream(new BufferedInputStream(new FileInputStream(f), 1 << 20))
     try {
+      val magic = in.readInt()
+      val version = in.readInt()
+      if (magic != Magic) throw corrupt(f"not a part file (magic 0x$magic%08x)")
+      if (version != Version) throw corrupt(s"format version $version, expected $Version")
       val nParts = in.readInt()
-      Array.fill(nParts) {
+      val parts = Array.fill(nParts) {
         val blockId = in.readInt()
         val partId = in.readInt()
         val nKeys = in.readInt()
         val nOff = in.readInt()
         val nAdj = in.readInt()
+        val nW = in.readInt()
+        if (blockId != block) throw corrupt(s"holds a part of block $blockId")
+        if (nW != nAdj) throw corrupt(s"part $partId has $nW wNorm values for $nAdj adj entries")
         val keys = new Array[Int](nKeys)
         var j = 0
         while (j < nKeys) { keys(j) = in.readInt(); j += 1 }
@@ -75,11 +91,15 @@ object PartIO {
         val adj = new Array[Long](nAdj)
         j = 0
         while (j < nAdj) { adj(j) = in.readLong(); j += 1 }
-        val wNorm = new Array[Double](nAdj)
+        val wNorm = new Array[Double](nW)
         j = 0
-        while (j < nAdj) { wNorm(j) = in.readDouble(); j += 1 }
+        while (j < nW) { wNorm(j) = in.readDouble(); j += 1 }
         AdjPart(blockId, partId, keys, offsets, adj, wNorm)
       }
+      if (in.read() != -1) throw corrupt("has bytes past its last part")
+      parts
+    } catch {
+      case e: java.io.EOFException => throw corrupt(s"truncated (${e.getMessage})")
     } finally in.close()
   }
 

@@ -248,6 +248,12 @@ class GraphAlgoSpec extends GraftSuite {
   private def layoutsOf(g: LinkGraph) =
     (partsOf(g.adjParts.collect()), partsOf(g.gatherPartsRdd.collect()))
 
+  private def dictOf(g: LinkGraph) =
+    g.vertexDict.collect().map(m => (m.extId, m.vid)).sortBy(_._1).toSeq
+
+  private def edgesOf(g: LinkGraph) =
+    g.edges.collect().map(e => (e.src, e.dst, e.weight)).sorted.toSeq
+
   private def ranksOf(g: LinkGraph) = {
     val out = PageRank.run(g, tolerance = 0.0, maxIterations = 6)
     val v = out.toVertexDf(g).collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
@@ -263,10 +269,6 @@ class GraphAlgoSpec extends GraftSuite {
       val a = build() // default gates: resident fold (the whole build on the driver)
       val b = forced(fold = true, assemble = false)(build()) // the full cluster build
       assert(a.numVertices == b.numVertices && a.numBlocks == b.numBlocks)
-      def dictOf(g: LinkGraph) =
-        g.vertexDict.collect().map(m => (m.extId, m.vid)).sortBy(_._1).toSeq
-      def edgesOf(g: LinkGraph) =
-        g.edges.collect().map(e => (e.src, e.dst, e.weight)).sorted.toSeq
       assert(dictOf(a) == dictOf(b))
       assert(edgesOf(a) == edgesOf(b))
       assert(layoutsOf(a) == layoutsOf(b))
@@ -299,6 +301,78 @@ class GraphAlgoSpec extends GraftSuite {
         assert(gather.exists(_._1 == 0))
       }
       a.unpersistAll()
+    }
+  }
+
+  test("routed fold is exact across map tasks: a pair in every partition, empty partitions, an empty run") {
+    val p = spark.sparkContext.defaultParallelism
+    val hot = (-3L, 1L << 40)
+    val rng = new scala.util.Random(37)
+    val random = Seq.fill(300)((rng.nextInt(400).toLong * 11 - 900, rng.nextInt(400).toLong * 11 - 900))
+    // round-robin spreads the p consecutive copies of `hot` (and of two more
+    // pairs of its src, which keep its copies apart in every task's rows) over
+    // all p partitions of the repartition; the union adds 3 empty partitions
+    val hotSrc = Seq(hot, (hot._1, 5L), (hot._1, 1L << 41))
+    val spread = hotSrc.flatMap(Seq.fill(p)(_)).toDF("src", "dst").coalesce(1)
+      .union(random.toDF("src", "dst")).repartition(p)
+      .union(spark.sparkContext.parallelize(Seq.empty[(Long, Long)], 3).toDF("src", "dst"))
+    val hotPerPartition =
+      spread.rdd.mapPartitions(it => Iterator.single(it.count(r => (r.getLong(0), r.getLong(1)) == hot)))
+    assert(hotPerPartition.collect().toSeq == Seq.fill(p)(1) ++ Seq.fill(3)(0))
+    // two ids: p − 1 > 2 splitters drawn from two sampled values repeat, so a
+    // dictionary run is empty
+    assert(p >= 4)
+    val twoIds =
+      Seq((7L, -7L), (-7L, 7L), (7L, -7L), (7L, 7L), (-7L, 7L), (7L, -7L)).toDF("src", "dst").repartition(p)
+    for ((raw, blocks) <- Seq((spread, 3), (twoIds, 2))) {
+      val a = LinkGraph.fromEdgeList(spark, raw, numBlocks = blocks) // the resident fold
+      val b = forced(fold = true, assemble = false)(LinkGraph.fromEdgeList(spark, raw, numBlocks = blocks))
+      assert(!a.edgesByDstBlock && b.edgesByDstBlock) // one resident, one routed build
+      assert(a.numVertices == b.numVertices && a.numEdges == b.numEdges)
+      assert(dictOf(a) == dictOf(b))
+      assert(edgesOf(a) == edgesOf(b))
+      assert(layoutsOf(a) == layoutsOf(b))
+      assert(ranksOf(a) == ranksOf(b))
+      if (raw eq spread) { // `random` never draws these ids
+        val vid = dictOf(b).toMap
+        val hotEdges = edgesOf(b).filter(_._1 == vid(hot._1))
+        assert(hotEdges.map(e => (e._2, e._3)) == hotSrc.map(e => (vid(e._2), p.toDouble)).sorted)
+      } else assert(edgesOf(b).map(_._3).sorted == Seq(1.0, 2.0, 3.0))
+      a.unpersistAll(); b.unpersistAll()
+    }
+    // pre-folded, fractional weights: the resident dictionary against the
+    // same scan, dictionary and route 1 (which has no copies to sum)
+    val folded = signedIds.distinct.zipWithIndex.map { case ((s, d), i) => (s, d, 0.25 + i % 7) }
+      .toDF("src", "dst", "weight").repartition(p)
+    val a = LinkGraph.fromFoldedEdgeList(spark, folded, numBlocks = 4)
+    val b = forced(fold = true, assemble = false)(LinkGraph.fromFoldedEdgeList(spark, folded, numBlocks = 4))
+    assert(dictOf(a) == dictOf(b))
+    assert(edgesOf(a) == edgesOf(b))
+    assert(layoutsOf(a) == layoutsOf(b))
+    assert(ranksOf(a) == ranksOf(b))
+    a.unpersistAll(); b.unpersistAll()
+  }
+
+  test("above the fold cap the build scans its input once and collects no raw pairs") {
+    val rng = new scala.util.Random(29)
+    val pairs = Seq.fill(500)((rng.nextInt(200).toLong * 3, rng.nextInt(200).toLong * 3))
+    val parts = 5
+    for (cap <- Seq(pairs.length - 1, pairs.length)) {
+      val scanned = spark.sparkContext.collectionAccumulator[Int]("scanned partitions")
+      val input = spark.sparkContext.parallelize(pairs, parts)
+        .mapPartitionsWithIndex { (k, it) => scanned.add(k); it }
+        .toDF("src", "dst")
+      val was = LinkGraph.ResidentFoldRows
+      LinkGraph.ResidentFoldRows = cap.toLong
+      val g = try LinkGraph.fromEdgeList(spark, input, numBlocks = 3) finally LinkGraph.ResidentFoldRows = was
+      g.adjParts.count(); g.degreeTable.count(); g.numEdges // later reads hit the graph's own caches
+      import scala.jdk.CollectionConverters._
+      assert(scanned.value.asScala.toSeq.map(_.intValue).sorted == (0 until parts))
+      // above the cap the routed build, with no driver copy of the pairs; at
+      // the cap the resident fold of the collected scan
+      val routed = cap < pairs.length
+      assert(g.edgesByDstBlock == routed && g.edgesLocalPre.isEmpty == routed)
+      g.unpersistAll()
     }
   }
 
