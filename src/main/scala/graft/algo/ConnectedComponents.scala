@@ -35,35 +35,28 @@ import graft.graph.{LinkGraph, Lineage}
   */
 object ConnectedComponents {
 
-  /** Per-vertex frames pinned via [[Lineage.pin]] report DEFAULT (huge)
-    * statistics, so the planner would sort-merge-join them against the
-    * edge-scale side — shuffling the big side once per round. Below this
-    * bound (≈4M vertices × 16 B) the label frame gets an explicit broadcast
-    * hint instead; above it the joins stay shuffle-based, which is the right
-    * shape at cluster scale.
-    */
-  private val BroadcastLabelBytes: Long = 64L * 1024 * 1024
-
-  /** Below this bound on the deduped undirected edge set (16 B/edge) the
-    * labels are computed DRIVER-RESIDENT: one collect + union-find with
+  /** Returns (vid, label) for every vertex in the dictionary.
+    *
+    * Under the graph policy's driver budget (16 B per folded edge) the labels
+    * are computed DRIVER-RESIDENT: one collect + union-find with
     * min-representative roots, which produces the IDENTICAL canonical
     * labeling (label = min vid of the component — a property of the result,
     * not of the algorithm) in O(E α(E)) driver time instead of 3+ shuffle
-    * rounds of 6 exchanges each. The same small-graph/large-graph regime
-    * split as PageRankEngine.BroadcastThresholdBytes: a 100 TB graph takes
-    * the star-contraction path, the contract-scale graph doesn't pay
-    * cluster-coordination prices for sub-second work. Mutable test hook —
-    * set 0 to force the distributed path.
+    * rounds of 6 exchanges each. A 100 TB graph takes the star-contraction
+    * path; the contract-scale graph doesn't pay cluster-coordination prices
+    * for sub-second work.
     */
-  var ResidentEdgeBytes: Long = 64L * 1024 * 1024
-
-  /** Returns (vid, label) for every vertex in the dictionary. */
   def run(graph: LinkGraph, maxIterations: Int = 50): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
-    // labels/mins frames are ≤ numVertices rows of two longs
+    // Per-vertex frames pinned via Lineage.pin report DEFAULT (huge)
+    // statistics, so the planner would sort-merge-join them against the
+    // edge-scale side — shuffling the big side once per round. When the
+    // label frame (≤ numVertices rows of two longs) fits the driver budget it
+    // gets an explicit broadcast hint instead; above it the joins stay
+    // shuffle-based, which is the right shape at cluster scale.
     val hintSmall: DataFrame => DataFrame =
-      if (graph.numVertices * 16 < BroadcastLabelBytes) broadcast(_) else identity
+      if (graph.numVertices * 16 < graph.policy.driverBytes) broadcast(_) else identity
     // (measured: disabling AQE inside this loop cut job count 31→19 but left
     // the wall unchanged at contract scale, while losing AQE's runtime skew
     // handling at cluster scale — so AQE stays ON here, with the join
@@ -75,7 +68,7 @@ object ConnectedComponents {
     // cost here (guide §2.4): one collect of the cached edge frame replaces
     // distinct + persist + count + collect. The folded count bounds the
     // undirected count from above, so the gate is (slightly) conservative.
-    if (graph.numEdges * 16 < ResidentEdgeBytes && graph.numVertices <= Int.MaxValue.toLong) {
+    if (graph.numEdges * 16 < graph.policy.driverBytes && graph.numVertices <= Int.MaxValue.toLong) {
       val labels = residentLabels(graph, graph.edgesLocal)
       val b = spark.sparkContext.broadcast(labels)
       val out = spark

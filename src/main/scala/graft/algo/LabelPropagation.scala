@@ -42,24 +42,21 @@ import graft.graph.LinkGraph
   */
 object LabelPropagation {
 
-  /** Below this bound on the folded edge set (≤ 2|E| undirected entries at
+  /** Returns (vid, label) after `iterations` synchronous supersteps.
+    *
+    * Under the graph policy's driver budget (≤ 2|E| undirected entries at
     * 24 B each) the supersteps run DRIVER-RESIDENT: one collect of the cached
     * folded edges, a local undirected fold, and k array/hash passes — the
     * same labels as the distributed loop (vote sums are commutative per pair
     * and exact for fold-multiplicity weights; the argmax tie-break is the
     * identical (w, smallest-label) order) without paying 3 exchanges per
-    * superstep for sub-second work. Same regime split as
-    * PageRankEngine.BroadcastThresholdBytes; a 100 TB graph takes the
-    * distributed loop. Mutable test hook — set 0 to force distributed.
+    * superstep for sub-second work. A 100 TB graph takes the distributed loop.
     */
-  var ResidentEdgeBytes: Long = 64L * 1024 * 1024
-
-  /** Returns (vid, label) after `iterations` synchronous supersteps. */
   def run(graph: LinkGraph, iterations: Int = 10, pinEvery: Int = 1): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
 
-    if (graph.numEdges * 48 < ResidentEdgeBytes && graph.numVertices <= Int.MaxValue.toLong)
+    if (graph.numEdges * 48 < graph.policy.driverBytes && graph.numVertices <= Int.MaxValue.toLong)
       return residentRun(graph, iterations)
 
     val p = math.max(1, spark.sparkContext.defaultParallelism)

@@ -22,17 +22,14 @@ import graft.graph.LinkGraph
   */
 object TriangleCount {
 
-  /** Below this bound on the folded edge cache (16 B/edge) the count runs
-    * DRIVER-RESIDENT: one collect of the cached edges, local dedup + degree
-    * orientation + sorted-adjacency wedge closing. Counts are integers, so the
-    * result is EXACTLY the distributed plan's (same triangles, same corners) —
-    * the same regime split as ConnectedComponents.ResidentEdgeBytes; a 100 TB
-    * graph takes the self-join path. Mutable test hook — 0 forces distributed.
+  /** Under the graph policy's driver budget (16 B per folded edge) the count
+    * runs DRIVER-RESIDENT: one collect of the cached edges, local dedup +
+    * degree orientation + sorted-adjacency wedge closing. Counts are
+    * integers, so the result is EXACTLY the distributed plan's (same
+    * triangles, same corners); a 100 TB graph takes the self-join path.
     */
-  var ResidentEdgeBytes: Long = 64L * 1024 * 1024
-
   private def residentOk(graph: LinkGraph): Boolean =
-    graph.numEdges * 16 < ResidentEdgeBytes && graph.numVertices <= Int.MaxValue.toLong
+    graph.numEdges * 16 < graph.policy.driverBytes && graph.numVertices <= Int.MaxValue.toLong
 
   /** (triangles, undirected simple degree) per vertex, driver-resident.
     * Mirrors the distributed plan exactly: dedup to u<v simple edges, orient

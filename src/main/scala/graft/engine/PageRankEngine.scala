@@ -36,7 +36,7 @@ final case class PageRankOutcome(
   *
   * Physical strategy (SURVEY.md §4.2), two regimes chosen by rank-vector size:
   *
-  *  - '''Vector-resident regime''' (n·8B < [[PageRankEngine.BroadcastThresholdBytes]]):
+  *  - '''Vector-resident regime''' (n·8 B below the graph policy's `driverBytes`):
   *    the rank vector lives in a driver array, broadcast each superstep; the
   *    kernel scans the cached adjacency with ZERO shuffle in, pre-combines
   *    scatter-adds per part in an open-address map, and one narrow shuffle
@@ -71,7 +71,15 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
 
   private val n: Long = graph.numVertices
   private val d: Double = cfg.damping
-  private def driverResident: Boolean = n * 8L < PageRankEngine.BroadcastThresholdBytes
+  private def driverResident: Boolean = n * 8L < graph.policy.driverBytes
+
+  /** Resident regime, collected src-major parts (16 B/edge) under the driver
+    * budget: the gather runs as a DRIVER loop over them instead of a
+    * per-superstep broadcast + job + collect — at contract scale a
+    * superstep's wall was ≥ 90% fixed job dispatch. Values are bit-identical
+    * (same parts, same slice order).
+    */
+  private def localGather: Boolean = graph.numEdges * 16 < graph.policy.driverBytes
 
   /** Counter delta in ms for the per-superstep attribution columns; -1
     * propagates "counter unavailable" without poisoning the row.
@@ -213,21 +221,16 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     val sc = spark.sparkContext
     val listener = new ShuffleMetricsListener
     sc.addSparkListener(listener)
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    // stable per-superstep plans & partitioning inside the loop (SURVEY §4.2.4)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // force build+cache of the regime's adjacency layout before timing; the
     // driver-local kernel only ever touches the local array — building the
     // RDD too would pay a broadcast + persist it never reads
     if (driverResident) {
-      if (graph.numEdges * 16 < PageRankEngine.LocalGatherBytes) graph.gatherPartsLocal
-      else graph.gatherPartsRdd
+      if (localGather) graph.gatherPartsLocal else graph.gatherPartsRdd
     } else graph.adjPartsByBlock
     try {
       if (driverResident) runResident(start, startIter, t0, listener)
       else runDistributed(start, startIter, t0, listener)
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
       sc.removeSparkListener(listener)
       auxPins.foreach(_.unpersist(false))
       auxPins.clear()
@@ -324,8 +327,7 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     // arithmetic, same slice-accumulation order as the cluster path, so gx is
     // bit-identical. Above the gate (e.g. the 4M×80M kernel bench) the
     // broadcast+map+collect job amortizes its dispatch over real work.
-    val localParts: Array[AdjPart] =
-      if (graph.numEdges * 16 < PageRankEngine.LocalGatherBytes) graph.gatherPartsLocal else null
+    val localParts: Array[AdjPart] = if (localGather) graph.gatherPartsLocal else null
 
     var iteration = startIter
     var converged = false
@@ -476,7 +478,7 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
       * per-vertex row objects, whose serialization dominated the superstep
       * and made shuffle volume grow with parallelism.
       *
-      * Per-task scratch is HARD-BOUNDED by [[PageRankEngine.SlabBudgetBytes]]:
+      * Per-task scratch is HARD-BOUNDED by the policy's `taskBytes`:
       * when allocated slab bytes exceed the budget mid-block, the current
       * slabs are FLUSHED to the shuffle (the downstream gather sums multiple
       * contribs per block, so partial slabs are correct) and scratch restarts
@@ -489,13 +491,13 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     // observability for the budget-flush path: counts mid-block drains so a
     // probe run can prove the bounded-scratch code actually fired
     val accFlush = sc.longAccumulator("graft.slabFlushes")
+    val budget = graph.policy.taskBytes
 
     def contribsOf(x: RDD[RankChunk]): RDD[(Int, BlockContrib)] =
       adj.zipPartitions(x) { (adjIt, xIt) =>
         if (!xIt.hasNext) Iterator.empty
         else {
           val chunk = xIt.next()
-          val budget = PageRankEngine.SlabBudgetBytes
           new Iterator[(Int, BlockContrib)] {
             private var slabs = new Array[Array[Double]](nb)
             private var touched = new Array[Int](nb)
@@ -731,7 +733,7 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     if (accFlush.value > 0)
       System.err.println(
         s"[graft] slab budget flushes: ${accFlush.value} mid-block drains " +
-          s"(budget ${PageRankEngine.SlabBudgetBytes} B) across $iteration supersteps")
+          s"(budget $budget B) across $iteration supersteps")
     PageRankOutcome(
       spark.createDataset(finalRdd),
       PageRankRun(iteration, converged, error, (System.nanoTime() - t0) / 1e9, n, graph.numEdges),
@@ -755,22 +757,8 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
 }
 
 object PageRankEngine {
-  /** Below this rank-vector size the vector-resident regime is used. Bounded
-    * by per-task dense-scatter memory: every concurrent task holds one
-    * n-double accumulator, so cores × threshold must fit the executor heap.
-    */
-  var BroadcastThresholdBytes: Long = 64L * 1024 * 1024
-
   /** Per-superstep stderr progress (env GRAFT_DEBUG). */
   val debug: Boolean = sys.env.contains("GRAFT_DEBUG")
-
-  /** Below this bound on the folded edge set (~16 B/edge of adjacency) the
-    * resident regime's gather runs as a DRIVER loop over once-collected parts
-    * instead of a per-superstep broadcast + job + collect: at contract scale a
-    * superstep's wall was ≥ 90% fixed job dispatch. Values are bit-identical
-    * (same parts, same slice order). Mutable test hook — 0 forces the job path.
-    */
-  var LocalGatherBytes: Long = 64L * 1024 * 1024
 
   /** Driver twin of the resident superstep's map + collect + combine: one
     * zeroed slice per part, [[gatherSlice]] into it, then add into gx in part
@@ -793,12 +781,6 @@ object PageRankEngine {
     }
     gx
   }
-
-  /** Per-task scratch budget for the distributed superstep's contribution
-    * slabs; exceeding it flushes partial slabs to the shuffle (correct —
-    * the gather sums them). Executor peak ≈ concurrentTasks × this.
-    */
-  var SlabBudgetBytes: Long = 256L * 1024 * 1024
 
   /** Sequential left-to-right sum — the while-loop twin of `Array[Double].sum`
     * (which boxes every element through Numeric); identical fp result.

@@ -17,7 +17,7 @@ import graft.model._
   * '''The build is one primitive, block-routed pipeline, with no joins.''' Block b owns
   * vids `[b·blockSize, (b+1)·blockSize)`.
   *  1. One scan caches the input pairs as per-task primitive arrays; its count
-  *     picks the regime (under [[LinkGraph.ResidentFoldRows]] raw pairs are
+  *     picks the regime (when the pairs fit the policy's driver budget they are
   *     folded and remapped on the driver).
   *  1. Each task sorts and deduplicates its own endpoint ids; splitters from a
   *     sample of those arrays cut them for one exchange, and each task merges
@@ -42,8 +42,9 @@ import graft.model._
   *     (without normalizing) gives the gather parts [[gatherPartsRdd]].
   * Edges that were not laid out by this build (the resident fold, the public
   * constructor, [[LinkGraph.fromDenseWeighted]], dense-by-max) are routed by
-  * dst block once before the kernel. Under [[LinkGraph.ResidentAssembleBytes]] the same kernel
-  * runs on the driver over [[edgesLocal]].
+  * dst block once before the kernel. When the edges fit the policy's driver
+  * budget the same kernel runs on the driver over [[edgesLocal]]; restored
+  * parts replace the kernel altogether.
   *
   * Per-task memory of the kernel is about 32 B × the edges in one block: a
   * packed (slot, vid) long and a weight per edge, plus the parts it emits.
@@ -57,6 +58,9 @@ import graft.model._
   *                    (csc_matrix duplicate-summing, pagerank.py:638-640)
   * @param inDegrees   (vid, cIn)  weighted in-degree  = column sums, pagerank.py:170
   * @param outDegrees  (vid, cOut) weighted out-degree = row sums,    pagerank.py:445
+  * @param source      where the blocked adjacency comes from
+  * @param policy      the byte budgets that pick the regime of this graph's
+  *                    lazy layouts and of every operator run on it
   */
 final class LinkGraph(
     val spark: SparkSession,
@@ -66,8 +70,8 @@ final class LinkGraph(
     val numBlocks: Int,
     val blockSize: Long,
     private[graft] val knownNumEdges: Long = -1L,
-    /** partition b of the [[edges]] cache holds exactly block b's in-edges */
-    private[graft] val edgesByDstBlock: Boolean = false
+    private[graft] val source: AdjacencySource = AdjacencySource.Edges,
+    val policy: ExecutionPolicy = ExecutionPolicy()
 ) extends Serializable {
   import spark.implicits._
 
@@ -82,50 +86,32 @@ final class LinkGraph(
     s"block adjacency packs (slot, vid) into one long: needs numVertices ≤ 2^32 and " +
       s"blockSize < 2^31, got numVertices=$numVertices blockSize=$blockSize")
 
-  /** Bench/restore hooks: a pre-assembled blocked adjacency (e.g. read back
-    * from parquet written by a prior process) replaces the fold+sort+assemble
-    * build inside [[adjPartsByBlock]] / [[gatherPartsRdd]]. The injected rows
-    * must be the SAME AdjPart layout this graph's (numBlocks, blockSize)
-    * would produce — [[LinkGraph.fromPrebuiltParts]] is the entry point.
-    */
-  @volatile private[graft] var prebuiltDstParts: Option[RDD[AdjPart]] = None
-  @volatile private[graft] var prebuiltGatherParts: Option[RDD[AdjPart]] = None
-
-  /** Stronger prebuilt hooks: parts that are ALREADY in the build's layout —
-    * partition b = block b's parts in (blockId, partId) assembler order, with
-    * [[blockPartitioner]]-compatible partitioning for the keyed variant.
-    * Skips the restore's partitionBy + sort entirely (the parquet path
-    * shuffled every adjacency byte once per leg); the supplier guarantees the
-    * layout (see graft.tools.PartIO.readLaidOut).
-    */
-  @volatile private[graft] var prebuiltDstPartsLaidOut: Option[RDD[(Int, AdjPart)]] = None
-  @volatile private[graft] var prebuiltGatherPartsLaidOut: Option[RDD[AdjPart]] = None
-
   lazy val numEdges: Long = if (knownNumEdges >= 0) knownNumEdges else edges.count()
 
   /** Folded edges collected ONCE for every driver-resident consumer (CC, LPA,
     * triangle counting, the resident parts assembler) — they each used to pay
     * their own collect of the same cached frame. Lazy: only consumers below
-    * their own size gates touch it.
+    * their own size gates touch it. The resident fold hands over its own copy.
     */
-  @volatile private[graft] var edgesLocalPre: Option[Array[Edge]] = None
-  lazy val edgesLocal: Array[Edge] = edgesLocalPre.getOrElse(edges.collect())
+  lazy val edgesLocal: Array[Edge] = source match {
+    case AdjacencySource.Resident(local) => local
+    case _ => edges.collect()
+  }
 
   /** Broadcasts this graph's caches read; destroyed by [[unpersistAll]]. */
   @transient private val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
 
   private def track[T](b: Broadcast[T]): Broadcast[T] = { broadcasts += b; b }
 
-  /** True when the blocked adjacency can be ASSEMBLED on the driver: no
-    * prebuilt injection, adjacency bytes under the gate, vids in Int range.
+  /** True when the blocked adjacency can be ASSEMBLED on the driver: parts
+    * not restored, adjacency bytes under the driver budget, vids in Int range.
     * The driver runs the same per-block kernel as the cluster build, so the
     * parts are bit-identical.
     */
   private def residentAssembleOk: Boolean =
-    prebuiltDstParts.isEmpty && prebuiltGatherParts.isEmpty &&
-      prebuiltDstPartsLaidOut.isEmpty && prebuiltGatherPartsLaidOut.isEmpty &&
+    !source.isInstanceOf[AdjacencySource.Restored] &&
       numVertices <= Int.MaxValue.toLong &&
-      numEdges * 16 < LinkGraph.ResidentAssembleBytes
+      numEdges * 16 < policy.driverBytes
 
   /** Dst-major parts assembled on the driver: [[edgesLocal]] bucketed by dst
     * block, each block through [[LinkGraph.blockParts]]. Block order, partId
@@ -165,17 +151,6 @@ final class LinkGraph(
         it => it.flatMap { case (i, _) => b.value(i).iterator },
         preservesPartitioning = true)
   }
-
-  /** Restore the build's layout for parts read back in arbitrary order:
-    * partition b = block b's parts in (blockId, partId) order (parquet splits
-    * neither partition nor order them). The order fixes the scatter-add
-    * summation order, so ranks match a directly-built graph.
-    */
-  private def restoreLayout(parts: RDD[AdjPart]): RDD[AdjPart] =
-    parts
-      .map(p => (p.blockId, p))
-      .partitionBy(blockPartitioner)
-      .mapPartitions(it => it.map(_._2).toArray.sortBy(_.partId).iterator)
 
   /** Weighted in-degree c[j] (the kernel's normalizer). Vertices absent here have
     * c = 0 and contribute nothing — the reference's zero-guard `where(c!=0,c,1)`
@@ -226,7 +201,7 @@ final class LinkGraph(
 
   private def residentDegreesOk: Boolean =
     numVertices <= Int.MaxValue.toLong &&
-      numEdges * 16 < LinkGraph.ResidentAssembleBytes &&
+      numEdges * 16 < policy.driverBytes &&
       numEdges <= (1L << 21) && // with |w| ≤ 2³¹: Σ|w| ≤ 2⁵² — exact in double
       edgesLocal.forall(e =>
         e.weight == math.rint(e.weight) && math.abs(e.weight) <= (1L << 31).toDouble)
@@ -259,7 +234,7 @@ final class LinkGraph(
     val nb = numBlocks
     val rows = edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd
     val byBlock: RDD[(Int, LinkGraph.Rows)] =
-      if (edgesByDstBlock) {
+      if (source == AdjacencySource.BlockLaid) {
         require(rows.getNumPartitions == nb,
           s"block-laid edges need $nb partitions, found ${rows.getNumPartitions}")
         rows.mapPartitionsWithIndex { (b, it) =>
@@ -288,11 +263,11 @@ final class LinkGraph(
     */
   @volatile private var dstLayoutBuilt = false
   private lazy val dstLayout: RDD[AdjPart] = {
-    val rdd = prebuiltDstPartsLaidOut.map(_.values)
-      .orElse(prebuiltDstParts.map(restoreLayout))
-      .orElse(dstAssembled.map(laidOutRdd))
-      .getOrElse(buildDstLayout())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val parts = source match {
+      case AdjacencySource.Restored(Some(dst), _) => dst
+      case _ => dstAssembled.map(laidOutRdd).getOrElse(buildDstLayout())
+    }
+    val rdd = parts.persist(StorageLevel.MEMORY_AND_DISK)
     rdd.count()
     dstLayoutBuilt = true
     rdd
@@ -333,18 +308,19 @@ final class LinkGraph(
     */
   @volatile private var gatherPartsBuilt = false
   lazy val gatherPartsRdd: RDD[AdjPart] = {
-    val base = prebuiltGatherPartsLaidOut
-      .orElse(prebuiltGatherParts.map(restoreLayout))
-      .orElse(gatherAssembled.map(laidOutRdd))
-      .getOrElse {
-        val bs = blockSize
-        val nb = numBlocks
-        LinkGraph.kernel(
-          dstLayout
-            .mapPartitions(parts => LinkGraph.batches(LinkGraph.rowsBySrc(parts, bs, nb)))
-            .partitionBy(blockPartitioner),
-          normalize = false)
-      }
+    val base = source match {
+      case AdjacencySource.Restored(_, Some(gather)) => gather
+      case _ =>
+        gatherAssembled.map(laidOutRdd).getOrElse {
+          val bs = blockSize
+          val nb = numBlocks
+          LinkGraph.kernel(
+            dstLayout
+              .mapPartitions(parts => LinkGraph.batches(LinkGraph.rowsBySrc(parts, bs, nb)))
+              .partitionBy(blockPartitioner),
+            normalize = false)
+        }
+    }
     val rdd = base.persist(StorageLevel.MEMORY_AND_DISK)
     rdd.count()
     gatherPartsBuilt = true
@@ -352,7 +328,7 @@ final class LinkGraph(
   }
 
   /** Src-major parts COLLECTED to the driver once (the driver-local kernel's
-    * input, gated by PageRankEngine.LocalGatherBytes): collect order equals
+    * input, gated by the policy's driver budget): collect order equals
     * [[gatherPartsRdd]]'s partition order, so a driver loop that accumulates
     * per-part slices in array order reproduces the cluster path's gx sums
     * bit-for-bit. The parts carry the SAME wNorm values the distributed
@@ -437,7 +413,7 @@ final class LinkGraph(
     */
   def inducedPrefix(k: Long): LinkGraph = {
     val kk = math.min(k, numVertices)
-    LinkGraph.fromDenseWeighted(spark, edges.filter($"src" < kk && $"dst" < kk), kk)
+    LinkGraph.fromDenseWeighted(spark, edges.filter($"src" < kk && $"dst" < kk), kk, policy = policy)
   }
 
   /** Release every cache and broadcast this graph MATERIALIZED. Each lazy
@@ -461,30 +437,6 @@ final class LinkGraph(
 object LinkGraph {
   /** Cap on edges per adjacency part — bounds single-task work under skew. */
   val MaxEdgesPerPart: Int = 2 << 20
-
-  /** Below this bound on the folded edge frame (~24 B/row) the vertex
-    * dictionary of [[fromFoldedEdgeList]] is built DRIVER-RESIDENT from one
-    * partial-aggregated distinct job and broadcast for the remap (same
-    * two-regime pattern as PageRankEngine.BroadcastThresholdBytes); the
-    * 100 TB path keeps the two-phase global-sort dictionary and remaps through
-    * its block slices. Mutable test hook — set 0 to force the distributed build.
-    */
-  var ResidentBuildBytes: Long = 96L * 1024 * 1024
-
-  /** Below this bound on the folded edge set (~16 B/edge) the blocked
-    * adjacency is assembled ON THE DRIVER by the same per-block kernel
-    * (bit-identical parts) instead of paying the cluster build's jobs.
-    * Mutable test hook — 0 forces the cluster build.
-    */
-  var ResidentAssembleBytes: Long = 64L * 1024 * 1024
-
-  /** Cap on the raw pairs [[fromEdgeList]] folds on the driver: the build's
-    * one scan counts the pairs, and at or under the cap its primitive arrays
-    * (~16 B/pair, so ~32 MB at the default) are collected and folded there.
-    * Above it the same cached scan feeds the distributed build. Mutable test
-    * hook — 0 sends every non-empty input to the distributed build.
-    */
-  var ResidentFoldRows: Long = 2L * 1024 * 1024
 
   /** Growable primitive edge rows, and the batch one map task ships to one
     * block or dictionary run. Packed rows carry `(local slot << 32) | vid` in
@@ -729,29 +681,30 @@ object LinkGraph {
     * exactly load_graph (pagerank.py:617-640). `idMode` selects compacted
     * (default, reference shared-patterns behavior) or dense-by-max vertex
     * numbering (the original solver's `n = max(id)+1`; ids must be ≥ 0 and
-    * vid = extId, no remap at all).
+    * vid = extId, no remap at all). The graph carries `policy`.
     */
   def fromEdgeList(
       spark: SparkSession,
       rawEdges: DataFrame,
       numBlocks: Int = 0,
-      idMode: IdMode = IdMode.Compacted
+      idMode: IdMode = IdMode.Compacted,
+      policy: ExecutionPolicy = ExecutionPolicy()
   ): LinkGraph = {
     import spark.implicits._
     val pairs = rawEdges.select($"src".cast("long"), $"dst".cast("long"))
     idMode match {
       case IdMode.DenseByMax =>
         fromFoldedEdgeList(spark,
-          pairs.groupBy($"src", $"dst").agg(count(lit(1)).cast("double").as("weight")), numBlocks, idMode)
+          pairs.groupBy($"src", $"dst").agg(count(lit(1)).cast("double").as("weight")), numBlocks, idMode, policy)
       case IdMode.Compacted =>
         // the one pass over the input: every later step reads this cache, and
         // its count picks the regime
         val scan = scanOf(pairs.queryExecution.toRdd, weighted = false)
         try {
           val total = scan.map(_.n.toLong).fold(0L)(_ + _)
-          if (total <= math.min(ResidentFoldRows, Int.MaxValue / 2 - 8))
-            residentFromPairs(spark, scan.collect(), numBlocks)
-          else routedGraph(spark, scan, numBlocks)
+          if (total * 32 < policy.driverBytes && total <= Int.MaxValue / 2 - 8)
+            residentFromPairs(spark, scan.collect(), numBlocks, policy)
+          else routedGraph(spark, scan, numBlocks, policy)
         } finally scan.unpersist(false)
     }
   }
@@ -773,7 +726,8 @@ object LinkGraph {
     * (exact integers, order-insensitive), and the remapped edges are
     * parallelized back in (src, dst) vid order.
     */
-  private def residentFromPairs(spark: SparkSession, chunks: Array[Rows], numBlocks: Int): LinkGraph = {
+  private def residentFromPairs(
+      spark: SparkSession, chunks: Array[Rows], numBlocks: Int, policy: ExecutionPolicy): LinkGraph = {
     import spark.implicits._
     val total = chunks.map(_.n).sum
     val ids = sortedDistinct(Array.concat(chunks.flatMap(c => Seq(c.a, c.b)).toSeq: _*))
@@ -807,9 +761,7 @@ object LinkGraph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     edges.count()
     val (blocks, bs) = geometry(spark, n, m, numBlocks)
-    val g = new LinkGraph(spark, dict, edges, n, blocks, bs, m)
-    g.edgesLocalPre = Some(remapped) // the resident consumers' copy, no collect
-    g
+    new LinkGraph(spark, dict, edges, n, blocks, bs, m, AdjacencySource.Resident(remapped), policy)
   }
 
   /** [[fromEdgeList]] for a caller that already folded duplicates into
@@ -822,7 +774,8 @@ object LinkGraph {
       spark: SparkSession,
       foldedEdges: DataFrame,
       numBlocks: Int = 0,
-      idMode: IdMode = IdMode.Compacted
+      idMode: IdMode = IdMode.Compacted,
+      policy: ExecutionPolicy = ExecutionPolicy()
   ): LinkGraph = {
     import spark.implicits._
 
@@ -845,7 +798,7 @@ object LinkGraph {
         require(bounds.getLong(1) >= 0L, "dense-by-max ids must be non-negative")
         val n = bounds.getLong(0) + 1
         val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, folded.count())
-        val g = fromDenseWeighted(spark, folded.as[Edge], n, blocks)
+        val g = fromDenseWeighted(spark, folded.as[Edge], n, blocks, policy)
         g.numEdges // materialize the graph's edge cache through `folded`
         g
 
@@ -854,7 +807,7 @@ object LinkGraph {
         val sc = spark.sparkContext
         // (src, dst, weight) rows of the cached frame, in the select's column order
         val rows = folded.select($"src", $"dst", $"weight").queryExecution.toRdd
-        if (foldedCount * 24 < ResidentBuildBytes) {
+        if (foldedCount * 16 < policy.driverBytes) {
           // Driver-resident dictionary (guide §1.2 step 1: remove passes):
           // one partial-aggregated distinct job collects the ≤ 2·|E| ids
           // (the exchange carries only per-partition-distinct rows, never
@@ -881,12 +834,12 @@ object LinkGraph {
             }
             .partitionBy(new org.apache.spark.HashPartitioner(blocks))
             .mapPartitions(it => Iterator.single(merged(it)))
-          blockLaidGraph(spark, dict, ids.length, foldedCount, blocks, bs, byDst, Some(bIds))
+          blockLaidGraph(spark, dict, ids.length, foldedCount, blocks, bs, byDst, Some(bIds), policy)
         } else {
           // the distributed build over a primitive scan of the cached frame
           // (pre-folded rows: route 1's fold finds no copies to sum)
           val scan = scanOf(rows, weighted = true)
-          try routedGraph(spark, scan, numBlocks) finally scan.unpersist(false)
+          try routedGraph(spark, scan, numBlocks, policy) finally scan.unpersist(false)
         }
     } finally folded.unpersist(false)
   }
@@ -900,7 +853,7 @@ object LinkGraph {
     * (remap `dst`) to the block slices cut from them. Every intermediate cache
     * is released once the graph's dictionary and edge cache are built.
     */
-  private def routedGraph(spark: SparkSession, scan: RDD[Rows], numBlocks: Int): LinkGraph = {
+  private def routedGraph(spark: SparkSession, scan: RDD[Rows], numBlocks: Int, policy: ExecutionPolicy): LinkGraph = {
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     val runPartitioner = new org.apache.spark.HashPartitioner(p) // identity on run indices
     val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
@@ -968,7 +921,7 @@ object LinkGraph {
           }
           Iterator.single(out)
         }
-      blockLaidGraph(spark, dictionaryOf(spark, runs, starts), n, m, blocks, bs, byDst, None)
+      blockLaidGraph(spark, dictionaryOf(spark, runs, starts), n, m, blocks, bs, byDst, None, policy)
     } finally held.foreach(_.unpersist(false))
   }
 
@@ -1092,7 +1045,8 @@ object LinkGraph {
       blocks: Int,
       bs: Long,
       byDst: RDD[Rows],
-      remapIds: Option[Broadcast[Array[Long]]]
+      remapIds: Option[Broadcast[Array[Long]]],
+      policy: ExecutionPolicy
   ): LinkGraph = {
     import spark.implicits._
     dict.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1107,7 +1061,7 @@ object LinkGraph {
         Iterator.range(0, rows.n).map(i => Edge(ks(i) & 0xffffffffL, lo + (ks(i) >>> 32), rows.w(i)))
       }
     }).persist(StorageLevel.MEMORY_AND_DISK)
-    val g = new LinkGraph(spark, dict, edges, n, blocks, bs, m, edgesByDstBlock = true)
+    val g = new LinkGraph(spark, dict, edges, n, blocks, bs, m, AdjacencySource.BlockLaid, policy)
     remapIds.foreach(g.track) // the edge cache's lineage reads it
     edges.count()
     g
@@ -1151,7 +1105,8 @@ object LinkGraph {
       spark: SparkSession,
       edges: Dataset[Edge],
       numVertices: Long,
-      numBlocks: Int = 0
+      numBlocks: Int = 0,
+      policy: ExecutionPolicy = ExecutionPolicy()
   ): LinkGraph = {
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     val positive = edges.filter(col("weight") > 0) // column filter: stays codegen'd
@@ -1163,7 +1118,8 @@ object LinkGraph {
     // and is passed through so numEdges never re-counts.
     val cnt = if (numBlocks > 0) -1L else positive.count()
     val (blocks, bs) = geometry(spark, numVertices, cnt, numBlocks)
-    new LinkGraph(spark, identityDict(spark, numVertices, p), positive, numVertices, blocks, bs, cnt)
+    new LinkGraph(spark, identityDict(spark, numVertices, p), positive, numVertices, blocks, bs, cnt,
+      AdjacencySource.Edges, policy)
   }
 
   /** The identity dictionary of a dense vid space, in `p` explicit slices. */
@@ -1173,31 +1129,29 @@ object LinkGraph {
   }
 
   /** Graph whose blocked adjacency was PRE-ASSEMBLED by a prior process and
-    * persisted (e.g. Dataset[AdjPart] parquet written by the bench prep, or a
-    * checkpoint restore): vertex ids dense 0..n-1, geometry (numBlocks /
-    * blockSize) must match what produced the parts. Skips the build
-    * entirely — the injected rows only pay the one co-location shuffle of the
-    * layout restore. The edge frame is intentionally absent (callers of
-    * degree/edge analytics need a fully built graph); the folded edge count is
-    * passed in so throughput accounting still works.
+    * persisted (e.g. the bench prep's [[graft.tools.PartIO]] block files):
+    * vertex ids dense 0..n-1, geometry (numBlocks / blockSize) must match what
+    * produced the parts, and the parts come in the build's layout — partition
+    * b = block b's parts in partId order (see [[AdjacencySource.Restored]]).
+    * Skips the build entirely. The edge frame is intentionally absent (callers
+    * of degree/edge analytics need a fully built graph); the folded edge count
+    * is passed in so throughput accounting still works.
     */
   def fromPrebuiltParts(
       spark: SparkSession,
       numVertices: Long,
       numBlocks: Int,
       numEdges: Long,
-      dstParts: Option[Dataset[AdjPart]] = None,
-      gatherParts: Option[Dataset[AdjPart]] = None
+      dstParts: Option[RDD[AdjPart]] = None,
+      gatherParts: Option[RDD[AdjPart]] = None,
+      policy: ExecutionPolicy = ExecutionPolicy()
   ): LinkGraph = {
     import spark.implicits._
     require(numBlocks > 0, "fromPrebuiltParts needs the geometry the parts were built with")
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     val bs = (numVertices + numBlocks - 1) / numBlocks
-    val g = new LinkGraph(spark, identityDict(spark, numVertices, p), spark.emptyDataset[Edge],
-      numVertices, numBlocks, math.max(bs, 1), numEdges)
-    g.prebuiltDstParts = dstParts.map(_.rdd)
-    g.prebuiltGatherParts = gatherParts.map(_.rdd)
-    g
+    new LinkGraph(spark, identityDict(spark, numVertices, p), spark.emptyDataset[Edge],
+      numVertices, numBlocks, math.max(bs, 1), numEdges, AdjacencySource.Restored(dstParts, gatherParts), policy)
   }
 
   /** (extId, vid) rows of the sorted runs, in the runs' partitions. */
@@ -1207,6 +1161,31 @@ object LinkGraph {
       it.flatMap(run => Iterator.range(0, run.length).map(i => VertexMapping(run(i), starts(k) + i)))
     })
   }
+}
+
+/** Where a [[LinkGraph]]'s blocked adjacency comes from. */
+sealed trait AdjacencySource
+
+object AdjacencySource {
+  /** The edge frame in any partitioning: routed by dst block once before the
+    * per-block kernel.
+    */
+  case object Edges extends AdjacencySource
+
+  /** The edge frame as the routed build lays it out: partition b holds exactly
+    * block b's in-edges, sorted by (dst, src), so the kernel runs in place.
+    */
+  case object BlockLaid extends AdjacencySource
+
+  /** The resident fold's driver copy of the folded edges: every
+    * driver-resident consumer reads it instead of collecting the edge frame.
+    */
+  final case class Resident(edges: Array[Edge]) extends AdjacencySource
+
+  /** Parts restored in the build's layout (partition b = block b's parts in
+    * partId order), in either orientation; they replace the kernel.
+    */
+  final case class Restored(dst: Option[RDD[AdjPart]], gather: Option[RDD[AdjPart]]) extends AdjacencySource
 }
 
 /** Block b's slice of the sorted dictionary: the ascending external ids of

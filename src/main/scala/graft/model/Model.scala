@@ -96,6 +96,35 @@ object PageRankMode {
   case object MolerDangling extends PageRankMode
 }
 
+/** The byte budgets that pick every operator's regime. A structure held on the
+  * driver takes the driver-resident path when its estimated size is below
+  * `driverBytes`; otherwise the distributed path runs, unchanged. Each gate
+  * is the one comparison `cost < driverBytes`, with these costs:
+  *  - the resident fold of [[graft.graph.LinkGraph.fromEdgeList]]: 32 B per
+  *    raw pair (the collected pairs and their packed, sorted remap)
+  *  - the resident dictionary of `fromFoldedEdgeList`: 16 B per folded row
+  *    (its at most two distinct ids)
+  *  - the driver-assembled adjacency and the degree table: 16 B per edge
+  *    (a packed key and a weight)
+  *  - the driver-local PageRank gather: 16 B per edge (the collected
+  *    src-major parts)
+  *  - connected components and triangles: 16 B per edge (one collect of the
+  *    folded edges)
+  *  - label propagation: 48 B per edge (at most two undirected entries of
+  *    24 B per edge)
+  *  - the vector-resident PageRank regime: 8 B per vertex (the rank vector)
+  *  - the broadcast hint on connected components' label frame: 16 B per
+  *    vertex (two longs per row)
+  * `driverBytes = 0` sends every operator down its distributed path.
+  *
+  * `taskBytes` bounds one task's contribution slabs in the distributed
+  * superstep; past it the task flushes its partial slabs to the shuffle.
+  */
+final case class ExecutionPolicy(
+    driverBytes: Long = 64L * 1024 * 1024,
+    taskBytes: Long = 256L * 1024 * 1024
+)
+
 final case class PageRankConfig(
     damping: Double = 0.85,
     tolerance: Double = 1e-8,

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.graph.LinkGraph
+import graft.model.ExecutionPolicy
 import graft.algo.PageRank
 import graft.sources.SkewedEdges
 
@@ -84,13 +85,8 @@ object KernelBench {
     val n = args(1).toLong
     val e = args(2).toLong
     val iters = if (args.length > 3) args(3).toInt else 12
-    val regime = if (args.length > 4) args(4) else "resident"
-    if (regime == "distributed") graft.engine.PageRankEngine.BroadcastThresholdBytes = 0L
-    // probe hook: tighten the per-task slab budget so a run can prove the
-    // mid-block flush path fires (and stays correct/fast) at a chosen scale
-    sys.env.get("KB_SLAB_BUDGET").foreach { b =>
-      graft.engine.PageRankEngine.SlabBudgetBytes = b.toLong
-    }
+    val distributed = args.length > 4 && args(4) == "distributed"
+    val policy = if (distributed) ExecutionPolicy(driverBytes = 0L) else ExecutionPolicy()
 
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -117,10 +113,11 @@ object KernelBench {
     // the dense path. KB_EDGES_PATH (written once by KernelPrep at full cores)
     // additionally skips per-leg generation + duplicate folding, and
     // KB_ADJ_BASE (KernelPrep with a blocks arg) skips the per-leg adjacency
-    // build too — the leg reads the pre-assembled Dataset[AdjPart] parquet and
-    // pays only the co-location shuffle. Identical bytes for every leg, and
-    // minutes of single-threaded setup off the 1-core leg (round-4 lesson:
-    // leg wall was ~95% setup, which starved the graded scaling repeats).
+    // build too — the leg reads the regime's pre-assembled PartIO block files
+    // in the build's layout, with no shuffle. Identical bytes for every leg,
+    // and minutes of single-threaded setup off the 1-core leg (round-4 lesson:
+    // leg wall was ~95% setup, which starved the graded scaling repeats). A
+    // prep without the block files fails the leg: delete it to re-prep.
     import spark.implicits._
     val g = sys.env.get("KB_ADJ_BASE") match {
       case Some(base) =>
@@ -131,28 +128,10 @@ object KernelBench {
             .getOrElse(throw new IllegalStateException(s"no $key in $base-meta.json")).group(1).toLong
         require(metaNum("n") == n && metaNum("blocks") == numBlocks,
           s"prep meta mismatch: $meta vs n=$n blocks=$numBlocks")
-        val dstBin = new java.io.File(s"$base-adj-dst-bin")
-        val srcBin = new java.io.File(s"$base-adj-src-bin")
-        if (regime == "distributed" && dstBin.isDirectory) {
-          // laid-out binary restore: no shuffle, no parquet decode (PartIO)
-          val g0 = LinkGraph.fromPrebuiltParts(spark, n, numBlocks, metaNum("folded_edges"))
-          g0.prebuiltDstPartsLaidOut =
-            Some(PartIO.readLaidOut(spark.sparkContext, dstBin.getAbsolutePath, numBlocks))
-          g0
-        } else if (regime != "distributed" && srcBin.isDirectory) {
-          val g0 = LinkGraph.fromPrebuiltParts(spark, n, numBlocks, metaNum("folded_edges"))
-          g0.prebuiltGatherPartsLaidOut =
-            Some(PartIO.readLaidOut(spark.sparkContext, srcBin.getAbsolutePath, numBlocks).values)
-          g0
-        } else {
-          val dst =
-            if (regime == "distributed")
-              Some(spark.read.parquet(s"$base-adj-dst").as[graft.model.AdjPart]) else None
-          val src =
-            if (regime == "distributed") None
-            else Some(spark.read.parquet(s"$base-adj-src").as[graft.model.AdjPart])
-          LinkGraph.fromPrebuiltParts(spark, n, numBlocks, metaNum("folded_edges"), dst, src)
-        }
+        val dir = s"$base-adj-${if (distributed) "dst" else "src"}-bin"
+        val parts = Some(PartIO.readLaidOut(spark.sparkContext, dir, numBlocks))
+        val (dst, gather) = if (distributed) (parts, None) else (None, parts)
+        LinkGraph.fromPrebuiltParts(spark, n, numBlocks, metaNum("folded_edges"), dst, gather, policy)
       case None =>
         val folded0 = sys.env.get("KB_EDGES_PATH") match {
           case Some(p) => spark.read.parquet(p)
@@ -162,11 +141,11 @@ object KernelBench {
               .agg(org.apache.spark.sql.functions.count(
                 org.apache.spark.sql.functions.lit(1)).cast("double").as("weight"))
         }
-        LinkGraph.fromDenseWeighted(spark, folded0.as[graft.model.Edge], n, numBlocks = numBlocks)
+        LinkGraph.fromDenseWeighted(spark, folded0.as[graft.model.Edge], n, numBlocks = numBlocks, policy = policy)
     }
     phase("graph-defined")
     // build + cache the regime's adjacency layout before timing
-    if (regime == "distributed") g.adjPartsByBlock.count() else g.gatherPartsRdd.count()
+    if (distributed) g.adjPartsByBlock.count() else g.gatherPartsRdd.count()
     val upCached = phase("adjacency-cached")
     val folded = g.numEdges
     val weather = memGbps() // DRAM weather snapshot, right before the timed region

@@ -10,9 +10,11 @@ import graft.sources.SkewedEdges
   * table, FOLD duplicates (weight = multiplicity, exactly
   * LinkGraph.fromEdgeList's folding), write the folded (src, dst, weight)
   * parquet, then BUILD the blocked adjacency once at full cores and write
-  * both orientations as Dataset[AdjPart] parquet (`<out>-adj-dst`,
-  * `<out>-adj-src`) plus a `<out>-meta.json` recording (n, e, blocks,
-  * folded_edges).
+  * both orientations as [[PartIO]] block files (`<out>-adj-dst-bin`,
+  * `<out>-adj-src-bin`) plus a `<out>-meta.json` recording (n, e, blocks,
+  * folded_edges). The same parts also go to Dataset[AdjPart] parquet
+  * (`<out>-adj-dst`, `<out>-adj-src`): [[graft.Bench]] reuses a prep only
+  * when those dirs exist, and nothing reads them.
   *
   * Rationale: the folded edges AND the blocked adjacency are pure functions
   * of (n, e, seed, blocks) — the SAME bytes for every leg — but rebuilding
@@ -21,7 +23,7 @@ import graft.sources.SkewedEdges
   * (superstep time at a fixed data layout). Round 4's lesson made this
   * terminal: the graded N→4N pass must stay cheap enough to repeat ≥2 times
   * on an 8×-degraded host, and leg wall was ~95% setup. Prep runs once at
-  * full cores; legs read the parts and pay only the co-location shuffle.
+  * full cores; legs read the block files back with no shuffle.
   *
   * args: cores numVertices numEdges outPath [blocks]
   * (blocks = 0 or absent: skip the adjacency prebuild, edges only)
@@ -55,9 +57,7 @@ object KernelPrep {
       g.adjParts.write.mode("overwrite").parquet(s"$outPath-adj-dst")
       g.gatherPartsRdd.toDS().write.mode("overwrite").parquet(s"$outPath-adj-src")
       // per-block flat binaries IN the build's layout: the leg restores them
-      // with zero shuffle and no parquet nested-array decode (PartIO scaladoc;
-      // the parquet dirs above stay — the bench validates their existence and
-      // they remain the generic Dataset-level interchange format)
+      // with zero shuffle and no parquet nested-array decode (PartIO scaladoc)
       PartIO.writeBlockFiles(g.adjPartsByBlock.values, s"$outPath-adj-dst-bin")
       PartIO.writeBlockFiles(g.gatherPartsRdd, s"$outPath-adj-src-bin")
       g.unpersistAll()

@@ -9,15 +9,16 @@ import graft.model.AdjPart
 
 /** Per-block binary persistence for prebuilt adjacency parts.
   *
-  * KernelPrep's parquet Dataset[AdjPart] restore cost the leg a full
-  * partitionBy shuffle of every adjacency byte plus nested-array parquet
-  * decode — 16 of a 32 s fork at the 80M-edge bench shape (round-6 phase
-  * probe). Parts are pure primitive arrays, and the writer already holds them
-  * in the exact partition layout the reader needs (partition b = block b's
-  * parts in assembler order), so the fix is one flat file per block written
-  * at prep time and read back into an RDD whose partitioner is established by
-  * shuffling 64 ints instead of 1.3 GB (guide §2.4: remove the shuffle
-  * outright). Restore is bit-identical: same parts, same order, same layout.
+  * A parquet Dataset[AdjPart] restore cost the leg a full partitionBy
+  * shuffle of every adjacency byte plus nested-array parquet decode — 16 of
+  * a 32 s fork at the 80M-edge bench shape (round-6 phase probe). Parts are
+  * pure primitive arrays, and the writer already holds them in the exact
+  * partition layout the reader needs (partition b = block b's parts in
+  * assembler order), so they are written as one flat file per block at prep
+  * time and read back into an RDD whose partition b reads block b's file,
+  * with no shuffle at all (guide §2.4: remove the shuffle outright). Restore
+  * is bit-identical: same parts, same order, same layout. This is the only
+  * adjacency restore path.
   *
   * Format per file: [magic][version][numParts][per part: blockId partId
   * lens (keys, offsets, adj, wNorm) + raw arrays]. The writer emits one file
@@ -103,15 +104,10 @@ object PartIO {
     } finally in.close()
   }
 
-  /** RDD with partition b = block b's parts in file (= assembler) order and
-    * the graph's identity block partitioner — the layout gatherPartsRdd /
-    * adjPartsByBlock would otherwise rebuild with a full shuffle + sort.
+  /** RDD with partition b = block b's parts in file (= assembler) order —
+    * the layout the graph's restored adjacency source expects (see
+    * graft.graph.LinkGraph.fromPrebuiltParts).
     */
-  def readLaidOut(sc: SparkContext, dir: String, numBlocks: Int): RDD[(Int, AdjPart)] =
-    sc.parallelize(0 until numBlocks, numBlocks)
-      .map(b => (b, b))
-      .partitionBy(new org.apache.spark.HashPartitioner(numBlocks))
-      .mapPartitions(
-        it => it.flatMap { case (b, _) => readBlockFile(dir, b).iterator.map(p => (b, p)) },
-        preservesPartitioning = true)
+  def readLaidOut(sc: SparkContext, dir: String, numBlocks: Int): RDD[AdjPart] =
+    sc.parallelize(0 until numBlocks, numBlocks).mapPartitionsWithIndex((b, _) => readBlockFile(dir, b).iterator)
 }

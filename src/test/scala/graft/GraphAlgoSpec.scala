@@ -1,13 +1,15 @@
 package graft
 
-import graft.graph.LinkGraph
+import graft.graph.{AdjacencySource, LinkGraph}
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, PrefixStudy, TriangleCount}
+import graft.model.ExecutionPolicy
 
 class GraphAlgoSpec extends GraftSuite {
   import spark.implicits._
 
-  private def graphOf(edges: Seq[(Long, Long)], numBlocks: Int = 3): LinkGraph =
-    LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"), numBlocks = numBlocks)
+  private def graphOf(
+      edges: Seq[(Long, Long)], numBlocks: Int = 3, policy: ExecutionPolicy = ExecutionPolicy()): LinkGraph =
+    LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"), numBlocks = numBlocks, policy = policy)
 
   // 3 disjoint triangles + a 2-chain + 1 isolate-ish pair (FIXTURES.md g_islands)
   private val islands: Seq[(Long, Long)] =
@@ -178,33 +180,27 @@ class GraphAlgoSpec extends GraftSuite {
   test("CC driver-resident regime matches the star-contraction labels exactly") {
     val edges = DenseReference.randomEdges(120, 0.02, seed = 23).map(e => (e._1.toLong, e._2.toLong))
     val g = graphOf(edges)
-    def labelsOf() =
+    def labelsOf(g: LinkGraph) =
       ConnectedComponents.run(g).collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    val resident = labelsOf() // default gate: resident at this size
-    val was = ConnectedComponents.ResidentEdgeBytes
-    ConnectedComponents.ResidentEdgeBytes = 0L
-    try {
-      val distributed = labelsOf()
-      assert(resident == distributed)
-    } finally ConnectedComponents.ResidentEdgeBytes = was
+    val resident = labelsOf(g) // default policy: resident at this size
+    val distributed = labelsOf(under(g, distributedOnly))
+    assert(resident == distributed)
     g.unpersistAll()
   }
 
   test("triangle driver-resident regime matches the distributed self-join exactly") {
     val edges = DenseReference.randomEdges(120, 0.06, seed = 41).map(e => (e._1.toLong, e._2.toLong))
     val g = graphOf(edges)
-    def triOf() = TriangleCount.perVertexTriangles(g)
+    def triOf(g: LinkGraph) = TriangleCount.perVertexTriangles(g)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    def ccOf() = TriangleCount.clusteringCoefficients(g)
+    def ccOf(g: LinkGraph) = TriangleCount.clusteringCoefficients(g)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1).toSeq
-    val (triRes, ccRes) = (triOf(), ccOf()) // default gate: resident at this size
-    val was = TriangleCount.ResidentEdgeBytes
-    TriangleCount.ResidentEdgeBytes = 0L
-    try {
-      assert(triRes == triOf())
-      assert(ccRes == ccOf()) // exact incl. the double coeff: identical op sequence
-    } finally TriangleCount.ResidentEdgeBytes = was
+    val (triRes, ccRes) = (triOf(g), ccOf(g)) // default policy: resident at this size
+    val d = under(g, distributedOnly)
+    assert(triRes == triOf(d))
+    assert(ccRes == ccOf(d)) // exact incl. the double coeff: identical op sequence
+    d.unpersistAll()
     g.unpersistAll()
   }
 
@@ -223,21 +219,14 @@ class GraphAlgoSpec extends GraftSuite {
     ring ++ fromSrcOnly ++ random
   }
 
-  /** Runs `f` with the build's resident gates at 0: `fold` forces the
-    * distributed fold and dictionary (block-laid edges from the routed remap),
-    * `assemble` the cluster adjacency kernel.
+  /** The distributed fold and dictionary (block-laid edges from the routed
+    * remap) of `build`, viewed under the default policy: layouts, ranks and
+    * operators as for a resident build.
     */
-  private def forced[T](fold: Boolean, assemble: Boolean)(f: => T): T = {
-    val (wasB, wasF, wasA) =
-      (LinkGraph.ResidentBuildBytes, LinkGraph.ResidentFoldRows, LinkGraph.ResidentAssembleBytes)
-    if (fold) { LinkGraph.ResidentBuildBytes = 0L; LinkGraph.ResidentFoldRows = 0L }
-    if (assemble) LinkGraph.ResidentAssembleBytes = 0L // read at lazy-layout build time
-    try f
-    finally {
-      LinkGraph.ResidentBuildBytes = wasB
-      LinkGraph.ResidentFoldRows = wasF
-      LinkGraph.ResidentAssembleBytes = wasA
-    }
+  private def routedBuild(build: ExecutionPolicy => LinkGraph): LinkGraph = {
+    val b = under(build(distributedOnly), ExecutionPolicy())
+    assert(b.source == AdjacencySource.BlockLaid)
+    b
   }
 
   private def partsOf(ps: Array[graft.model.AdjPart]) = ps
@@ -265,9 +254,8 @@ class GraphAlgoSpec extends GraftSuite {
     // sparse external ids (gaps + duplicates) exercise dictionary compaction
     val sparse = Seq.fill(400)((rng.nextInt(5000).toLong * 7, rng.nextInt(5000).toLong * 7))
     for ((edges, blocks) <- Seq((sparse, 0), (signedIds, 4))) {
-      def build() = graphOf(edges, numBlocks = blocks)
-      val a = build() // default gates: resident fold (the whole build on the driver)
-      val b = forced(fold = true, assemble = false)(build()) // the full cluster build
+      val a = graphOf(edges, numBlocks = blocks) // default policy: the whole build on the driver
+      val b = routedBuild(graphOf(edges, blocks, _))
       assert(a.numVertices == b.numVertices && a.numBlocks == b.numBlocks)
       assert(dictOf(a) == dictOf(b))
       assert(edgesOf(a) == edgesOf(b))
@@ -281,18 +269,16 @@ class GraphAlgoSpec extends GraftSuite {
   test("driver-assembled adjacency parts match the cluster build bit-for-bit") {
     val random = DenseReference.randomEdges(150, 0.05, seed = 53).map(e => (e._1.toLong, e._2.toLong))
     for ((edges, blocks) <- Seq((random, 3), (signedIds, 4))) {
-      val a = graphOf(edges, blocks) // default gates: driver-assembled
+      val a = graphOf(edges, blocks) // default policy: driver-assembled
       val want = (layoutsOf(a), ranksOf(a))
       // cluster kernel over edges routed by dst block (resident fold), then
       // over the routed remap's block-laid edge cache
       for (fold <- Seq(false, true)) {
-        val got = forced(fold, assemble = true) {
-          val b = graphOf(edges, blocks)
-          assert(b.edgesByDstBlock == fold)
-          val r = (layoutsOf(b), ranksOf(b))
-          b.unpersistAll()
-          r
-        }
+        val base = if (fold) graphOf(edges, blocks, distributedOnly) else a
+        val b = residentJob(base)
+        assert((b.source == AdjacencySource.BlockLaid) == fold)
+        val got = (layoutsOf(b), ranksOf(b))
+        b.unpersistAll()
         assert(got == want) // identical keys/offsets/adjacency AND wNorm doubles
       }
       if (edges == signedIds) {
@@ -326,8 +312,8 @@ class GraphAlgoSpec extends GraftSuite {
       Seq((7L, -7L), (-7L, 7L), (7L, -7L), (7L, 7L), (-7L, 7L), (7L, -7L)).toDF("src", "dst").repartition(p)
     for ((raw, blocks) <- Seq((spread, 3), (twoIds, 2))) {
       val a = LinkGraph.fromEdgeList(spark, raw, numBlocks = blocks) // the resident fold
-      val b = forced(fold = true, assemble = false)(LinkGraph.fromEdgeList(spark, raw, numBlocks = blocks))
-      assert(!a.edgesByDstBlock && b.edgesByDstBlock) // one resident, one routed build
+      val b = routedBuild(p => LinkGraph.fromEdgeList(spark, raw, numBlocks = blocks, policy = p))
+      assert(a.source.isInstanceOf[AdjacencySource.Resident]) // one resident, one routed build
       assert(a.numVertices == b.numVertices && a.numEdges == b.numEdges)
       assert(dictOf(a) == dictOf(b))
       assert(edgesOf(a) == edgesOf(b))
@@ -345,7 +331,7 @@ class GraphAlgoSpec extends GraftSuite {
     val folded = signedIds.distinct.zipWithIndex.map { case ((s, d), i) => (s, d, 0.25 + i % 7) }
       .toDF("src", "dst", "weight").repartition(p)
     val a = LinkGraph.fromFoldedEdgeList(spark, folded, numBlocks = 4)
-    val b = forced(fold = true, assemble = false)(LinkGraph.fromFoldedEdgeList(spark, folded, numBlocks = 4))
+    val b = routedBuild(p => LinkGraph.fromFoldedEdgeList(spark, folded, numBlocks = 4, policy = p))
     assert(dictOf(a) == dictOf(b))
     assert(edgesOf(a) == edgesOf(b))
     assert(layoutsOf(a) == layoutsOf(b))
@@ -357,21 +343,21 @@ class GraphAlgoSpec extends GraftSuite {
     val rng = new scala.util.Random(29)
     val pairs = Seq.fill(500)((rng.nextInt(200).toLong * 3, rng.nextInt(200).toLong * 3))
     val parts = 5
-    for (cap <- Seq(pairs.length - 1, pairs.length)) {
+    // 32 B per raw pair: exactly |pairs| pairs fill the budget, one byte more fits them
+    for (driverBytes <- Seq(pairs.length * 32L, pairs.length * 32L + 1)) {
       val scanned = spark.sparkContext.collectionAccumulator[Int]("scanned partitions")
       val input = spark.sparkContext.parallelize(pairs, parts)
         .mapPartitionsWithIndex { (k, it) => scanned.add(k); it }
         .toDF("src", "dst")
-      val was = LinkGraph.ResidentFoldRows
-      LinkGraph.ResidentFoldRows = cap.toLong
-      val g = try LinkGraph.fromEdgeList(spark, input, numBlocks = 3) finally LinkGraph.ResidentFoldRows = was
+      val g = LinkGraph.fromEdgeList(spark, input, numBlocks = 3, policy = ExecutionPolicy(driverBytes))
       g.adjParts.count(); g.degreeTable.count(); g.numEdges // later reads hit the graph's own caches
       import scala.jdk.CollectionConverters._
       assert(scanned.value.asScala.toSeq.map(_.intValue).sorted == (0 until parts))
-      // above the cap the routed build, with no driver copy of the pairs; at
-      // the cap the resident fold of the collected scan
-      val routed = cap < pairs.length
-      assert(g.edgesByDstBlock == routed && g.edgesLocalPre.isEmpty == routed)
+      // over the budget the routed build, with no driver copy of the pairs;
+      // under it the resident fold of the collected scan
+      val routed = driverBytes == pairs.length * 32L
+      assert((g.source == AdjacencySource.BlockLaid) == routed)
+      assert(g.source.isInstanceOf[AdjacencySource.Resident] == !routed)
       g.unpersistAll()
     }
   }
@@ -456,17 +442,15 @@ class GraphAlgoSpec extends GraftSuite {
 
   test("unpersistAll leaves no cached RDD of the graph behind") {
     val edges = DenseReference.randomEdges(120, 0.05, seed = 71).map(e => (e._1.toLong, e._2.toLong))
-    for ((fold, assemble) <- Seq((false, false), (true, true))) {
+    for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      forced(fold, assemble) {
-        val g = graphOf(edges)
-        g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
-        g.degreeTable.count(); g.inDegrees.count()
-        PageRank.run(g, tolerance = 0.0, maxIterations = 2).free()
-        g.unpersistAll()
-      }
+      val g = graphOf(edges, policy = policy)
+      g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
+      g.degreeTable.count(); g.inDegrees.count()
+      PageRank.run(g, tolerance = 0.0, maxIterations = 2).free()
+      g.unpersistAll()
       val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
-      assert(left.isEmpty, s"left cached (fold=$fold, assemble=$assemble): ${left.values.mkString(", ")}")
+      assert(left.isEmpty, s"left cached ($policy): ${left.values.mkString(", ")}")
     }
   }
 
@@ -485,13 +469,10 @@ class GraphAlgoSpec extends GraftSuite {
       (rows, agg)
     }
     val a = graphOf(edges)
-    val (ra, aa) = rowsAndAgg(a) // default gate: resident
-    a.unpersistAll()
-    val was = LinkGraph.ResidentAssembleBytes
-    LinkGraph.ResidentAssembleBytes = 0L
-    val (rb, ab) =
-      try { val b = graphOf(edges); val r = rowsAndAgg(b); b.unpersistAll(); r }
-      finally LinkGraph.ResidentAssembleBytes = was
+    val (ra, aa) = rowsAndAgg(a) // default policy: resident
+    val b = under(a, distributedOnly) // the join build over the same dictionary
+    val (rb, ab) = rowsAndAgg(b)
+    b.unpersistAll(); a.unpersistAll()
     assert(ra == rb)
     assert(aa == ab)
   }
@@ -499,15 +480,11 @@ class GraphAlgoSpec extends GraftSuite {
   test("LPA driver-resident regime matches the distributed supersteps exactly") {
     val edges = DenseReference.randomEdges(60, 0.08, seed = 31).map(e => (e._1.toLong, e._2.toLong))
     val g = graphOf(edges)
-    def labelsOf() =
+    def labelsOf(g: LinkGraph) =
       LabelPropagation.run(g, 4).collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    val resident = labelsOf()
-    val was = LabelPropagation.ResidentEdgeBytes
-    LabelPropagation.ResidentEdgeBytes = 0L
-    try {
-      val distributed = labelsOf()
-      assert(resident == distributed)
-    } finally LabelPropagation.ResidentEdgeBytes = was
+    val resident = labelsOf(g)
+    val distributed = labelsOf(under(g, distributedOnly))
+    assert(resident == distributed)
     g.unpersistAll()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.model._
@@ -64,53 +65,36 @@ class PageRankSpec extends GraftSuite {
     }
   }
 
-  test("distributed (chunk-shuffle) regime matches the resident regime in all three modes") {
-    val saved = PageRankEngine.BroadcastThresholdBytes
+  /** PageRank, dangling and risk ranks on rand50, run on `view` of its graph. */
+  private def allModes(view: LinkGraph => LinkGraph): (Array[Double], Array[Double], Array[Double]) = {
     val n = 50
     val rawPrior = Array.tabulate(n)(i => 0.001 + (i % 7) * 0.01)
     def priorDf = rawPrior.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("vid", "value")
-    def runAll(): (Array[Double], Array[Double], Array[Double]) = {
-      val g = graphOf(rand50)
-      val a = ranksArray(g, PageRank.run(g, tolerance = 1e-10, maxIterations = 100))
-      val b = ranksArray(g, PageRank.runDangling(g, tolerance = 1e-10, maxIterations = 100))
-      val c = ranksArray(g, PageRank.propagateRisk(g, priorDf, tolerance = 1e-10, maxIterations = 100))
-      g.unpersistAll()
-      (a, b, c)
-    }
-    try {
-      val (r1, d1, k1) = runAll() // resident (n tiny)
-      PageRankEngine.BroadcastThresholdBytes = 0L // force the distributed regime
-      val (r2, d2, k2) = runAll()
-      assertAllClose(r2, r1, 1e-12)
-      assertAllClose(d2, d1, 1e-12)
-      assertAllClose(k2, k1, 1e-12)
-    } finally PageRankEngine.BroadcastThresholdBytes = saved
+    val g = view(graphOf(rand50))
+    val a = ranksArray(g, PageRank.run(g, tolerance = 1e-10, maxIterations = 100))
+    val b = ranksArray(g, PageRank.runDangling(g, tolerance = 1e-10, maxIterations = 100))
+    val c = ranksArray(g, PageRank.propagateRisk(g, priorDf, tolerance = 1e-10, maxIterations = 100))
+    g.unpersistAll()
+    (a, b, c)
+  }
+
+  test("distributed (chunk-shuffle) regime matches the resident regime in all three modes") {
+    val (r1, d1, k1) = allModes(identity) // resident (n tiny)
+    val (r2, d2, k2) = allModes(under(_, distributedOnly))
+    assertAllClose(r2, r1, 1e-12)
+    assertAllClose(d2, d1, 1e-12)
+    assertAllClose(k2, k1, 1e-12)
   }
 
   test("driver-local gather matches the job-based resident kernel bit-for-bit") {
-    val saved = PageRankEngine.LocalGatherBytes
-    val n = 50
-    val rawPrior = Array.tabulate(n)(i => 0.001 + (i % 7) * 0.01)
-    def priorDf = rawPrior.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq.toDF("vid", "value")
-    def runAll(): (Array[Double], Array[Double], Array[Double]) = {
-      val g = graphOf(rand50)
-      val a = ranksArray(g, PageRank.run(g, tolerance = 1e-10, maxIterations = 100))
-      val b = ranksArray(g, PageRank.runDangling(g, tolerance = 1e-10, maxIterations = 100))
-      val c = ranksArray(g, PageRank.propagateRisk(g, priorDf, tolerance = 1e-10, maxIterations = 100))
-      g.unpersistAll()
-      (a, b, c)
-    }
-    try {
-      val (r1, d1, k1) = runAll() // driver-local gather (edges tiny)
-      PageRankEngine.LocalGatherBytes = 0L // force the broadcast+job+collect path
-      val (r2, d2, k2) = runAll()
-      // EXACT equality, not allClose: the local gather replays the identical
-      // slice arithmetic and accumulation order, so every superstep — and
-      // hence every rank — must be bit-for-bit the job path's
-      assert(r1.toSeq == r2.toSeq)
-      assert(d1.toSeq == d2.toSeq)
-      assert(k1.toSeq == k2.toSeq)
-    } finally PageRankEngine.LocalGatherBytes = saved
+    val (r1, d1, k1) = allModes(identity) // driver-local gather (edges tiny)
+    val (r2, d2, k2) = allModes(residentJob) // the broadcast+job+collect path
+    // EXACT equality, not allClose: the local gather replays the identical
+    // slice arithmetic and accumulation order, so every superstep — and
+    // hence every rank — must be bit-for-bit the job path's
+    assert(r1.toSeq == r2.toSeq)
+    assert(d1.toSeq == d2.toSeq)
+    assert(k1.toSeq == k2.toSeq)
   }
 
   test("distributed superstep never moves the adjacency: shuffle volume is rank-sized") {
@@ -118,36 +102,61 @@ class PageRankSpec extends GraftSuite {
     // superstep re-shuffled (or sort-merge-joined) the adjacency, per-superstep
     // shuffle rows would be O(edges); the co-partitioned zipPartitions design
     // bounds them by numBlocks·n pre-combined contribution rows.
-    val saved = PageRankEngine.BroadcastThresholdBytes
+    val n = 400
+    val edges = DenseReference.randomEdges(n, 0.125, seed = 7)
+    val g = under(graphOf(edges, numBlocks = 8), distributedOnly)
+    val numEdges = g.numEdges
+    assert(numEdges > 10000L, s"fixture should be dense, got $numEdges edges")
+
+    // layout invariant: partition b of the cached adjacency holds ONLY block b
+    val misplaced = g.adjPartsByBlock
+      .mapPartitionsWithIndex { (pid, it) => it.filter(_._2.blockId != pid).map(_ => 1) }
+      .count()
+    assert(misplaced == 0L, "adjPartsByBlock must be identity-partitioned by blockId")
+
+    val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 5)
+    val steady = out.metrics.drop(1) // first superstep includes layout builds
+    steady.foreach { m =>
+      val bound = g.numBlocks.toLong * n
+      assert(m.shuffleWriteRows <= bound,
+        s"superstep ${m.superstep}: ${m.shuffleWriteRows} shuffle rows > contribution bound $bound")
+      assert(m.shuffleWriteRows < numEdges / 2,
+        s"superstep ${m.superstep}: shuffle rows ${m.shuffleWriteRows} scale with edges ($numEdges) — adjacency moved")
+    }
+    // and it is still exactly the reference kernel
+    val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 5)
+    assertAllClose(ranksArray(g, out), want, 1e-12)
+    out.free()
+    g.unpersistAll()
+  }
+
+  test("a checkpointed run leaves the session conf alone: no job sees adaptive execution off") {
+    // SQL jobs (the checkpoint commits) carry the session's set confs as job
+    // properties; a marker job after the run flushes the in-order listener queue
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.test.marker") != null) flushed.countDown()
+        else seen.add((e.properties.getProperty("spark.sql.session.timeZone"),
+          e.properties.getProperty("spark.sql.adaptive.enabled")))
+    }
+    val g = graphOf(rand50)
+    val dir = java.nio.file.Files.createTempDirectory("graft-conf").toString
+    sc.addSparkListener(listener)
     try {
-      PageRankEngine.BroadcastThresholdBytes = 0L // force the distributed regime
-      val n = 400
-      val edges = DenseReference.randomEdges(n, 0.125, seed = 7)
-      val g = graphOf(edges, numBlocks = 8)
-      val numEdges = g.numEdges
-      assert(numEdges > 10000L, s"fixture should be dense, got $numEdges edges")
-
-      // layout invariant: partition b of the cached adjacency holds ONLY block b
-      val misplaced = g.adjPartsByBlock
-        .mapPartitionsWithIndex { (pid, it) => it.filter(_._2.blockId != pid).map(_ => 1) }
-        .count()
-      assert(misplaced == 0L, "adjPartsByBlock must be identity-partitioned by blockId")
-
-      val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 5)
-      val steady = out.metrics.drop(1) // first superstep includes layout builds
-      steady.foreach { m =>
-        val bound = g.numBlocks.toLong * n
-        assert(m.shuffleWriteRows <= bound,
-          s"superstep ${m.superstep}: ${m.shuffleWriteRows} shuffle rows > contribution bound $bound")
-        assert(m.shuffleWriteRows < numEdges / 2,
-          s"superstep ${m.superstep}: shuffle rows ${m.shuffleWriteRows} scale with edges ($numEdges) — adjacency moved")
-      }
-      // and it is still exactly the reference kernel
-      val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 5)
-      assertAllClose(ranksArray(g, out), want, 1e-12)
-      out.free()
-      g.unpersistAll()
-    } finally PageRankEngine.BroadcastThresholdBytes = saved
+      PageRank.resume(g, PageRankConfig(tolerance = 0.0, maxIterations = 4, checkpointDir = Some(dir),
+        checkpointEvery = 2)).free()
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val jobs = seen.asScala.toSeq
+    assert(jobs.exists(_._1 == "UTC"), "no job of the run carried the session's confs")
+    assert(!jobs.exists(_._2 == "false"), s"${jobs.count(_._2 == "false")} jobs ran with AQE off")
+    g.unpersistAll()
   }
 
   test("engine is single-shot: a second run fails fast with a clear message") {
@@ -160,23 +169,15 @@ class PageRankSpec extends GraftSuite {
   }
 
   test("slab budget flush: partial contribution slabs still sum to the exact kernel") {
-    val savedThr = PageRankEngine.BroadcastThresholdBytes
-    val savedBudget = PageRankEngine.SlabBudgetBytes
-    try {
-      PageRankEngine.BroadcastThresholdBytes = 0L // distributed regime
-      PageRankEngine.SlabBudgetBytes = 1L // flush after EVERY adjacency part
-      val n = 120
-      val edges = DenseReference.randomEdges(n, 0.15, seed = 23)
-      val g = graphOf(edges, numBlocks = 6)
-      val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 6)
-      val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 6)
-      assertAllClose(ranksArray(g, out), want, 1e-12)
-      out.free()
-      g.unpersistAll()
-    } finally {
-      PageRankEngine.BroadcastThresholdBytes = savedThr
-      PageRankEngine.SlabBudgetBytes = savedBudget
-    }
+    val n = 120
+    val edges = DenseReference.randomEdges(n, 0.15, seed = 23)
+    // distributed regime; flush after EVERY adjacency part
+    val g = under(graphOf(edges, numBlocks = 6), ExecutionPolicy(driverBytes = 0L, taskBytes = 1L))
+    val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 6)
+    val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 6)
+    assertAllClose(ranksArray(g, out), want, 1e-12)
+    out.free()
+    g.unpersistAll()
   }
 
   test("dense-by-max id mode sizes the graph as max(id)+1 (original solver semantics)") {

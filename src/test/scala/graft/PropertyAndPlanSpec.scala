@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import org.scalacheck.rng.Seed
 
-import graft.algo.{ConnectedComponents, PageRank}
+import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, TriangleCount}
+import graft.engine.PageRankEngine
 import graft.graph.LinkGraph
+import graft.model.{AdjPart, ExecutionPolicy}
 import graft.sources.{IcebergLite, RepoFiles}
 
 class PropertyAndPlanSpec extends GraftSuite {
@@ -61,6 +63,61 @@ class PropertyAndPlanSpec extends GraftSuite {
         assert(got == want)
       }
     }
+  }
+
+  /** Sparse signed 64-bit ids (both extremes possible) with duplicate pairs
+    * and a block count from 1 to 4 (0 = auto).
+    */
+  private val signedMultigraph: Gen[(Seq[(Long, Long)], Int)] =
+    for {
+      n <- Gen.choose(2, 12)
+      ids <- Gen.listOfN(n, Gen.oneOf(Gen.choose(Long.MinValue, Long.MaxValue), Gen.choose(-40L, 40L)))
+      m <- Gen.choose(1, 4 * n)
+      pairs <- Gen.listOfN(m, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids)))
+      copies <- Gen.choose(0, m)
+      blocks <- Gen.choose(0, 4)
+    } yield (pairs ++ pairs.take(copies), blocks)
+
+  test("property: every resident regime equals its distributed twin on random signed multigraphs") {
+    def parts(ps: Array[AdjPart]) = ps
+      .map(p => (p.blockId, p.partId, p.keys.toSeq, p.offsets.toSeq, p.adj.toSeq, p.wNorm.toSeq))
+      .sortBy(t => (t._1, t._2)).toSeq
+    def byVid(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    /** Everything whose regimes must agree exactly, and the ranks. */
+    def outputs(g: LinkGraph) = {
+      val exact = Seq(
+        g.vertexDict.collect().map(m => (m.extId, m.vid)).sortBy(_._1).toSeq,
+        g.edges.collect().map(e => (e.src, e.dst, e.weight)).sorted.toSeq,
+        parts(g.adjParts.collect()),
+        parts(g.gatherPartsRdd.collect()),
+        g.degreeTable.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+          .sortBy(_._1).toSeq,
+        byVid(ConnectedComponents.run(g)),
+        byVid(LabelPropagation.run(g, 4)),
+        byVid(TriangleCount.perVertexTriangles(g)))
+      val out = PageRank.run(g, tolerance = 0.0, maxIterations = 6)
+      val ranks = new Array[Double](g.numVertices.toInt)
+      out.ranks.collect().foreach(c => System.arraycopy(c.values, 0, ranks, c.loVid.toInt, c.values.length))
+      out.free()
+      g.unpersistAll()
+      (exact, ranks)
+    }
+    forAllSeeded(signedMultigraph, 4) { case (pairs, blocks) =>
+      def build(policy: ExecutionPolicy) =
+        LinkGraph.fromEdgeList(spark, pairs.toDF("src", "dst"), numBlocks = blocks, policy = policy)
+      val (want, wantRanks) = outputs(build(ExecutionPolicy()))
+      val (got, gotRanks) = outputs(build(distributedOnly))
+      want.zip(got).zipWithIndex.foreach { case ((w, g), i) => assert(g == w, s"output $i of $pairs") }
+      assertAllClose(gotRanks, wantRanks, 1e-12)
+    }
+  }
+
+  test("configuration is immutable: no public setter on the graph or its operators") {
+    val classes = Seq(LinkGraph, PageRankEngine, ConnectedComponents, LabelPropagation, TriangleCount)
+      .map(_.getClass) :+ classOf[LinkGraph]
+    val setters = classes.flatMap(c => c.getMethods.filter(_.getName.endsWith("_$eq")).map(c.getName + "." + _.getName))
+    assert(setters.isEmpty, setters.mkString(", "))
   }
 
   test("fromDenseWeighted auto block count scales with edges, not just vertices") {

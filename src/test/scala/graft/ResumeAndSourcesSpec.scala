@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.algo.PageRank
 import graft.engine.{CheckpointManager, PageRankEngine}
 import graft.graph.LinkGraph
-import graft.model.{PageRankConfig, PageRankMode}
+import graft.model.{ExecutionPolicy, PageRankConfig, PageRankMode}
 import graft.sources.{EdgeListSource, RepoFiles, SkewedEdges}
 
 class ResumeAndSourcesSpec extends GraftSuite {
@@ -129,61 +129,15 @@ class ResumeAndSourcesSpec extends GraftSuite {
     assert(topShare > 0.2, s"bottom-decile ids should be hot, got $topShare")
   }
 
-  test("prebuilt-adjacency roundtrip reproduces the directly-built ranks") {
-    // the bench legs' KB_ADJ_BASE path: write both AdjPart orientations to
-    // parquet, reload into a fresh LinkGraph via fromPrebuiltParts, and the
-    // PageRank result must match the directly-built graph in both regimes.
-    // Resident regime: BIT-identical (driver-side sums run in a fixed order).
-    // Distributed regime: the per-superstep renorm scalar is a Spark
-    // DoubleAccumulator whose merge order follows task COMPLETION order, so
-    // even two runs on the SAME graph differ in the last ulp (measured
-    // maxRel ≈ 5e-16 over 8 supersteps); the roundtrip is held to 1e-12,
-    // four orders tighter than any consumer and far tighter than a layout
-    // bug would produce.
-    import graft.graph.LinkGraph
-    val dir = Files.createTempDirectory("graft-prebuilt").toString
-    val edges = rand.toDF("src", "dst")
-    val g = LinkGraph.fromEdgeList(spark, edges, numBlocks = 3)
-    g.adjParts.write.mode("overwrite").parquet(s"$dir/adj-dst")
-    g.gatherPartsRdd.toDS().write.mode("overwrite").parquet(s"$dir/adj-src")
-
-    for (distributed <- Seq(true, false)) {
-      val saved = graft.engine.PageRankEngine.BroadcastThresholdBytes
-      if (distributed) graft.engine.PageRankEngine.BroadcastThresholdBytes = 0L
-      try {
-        // reference computed under the SAME regime — resident and distributed
-        // kernels have different (both deterministic) summation orders
-        val want = PageRank.run(g, tolerance = 0.0, maxIterations = 8)
-          .toVertexDf(g).orderBy("vid").collect().map(_.getDouble(1))
-        val p = LinkGraph.fromPrebuiltParts(
-          spark, g.numVertices, g.numBlocks, g.numEdges,
-          dstParts =
-            if (distributed) Some(spark.read.parquet(s"$dir/adj-dst").as[graft.model.AdjPart])
-            else None,
-          gatherParts =
-            if (distributed) None
-            else Some(spark.read.parquet(s"$dir/adj-src").as[graft.model.AdjPart]))
-        assert(p.numEdges == g.numEdges)
-        val got = PageRank.run(p, tolerance = 0.0, maxIterations = 8)
-          .toVertexDf(p).orderBy("vid").collect().map(_.getDouble(1))
-        p.unpersistAll()
-        if (distributed) {
-          val maxRel = got.zip(want)
-            .map { case (x, y) => math.abs(x - y) / math.max(math.abs(y), 1e-300) }.max
-          assert(maxRel < 1e-12, s"prebuilt distributed diverged: maxRel=$maxRel")
-        } else {
-          assert(got.sameElements(want), "prebuilt resident diverged bitwise")
-        }
-      } finally graft.engine.PageRankEngine.BroadcastThresholdBytes = saved
-    }
-    g.unpersistAll()
-  }
-
   test("laid-out binary part files reproduce the directly-built ranks") {
-    // the round-6 zero-shuffle restore (PartIO block files + the LaidOut
-    // hooks): partition layout and in-partition order are the build's own, so
-    // the resident regime must be BIT-identical and the distributed regime
-    // within the accumulator-merge ulp (same bound as the parquet roundtrip)
+    // the zero-shuffle restore (PartIO block files as the graph's restored
+    // adjacency source): partition layout and in-partition order are the
+    // build's own, so the resident regime must be BIT-identical. Distributed
+    // regime: the per-superstep renorm scalar is a Spark DoubleAccumulator
+    // whose merge order follows task COMPLETION order, so even two runs on the
+    // SAME graph differ in the last ulp (measured maxRel ≈ 5e-16 over 8
+    // supersteps); the restore is held to 1e-12, four orders tighter than any
+    // consumer and far tighter than a layout bug would produce.
     import graft.graph.LinkGraph
     val dir = Files.createTempDirectory("graft-prebuilt-bin").toString
     val edges = rand.toDF("src", "dst")
@@ -192,29 +146,28 @@ class ResumeAndSourcesSpec extends GraftSuite {
     graft.tools.PartIO.writeBlockFiles(g.gatherPartsRdd, s"$dir/src-bin")
 
     for (distributed <- Seq(true, false)) {
-      val saved = graft.engine.PageRankEngine.BroadcastThresholdBytes
-      if (distributed) graft.engine.PageRankEngine.BroadcastThresholdBytes = 0L
-      try {
-        val want = PageRank.run(g, tolerance = 0.0, maxIterations = 8)
-          .toVertexDf(g).orderBy("vid").collect().map(_.getDouble(1))
-        val p = LinkGraph.fromPrebuiltParts(spark, g.numVertices, g.numBlocks, g.numEdges)
-        if (distributed)
-          p.prebuiltDstPartsLaidOut =
-            Some(graft.tools.PartIO.readLaidOut(spark.sparkContext, s"$dir/dst-bin", g.numBlocks))
-        else
-          p.prebuiltGatherPartsLaidOut =
-            Some(graft.tools.PartIO.readLaidOut(spark.sparkContext, s"$dir/src-bin", g.numBlocks).values)
-        val got = PageRank.run(p, tolerance = 0.0, maxIterations = 8)
-          .toVertexDf(p).orderBy("vid").collect().map(_.getDouble(1))
-        p.unpersistAll()
-        if (distributed) {
-          val maxRel = got.zip(want)
-            .map { case (x, y) => math.abs(x - y) / math.max(math.abs(y), 1e-300) }.max
-          assert(maxRel < 1e-12, s"bin distributed diverged: maxRel=$maxRel")
-        } else {
-          assert(got.sameElements(want), "bin resident diverged bitwise")
-        }
-      } finally graft.engine.PageRankEngine.BroadcastThresholdBytes = saved
+      val policy = if (distributed) distributedOnly else ExecutionPolicy()
+      // reference computed under the SAME regime — resident and distributed
+      // kernels have different (both deterministic) summation orders
+      val ref = under(g, policy)
+      val want = PageRank.run(ref, tolerance = 0.0, maxIterations = 8)
+        .toVertexDf(ref).orderBy("vid").collect().map(_.getDouble(1))
+      ref.unpersistAll()
+      val parts = Some(graft.tools.PartIO.readLaidOut(
+        spark.sparkContext, s"$dir/${if (distributed) "dst" else "src"}-bin", g.numBlocks))
+      val (dst, gather) = if (distributed) (parts, None) else (None, parts)
+      val p = LinkGraph.fromPrebuiltParts(spark, g.numVertices, g.numBlocks, g.numEdges, dst, gather, policy)
+      assert(p.numEdges == g.numEdges)
+      val got = PageRank.run(p, tolerance = 0.0, maxIterations = 8)
+        .toVertexDf(p).orderBy("vid").collect().map(_.getDouble(1))
+      p.unpersistAll()
+      if (distributed) {
+        val maxRel = got.zip(want)
+          .map { case (x, y) => math.abs(x - y) / math.max(math.abs(y), 1e-300) }.max
+        assert(maxRel < 1e-12, s"bin distributed diverged: maxRel=$maxRel")
+      } else {
+        assert(got.sameElements(want), "bin resident diverged bitwise")
+      }
     }
     g.unpersistAll()
   }
@@ -229,7 +182,7 @@ class ResumeAndSourcesSpec extends GraftSuite {
     }
     def block(dir: java.io.File, b: Int) = new java.io.File(dir, f"block-$b%05d")
     def read(dir: java.io.File) =
-      PartIO.readLaidOut(spark.sparkContext, dir.getPath, g.numBlocks).values.collect()
+      PartIO.readLaidOut(spark.sparkContext, dir.getPath, g.numBlocks).collect()
     def rejected(dir: java.io.File, why: String): Unit = {
       val e = intercept[org.apache.spark.SparkException](read(dir))
       assert(e.getMessage.contains(why), e.getMessage)

@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.graph.LinkGraph
+import graft.model.ExecutionPolicy
+
 /** Shared local session for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -22,6 +25,26 @@ object TestSpark {
 
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Every operator down its distributed path. */
+  val distributedOnly: ExecutionPolicy = ExecutionPolicy(driverBytes = 0L)
+
+  /** The same graph under another policy: it shares `g`'s dictionary and edge
+    * caches (its `unpersistAll` releases them too) and builds its own layouts.
+    */
+  def under(g: LinkGraph, policy: ExecutionPolicy): LinkGraph =
+    new LinkGraph(g.spark, g.vertexDict, g.edges, g.numVertices, g.numBlocks, g.blockSize, g.numEdges, g.source,
+      policy)
+
+  /** `g` with its edge-sized structures (16 B/edge) off the driver and its
+    * rank vector (8 B/vertex) on it: cluster-built parts under the
+    * vector-resident PageRank regime, gathering through one job per superstep.
+    */
+  def residentJob(g: LinkGraph): LinkGraph = {
+    val v = under(g, ExecutionPolicy(driverBytes = g.numEdges * 16))
+    assert(g.numVertices * 8 < v.policy.driverBytes, "the rank vector must stay on the driver")
+    v
+  }
 
   def assertAllClose(got: Array[Double], want: Array[Double], tol: Double = 1e-9): Unit = {
     assert(got.length == want.length, s"length ${got.length} != ${want.length}")
