@@ -79,9 +79,10 @@ object LabelPropagation {
     // pinned frames report default (huge) stats, so without the hint the
     // planner sort-merge-joins the n-row label frame against the cached edge
     // table — re-sorting 2|E| rows per superstep. Broadcast only below the
-    // size bound; at cluster scale the shuffle join is the right shape.
+    // graph policy's driver budget; at cluster scale the shuffle join is the
+    // right shape.
     val hintSmall: DataFrame => DataFrame =
-      if (graph.numVertices * 16 < 64L * 1024 * 1024) broadcast(_) else identity
+      if (graph.numVertices * 16 < graph.policy.driverBytes) broadcast(_) else identity
 
     var (labels, freeLabels) = graft.graph.Lineage.pin(
       graph.vertexDict.select($"vid", $"vid".as("label")).toDF())

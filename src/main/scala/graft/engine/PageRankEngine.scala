@@ -1,13 +1,15 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.CollectionAccumulator
 
 import graft.model._
 import graft.graph.LinkGraph
+import graft.util.HostProbe
 
 /** Result bundle of an engine run. */
 final case class PageRankOutcome(
@@ -19,51 +21,53 @@ final case class PageRankOutcome(
   /** Ranks as a (vid, value) DataFrame. */
   def toVertexDf(graph: LinkGraph): DataFrame = graph.chunksToVertexDf(ranks)
 
-  /** Release the pinned rank storage. `ranks.unpersist()` is NOT equivalent:
-    * the dataset wraps an ExternalRDD, and unpersisting the wrapper Dataset is
-    * a no-op for the persisted RDD underneath — repeated runs would accumulate
+  /** Release the pinned rank storage of a distributed run (a no-op when the
+    * ranks came from the driver). `ranks.unpersist()` is NOT equivalent: the
+    * dataset wraps an ExternalRDD, and unpersisting the wrapper Dataset is a
+    * no-op for the persisted RDD underneath — repeated runs would accumulate
     * one n-double block of storage each.
     */
   def free(): Unit = cleanup()
 }
 
-/** Distributed power-iteration engine over destination-blocked adjacency.
+/** Power-iteration engine over block-laid adjacency.
   *
   * Exact math of the reference kernels (SURVEY.md §1.3): for every folded edge
-  * (src, dst, w) the superstep sends `x[dst] * w / c[dst]` to `src`, where
+  * (src, dst, w) a superstep sends `x[dst] * w / c[dst]` to `src`, where
   * c = weighted in-degree (column sums — /root/reference/pagerank.py:170,:194).
-  * Three teleport/normalization policies selected by [[PageRankMode]].
+  * [[PageRankMode]] selects one of three teleport/normalization policies.
   *
-  * Physical strategy (SURVEY.md §4.2), two regimes chosen by rank-vector size:
+  * ONE loop ([[runFrom]]) runs every superstep of every run, fresh or
+  * resumed: it owns the iteration count, the convergence test, the
+  * per-superstep metrics, the checkpoint commits and the result, Moler's final
+  * renormalization included. Every superstep applies the same per-chunk
+  * kernels in the reference's operation order — [[PageRankEngine.teleport]]
+  * (y = d·gx + t, with t from the carried Σx or z·x, or + delta), then
+  * [[PageRankEngine.settle]] (y /= Σy in renorm mode, Σ|y − x|, the next
+  * carry). Where the rank vector lives ([[RankVector]]) and how gx is
+  * gathered is one of three gathers, gated on the graph policy's `driverBytes`:
   *
-  *  - '''Vector-resident regime''' (n·8 B below the graph policy's `driverBytes`):
-  *    the rank vector lives in a driver array, broadcast each superstep; the
-  *    kernel scans the cached adjacency with ZERO shuffle in, pre-combines
-  *    scatter-adds per part in an open-address map, and one narrow shuffle
-  *    assembles per-block contribution sums, collected back (n doubles). The
-  *    teleport/renormalize/residual arithmetic runs on the driver in exactly
-  *    the reference's operation order. One Spark job per superstep.
+  *  - '''Driver-local gather''' (n·8 B and edges·16 B both under it): x is a
+  *    driver array, the whole vector one chunk, and gx is a driver loop over
+  *    the collected src-major parts — no Spark job per superstep (at contract
+  *    scale a superstep's wall was ≥ 90% fixed job dispatch).
+  *  - '''Job gather''' (n·8 B under it, edges·16 B not): x is a driver array,
+  *    broadcast each superstep; one shuffle-free job over the cached src-major
+  *    parts gathers gx slices, collected back (n doubles). Bit-identical to
+  *    the driver-local gather: same parts, same slice-accumulation order.
+  *  - '''Distributed scatter''' (n·8 B at or over it: n ≥ 8,388,608 at the
+  *    default 64 MiB): x is an RDD of chunks laid out like
+  *    [[LinkGraph.adjPartsByBlock]] (partition b = block b), zipped each
+  *    superstep against the cached dst-major adjacency, which never moves.
+  *    Scatter-adds pre-combine into per-src-block slabs (bounded by the
+  *    policy's `taskBytes`), and only those ≤ numBlocks [[BlockContrib]]
+  *    primitive arrays per task are shuffled back to the owning blocks.
+  *    Per-block residual and normalizer partials are added in block order, so
+  *    a run repeats exactly; lineage is cut per superstep ([[pinRdd]]).
   *
-  *  - '''Distributed regime''' (large n): the adjacency lives in
-  *    [[LinkGraph.adjPartsByBlock]] — an RDD co-partitioned so partition b
-  *    holds exactly block b's parts — and the rank vector is an
-  *    [[LinkGraph.toBlockLayout identically-laid-out]] RDD of chunks. Each
-  *    superstep zipPartitions the two (NO join, NO exchange of adjacency:
-  *    round 1 joined the cached Dataset per superstep and the planner
-  *    broadcast / sort-merge-exchanged all ~16 B/edge of adjacency every
-  *    iteration), pre-combines scatter-adds into per-src-block slabs, and
-  *    shuffles ONLY those ≤ numBlocks [[BlockContrib]] primitive-array
-  *    values per task back to the owning blocks (≤ 8 B per vertex slot —
-  *    never per-vertex row objects, whose serialization dominated wall time
-  *    and grew with parallelism). Residual / normalizer come from
-  *    DoubleAccumulators updated in the
-  *    result stage (exactly-once per partition — Spark dedups result-stage
-  *    accumulator updates on retry). Lineage is cut per superstep behind an
-  *    RDD localCheckpoint (see [[pinRdd]]).
-  *
-  * Optional durable parquet checkpoints + a JSON manifest give mid-iteration
-  * resume (north rule). Per-superstep shuffle rows/bytes are captured by a
-  * SparkListener.
+  * Optional durable checkpoints (IcebergLite snapshots) give mid-iteration
+  * resume through the same loop. Per-superstep shuffle rows/bytes are
+  * captured by a SparkListener.
   */
 final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serializable {
   import graph.spark
@@ -71,15 +75,7 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
 
   private val n: Long = graph.numVertices
   private val d: Double = cfg.damping
-  private def driverResident: Boolean = n * 8L < graph.policy.driverBytes
-
-  /** Resident regime, collected src-major parts (16 B/edge) under the driver
-    * budget: the gather runs as a DRIVER loop over them instead of a
-    * per-superstep broadcast + job + collect — at contract scale a
-    * superstep's wall was ≥ 90% fixed job dispatch. Values are bit-identical
-    * (same parts, same slice order).
-    */
-  private def localGather: Boolean = graph.numEdges * 16 < graph.policy.driverBytes
+  private val mode: PageRankMode = cfg.mode
 
   /** Counter delta in ms for the per-superstep attribution columns; -1
     * propagates "counter unavailable" without poisoning the row.
@@ -87,131 +83,37 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
   private def deltaMs(before: Double, after: Double): Long =
     if (before < 0 || after < 0) -1L else math.max(0L, ((after - before) * 1000).toLong)
 
-  /** Pinned helper RDDs (z / delta vectors) released when the run finishes. */
+  /** Pinned helper RDDs (z / delta / prior chunks) released when the run finishes. */
   @transient private val auxPins = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
-  /** Engines are SINGLE-SHOT: runFrom's finally releases the lazily-built
-    * zRdd/deltaRdd localCheckpoint pins, and an unpersisted localCheckpointed
-    * RDD cannot be recomputed — a second run would die with an opaque
-    * "checkpoint block not found". Guarded here with a clear error instead;
-    * build a fresh engine per run (all public entry points do).
+  /** Engines are SINGLE-SHOT: runFrom's finally releases the z/delta
+    * localCheckpoint pins, and an unpersisted localCheckpointed RDD cannot be
+    * recomputed — a second run would die with an opaque "checkpoint block not
+    * found". Guarded here with a clear error instead; build a fresh engine per
+    * run (all public entry points do).
     */
   @volatile private var ran = false
 
-  /** The resident regime builds its initial vector as a driver array (null
-    * start marker) — the uniform / normalized-prior values are per-element
-    * identical to collecting the chunked dataset, without the chunking
-    * shuffle + pin + collect jobs that dominated sub-second runs.
-    */
-  def run(): PageRankOutcome =
-    if (driverResident) runFrom(null, 0) else runFrom(initialVector(), 0)
+  def run(): PageRankOutcome = runFrom(None, 0, Double.MaxValue)
 
-  /** Resume from the newest durable checkpoint under cfg.checkpointDir. */
+  /** Resume from the newest durable checkpoint under cfg.checkpointDir. A
+    * converged checkpoint runs zero supersteps.
+    */
   def resume(): PageRankOutcome = {
     val dir = cfg.checkpointDir.getOrElse(
       throw new IllegalArgumentException("resume() requires checkpointDir"))
     CheckpointManager.latest(dir) match {
-      case Some((snap, k, residual)) =>
-        val df = CheckpointManager.readRanks(spark, dir, snap)
-        val chunks = graph.chunksOf(df)
-        if (residual < cfg.tolerance)
-          PageRankOutcome(chunks, PageRankRun(k, converged = true, residual, 0.0, n, graph.numEdges), Nil)
-        else runFrom(chunks, k)
+      case Some((snap, k, residual)) => runFrom(Some(CheckpointManager.readRanks(spark, dir, snap)), k, residual)
       case None => run()
     }
   }
 
-  // ---------------------------------------------------------------- initial state
+  // ---------------------------------------------------------------- the loop
 
-  private def initialVector(): Dataset[RankChunk] = cfg.mode match {
-    case PageRankMode.RiskPropagation =>
-      // x starts at the normalized prior (pagerank.py:285, :292)
-      priorChunksPinned
-    case _ =>
-      graph.uniformChunks() // x = ones(n)/n (pagerank.py:180)
-  }
-
-  /** Materialize a chunk dataset behind an ExternalRDD boundary.
-    *
-    * NOT Dataset.localCheckpoint: its LogicalRDD carries the origin plan's
-    * statistics forward, so an iterative self-referencing loop squares
-    * sizeInBytes every superstep — by ~20 supersteps Catalyst's join-size
-    * product is a million-digit BigInteger and planning time explodes.
-    * ExternalRDD reports constant default stats, keeping planning O(1) per
-    * superstep while still truncating lineage (the RDD is persisted and
-    * counted here). Returns the dataset plus the RDD handle for unpersist.
+  /** Iterate from `start` ((vid, value) ranks; None = x₀ of the mode) after
+    * `startIter` supersteps whose last residual was `startResidual`.
     */
-  private def pin[T: Encoder](ds: Dataset[T]): (Dataset[T], RDD[T]) = {
-    // RDD-level localCheckpoint: truncates dependencies after materialization
-    // (plain persist() keeps the parent chain and task deserialization
-    // eventually stack-overflows on 70+ superstep loops).
-    val rdd = ds.rdd.localCheckpoint()
-    rdd.count()
-    (spark.createDataset(rdd), rdd)
-  }
-
-  /** RDD-level pin: persist + truncate lineage, preserving partition layout
-    * (localCheckpoint mutates this RDD's dependencies in place — the partition
-    * array, and hence the block→partition layout, is untouched).
-    */
-  private def pinRdd[T](rdd: RDD[T]): RDD[T] = {
-    val r = rdd.localCheckpoint()
-    r.count()
-    r
-  }
-
-  private def normalizedPriorChunks(): Dataset[RankChunk] = {
-    val prior = cfg.prior.filter(_ != null).getOrElse(
-      throw new IllegalArgumentException("RiskPropagation requires cfg.prior (vid, value)"))
-    val total = prior.agg(sum($"value")).first().getDouble(0)
-    graph.chunksOf(prior.select($"vid", ($"value" / lit(total)).as("value")))
-  }
-
-  /** Normalized prior, chunked and PINNED once — both consumers (the initial
-    * vector x₀ = r₀ and the teleport delta = (1−d)·r₀) read this one
-    * materialization; evaluating the (potentially expensive) prior plan and
-    * its chunking shuffle twice doubled the risk-mode setup cost.
-    */
-  @transient private lazy val priorChunksPinned: Dataset[RankChunk] = {
-    val (pinned, rdd) = pin(normalizedPriorChunks())
-    auxPins += rdd
-    pinned
-  }
-
-  /** z = 1/n - (p/n)·[c != 0]  (original_pagerank/pagerank.py:130-134),
-    * block-laid-out: partition b = block b's chunk.
-    */
-  private lazy val zRdd: RDD[RankChunk] = {
-    val zBase = 1.0 / n
-    val zLinked = zBase - d / n
-    val df = graph.vertexDict
-      .join(graph.inDegrees, Seq("vid"), "left")
-      .select($"vid",
-        when($"deg".isNotNull && $"deg" =!= 0.0, lit(zLinked)).otherwise(lit(zBase)).as("value"))
-    val r = pinRdd(graph.toBlockLayout(graph.chunksOf(df)))
-    auxPins += r
-    r
-  }
-
-  /** delta = (1-d) * normalizedPrior (pagerank.py:295), block-laid-out —
-    * derived from the pinned prior chunks, not a second prior evaluation.
-    */
-  private lazy val deltaRdd: RDD[RankChunk] = {
-    val scale = 1.0 - d
-    val ds = priorChunksPinned
-      .map { c =>
-        val v = new Array[Double](c.values.length)
-        var i = 0; while (i < v.length) { v(i) = c.values(i) * scale; i += 1 }
-        RankChunk(c.blockId, c.loVid, v)
-      }
-    val r = pinRdd(graph.toBlockLayout(ds))
-    auxPins += r
-    r
-  }
-
-  // ---------------------------------------------------------------- main loop
-
-  private def runFrom(start: Dataset[RankChunk], startIter: Int): PageRankOutcome = {
+  private def runFrom(start: Option[DataFrame], startIter: Int, startResidual: Double): PageRankOutcome = {
     if (ran)
       throw new IllegalStateException(
         "PageRankEngine is single-shot: its pinned aux vectors were released when the " +
@@ -221,15 +123,55 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     val sc = spark.sparkContext
     val listener = new ShuffleMetricsListener
     sc.addSparkListener(listener)
-    // force build+cache of the regime's adjacency layout before timing; the
-    // driver-local kernel only ever touches the local array — building the
-    // RDD too would pay a broadcast + persist it never reads
-    if (driverResident) {
-      if (localGather) graph.gatherPartsLocal else graph.gatherPartsRdd
-    } else graph.adjPartsByBlock
     try {
-      if (driverResident) runResident(start, startIter, t0, listener)
-      else runDistributed(start, startIter, t0, listener)
+      // building the regime builds and caches its adjacency layout
+      val x: RankVector = if (n * 8L < graph.policy.driverBytes) new OnDriver(start) else new OnCluster(start)
+      val m = mode
+      val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
+      var iteration = startIter
+      var error = startResidual
+      def converged: Boolean = error < cfg.tolerance
+      // Σx (renorm) or z·x (Moler): one superstep's settle hands it to the next one's teleport
+      var carry = x.total(PageRankEngine.carry(m, _, _))
+
+      while (!converged && iteration < cfg.maxIterations) {
+        val iterT0 = System.nanoTime()
+        val cpu0 = HostProbe.procCpuSec()
+        val steal0 = HostProbe.stealSec()
+        val gc0 = HostProbe.gcSec()
+        val jit0 = HostProbe.jitSec()
+        listener.snapshot()
+
+        val (err, next) = x.superstep(PageRankEngine.teleportOf(m, d, n, carry))
+        error = err
+        carry = next
+        iteration += 1
+
+        val sh = listener.delta()
+        metrics += SuperstepMetrics(iteration, error, sh.readBytes, sh.writeBytes,
+          sh.readRows, sh.writeRows, (System.nanoTime() - iterT0) / 1000000L,
+          procCpuMs = deltaMs(cpu0, HostProbe.procCpuSec()),
+          stealMs = deltaMs(steal0, HostProbe.stealSec()),
+          gcMs = deltaMs(gc0, HostProbe.gcSec()),
+          jitMs = deltaMs(jit0, HostProbe.jitSec()))
+        if (PageRankEngine.debug)
+          System.err.println(s"[graft] superstep=$iteration ms=${metrics.last.wallMs} residual=$error")
+        cfg.checkpointDir.foreach { dir =>
+          if (converged || iteration % cfg.checkpointEvery == 0)
+            CheckpointManager.write(graph, dir, iteration, error,
+              metrics.takeRight(cfg.checkpointEvery).toSeq, x.snapshot())
+        }
+      }
+
+      // final renormalization only (original_pagerank/pagerank.py:144)
+      val norm =
+        if (m == PageRankMode.MolerDangling) Some(x.total((xs, _) => PageRankEngine.sumSeq(xs))) else None
+      val (ranks, free) = x.result(norm)
+      PageRankOutcome(
+        ranks,
+        PageRankRun(iteration, converged, error, (System.nanoTime() - t0) / 1e9, n, graph.numEdges),
+        metrics.toSeq,
+        free)
     } finally {
       sc.removeSparkListener(listener)
       auxPins.foreach(_.unpersist(false))
@@ -237,237 +179,218 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     }
   }
 
-  /** Chunked dataset of a driver rank array, pinned; the array travels as a
-    * broadcast, not inside the task closure (an n-double closure is an
-    * O(n·numBlocks)-byte task-binary ship at materialization).
-    */
-  private def finishChunksHandle(x: Array[Double]): (Dataset[RankChunk], RDD[RankChunk]) = {
-    val bs = graph.blockSize
-    val nb = graph.numBlocks
-    val bx = spark.sparkContext.broadcast(x)
-    val ds = spark.range(nb).as[Long].map { b =>
-      val xs = bx.value
-      val lo = b * bs
-      val len = math.min(bs, xs.length - lo).toInt
-      RankChunk(b.toInt, lo, java.util.Arrays.copyOfRange(xs, lo.toInt, lo.toInt + len))
-    }
-    val out = pin(ds)
-    bx.destroy() // pinned chunks are materialized; the broadcast is done
-    out
+  // ---------------------------------------------------------------- the regimes
+
+  /** Where the rank vector lives. [[runFrom]] does everything else. */
+  private abstract class RankVector {
+    /** One superstep with teleport scalar `t`: x ← settle(teleport(G·x));
+      * returns the (residual, carry) totals, added in block order.
+      */
+    def superstep(t: Double): (Double, Double)
+
+    /** Σ over chunks, in block order, of f(x chunk, aux chunk — z or delta, else null). */
+    def total(f: (Array[Double], Array[Double]) => Double): Double
+
+    /** x as chunks, for a checkpoint commit. */
+    def snapshot(): Dataset[RankChunk]
+
+    /** The final x, divided by `norm` when given, and the release of its storage. */
+    def result(norm: Option[Double]): (Dataset[RankChunk], () => Unit)
   }
 
-  /** Vector-resident regime: rank vector on the driver, kernel on the cluster. */
-  private def runResident(
-      start: Dataset[RankChunk],
-      startIter: Int,
-      t0: Long,
-      listener: ShuffleMetricsListener
-  ): PageRankOutcome = {
-    val sc = spark.sparkContext
-    val bs = graph.blockSize
-    val nv = n
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
+  /** The prior scaled to sum 1 (pagerank.py:285), as (vid, value) rows. */
+  private def normalizedPrior: DataFrame = {
+    val prior = cfg.prior.filter(_ != null).getOrElse(
+      throw new IllegalArgumentException("RiskPropagation requires cfg.prior (vid, value)"))
+    val total = prior.agg(sum($"value")).first().getDouble(0)
+    prior.select($"vid".cast("long").as("vid"), ($"value" / lit(total)).as("value"))
+  }
 
-    // Normalized prior as a driver array (risk mode, fresh runs): the Spark
-    // aggregation computing `total` is the SAME plan normalizedPriorChunks
-    // runs (identical partition-merge order → identical total), and the
-    // per-element division is the identical IEEE op — so x₀ and delta match
-    // the chunked path bit-for-bit while skipping its chunking shuffle + pin.
-    lazy val priorArr: Array[Double] = {
-      val prior = cfg.prior.filter(_ != null).getOrElse(
-        throw new IllegalArgumentException("RiskPropagation requires cfg.prior (vid, value)"))
-      val total = prior.agg(sum($"value")).first().getDouble(0)
-      val arr = new Array[Double](n.toInt)
-      prior
-        .select($"vid".cast("long"), ($"value" / lit(total)).as("v"))
-        .as[(Long, Double)]
-        .collect()
+  /** z = 1/n − (d/n)·[c ≠ 0] (original_pagerank/pagerank.py:130-134): its
+    * entries at vertices with in-degree c ≠ 0; every other entry is `zBase`.
+    */
+  private def zBase: Double = 1.0 / n
+  private def zLinkedRows: DataFrame =
+    graph.inDegrees.where($"deg" =!= 0.0).select($"vid", lit(zBase - d / n).as("value"))
+
+  /** Vector-resident regime: x is a driver array, the whole vector one chunk. */
+  private final class OnDriver(start: Option[DataFrame]) extends RankVector {
+    private val size = n.toInt
+
+    private def collected(rows: DataFrame, fill: Double): Array[Double] = {
+      val arr = Array.fill(size)(fill)
+      rows.select($"vid".cast("long"), $"value".cast("double")).as[(Long, Double)].collect()
         .foreach { case (vid, v) => arr(vid.toInt) = v }
       arr
     }
 
-    var x =
-      if (start != null) {
-        val arr = new Array[Double](n.toInt)
-        start.collect().foreach(c => System.arraycopy(c.values, 0, arr, c.loVid.toInt, c.values.length))
-        start.unpersist()
-        arr
-      } else cfg.mode match {
-        case PageRankMode.RiskPropagation => priorArr
-        case _ => Array.fill(n.toInt)(1.0 / n) // x = ones(n)/n (pagerank.py:180)
-      }
-
-    // mode-constant driver vectors
-    val deltaVec: Array[Double] = cfg.mode match {
-      case PageRankMode.RiskPropagation if start == null =>
-        // delta = (1−d)·normalizedPrior, derived element-wise from the local
-        // prior (identical arithmetic to deltaRdd's map)
-        val scale = 1.0 - d
-        val dv = new Array[Double](n.toInt)
-        var i = 0
-        while (i < dv.length) { dv(i) = priorArr(i) * scale; i += 1 }
-        dv
-      case PageRankMode.RiskPropagation =>
-        val dv = new Array[Double](n.toInt)
-        deltaRdd.collect().foreach(c => System.arraycopy(c.values, 0, dv, c.loVid.toInt, c.values.length))
-        dv
-      case _ => null
+    private lazy val prior = collected(normalizedPrior, 0.0)
+    private val aux: Array[Double] = mode match {
+      case PageRankMode.RiskPropagation => PageRankEngine.times(prior, 1.0 - d) // delta, pagerank.py:295
+      case PageRankMode.MolerDangling => collected(zLinkedRows, zBase)
+      case PageRankMode.ReferenceRenorm => null
     }
-    val zVec: Array[Double] = cfg.mode match {
-      case PageRankMode.MolerDangling =>
-        val zv = new Array[Double](n.toInt)
-        zRdd.collect().foreach(c => System.arraycopy(c.values, 0, zv, c.loVid.toInt, c.values.length))
-        zv
-      case _ => null
+    private var x: Array[Double] = start match {
+      case Some(ranks) => collected(ranks, 0.0)
+      case None if mode == PageRankMode.RiskPropagation => prior // x₀ = r₀ (pagerank.py:292)
+      case None => Array.fill(size)(1.0 / n) // x = ones(n)/n (pagerank.py:180)
     }
 
-    // Driver-local kernel (guide §1.2: the cheapest superstep for a graph this
-    // size is NO job at all): below the gate the src-major parts are collected
-    // once and every gather runs as a driver loop — same parts, same slice
-    // arithmetic, same slice-accumulation order as the cluster path, so gx is
-    // bit-identical. Above the gate (e.g. the 4M×80M kernel bench) the
-    // broadcast+map+collect job amortizes its dispatch over real work.
-    val localParts: Array[AdjPart] = if (localGather) graph.gatherPartsLocal else null
+    /** The driver-local gather's parts; null selects the job gather, whose
+      * parts are built and cached on the cluster here, before the first superstep.
+      */
+    private val localParts: Array[AdjPart] =
+      if (graph.numEdges * 16 < graph.policy.driverBytes) graph.gatherPartsLocal
+      else { graph.gatherPartsRdd; null }
 
-    var iteration = startIter
-    var converged = false
-    var error = Double.MaxValue
-    var done = false
-
-    while (iteration < cfg.maxIterations && !done) {
-      val iterT0 = System.nanoTime()
-      val iterCpu0 = graft.util.HostProbe.procCpuSec()
-      val iterSteal0 = graft.util.HostProbe.stealSec()
-      val iterGc0 = graft.util.HostProbe.gcSec()
-      val iterJit0 = graft.util.HostProbe.jitSec()
-      listener.snapshot()
-
+    def superstep(t: Double): (Double, Double) = {
       val gx =
-        if (localParts != null) PageRankEngine.localGather(localParts, x, n.toInt, bs, nv)
-        else {
-          // one shuffle-free job: broadcast x; each src-major part GATHERS its
-          // own output slice (gx[i] = Σ wNorm · x[dst]) — tasks never share
-          // output, so there is no cross-task combine stage at all; the driver
-          // adds the (block-aligned, possibly split) slices into gx. Collect
-          // volume = n doubles total, independent of parallelism.
-          val phaseT0 = System.nanoTime()
-          val bcast: Broadcast[Array[Double]] = sc.broadcast(x)
-          val phaseT1 = System.nanoTime()
-          val slices = graph.gatherPartsRdd
-            .map { part =>
-              val xs = bcast.value
-              val lo = part.blockId.toLong * bs
-              val len = math.min(bs, nv - lo).toInt
-              val out = new Array[Double](len)
-              PageRankEngine.gatherSlice(part, xs, out)
-              RankChunk(part.blockId, lo, out)
-            }
-            .collect()
-          val phaseT2 = System.nanoTime()
-          bcast.destroy()
-          val g = new Array[Double](n.toInt)
-          slices.foreach { s =>
-            var i = 0
-            val base = s.loVid.toInt
-            while (i < s.values.length) { g(base + i) += s.values(i); i += 1 }
-          }
-          if (PageRankEngine.debug)
-            System.err.println(
-              f"[graft] resident phases: bcast ${(phaseT1 - phaseT0) / 1e6}%.1f ms, " +
-                f"job+collect ${(phaseT2 - phaseT1) / 1e6}%.1f ms, " +
-                f"combine ${(System.nanoTime() - phaseT2) / 1e6}%.1f ms")
-          g
-        }
-      val phaseT3 = System.nanoTime()
-
-      // Driver-side update in the reference's exact operation order — in
-      // SMALL static methods, not inline: runResident exceeds HotSpot's
-      // 8000-bytecode DontCompileHugeMethods limit, so loops written inline
-      // here run INTERPRETED for the whole job (measured ~320 ms/superstep at
-      // n = 4M vs ~30 ms for the identical loops in a compiled method).
-      val xOld = x
-      val (xNew, err) = cfg.mode match {
-        case PageRankMode.ReferenceRenorm =>
-          PageRankEngine.residentRenormUpdate(gx, xOld, d, n)
-        case PageRankMode.RiskPropagation =>
-          PageRankEngine.residentRiskUpdate(gx, xOld, deltaVec, d)
-        case PageRankMode.MolerDangling =>
-          PageRankEngine.residentMolerUpdate(gx, xOld, zVec, d, n)
-      }
-      x = xNew
-      error = err
-      if (PageRankEngine.debug)
-        System.err.println(
-          f"[graft] resident update: ${(System.nanoTime() - phaseT3) / 1e6}%.1f ms")
-      iteration += 1
-
-      val sh = listener.delta()
-      metrics += SuperstepMetrics(iteration, error, sh.readBytes, sh.writeBytes,
-        sh.readRows, sh.writeRows, (System.nanoTime() - iterT0) / 1000000L,
-        procCpuMs = deltaMs(iterCpu0, graft.util.HostProbe.procCpuSec()),
-        stealMs = deltaMs(iterSteal0, graft.util.HostProbe.stealSec()),
-        gcMs = deltaMs(iterGc0, graft.util.HostProbe.gcSec()),
-        jitMs = deltaMs(iterJit0, graft.util.HostProbe.jitSec()))
-      if (error < cfg.tolerance) { converged = true; done = true }
-
-      cfg.checkpointDir.foreach { dir =>
-        if (done || iteration % cfg.checkpointEvery == 0) {
-          val (chunks, rdd) = finishChunksHandle(x)
-          CheckpointManager.write(graph, dir, iteration, error,
-            metrics.takeRight(cfg.checkpointEvery).toSeq, chunks)
-          rdd.unpersist(false) // the actual pinned storage, not the wrapper
-        }
-      }
+        if (localParts != null) PageRankEngine.localGather(localParts, x, size, graph.blockSize, n)
+        else jobGather()
+      val sumY = PageRankEngine.teleport(mode, gx, d, t, aux)
+      val totals = PageRankEngine.settle(mode, gx, x, aux, sumY)
+      x = gx
+      totals
     }
 
-    val finalX = cfg.mode match {
-      case PageRankMode.MolerDangling =>
-        // final renorm only (original_pagerank/pagerank.py:144); while loops
-        // for the same boxing reason as the superstep update
-        val s = PageRankEngine.sumSeq(x)
-        val out = new Array[Double](x.length)
-        var i = 0; while (i < out.length) { out(i) = x(i) / s; i += 1 }
-        out
-      case _ => x
+    /** One shuffle-free job: broadcast x; each src-major part GATHERS its own
+      * output slice (gx[i] = Σ wNorm · x[dst]) — tasks never share output, so
+      * there is no cross-task combine stage at all; the driver adds the
+      * (block-aligned, possibly split) slices into gx. Collect volume = n
+      * doubles total, independent of parallelism.
+      */
+    private def jobGather(): Array[Double] = {
+      val bs = graph.blockSize
+      val nv = n
+      val bcast = spark.sparkContext.broadcast(x)
+      val slices = graph.gatherPartsRdd
+        .map { part =>
+          val xs = bcast.value
+          val lo = part.blockId.toLong * bs
+          val len = math.min(bs, nv - lo).toInt
+          val out = new Array[Double](len)
+          PageRankEngine.gatherSlice(part, xs, out)
+          RankChunk(part.blockId, lo, out)
+        }
+        .collect()
+      bcast.destroy()
+      val g = new Array[Double](size)
+      slices.foreach { s =>
+        var i = 0
+        val base = s.loVid.toInt
+        while (i < s.values.length) { g(base + i) += s.values(i); i += 1 }
+      }
+      g
     }
-    val (chunks, rdd) = finishChunksHandle(finalX)
-    PageRankOutcome(
-      chunks,
-      PageRankRun(iteration, converged, error, (System.nanoTime() - t0) / 1e9, n, graph.numEdges),
-      metrics.toSeq,
-      () => { rdd.unpersist(false); () })
+
+    def total(f: (Array[Double], Array[Double]) => Double): Double = f(x, aux)
+
+    def snapshot(): Dataset[RankChunk] = chunked()
+
+    def result(norm: Option[Double]): (Dataset[RankChunk], () => Unit) = {
+      norm.foreach(PageRankEngine.divide(x, _))
+      (chunked(), () => ())
+    }
+
+    /** x as a chunk dataset, one slice per block: no broadcast, no pin, no job. */
+    private def chunked(): Dataset[RankChunk] = {
+      val bs = graph.blockSize
+      val chunks = (0 until graph.numBlocks).map { b =>
+        val lo = b * bs
+        RankChunk(b, lo, java.util.Arrays.copyOfRange(x, math.min(lo, n).toInt, math.min(lo + bs, n).toInt))
+      }
+      spark.createDataset(spark.sparkContext.parallelize(chunks, graph.numBlocks))
+    }
   }
 
-  /** Distributed regime: block-laid-out chunk RDDs, zero adjacency movement. */
-  private def runDistributed(
-      start: Dataset[RankChunk],
-      startIter: Int,
-      t0: Long,
-      listener: ShuffleMetricsListener
-  ): PageRankOutcome = {
-    val sc = spark.sparkContext
-    val metrics = scala.collection.mutable.ArrayBuffer.empty[SuperstepMetrics]
-    val bs = graph.blockSize
-    val nv = n
-    val d0 = d
-    val hp = graph.blockPartitioner
-    val adj = graph.adjPartsByBlock
+  /** RDD-level pin: persist + truncate lineage, preserving partition layout
+    * (localCheckpoint mutates this RDD's dependencies in place — the partition
+    * array, and hence the block→partition layout, is untouched). Plain
+    * persist() keeps the parent chain, and task deserialization eventually
+    * stack-overflows on 70+ superstep loops.
+    */
+  private def pinRdd[T](rdd: RDD[T]): RDD[T] = {
+    val r = rdd.localCheckpoint()
+    r.count()
+    r
+  }
 
-    var xRdd: RDD[RankChunk] = pinRdd(graph.toBlockLayout(start))
-    start.unpersist()
+  /** Distributed regime: x is block-laid chunk RDDs, zipped each superstep
+    * against the co-partitioned adjacency (no join, no exchange of adjacency:
+    * round 1 joined the cached Dataset per superstep and the planner
+    * broadcast / sort-merge-exchanged all ~16 B/edge of it every iteration).
+    */
+  private final class OnCluster(start: Option[DataFrame]) extends RankVector {
+    private val adj = graph.adjPartsByBlock
+    // counts mid-block drains, so a probe run can prove the bounded-scratch path fired
+    private val accFlush = spark.sparkContext.longAccumulator("graft.slabFlushes")
 
-    // np.sum(x) carried across supersteps (renorm mode teleport term)
-    var sumX = cfg.mode match {
-      case PageRankMode.ReferenceRenorm => xRdd.map(c => PageRankEngine.sumSeq(c.values)).sum()
-      case _ => 0.0
+    private def laid(ds: Dataset[RankChunk]): RDD[RankChunk] = pinRdd(graph.toBlockLayout(ds))
+    private def forRun(r: RDD[RankChunk]): RDD[RankChunk] = { auxPins += r; r }
+
+    // x₀ = r₀ and delta = (1−d)·r₀ read this one materialization of the prior
+    private lazy val prior = forRun(laid(graph.chunksOf(normalizedPrior)))
+    private val auxRdd: RDD[RankChunk] = mode match {
+      case PageRankMode.RiskPropagation =>
+        val scale = 1.0 - d
+        forRun(pinRdd(prior.map(c => RankChunk(c.blockId, c.loVid, PageRankEngine.times(c.values, scale)))))
+      case PageRankMode.MolerDangling => forRun(laid(graph.chunksOf(zLinkedRows, zBase)))
+      case PageRankMode.ReferenceRenorm => null
     }
-    // z·x carried across supersteps (Moler mode)
-    var zx = cfg.mode match {
-      case PageRankMode.MolerDangling => dotRdd(xRdd, zRdd)
-      case _ => 0.0
+    private var x: RDD[RankChunk] = start match {
+      case Some(ranks) => laid(graph.chunksOf(ranks))
+      case None if mode == PageRankMode.RiskPropagation => prior
+      case None => laid(graph.uniformChunks())
     }
 
-    val nb = graph.numBlocks
+    /** Each chunk of `xs` beside its aux chunk's values (null without one). */
+    private def withAux(xs: RDD[RankChunk]): RDD[(RankChunk, Array[Double])] =
+      if (auxRdd == null) xs.map(c => (c, null: Array[Double]))
+      else xs.zipPartitions(auxRdd)((xi, ai) => xi.zip(ai).map { case (c, a) => (c, a.values) })
+
+    /** Per-block (partial, partial) pairs reported from result-stage tasks —
+      * Spark applies each partition's update once, retries included.
+      */
+    private def blockSums(name: String): CollectionAccumulator[(Int, Double, Double)] =
+      spark.sparkContext.collectionAccumulator[(Int, Double, Double)](name)
+
+    /** Totals of the partials added in block order: a sum never depends on
+      * which task finished first.
+      */
+    private def inBlockOrder(acc: CollectionAccumulator[(Int, Double, Double)]): (Double, Double) = {
+      val ps = acc.value.asScala.sortBy(_._1)
+      (ps.foldLeft(0.0)(_ + _._2), ps.foldLeft(0.0)(_ + _._3))
+    }
+
+    def superstep(t: Double): (Double, Double) = {
+      val m = mode
+      val d0 = d
+      val normalizes = m == PageRankMode.ReferenceRenorm
+      val sumsY = blockSums("graft.sumY")
+      val totals = blockSums("graft.residual")
+      val teleported = contribsOf(x).zipPartitions(withAux(x)) { (cit, xit) =>
+        xit.map { case (old, a) =>
+          val y = new Array[Double](old.values.length)
+          PageRankEngine.gatherContribs(cit, y)
+          sumsY.add((old.blockId, PageRankEngine.teleport(m, y, d0, t, a), 0.0))
+          (old, a, y)
+        }
+      }
+      // renorm settles against Σy over EVERY block: pin between the two passes;
+      // the other modes settle in the same job
+      val raw = if (normalizes) pinRdd(teleported) else teleported
+      val sumY = if (normalizes) inBlockOrder(sumsY)._1 else Double.NaN
+      val next = pinRdd(raw.map { case (old, a, y0) =>
+        val y = if (normalizes) y0.clone() else y0 // never write into a pinned block
+        val (err, carry) = PageRankEngine.settle(m, y, old.values, a, sumY)
+        totals.add((old.blockId, err, carry))
+        RankChunk(old.blockId, old.loVid, y)
+      })
+      if (normalizes) raw.unpersist(false)
+      x.unpersist(false)
+      x = next
+      inBlockOrder(totals)
+    }
 
     /** The gather-scatter matvec: zipPartitions the CACHED co-partitioned
       * adjacency with the identically-laid-out rank chunks (adjacency never
@@ -488,12 +411,12 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
       * concurrentTasks × budget, at the cost of a slightly larger shuffle in
       * exactly the (rare) tasks that overflow.
       */
-    // observability for the budget-flush path: counts mid-block drains so a
-    // probe run can prove the bounded-scratch code actually fired
-    val accFlush = sc.longAccumulator("graft.slabFlushes")
-    val budget = graph.policy.taskBytes
-
-    def contribsOf(x: RDD[RankChunk]): RDD[(Int, BlockContrib)] =
+    private def contribsOf(x: RDD[RankChunk]): RDD[(Int, BlockContrib)] = {
+      val nb = graph.numBlocks
+      val bs = graph.blockSize
+      val nv = n
+      val budget = graph.policy.taskBytes
+      val flushes = accFlush
       adj.zipPartitions(x) { (adjIt, xIt) =>
         if (!xIt.hasNext) Iterator.empty
         else {
@@ -565,7 +488,7 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
                 if (pending.hasNext) nextElem = pending.next()
                 else if (adjIt.hasNext) {
                   processPart(adjIt.next()._2)
-                  if (allocBytes > budget) { accFlush.add(1); pending = drain() }
+                  if (allocBytes > budget) { flushes.add(1); pending = drain() }
                 } else if (anySlab) pending = drain()
                 else return
               }
@@ -579,189 +502,109 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
             }
           }
         }
-      }.partitionBy(hp)
-
-    var iteration = startIter
-    var converged = false
-    var error = Double.MaxValue
-    var done = false
-
-    while (iteration < cfg.maxIterations && !done) {
-      val iterT0 = System.nanoTime()
-      val iterCpu0 = graft.util.HostProbe.procCpuSec()
-      val iterSteal0 = graft.util.HostProbe.stealSec()
-      val iterGc0 = graft.util.HostProbe.gcSec()
-      val iterJit0 = graft.util.HostProbe.jitSec()
-      listener.snapshot()
-
-      val contribs = contribsOf(xRdd)
-
-      cfg.mode match {
-        case PageRankMode.ReferenceRenorm =>
-          // job 1: y = d*Gx + delta*sum(x); accumulate sum(y)
-          val accSumY = sc.doubleAccumulator("graft.sumY")
-          val teleport = (1.0 - d0) / nv * sumX
-          val raw = contribs.zipPartitions(xRdd) { (cit, xit) =>
-            if (!xit.hasNext) Iterator.empty
-            else {
-              val old = xit.next()
-              val gx = new Array[Double](old.values.length)
-              PageRankEngine.gatherContribs(cit, gx)
-              val y = new Array[Double](gx.length)
-              var s = 0.0
-              var i = 0
-              while (i < y.length) { y(i) = d0 * gx(i) + teleport; s += y(i); i += 1 }
-              accSumY.add(s)
-              Iterator.single((old.blockId, old.loVid, y, old.values))
-            }
-          }
-          val rawP = pinRdd(raw)
-          val sumY = accSumY.value
-          // job 2: normalize (pagerank.py:197), residual + next sum via accumulators
-          val accErr = sc.doubleAccumulator("graft.residual")
-          val accSum = sc.doubleAccumulator("graft.sumX")
-          val next = rawP.map { case (blockId, lo, y, old) =>
-            val v = new Array[Double](y.length)
-            var diff = 0.0
-            var s = 0.0
-            var i = 0
-            while (i < v.length) {
-              v(i) = y(i) / sumY
-              diff += math.abs(v(i) - old(i))
-              s += v(i)
-              i += 1
-            }
-            accErr.add(diff); accSum.add(s)
-            RankChunk(blockId, lo, v)
-          }
-          val nextP = pinRdd(next)
-          rawP.unpersist(false)
-          xRdd.unpersist(false)
-          xRdd = nextP
-          error = accErr.value
-          sumX = accSum.value
-
-        case PageRankMode.RiskPropagation =>
-          val accErr = sc.doubleAccumulator("graft.residual")
-          val next = contribs.zipPartitions(xRdd, deltaRdd) { (cit, xit, dit) =>
-            if (!xit.hasNext) Iterator.empty
-            else {
-              val old = xit.next()
-              val del = dit.next()
-              val gx = new Array[Double](old.values.length)
-              PageRankEngine.gatherContribs(cit, gx)
-              val y = new Array[Double](gx.length)
-              var diff = 0.0
-              var i = 0
-              while (i < y.length) {
-                y(i) = d0 * gx(i) + del.values(i) // pagerank.py:301
-                diff += math.abs(y(i) - old.values(i))
-                i += 1
-              }
-              accErr.add(diff)
-              Iterator.single(RankChunk(old.blockId, old.loVid, y))
-            }
-          }
-          val nextP = pinRdd(next)
-          xRdd.unpersist(false)
-          xRdd = nextP
-          error = accErr.value
-
-        case PageRankMode.MolerDangling =>
-          val teleport = zx / nv
-          val accErr = sc.doubleAccumulator("graft.residual")
-          val accZx = sc.doubleAccumulator("graft.zx")
-          val next = contribs.zipPartitions(xRdd, zRdd) { (cit, xit, zit) =>
-            if (!xit.hasNext) Iterator.empty
-            else {
-              val old = xit.next()
-              val zc = zit.next()
-              val gx = new Array[Double](old.values.length)
-              PageRankEngine.gatherContribs(cit, gx)
-              val y = new Array[Double](gx.length)
-              var diff = 0.0
-              var zdot = 0.0
-              var i = 0
-              while (i < y.length) {
-                y(i) = d0 * gx(i) + teleport
-                diff += math.abs(y(i) - old.values(i))
-                zdot += zc.values(i) * y(i)
-                i += 1
-              }
-              accErr.add(diff); accZx.add(zdot)
-              Iterator.single(RankChunk(old.blockId, old.loVid, y))
-            }
-          }
-          val nextP = pinRdd(next)
-          xRdd.unpersist(false)
-          xRdd = nextP
-          error = accErr.value
-          zx = accZx.value
-      }
-
-      iteration += 1
-      val sh = listener.delta()
-      metrics += SuperstepMetrics(iteration, error, sh.readBytes, sh.writeBytes,
-        sh.readRows, sh.writeRows, (System.nanoTime() - iterT0) / 1000000L,
-        procCpuMs = deltaMs(iterCpu0, graft.util.HostProbe.procCpuSec()),
-        stealMs = deltaMs(iterSteal0, graft.util.HostProbe.stealSec()),
-        gcMs = deltaMs(iterGc0, graft.util.HostProbe.gcSec()),
-        jitMs = deltaMs(iterJit0, graft.util.HostProbe.jitSec()))
-      if (PageRankEngine.debug)
-        println(s"[graft] superstep=$iteration ms=${metrics.last.wallMs} residual=$error")
-      if (error < cfg.tolerance) { converged = true; done = true }
-
-      cfg.checkpointDir.foreach { dir =>
-        if (done || iteration % cfg.checkpointEvery == 0)
-          CheckpointManager.write(graph, dir, iteration, error,
-            metrics.takeRight(cfg.checkpointEvery).toSeq, spark.createDataset(xRdd))
-      }
+      }.partitionBy(graph.blockPartitioner)
     }
 
-    val finalRdd = cfg.mode match {
-      case PageRankMode.MolerDangling =>
-        val s = xRdd.map(c => PageRankEngine.sumSeq(c.values)).sum()
-        val out = pinRdd(xRdd.map { c =>
-          val v = new Array[Double](c.values.length)
-          var i = 0; while (i < v.length) { v(i) = c.values(i) / s; i += 1 }
+    def total(f: (Array[Double], Array[Double]) => Double): Double =
+      withAux(x).map { case (c, a) => f(c.values, a) }.collect().foldLeft(0.0)(_ + _) // partition b = block b
+
+    def snapshot(): Dataset[RankChunk] = spark.createDataset(x)
+
+    def result(norm: Option[Double]): (Dataset[RankChunk], () => Unit) = {
+      val out = norm.fold(x) { s =>
+        val r = pinRdd(x.map { c =>
+          val v = c.values.clone()
+          PageRankEngine.divide(v, s)
           RankChunk(c.blockId, c.loVid, v)
         })
-        xRdd.unpersist(false)
-        out
-      case _ => xRdd
-    }
-    if (accFlush.value > 0)
-      System.err.println(
-        s"[graft] slab budget flushes: ${accFlush.value} mid-block drains " +
-          s"(budget $budget B) across $iteration supersteps")
-    PageRankOutcome(
-      spark.createDataset(finalRdd),
-      PageRankRun(iteration, converged, error, (System.nanoTime() - t0) / 1e9, n, graph.numEdges),
-      metrics.toSeq,
-      () => { finalRdd.unpersist(false); () })
-  }
-
-  /** Dot product of two identically block-laid-out chunk RDDs (no shuffle). */
-  private def dotRdd(a: RDD[RankChunk], b: RDD[RankChunk]): Double =
-    a.zipPartitions(b) { (ai, bi) =>
-      if (!ai.hasNext || !bi.hasNext) Iterator.empty
-      else {
-        val ac = ai.next()
-        val bc = bi.next()
-        var s = 0.0
-        var i = 0
-        while (i < ac.values.length) { s += ac.values(i) * bc.values(i); i += 1 }
-        Iterator.single(s)
+        x.unpersist(false)
+        r
       }
-    }.sum()
+      auxPins -= out // the ranks outlive the run, even when they are still x₀ = r₀
+      if (accFlush.value > 0)
+        System.err.println(
+          s"[graft] slab budget flushes: ${accFlush.value} mid-block drains (budget ${graph.policy.taskBytes} B)")
+      (spark.createDataset(out), () => { out.unpersist(false); () })
+    }
+  }
 }
 
 object PageRankEngine {
   /** Per-superstep stderr progress (env GRAFT_DEBUG). */
   val debug: Boolean = sys.env.contains("GRAFT_DEBUG")
 
-  /** Driver twin of the resident superstep's map + collect + combine: one
-    * zeroed slice per part, [[gatherSlice]] into it, then add into gx in part
+  // Per-chunk kernels shared by both regimes, each a small while-loop method:
+  // HotSpot does not compile methods over 8000 bytecodes, and loops inlined
+  // into a huge one run interpreted (measured ~320 ms vs ~30 ms per superstep
+  // at n = 4M).
+
+  /** The superstep's teleport scalar from the carried total: (1−d)/n·Σx
+    * (pagerank.py:194) or (z·x)/n (original_pagerank/pagerank.py:138); risk
+    * mode teleports per vertex instead.
+    */
+  private[engine] def teleportOf(mode: PageRankMode, d: Double, n: Long, carry: Double): Double = mode match {
+    case PageRankMode.ReferenceRenorm => (1.0 - d) / n * carry
+    case PageRankMode.MolerDangling => carry / n
+    case PageRankMode.RiskPropagation => 0.0
+  }
+
+  /** y = d·gx + t, or d·gx + delta in risk mode (pagerank.py:194, :301;
+    * original_pagerank/pagerank.py:138), written over gx. Returns Σy.
+    */
+  private[engine] def teleport(
+      mode: PageRankMode, gx: Array[Double], d: Double, t: Double, aux: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    if (mode == PageRankMode.RiskPropagation)
+      while (i < gx.length) { gx(i) = d * gx(i) + aux(i); s += gx(i); i += 1 }
+    else
+      while (i < gx.length) { gx(i) = d * gx(i) + t; s += gx(i); i += 1 }
+    s
+  }
+
+  /** Finish a teleported chunk y against its old values x: renorm mode
+    * divides by the total Σy (pagerank.py:197); then the L1 residual
+    * Σ|y − x| and the carry for the next superstep.
+    */
+  private[engine] def settle(
+      mode: PageRankMode, y: Array[Double], x: Array[Double], aux: Array[Double], sumY: Double)
+      : (Double, Double) = {
+    if (mode == PageRankMode.ReferenceRenorm) divide(y, sumY)
+    var err = 0.0
+    var i = 0
+    while (i < y.length) { err += math.abs(y(i) - x(i)); i += 1 }
+    (err, carry(mode, y, aux))
+  }
+
+  /** The total a mode carries into the next superstep: Σx (renorm), z·x
+    * (Moler, aux = z), nothing (risk).
+    */
+  private[engine] def carry(mode: PageRankMode, x: Array[Double], aux: Array[Double]): Double = mode match {
+    case PageRankMode.ReferenceRenorm => sumSeq(x)
+    case PageRankMode.MolerDangling =>
+      var s = 0.0
+      var i = 0
+      while (i < x.length) { s += aux(i) * x(i); i += 1 }
+      s
+    case PageRankMode.RiskPropagation => 0.0
+  }
+
+  /** xs /= s, in place. */
+  private[engine] def divide(xs: Array[Double], s: Double): Unit = {
+    var i = 0
+    while (i < xs.length) { xs(i) /= s; i += 1 }
+  }
+
+  /** xs · s, as a new array. */
+  private[engine] def times(xs: Array[Double], s: Double): Array[Double] = {
+    val out = new Array[Double](xs.length)
+    var i = 0
+    while (i < out.length) { out(i) = xs(i) * s; i += 1 }
+    out
+  }
+
+  /** Driver twin of the job gather's map + collect + combine: one zeroed
+    * slice per part, [[gatherSlice]] into it, then add into gx in part
     * order — the identical floating-point sequence the cluster path performs.
     */
   private[engine] def localGather(
@@ -790,57 +633,6 @@ object PageRankEngine {
     var i = 0
     while (i < xs.length) { s += xs(i); i += 1 }
     s
-  }
-
-  /** Resident-regime ReferenceRenorm update (pagerank.py:194-197) + L1
-    * residual, exact reference operation order: sumX → y = d·gx + tele·sumX →
-    * y /= sum(y) → Σ|y − xOld|. Lives in its own (small, JIT-compilable)
-    * method — see the runResident call site for why.
-    */
-  private[engine] def residentRenormUpdate(
-      gx: Array[Double], xOld: Array[Double], d: Double, n: Long): (Array[Double], Double) = {
-    val sumX = sumSeq(xOld) // np.sum(x), pagerank.py:194
-    val t = (1.0 - d) / n * sumX
-    val y = new Array[Double](gx.length)
-    var i = 0
-    while (i < y.length) { y(i) = d * gx(i) + t; i += 1 }
-    val sumY = sumSeq(y)
-    i = 0
-    while (i < y.length) { y(i) /= sumY; i += 1 } // pagerank.py:197
-    var err = 0.0
-    i = 0
-    while (i < y.length) { err += math.abs(y(i) - xOld(i)); i += 1 }
-    (y, err)
-  }
-
-  /** Resident-regime risk update y = d·gx + delta (pagerank.py:301) + L1 residual. */
-  private[engine] def residentRiskUpdate(
-      gx: Array[Double], xOld: Array[Double], deltaVec: Array[Double], d: Double)
-      : (Array[Double], Double) = {
-    val y = new Array[Double](gx.length)
-    var i = 0
-    while (i < y.length) { y(i) = d * gx(i) + deltaVec(i); i += 1 }
-    var err = 0.0
-    i = 0
-    while (i < y.length) { err += math.abs(y(i) - xOld(i)); i += 1 }
-    (y, err)
-  }
-
-  /** Resident-regime Moler update y = d·gx + (z·xOld)/n (original:138) + L1 residual. */
-  private[engine] def residentMolerUpdate(
-      gx: Array[Double], xOld: Array[Double], zVec: Array[Double], d: Double, n: Long)
-      : (Array[Double], Double) = {
-    var zx = 0.0
-    var i = 0
-    while (i < xOld.length) { zx += zVec(i) * xOld(i); i += 1 } // z@x, original:138
-    val t = zx / n
-    val y = new Array[Double](gx.length)
-    i = 0
-    while (i < y.length) { y(i) = d * gx(i) + t; i += 1 }
-    var err = 0.0
-    i = 0
-    while (i < y.length) { err += math.abs(y(i) - xOld(i)); i += 1 }
-    (y, err)
   }
 
   /** Sum incoming contribution slabs (dense or compacted sparse) into gx. */

@@ -7,8 +7,8 @@ import org.apache.spark.sql.DataFrame
   * `Dataset.localCheckpoint` carries the origin plan's STATISTICS into its
   * LogicalRDD; a loop that joins the checkpointed frame back to itself squares
   * sizeInBytes every iteration until Catalyst multiplies million-digit
-  * BigIntegers (see PageRankEngine.pin). Cutting through an RDD boundary
-  * truncates lineage AND resets statistics to defaults.
+  * BigIntegers. Cutting through an RDD boundary truncates lineage AND resets
+  * statistics to defaults.
   */
 object Lineage {
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, TriangleCount}
 import graft.analytics.NetworkAnalytics
 import graft.sources.{RepoFiles, TestdataGraph}
@@ -27,16 +25,7 @@ object BenchExtra {
     val passes = if (args.nonEmpty) args(0).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.FastLocalDir.sparkLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(cpus, "graft-bench-extra")
 
     // per-query job/stage/task counters: at contract scale the wall is mostly
     // fixed per-stage overhead, so the count of scheduled stages is the thing

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.graph.LinkGraph
 import graft.model.ExecutionPolicy
 import graft.algo.PageRank
@@ -88,19 +87,12 @@ object KernelBench {
     val distributed = args.length > 4 && args(4) == "distributed"
     val policy = if (distributed) ExecutionPolicy(driverBytes = 0L) else ExecutionPolicy()
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-kernel-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+    val spark = graft.util.Sessions.local(cores, s"graft-kernel-$cores",
+      "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
       // the per-superstep broadcast is an n-double rank vector — high-entropy
       // doubles don't compress, so lz4 on the 32 MB payload is pure serial
       // driver cost on every superstep (guide §2.3: measure, don't assume)
-      .config("spark.broadcast.compress", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.FastLocalDir.sparkLocalDir)
-      .getOrCreate()
+      "spark.broadcast.compress" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     val upSession = phase("session-up")
 

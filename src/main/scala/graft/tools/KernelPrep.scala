@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.graph.LinkGraph
@@ -35,13 +34,7 @@ object KernelPrep {
     val e = args(2).toLong
     val outPath = args(3)
     val blocks = if (args.length > 4) args(4).toInt else 0
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-kernel-prep")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.FastLocalDir.sparkLocalDir)
-      .getOrCreate()
+    val spark = graft.util.Sessions.local(cores, "graft-kernel-prep")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     SkewedEdges.edges(spark, n, e)

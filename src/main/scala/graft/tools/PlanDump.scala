@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared SparkEntry queries to
   * plans/<round>/<query>_<tag>.txt — the optimization-round evidence trail
   * (the judge checks plan claims against these files without running Spark).
@@ -18,14 +16,7 @@ object PlanDump {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.FastLocalDir.sparkLocalDir)
-      .getOrCreate()
+    val spark = graft.util.Sessions.local(cpus.toInt, "graft-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     graft.SparkEntry.queries.foreach { case (name, fn) =>

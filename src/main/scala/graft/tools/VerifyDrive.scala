@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.graph.LinkGraph
 import graft.algo.{ConnectedComponents, PageRank}
@@ -10,10 +9,7 @@ import graft.engine.PageRankEngine
 /** Sample user program: drive the library end-to-end over real testdata. */
 object VerifyDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.local.dir", graft.util.FastLocalDir.sparkLocalDir)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.Sessions.local(8, "graft-verify-drive")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"

@@ -177,6 +177,38 @@ class GraphAlgoSpec extends GraftSuite {
     g.unpersistAll()
   }
 
+  test("LPA takes its label broadcast from the policy: none under distributedOnly") {
+    // a session of its own with the planner's size-based broadcasts off, so
+    // the only broadcast left is LPA's own hint; the shared session is untouched
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    val edges = DenseReference.randomEdges(40, 0.1, seed = 11).map(e => (e._1.toLong, e._2.toLong))
+    val g = LinkGraph.fromEdgeList(s, s.createDataFrame(edges).toDF("src", "dst"), numBlocks = 3)
+    def broadcastJobs(policy: ExecutionPolicy): Int = {
+      val sc = spark.sparkContext
+      val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val flushed = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties.getProperty("graft.test.marker") != null) flushed.countDown()
+          else tags.add(String.valueOf(e.properties.getProperty("spark.job.tags")))
+      }
+      sc.addSparkListener(listener)
+      try {
+        LabelPropagation.run(under(g, policy), 3).collect()
+        sc.setLocalProperty("graft.test.marker", "1")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally sc.removeSparkListener(listener)
+      tags.toArray.count(_.toString.contains("broadcast exchange")) // the tag Spark gives that job
+    }
+    // distributed supersteps with the n-row label frame under the budget: hinted
+    assert(broadcastJobs(ExecutionPolicy(driverBytes = g.numEdges * 48)) > 0)
+    assert(broadcastJobs(distributedOnly) == 0)
+    g.unpersistAll()
+  }
+
   test("CC driver-resident regime matches the star-contraction labels exactly") {
     val edges = DenseReference.randomEdges(120, 0.02, seed = 23).map(e => (e._1.toLong, e._2.toLong))
     val g = graphOf(edges)

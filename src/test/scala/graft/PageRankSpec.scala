@@ -97,6 +97,27 @@ class PageRankSpec extends GraftSuite {
     assert(k1.toSeq == k2.toSeq)
   }
 
+  test("distributed regime repeats itself exactly: same ranks and residuals on every run, in every mode") {
+    // 8 blocks: the per-block residual and normalizer partials come back in
+    // task-completion order, and must still add up in block order
+    val n = 200
+    val g = under(graphOf(DenseReference.randomEdges(n, 0.05, seed = 11), numBlocks = 8), distributedOnly)
+    val priorDf = (0 until n).map(i => (i.toLong, 0.001 + (i % 7) * 0.01)).toDF("vid", "value")
+    for (mode <- Seq(PageRankMode.ReferenceRenorm, PageRankMode.MolerDangling, PageRankMode.RiskPropagation)) {
+      val cfg = PageRankConfig(tolerance = 0.0, maxIterations = 12, mode = mode,
+        prior = if (mode == PageRankMode.RiskPropagation) Some(priorDf) else None)
+      val runs = Seq.fill(4) {
+        val o = new PageRankEngine(g, cfg).run()
+        val r = (ranksArray(g, o).toSeq, o.metrics.map(_.residual))
+        o.free()
+        r
+      }
+      val distinct = runs.distinct.size
+      assert(distinct == 1, s"$mode: distinct (ranks, residuals) in 4 runs")
+    }
+    g.unpersistAll()
+  }
+
   test("distributed superstep never moves the adjacency: shuffle volume is rank-sized") {
     // Dense-ish graph: avg degree 50, so edge volume >> vertex volume. If a
     // superstep re-shuffled (or sort-merge-joined) the adjacency, per-superstep

@@ -40,6 +40,44 @@ class ResumeAndSourcesSpec extends GraftSuite {
     g.unpersistAll()
   }
 
+  test("resume parity: every mode and regime resumes mid-run or converged to the uninterrupted ranks exactly") {
+    for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+      val g = LinkGraph.fromEdgeList(spark, rand.toDF("src", "dst"), numBlocks = 3, policy = policy)
+      val priorDf = (0 until g.numVertices.toInt).map(i => (i.toLong, 0.001 + (i % 7) * 0.01)).toDF("vid", "value")
+      def ranks(o: graft.engine.PageRankOutcome): Seq[Double] = {
+        val r = o.toVertexDf(g).orderBy("vid").collect().map(_.getDouble(1)).toSeq
+        o.free()
+        r
+      }
+      for (mode <- Seq(PageRankMode.ReferenceRenorm, PageRankMode.MolerDangling, PageRankMode.RiskPropagation)) {
+        val tag = s"$mode, driverBytes=${policy.driverBytes}"
+        val cfg = PageRankConfig(tolerance = 1e-7, maxIterations = 200, mode = mode,
+          prior = if (mode == PageRankMode.RiskPropagation) Some(priorDf) else None)
+        val full = new PageRankEngine(g, cfg).run()
+        val (fullRun, fullResiduals) = (full.run, full.metrics.map(_.residual))
+        val want = ranks(full)
+        assert(fullRun.converged && fullRun.iterations > 6, tag)
+
+        // stopped after 6 supersteps (commits at 3 and 6), resumed to convergence
+        val ck = cfg.copy(checkpointDir = Some(Files.createTempDirectory("graft-parity").toString), checkpointEvery = 3)
+        new PageRankEngine(g, ck.copy(maxIterations = 6)).run().free()
+        val mid = PageRank.resume(g, ck)
+        assert(mid.run.converged && mid.run.iterations == fullRun.iterations, tag)
+        assert(mid.metrics.map(_.residual) == fullResiduals.drop(6), s"$tag: residuals after the mid-run resume")
+        val midSame = ranks(mid) == want
+        assert(midSame, s"$tag: ranks after the mid-run resume")
+
+        // the resumed run committed its converged superstep: zero supersteps more
+        val done = PageRank.resume(g, ck)
+        assert(done.metrics.isEmpty && done.run.converged && done.run.iterations == fullRun.iterations, tag)
+        assert(done.run.finalError == fullRun.finalError, tag)
+        val doneSame = ranks(done) == want
+        assert(doneSame, s"$tag: ranks after resuming the converged checkpoint")
+      }
+      g.unpersistAll()
+    }
+  }
+
   test("checkpoint manifest records per-superstep metrics (rows/bytes/residual)") {
     val dir = Files.createTempDirectory("graft-metrics").toString
     val g = LinkGraph.fromEdgeList(spark, rand.toDF("src", "dst"), numBlocks = 3)
@@ -132,12 +170,8 @@ class ResumeAndSourcesSpec extends GraftSuite {
   test("laid-out binary part files reproduce the directly-built ranks") {
     // the zero-shuffle restore (PartIO block files as the graph's restored
     // adjacency source): partition layout and in-partition order are the
-    // build's own, so the resident regime must be BIT-identical. Distributed
-    // regime: the per-superstep renorm scalar is a Spark DoubleAccumulator
-    // whose merge order follows task COMPLETION order, so even two runs on the
-    // SAME graph differ in the last ulp (measured maxRel ≈ 5e-16 over 8
-    // supersteps); the restore is held to 1e-12, four orders tighter than any
-    // consumer and far tighter than a layout bug would produce.
+    // build's own, and both regimes add their partial sums in a fixed order,
+    // so either regime must be BIT-identical to the directly-built graph.
     import graft.graph.LinkGraph
     val dir = Files.createTempDirectory("graft-prebuilt-bin").toString
     val edges = rand.toDF("src", "dst")
@@ -161,13 +195,7 @@ class ResumeAndSourcesSpec extends GraftSuite {
       val got = PageRank.run(p, tolerance = 0.0, maxIterations = 8)
         .toVertexDf(p).orderBy("vid").collect().map(_.getDouble(1))
       p.unpersistAll()
-      if (distributed) {
-        val maxRel = got.zip(want)
-          .map { case (x, y) => math.abs(x - y) / math.max(math.abs(y), 1e-300) }.max
-        assert(maxRel < 1e-12, s"bin distributed diverged: maxRel=$maxRel")
-      } else {
-        assert(got.sameElements(want), "bin resident diverged bitwise")
-      }
+      assert(got.sameElements(want), s"bin ${if (distributed) "distributed" else "resident"} diverged bitwise")
     }
     g.unpersistAll()
   }

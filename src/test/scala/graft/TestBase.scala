@@ -8,19 +8,7 @@ import graft.model.ExecutionPolicy
 
 /** Shared local session for all suites. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", graft.util.FastLocalDir.sparkLocalDir)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.util.Sessions.local(4, "graft-test")
 }
 
 abstract class GraftSuite extends AnyFunSuite {
