@@ -136,15 +136,6 @@ object ValueDist {
     */
   val MaxLocalDistinct: Long = 1L * 1024 * 1024
 
-  /** Build the distribution of `valueCol` (cast to double). Nulls are dropped
-    * (probes describe the non-null values, NumPy-dropna-style).
-    *
-    * @param knownN  NON-NULL row count if the caller already knows it (e.g. a
-    *                zero-filled per-vertex table has exactly numVertices
-    *                non-null rows) — skips the count job; the local regime's
-    *                `require(acc == n)` trips loudly on a wrong value.
-    * @param forceDistributed  test hook: exercise the distributed regime at any n.
-    */
   /** Build the distributions of SEVERAL columns of one frame in a single job.
     *
     * The driver-local regime's per-column build is one `groupBy(col).count`
@@ -203,6 +194,15 @@ object ValueDist {
     }
   }
 
+  /** Build the distribution of `valueCol` (cast to double). Nulls are dropped
+    * (probes describe the non-null values, NumPy-dropna-style).
+    *
+    * @param knownN  NON-NULL row count if the caller already knows it (e.g. a
+    *                zero-filled per-vertex table has exactly numVertices
+    *                non-null rows) — skips the count job; the local regime's
+    *                `require(acc == n)` trips loudly on a wrong value.
+    * @param forceDistributed  test hook: exercise the distributed regime at any n.
+    */
   def of(
       df: DataFrame,
       valueCol: String,

@@ -211,7 +211,7 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     */
   private def zBase: Double = 1.0 / n
   private def zLinkedRows: DataFrame =
-    graph.inDegrees.where($"deg" =!= 0.0).select($"vid", lit(zBase - d / n).as("value"))
+    graph.degreeTable.where($"inDeg" =!= 0.0).select($"vid", lit(zBase - d / n).as("value"))
 
   /** Vector-resident regime: x is a driver array, the whole vector one chunk. */
   private final class OnDriver(start: Option[DataFrame]) extends RankVector {

@@ -52,12 +52,16 @@ import graft.model._
   * pairs and the counting sort by `src`.
   * Packing needs vids below 2³² and blocks below 2³¹ slots (required).
   *
+  * The [[degreeTable]] is one scan of the edge frame, whatever its layout, and
+  * one exchange keyed by dictionary partition ([[LinkGraph.degreesOf]]).
+  *
   * @param vertexDict  (extId, vid) dictionary; vid dense 0..n-1 ascending by extId
-  *                    (reference: `enumerate(np.unique(edges))`, pagerank.py:622-627)
+  *                    (reference: `enumerate(np.unique(edges))`, pagerank.py:622-627),
+  *                    laid out in contiguous ascending vid runs: partition k
+  *                    holds the next vids after partition k−1's, in order (every
+  *                    builder lays it out so; the degree table rejects any other)
   * @param edges       folded edges in vid space; weight = duplicate multiplicity
   *                    (csc_matrix duplicate-summing, pagerank.py:638-640)
-  * @param inDegrees   (vid, cIn)  weighted in-degree  = column sums, pagerank.py:170
-  * @param outDegrees  (vid, cOut) weighted out-degree = row sums,    pagerank.py:445
   * @param source      where the blocked adjacency comes from
   * @param policy      the byte budgets that pick the regime of this graph's
   *                    lazy layouts and of every operator run on it
@@ -74,12 +78,6 @@ final class LinkGraph(
     val policy: ExecutionPolicy = ExecutionPolicy()
 ) extends Serializable {
   import spark.implicits._
-
-  /** The dictionary's own slice count, fixed when the dictionary was built
-    * (every builder sets it explicitly), not the session's parallelism now:
-    * the resident degree table lays its rows out in the same slices.
-    */
-  private lazy val dictSlices: Int = vertexDict.rdd.getNumPartitions
 
   // the kernel packs (slot, vid) into one long; refuse rather than mis-sort
   require(numVertices <= (1L << 32) && blockSize <= Int.MaxValue.toLong,
@@ -152,77 +150,17 @@ final class LinkGraph(
         preservesPartitioning = true)
   }
 
-  /** Weighted in-degree c[j] (the kernel's normalizer). Vertices absent here have
-    * c = 0 and contribute nothing — the reference's zero-guard `where(c!=0,c,1)`
-    * (pagerank.py:173-174) exists only to avoid a 0-division on all-zero columns.
-    */
-  @volatile private var inDegreesBuilt = false
-  lazy val inDegrees: DataFrame = {
-    val d = edges.groupBy($"dst".as("vid")).agg(sum($"weight").as("deg"))
-    d.persist(StorageLevel.MEMORY_AND_DISK); d.count(); inDegreesBuilt = true; d
-  }
-
-  lazy val outDegrees: DataFrame =
-    edges.groupBy($"src".as("vid")).agg(sum($"weight").as("deg"))
-
-  /** Full per-vertex degree table (zero-filled). Columns: vid, inDeg, outDeg.
-    *
-    * Driver-resident regime: when the edge set fits the assemble gate AND
-    * every weight is a (magnitude-bounded) integer, the degree sums are exact
-    * in any order, so one driver pass over [[edgesLocal]] replaces the
-    * two-broadcast-join build. Rows are emitted vid-ascending in the SAME
-    * even slices the dictionary was built with (captured on the graph) — the
-    * identical partition layout the join build produced (broadcast joins
-    * preserve the streamed dict's rows) — so even downstream DOUBLE
-    * aggregations (e.g. the imbalance-ratio mean) see the identical
-    * per-partition sequences. Fractional weights take the join path: their
-    * sums are order-sensitive.
+  /** Full per-vertex degree table, zero-filled: (vid, extId, inDeg, outDeg),
+    * the weighted column sums (pagerank.py:170) and row sums (pagerank.py:445)
+    * from [[LinkGraph.degreesOf]]'s one edge scan and one exchange, in the
+    * dictionary's own partitions. Persisted; built on first use.
     */
   @volatile private var degreeTableBuilt = false
   lazy val degreeTable: DataFrame = {
-    val t =
-      if (residentDegreesOk) residentDegreeTable()
-      else
-        vertexDict
-          .join(inDegrees.withColumnRenamed("deg", "inDeg"), Seq("vid"), "left")
-          .join(
-            outDegrees.withColumnRenamed("deg", "outDeg").withColumnRenamed("vid", "vid"),
-            Seq("vid"),
-            "left")
-          .select(
-            $"vid",
-            $"extId",
-            coalesce($"inDeg", lit(0.0)).as("inDeg"),
-            coalesce($"outDeg", lit(0.0)).as("outDeg"))
+    val t = LinkGraph.degreesOf(spark, vertexDict, edges, numVertices, policy.taskBytes)
     t.persist(StorageLevel.MEMORY_AND_DISK)
     degreeTableBuilt = true
     t
-  }
-
-  private def residentDegreesOk: Boolean =
-    numVertices <= Int.MaxValue.toLong &&
-      numEdges * 16 < policy.driverBytes &&
-      numEdges <= (1L << 21) && // with |w| ≤ 2³¹: Σ|w| ≤ 2⁵² — exact in double
-      edgesLocal.forall(e =>
-        e.weight == math.rint(e.weight) && math.abs(e.weight) <= (1L << 31).toDouble)
-
-  private def residentDegreeTable(): DataFrame = {
-    val n = numVertices.toInt
-    val inD = new Array[Double](n)
-    val outD = new Array[Double](n)
-    edgesLocal.foreach { e =>
-      inD(e.dst.toInt) += e.weight
-      outD(e.src.toInt) += e.weight
-    }
-    val ext = new Array[Long](n)
-    vertexDict.collect().foreach(m => ext(m.vid.toInt) = m.extId)
-    val rows = new Array[(Long, Long, Double, Double)](n)
-    var i = 0
-    while (i < n) { rows(i) = (i.toLong, ext(i), inD(i), outD(i)); i += 1 }
-    spark
-      .createDataset(spark.sparkContext.parallelize(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(rows), dictSlices))
-      .toDF("vid", "extId", "inDeg", "outDeg")
   }
 
   /** The cluster build of the dst-major parts: block-laid edges go straight
@@ -425,7 +363,6 @@ final class LinkGraph(
   def unpersistAll(): Unit = {
     if (dstLayoutBuilt) dstLayout.unpersist(false)
     if (gatherPartsBuilt) gatherPartsRdd.unpersist(false)
-    if (inDegreesBuilt) inDegrees.unpersist()
     if (degreeTableBuilt) degreeTable.unpersist()
     edges.unpersist()
     vertexDict.unpersist()
@@ -596,6 +533,140 @@ object LinkGraph {
       s = e
     }
     parts.toArray
+  }
+
+  /** One map task's degree sums for one dictionary partition, in one
+    * direction, at partition-local positions: dense over the touched window
+    * `[lo, lo + dense.length)` when at least half of it is touched, sparse
+    * (`idx`, `vals`) otherwise. The reduce side adds them in (task, seq) order.
+    */
+  private final case class DegreeSlab(
+      task: Int, seq: Int, out: Boolean, lo: Int, dense: Array[Double], idx: Array[Int], vals: Array[Double])
+
+  /** The degree table's kernel, for every graph size: one scan of `edges` and
+    * one exchange keyed by dictionary partition, no joins.
+    *  1. One small job reads each dictionary partition's first vid and count;
+    *     the partitions must be contiguous ascending vid runs tiling 0..n−1
+    *     (required: any other layout is rejected, never mis-summed).
+    *  1. Each map task sums its edges' weights into in- and out-degree slabs
+    *     per dictionary partition (allocated at the partition's length when
+    *     first touched, flushed when they pass `taskBytes`) and ships each as a
+    *     [[DegreeSlab]].
+    *  1. Partition k adds its slabs in (map task, flush) order, so every run
+    *     adds the same values in the same order whatever the weights, and zips
+    *     with dictionary partition k for the external ids: rows (vid, extId,
+    *     inDeg, outDeg), vid-ascending, in the dictionary's partitions.
+    */
+  private def degreesOf(
+      spark: SparkSession, dict: Dataset[VertexMapping], edges: Dataset[Edge], n: Long, taskBytes: Long): DataFrame = {
+    import spark.implicits._
+    val dictRows = dict.select($"extId", $"vid").queryExecution.toRdd
+    val p = dictRows.getNumPartitions
+    // (first vid, count, vids contiguous) per dictionary partition
+    val runs = dictRows.mapPartitions { it =>
+      var first = -1L
+      var count = 0L
+      var contiguous = true
+      it.foreach { r =>
+        val v = r.getLong(1)
+        if (count == 0) first = v else contiguous &&= v == first + count
+        count += 1
+      }
+      Iterator.single((first, count, contiguous))
+    }.collect()
+    val starts = runs.map(_._2).scanLeft(0L)(_ + _)
+    require(starts.last == n && runs.indices.forall(k => runs(k)._2 == 0 || (runs(k)._1 == starts(k) && runs(k)._3)) &&
+      runs.forall(_._2 <= Int.MaxValue),
+      s"the degree table needs the dictionary in contiguous ascending vid runs tiling 0..${n - 1}; " +
+        s"found (first vid, count, contiguous) per partition: ${runs.mkString(", ")}")
+    val slabs = edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd
+      .mapPartitionsWithIndex { (task, it) =>
+        val acc = Array.ofDim[Array[Double]](2, p) // in, out × dictionary partition
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, DegreeSlab)]
+        var held = 0L
+        var seq = 0
+        def flush(): Unit = {
+          for (d <- 0 to 1; k <- 0 until p if acc(d)(k) != null) {
+            slabOf(task, seq, d == 1, acc(d)(k)).foreach(s => out += ((k, s)))
+            acc(d)(k) = null
+          }
+          held = 0L
+          seq += 1
+        }
+        def add(d: Int, v: Long, w: Double): Unit = {
+          val k = partOf(starts, v, n)
+          if (acc(d)(k) == null) {
+            val len = starts(k + 1) - starts(k)
+            if (held > 0 && held + len * 8 > taskBytes) flush()
+            acc(d)(k) = new Array[Double](len.toInt)
+            held += len * 8
+          }
+          acc(d)(k)((v - starts(k)).toInt) += w
+        }
+        it.foreach { r =>
+          val w = r.getDouble(2)
+          add(0, r.getLong(1), w)
+          add(1, r.getLong(0), w)
+        }
+        flush()
+        out.iterator
+      }
+    val table = slabs
+      .partitionBy(new org.apache.spark.HashPartitioner(p)) // identity on partition indices
+      .zipPartitions(dictRows) { (in, dictIt) =>
+        val k = TaskContext.getPartitionId()
+        val lo = starts(k)
+        val len = (starts(k + 1) - lo).toInt
+        val deg = Array.fill(2)(new Array[Double](len))
+        in.map(_._2).toArray.sortBy(s => (s.task, s.seq)).foreach { s =>
+          val d = deg(if (s.out) 1 else 0)
+          var i = 0
+          if (s.dense != null) while (i < s.dense.length) { d(s.lo + i) += s.dense(i); i += 1 }
+          else while (i < s.idx.length) { d(s.idx(i)) += s.vals(i); i += 1 }
+        }
+        var i = -1
+        dictIt.map { r =>
+          i += 1
+          (lo + i, r.getLong(0), deg(0)(i), deg(1)(i))
+        }
+      }
+    spark.createDataset(table).toDF("vid", "extId", "inDeg", "outDeg")
+  }
+
+  /** The dictionary partition that holds vid `v`: the last whose first vid is ≤ `v`. */
+  private def partOf(starts: Array[Long], v: Long, n: Long): Int = {
+    if (v < 0 || v >= n) throw new IllegalStateException(s"edge endpoint vid $v is outside 0..${n - 1}")
+    var lo = 0
+    var hi = starts.length - 2
+    while (lo < hi) {
+      val mid = (lo + hi + 1) >>> 1
+      if (starts(mid) <= v) lo = mid else hi = mid - 1
+    }
+    lo
+  }
+
+  /** A map task's slab for one partition and direction, encoded; None when untouched. */
+  private def slabOf(task: Int, seq: Int, out: Boolean, s: Array[Double]): Option[DegreeSlab] = {
+    var lo = 0
+    while (lo < s.length && s(lo) == 0.0) lo += 1
+    if (lo == s.length) return None
+    var hi = s.length
+    while (s(hi - 1) == 0.0) hi -= 1
+    var touched = 0
+    var i = lo
+    while (i < hi) { if (s(i) != 0.0) touched += 1; i += 1 }
+    if (touched * 2L >= hi - lo) Some(DegreeSlab(task, seq, out, lo, java.util.Arrays.copyOfRange(s, lo, hi), null, null))
+    else {
+      val idx = new Array[Int](touched)
+      val vals = new Array[Double](touched)
+      var c = 0
+      i = lo
+      while (i < hi) {
+        if (s(i) != 0.0) { idx(c) = i; vals(c) = s(i); c += 1 }
+        i += 1
+      }
+      Some(DegreeSlab(task, seq, out, 0, null, idx, vals))
+    }
   }
 
   /** Quicksort `keys` ascending, permuting `vals` alongside (median-of-three

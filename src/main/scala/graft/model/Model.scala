@@ -104,8 +104,8 @@ object PageRankMode {
   *    raw pair (the collected pairs and their packed, sorted remap)
   *  - the resident dictionary of `fromFoldedEdgeList`: 16 B per folded row
   *    (its at most two distinct ids)
-  *  - the driver-assembled adjacency and the degree table: 16 B per edge
-  *    (a packed key and a weight)
+  *  - the driver-assembled adjacency: 16 B per edge (a packed key and a
+  *    weight)
   *  - the driver-local PageRank gather: 16 B per edge (the collected
   *    src-major parts)
   *  - connected components and triangles: 16 B per edge (one collect of the
@@ -118,7 +118,8 @@ object PageRankMode {
   * `driverBytes = 0` sends every operator down its distributed path.
   *
   * `taskBytes` bounds one task's contribution slabs in the distributed
-  * superstep; past it the task flushes its partial slabs to the shuffle.
+  * superstep and its degree slabs in the degree table; past it the task
+  * flushes its partial slabs to the shuffle.
   */
 final case class ExecutionPolicy(
     driverBytes: Long = 64L * 1024 * 1024,

@@ -4,6 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal Iceberg-style table emulation (no Iceberg jars ship in this
@@ -65,8 +68,15 @@ object IcebergLite {
     val props = properties.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
       .mkString("{", ",", "}")
+    // the row count comes from the written files' footers: counting `df`
+    // would evaluate its whole plan a second time
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val rowCount = files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
     val json =
-      s"""{"snapshot":$snapshot,"rowCount":${df.count()},"properties":$props,"files":[""" +
+      s"""{"snapshot":$snapshot,"rowCount":$rowCount,"properties":$props,"files":[""" +
         files.map(f => "\"" + esc(f) + "\"").mkString(",") +
         "]}"
     val tmp = md.resolve(s".$snapshot.json.tmp")

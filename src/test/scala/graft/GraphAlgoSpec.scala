@@ -478,7 +478,7 @@ class GraphAlgoSpec extends GraftSuite {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val g = graphOf(edges, policy = policy)
       g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
-      g.degreeTable.count(); g.inDegrees.count()
+      g.degreeTable.count()
       PageRank.run(g, tolerance = 0.0, maxIterations = 2).free()
       g.unpersistAll()
       val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
@@ -486,27 +486,42 @@ class GraphAlgoSpec extends GraftSuite {
     }
   }
 
-  test("driver-resident degree table matches the join build exactly") {
-    val edges = DenseReference.randomEdges(140, 0.05, seed = 61).map(e => (e._1.toLong, e._2.toLong))
-    def rowsAndAgg(g: LinkGraph) = {
-      val t = g.degreeTable
-      val rows = t.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-        .sortBy(_._1).toSeq
-      // a DOUBLE aggregation (order-sensitive): identical partition layout ⇒
-      // identical partial sums ⇒ exact equality, not just closeness
-      val agg = t.agg(
-        org.apache.spark.sql.functions.avg(
-          t("outDeg") / (t("inDeg") + org.apache.spark.sql.functions.lit(1e-10))))
-        .first().getDouble(0)
-      (rows, agg)
+  test("degree table equals driver sums of the edges exactly, fractional weights too") {
+    val ints = graphOf(DenseReference.randomEdges(140, 0.05, seed = 61).map(e => (e._1.toLong, e._2.toLong)))
+    val rng = new scala.util.Random(62)
+    val n = 90L
+    // fractional weights over 5 input slices: many vertices get partial sums
+    // from several map tasks, so the order of the additions shows in the bits
+    val weighted = spark.createDataset(spark.sparkContext.parallelize(
+      Seq.fill(700)(graft.model.Edge(rng.nextInt(90).toLong, rng.nextInt(90).toLong, rng.nextDouble() * 3)), 5))
+    val fractional = LinkGraph.fromDenseWeighted(spark, weighted, n, numBlocks = 4)
+    for (g <- Seq(ints, fractional)) {
+      val want = degreeReference(g)
+      for (view <- Seq(g, under(g, distributedOnly))) {
+        // rows come out vid-ascending in the dictionary's own partitions
+        assert(degreeRows(view) == want)
+        assert(view.degreeTable.rdd.getNumPartitions == g.vertexDict.rdd.getNumPartitions)
+        view.degreeTable.unpersist()
+      }
     }
-    val a = graphOf(edges)
-    val (ra, aa) = rowsAndAgg(a) // default policy: resident
-    val b = under(a, distributedOnly) // the join build over the same dictionary
-    val (rb, ab) = rowsAndAgg(b)
-    b.unpersistAll(); a.unpersistAll()
-    assert(ra == rb)
-    assert(aa == ab)
+    assert(degreeReference(fractional).exists(r => r._3 != math.rint(r._3)), "the weights must be fractional")
+    // a 1-byte task budget flushes a task's slabs at every slab it starts:
+    // integer sums stay exact in any grouping
+    val flushing = under(ints, ExecutionPolicy(taskBytes = 1L))
+    assert(degreeRows(flushing) == degreeReference(ints))
+    flushing.degreeTable.unpersist()
+    ints.unpersistAll(); fractional.unpersistAll()
+  }
+
+  test("degree table rejects a dictionary that is not laid out in contiguous vid runs") {
+    val g = graphOf(DenseReference.randomEdges(60, 0.08, seed = 63).map(e => (e._1.toLong, e._2.toLong)))
+    import org.apache.spark.sql.functions.desc
+    for (dict <- Seq(g.vertexDict.repartition(3), g.vertexDict.orderBy(desc("vid")), g.vertexDict.filter($"vid" =!= 7L))) {
+      val view = new LinkGraph(spark, dict, g.edges, g.numVertices, g.numBlocks, g.blockSize)
+      val e = intercept[IllegalArgumentException](view.degreeTable)
+      assert(e.getMessage.contains("contiguous ascending vid runs"), e.getMessage)
+    }
+    g.unpersistAll()
   }
 
   test("LPA driver-resident regime matches the distributed supersteps exactly") {

@@ -110,6 +110,18 @@ class PropertyAndPlanSpec extends GraftSuite {
       val (got, gotRanks) = outputs(build(distributedOnly))
       want.zip(got).zipWithIndex.foreach { case ((w, g), i) => assert(g == w, s"output $i of $pairs") }
       assertAllClose(gotRanks, wantRanks, 1e-12)
+      // the degree-table row with fractional weights: the same pairs in dense
+      // ordinals over 3 slices, each pair weighted 0.1 + i/7
+      val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+      val ordinal = ids.zipWithIndex.map { case (id, v) => id -> v.toLong }.toMap
+      val weighted = spark.createDataset(spark.sparkContext.parallelize(pairs.zipWithIndex.map { case ((s, d), i) =>
+        graft.model.Edge(ordinal(s), ordinal(d), 0.1 + i / 7.0) }, 3))
+      val frac = LinkGraph.fromDenseWeighted(spark, weighted, ids.length.toLong, numBlocks = blocks)
+      val fracWant = degreeReference(frac)
+      assert(degreeRows(frac) == fracWant, s"fractional degree table of $pairs")
+      val fracView = under(frac, distributedOnly)
+      assert(degreeRows(fracView) == fracWant, s"fractional degree table of $pairs")
+      fracView.unpersistAll(); frac.unpersistAll()
     }
   }
 
@@ -163,6 +175,63 @@ class PropertyAndPlanSpec extends GraftSuite {
     // sha256 per-row invariant column exists and is stable (input_hint check)
     val h = RepoFiles.withContentHash(IcebergLite.read(spark, dir, Some(0L)))
     assert(h.select("content_sha256").distinct().count() == t0.count())
+  }
+
+  test("IcebergLite: a commit evaluates its frame once and records the written row count") {
+    val dir = Files.createTempDirectory("graft-ice-once").toString
+    val evaluated = spark.sparkContext.longAccumulator("evaluated rows")
+    val df = spark.range(1000).map { i => evaluated.add(1); i.longValue }.toDF("id")
+    val snap = IcebergLite.commit(df, dir)
+    assert(evaluated.value == 1000L)
+    assert(Files.readString(java.nio.file.Paths.get(dir, "_manifests", s"$snap.json")).contains("\"rowCount\":1000,"))
+    assert(IcebergLite.read(spark, dir).count() == 1000L)
+  }
+
+  test("plans: the degree table is one edge scan and one exchange, with no join") {
+    val rng = new scala.util.Random(43)
+    val pairs = Seq.fill(400)((rng.nextInt(120).toLong * 5, rng.nextInt(120).toLong * 5))
+    val g = LinkGraph.fromEdgeList(spark, pairs.toDF("src", "dst"), numBlocks = 3, policy = distributedOnly)
+    val sc = spark.sparkContext
+    val group = "graft.test.degreeTable"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val shuffles = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => jobs.incrementAndGet()
+          case "graft.test.marker" => flushed.countDown()
+          case _ =>
+        }
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) stages.add(e.stageInfo.stageId)
+      // a stage that ran and wrote shuffle output (the graph's cached layouts
+      // skip the stages behind them; adaptive execution runs each of its
+      // exchanges as a job of its own)
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId) && e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffles.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one degree table build")
+      try g.degreeTable.collect() finally sc.clearJobGroup()
+      sc.setJobGroup("graft.test.marker", "flush the listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(shuffles.get == 1, s"${shuffles.get} shuffle dependencies in ${jobs.get} jobs")
+    assert(jobs.get <= 3, s"${jobs.get} jobs")
+    assert(plans.asScala.nonEmpty && plans.asScala.forall(!_.contains("Join")), plans.asScala.mkString("\n"))
+    g.unpersistAll()
   }
 
   test("plans: filters and projections push down to the parquet scan") {

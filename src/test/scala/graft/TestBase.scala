@@ -34,6 +34,25 @@ abstract class GraftSuite extends AnyFunSuite {
     v
   }
 
+  /** The degree table summed on the driver from the collected edges, one edge
+    * partition at a time and the partitions' sums added in partition order:
+    * the order the kernel adds in, so fractional weights compare exactly too.
+    */
+  def degreeReference(g: LinkGraph): Seq[(Long, Long, Double, Double)] = {
+    val n = g.numVertices.toInt
+    val (in, out) = (new Array[Double](n), new Array[Double](n))
+    g.edges.rdd.glom().collect().foreach { part =>
+      val (pIn, pOut) = (new Array[Double](n), new Array[Double](n))
+      part.foreach { e => pIn(e.dst.toInt) += e.weight; pOut(e.src.toInt) += e.weight }
+      (0 until n).foreach { v => in(v) += pIn(v); out(v) += pOut(v) }
+    }
+    g.vertexDict.collect().sortBy(_.vid).map(m => (m.vid, m.extId, in(m.vid.toInt), out(m.vid.toInt))).toSeq
+  }
+
+  /** The degree table's rows in the order it emits them. */
+  def degreeRows(g: LinkGraph): Seq[(Long, Long, Double, Double)] =
+    g.degreeTable.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+
   def assertAllClose(got: Array[Double], want: Array[Double], tol: Double = 1e-9): Unit = {
     assert(got.length == want.length, s"length ${got.length} != ${want.length}")
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
