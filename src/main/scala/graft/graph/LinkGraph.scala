@@ -18,7 +18,10 @@ import graft.model._
   * vids `[b·blockSize, (b+1)·blockSize)`.
   *  1. One scan caches the input pairs as per-task primitive arrays; its count
   *     picks the regime (when the pairs fit the policy's driver budget they are
-  *     folded and remapped on the driver).
+  *     folded and remapped on the driver). Pre-folded rows
+  *     ([[LinkGraph.fromFoldedEdgeList]]) and the repo graph's half stream of
+  *     pairs a < b ([[graft.sources.RepoFiles.linkGraph]], mirrored by both
+  *     regimes) enter the same two builds.
   *  1. Each task sorts and deduplicates its own endpoint ids; splitters from a
   *     sample of those arrays cut them for one exchange, and each task merges
   *     what it receives into one ascending run of the dictionary.
@@ -28,9 +31,8 @@ import graft.model._
   *     geometry.
   *  1. The runs are cut into per-block slices of external ids (narrowly), and
   *     route 2 sends every folded edge by its `dst` id to its block's slice,
-  *     which remaps `dst` (a driver-resident dictionary is broadcast instead,
-  *     and both ends are remapped before the one `dst` route). Rows cross every
-  *     exchange as per-(map task, target) primitive batches.
+  *     which remaps `dst`. Rows cross every exchange as per-(map task, target)
+  *     primitive batches.
   *  1. After the `dst` route, partition b holds exactly block b's in-edges:
   *     that is the [[edges]] cache, sorted by (dst, src).
   *  1. The per-block kernel ([[LinkGraph.blockParts]]) turns partition b into
@@ -768,15 +770,8 @@ object LinkGraph {
         fromFoldedEdgeList(spark,
           pairs.groupBy($"src", $"dst").agg(count(lit(1)).cast("double").as("weight")), numBlocks, idMode, policy)
       case IdMode.Compacted =>
-        // the one pass over the input: every later step reads this cache, and
-        // its count picks the regime
-        val scan = scanOf(pairs.queryExecution.toRdd, weighted = false)
-        try {
-          val total = scan.map(_.n.toLong).fold(0L)(_ + _)
-          if (total * 32 < policy.driverBytes && total <= Int.MaxValue / 2 - 8)
-            residentFromPairs(spark, scan.collect(), numBlocks, policy)
-          else routedGraph(spark, scan, numBlocks, policy)
-        } finally scan.unpersist(false)
+        // the one pass over the input: every later step reads this cache
+        fromScan(spark, scanOf(pairs.queryExecution.toRdd, weighted = false), numBlocks, policy, mirror = false)
     }
   }
 
@@ -791,55 +786,87 @@ object LinkGraph {
       Iterator.single(r.trimmed)
     }.persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** Driver fold + dictionary + remap of the collected raw pairs —
+  /** The Compacted build over a cached `scan` of (src, dst[, w]) rows in
+    * external ids, which it releases. Its count picks the regime: below the
+    * driver budget at 32 B per row the collected rows are folded on the
+    * driver, otherwise the routed build runs. With `mirror` every row stands
+    * for both of its orientations (a symmetric pair stream given once per
+    * unordered pair, src ≠ dst): the resident fold mirrors each folded pair,
+    * and route 1 sends each row both ways.
+    */
+  private[graft] def fromScan(
+      spark: SparkSession, scan: RDD[Rows], numBlocks: Int, policy: ExecutionPolicy, mirror: Boolean): LinkGraph =
+    try {
+      val total = scan.map(_.n.toLong).fold(0L)(_ + _)
+      if (total * 32 < policy.driverBytes && total <= Int.MaxValue / 2 - 8)
+        residentFromPairs(spark, scan.collect(), numBlocks, policy, mirror)
+      else routedGraph(spark, scan, numBlocks, policy, mirror)
+    } finally scan.unpersist(false)
+
+  /** Driver fold + dictionary + remap of the collected rows —
     * value-identical to the distributed build: vids are the ascending sort
-    * rank of the distinct external ids, fold weights are duplicate counts
-    * (exact integers, order-insensitive), and the remapped edges are
-    * parallelized back in (src, dst) vid order.
+    * rank of the distinct external ids, and a pair's copies fold into the sum
+    * of their weights (their count when unweighted). The dictionary and the
+    * remapped edges, in (src, dst) vid order, go back as one primitive slice
+    * per task, cut where `parallelize` cuts.
     */
   private def residentFromPairs(
-      spark: SparkSession, chunks: Array[Rows], numBlocks: Int, policy: ExecutionPolicy): LinkGraph = {
+      spark: SparkSession, chunks: Array[Rows], numBlocks: Int, policy: ExecutionPolicy, mirror: Boolean): LinkGraph = {
     import spark.implicits._
     val total = chunks.map(_.n).sum
     val ids = sortedDistinct(Array.concat(chunks.flatMap(c => Seq(c.a, c.b)).toSeq: _*))
     val n = ids.length
     // remapped (src, dst) vid pairs packed into one long (vids dense < 2³¹):
-    // sorted, every copy of a pair is adjacent, and the run length is its weight
-    val packed = new Array[Long](total)
+    // sorted, every copy of a pair is adjacent
+    val keys = new Array[Long](total)
+    val w = if (chunks.exists(_.w != null)) new Array[Double](total) else null
     var k = 0
     chunks.foreach { c =>
       var i = 0
-      while (i < c.n) { packed(k) = (vidIn(ids, c.a(i), 0L) << 32) | vidIn(ids, c.b(i), 0L); k += 1; i += 1 }
+      while (i < c.n) {
+        keys(k) = (vidIn(ids, c.a(i), 0L) << 32) | vidIn(ids, c.b(i), 0L)
+        if (w != null) w(k) = c.w(i)
+        k += 1; i += 1
+      }
     }
-    java.util.Arrays.sort(packed)
-    val folded = scala.collection.mutable.ArrayBuffer.empty[Edge]
+    if (w == null) java.util.Arrays.sort(keys) else dualSort(keys, w, 0, total - 1)
+    // fold each run of copies; with `mirror` the swapped pair follows it
+    val folded = new Array[Long](if (mirror) 2 * total else total)
+    val weights = new Array[Double](folded.length)
+    var m = 0
     var i = 0
     while (i < total) {
-      var j = i + 1
-      while (j < total && packed(j) == packed(i)) j += 1
-      folded += Edge(packed(i) >>> 32, packed(i) & 0xffffffffL, (j - i).toDouble)
+      var j = i
+      var sum = 0.0
+      while (j < total && keys(j) == keys(i)) { sum += (if (w == null) 1.0 else w(j)); j += 1 }
+      folded(m) = keys(i); weights(m) = sum; m += 1
+      if (mirror) { folded(m) = (keys(i) << 32) | (keys(i) >>> 32); weights(m) = sum; m += 1 }
       i = j
     }
-    val remapped = folded.toArray
-    val m = remapped.length
-    val p = math.max(1, spark.sparkContext.defaultParallelism)
-    val dict = spark.createDataset(spark.sparkContext.parallelize(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(Array.tabulate(n)(v => VertexMapping(ids(v), v.toLong))), p))
+    if (mirror) dualSort(folded, weights, 0, m - 1)
+    val local = Array.tabulate(m)(e => Edge(folded(e) >>> 32, folded(e) & 0xffffffffL, weights(e)))
+    val sc = spark.sparkContext
+    val p = math.max(1, sc.defaultParallelism)
+    def slices[T](len: Int)(cut: (Int, Int) => T): Seq[T] =
+      (0 until p).map(s => cut((s.toLong * len / p).toInt, ((s + 1).toLong * len / p).toInt))
+    val dict = spark.createDataset(sc.parallelize(slices(n)((lo, hi) => (lo, java.util.Arrays.copyOfRange(ids, lo, hi))), p)
+      .flatMap { case (lo, s) => Iterator.range(0, s.length).map(v => VertexMapping(s(v), lo + v.toLong)) })
     dict.persist(StorageLevel.MEMORY_AND_DISK)
     dict.count()
-    val edges = spark.createDataset(spark.sparkContext.parallelize(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(remapped), p))
+    val edges = spark.createDataset(sc.parallelize(slices(m)((lo, hi) =>
+        (java.util.Arrays.copyOfRange(folded, lo, hi), java.util.Arrays.copyOfRange(weights, lo, hi))), p)
+      .flatMap { case (ks, ws) => Iterator.range(0, ks.length).map(e => Edge(ks(e) >>> 32, ks(e) & 0xffffffffL, ws(e))) })
       .persist(StorageLevel.MEMORY_AND_DISK)
     edges.count()
     val (blocks, bs) = geometry(spark, n, m, numBlocks)
-    new LinkGraph(spark, dict, edges, n, blocks, bs, m, AdjacencySource.Resident(remapped), policy)
+    new LinkGraph(spark, dict, edges, n, blocks, bs, m, AdjacencySource.Resident(local), policy)
   }
 
   /** [[fromEdgeList]] for a caller that already folded duplicates into
-    * (src, dst, weight) — e.g. a symmetric pair generator that folds each
-    * unordered pair once and mirrors it, halving the fold shuffle (see
-    * [[graft.sources.RepoFiles.linkGraph]]). The weight column must carry
-    * the duplicate multiplicities the internal fold would have produced.
+    * (src, dst, weight): the same scan and the same two builds, which sum the
+    * weights of a pair's rows instead of counting them. The weight column
+    * must carry the duplicate multiplicities the internal fold would have
+    * produced.
     */
   def fromFoldedEdgeList(
       spark: SparkSession,
@@ -849,70 +876,28 @@ object LinkGraph {
       policy: ExecutionPolicy = ExecutionPolicy()
   ): LinkGraph = {
     import spark.implicits._
-
-    // The folded frame is consumed several times during the build (the
-    // dictionary reads src and dst incidence; the remap reads it again) —
-    // without this scoped cache, every consumer re-executed the ENTIRE
-    // upstream plan (e.g. the orders⋈lineitem fold, or the repo-token
-    // self-join) 2-3×. Released in the finally once the graph's own edge
-    // cache is materialized.
-    val folded = foldedEdges
-      .select($"src".cast("long"), $"dst".cast("long"), $"weight".cast("double"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    try idMode match {
-      case IdMode.DenseByMax =>
-        val bounds = folded
-          .agg(max(greatest($"src", $"dst")).as("mx"), min(least($"src", $"dst")).as("mn"))
-          .first()
-        require(!bounds.isNullAt(0), "dense-by-max graph needs at least one edge")
-        require(bounds.getLong(1) >= 0L, "dense-by-max ids must be non-negative")
-        val n = bounds.getLong(0) + 1
-        val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, folded.count())
-        val g = fromDenseWeighted(spark, folded.as[Edge], n, blocks, policy)
-        g.numEdges // materialize the graph's edge cache through `folded`
-        g
-
+    val folded = foldedEdges.select($"src".cast("long"), $"dst".cast("long"), $"weight".cast("double"))
+    idMode match {
       case IdMode.Compacted =>
-        val foldedCount = folded.count() // materializes the scoped cache once
-        val sc = spark.sparkContext
-        // (src, dst, weight) rows of the cached frame, in the select's column order
-        val rows = folded.select($"src", $"dst", $"weight").queryExecution.toRdd
-        if (foldedCount * 16 < policy.driverBytes) {
-          // Driver-resident dictionary (guide §1.2 step 1: remove passes):
-          // one partial-aggregated distinct job collects the ≤ 2·|E| ids
-          // (the exchange carries only per-partition-distinct rows, never
-          // the 2|E| incidence frame), the sort rank is assigned on the
-          // driver, and the n-row dictionary is parallelized back. The sorted
-          // ids are broadcast, so both ends are remapped map-side and the dst
-          // route is the only exchange.
-          val ids = folded.select($"src").union(folded.select($"dst")).distinct().as[Long].collect()
-          java.util.Arrays.sort(ids)
-          val p = math.max(1, sc.defaultParallelism)
-          val dict = spark.createDataset(sc.parallelize(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(
-              Array.tabulate(ids.length)(i => VertexMapping(ids(i), i.toLong))), p))
-          val (blocks, bs) = geometry(spark, ids.length, foldedCount, numBlocks)
-          val bIds = sc.broadcast(ids)
-          val byDst = rows
-            .mapPartitions { it =>
-              val sorted = bIds.value
-              val out = new Array[Rows](blocks)
-              it.foreach { r =>
-                addByDst(out, bs, vidIn(sorted, r.getLong(0), 0L), vidIn(sorted, r.getLong(1), 0L), r.getDouble(2))
-              }
-              batches(out)
-            }
-            .partitionBy(new org.apache.spark.HashPartitioner(blocks))
-            .mapPartitions(it => Iterator.single(merged(it)))
-          blockLaidGraph(spark, dict, ids.length, foldedCount, blocks, bs, byDst, Some(bIds), policy)
-        } else {
-          // the distributed build over a primitive scan of the cached frame
-          // (pre-folded rows: route 1's fold finds no copies to sum)
-          val scan = scanOf(rows, weighted = true)
-          try routedGraph(spark, scan, numBlocks, policy) finally scan.unpersist(false)
-        }
-    } finally folded.unpersist(false)
+        fromScan(spark, scanOf(folded.queryExecution.toRdd, weighted = true), numBlocks, policy, mirror = false)
+
+      case IdMode.DenseByMax =>
+        // the bounds, the count and the graph's edge cache all read the
+        // folded frame: cached so the upstream plan runs once
+        folded.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val bounds = folded
+            .agg(max(greatest($"src", $"dst")).as("mx"), min(least($"src", $"dst")).as("mn"))
+            .first()
+          require(!bounds.isNullAt(0), "dense-by-max graph needs at least one edge")
+          require(bounds.getLong(1) >= 0L, "dense-by-max ids must be non-negative")
+          val n = bounds.getLong(0) + 1
+          val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, folded.count())
+          val g = fromDenseWeighted(spark, folded.as[Edge], n, blocks, policy)
+          g.numEdges // materialize the graph's edge cache through `folded`
+          g
+        } finally folded.unpersist(false)
+    }
   }
 
   /** Samples per map task for the dictionary's splitters, per run. */
@@ -921,10 +906,12 @@ object LinkGraph {
   /** The distributed Compacted build over a cached `scan` of (src, dst[, w])
     * rows in external ids: the dictionary's sorted runs from one exchange of
     * per-task distinct ids, route 1 (remap `src`, fold) to the runs, route 2
-    * (remap `dst`) to the block slices cut from them. Every intermediate cache
-    * is released once the graph's dictionary and edge cache are built.
+    * (remap `dst`) to the block slices cut from them. With `mirror` route 1
+    * sends every row in both orientations. Every intermediate cache is
+    * released once the graph's dictionary and edge cache are built.
     */
-  private def routedGraph(spark: SparkSession, scan: RDD[Rows], numBlocks: Int, policy: ExecutionPolicy): LinkGraph = {
+  private def routedGraph(
+      spark: SparkSession, scan: RDD[Rows], numBlocks: Int, policy: ExecutionPolicy, mirror: Boolean): LinkGraph = {
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     val runPartitioner = new org.apache.spark.HashPartitioner(p) // identity on run indices
     val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
@@ -948,11 +935,15 @@ object LinkGraph {
         .mapPartitions { it =>
           val out = new Array[Rows](p)
           it.foreach { c =>
+            def send(src: Long, dst: Long, i: Int): Unit = {
+              val k = runOf(splitters, src)
+              if (out(k) == null) out(k) = new Rows(packed = false, c.w != null)
+              if (c.w == null) out(k).add(src, dst) else out(k).add(src, dst, c.w(i))
+            }
             var i = 0
             while (i < c.n) {
-              val k = runOf(splitters, c.a(i))
-              if (out(k) == null) out(k) = new Rows(packed = false, c.w != null)
-              out(k).add(c, i)
+              send(c.a(i), c.b(i), i)
+              if (mirror) send(c.b(i), c.a(i), i)
               i += 1
             }
           }
@@ -992,12 +983,12 @@ object LinkGraph {
           }
           Iterator.single(out)
         }
-      blockLaidGraph(spark, dictionaryOf(spark, runs, starts), n, m, blocks, bs, byDst, None, policy)
+      blockLaidGraph(spark, dictionaryOf(spark, runs, starts), n, m, blocks, bs, byDst, policy)
     } finally held.foreach(_.unpersist(false))
   }
 
   /** The ascending distinct values of `xs`, which it sorts in place. */
-  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+  private[graft] def sortedDistinct(xs: Array[Long]): Array[Long] = {
     java.util.Arrays.sort(xs)
     var k = 0
     var i = 0
@@ -1116,7 +1107,6 @@ object LinkGraph {
       blocks: Int,
       bs: Long,
       byDst: RDD[Rows],
-      remapIds: Option[Broadcast[Array[Long]]],
       policy: ExecutionPolicy
   ): LinkGraph = {
     import spark.implicits._
@@ -1133,7 +1123,6 @@ object LinkGraph {
       }
     }).persist(StorageLevel.MEMORY_AND_DISK)
     val g = new LinkGraph(spark, dict, edges, n, blocks, bs, m, AdjacencySource.BlockLaid, policy)
-    remapIds.foreach(g.track) // the edge cache's lineage reads it
     edges.count()
     g
   }

@@ -101,9 +101,9 @@ object PageRankMode {
   * `driverBytes`; otherwise the distributed path runs, unchanged. Each gate
   * is the one comparison `cost < driverBytes`, with these costs:
   *  - the resident fold of [[graft.graph.LinkGraph.fromEdgeList]]: 32 B per
-  *    raw pair (the collected pairs and their packed, sorted remap)
-  *  - the resident dictionary of `fromFoldedEdgeList`: 16 B per folded row
-  *    (its at most two distinct ids)
+  *    scanned row (the collected pairs and their packed, sorted remap); the
+  *    same charge for the pre-folded rows of `fromFoldedEdgeList` and for
+  *    each pair a < b of the repo graph's half stream, which the fold mirrors
   *  - the driver-assembled adjacency: 16 B per edge (a packed key and a
   *    weight)
   *  - the driver-local PageRank gather: 16 B per edge (the collected

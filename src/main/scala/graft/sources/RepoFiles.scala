@@ -1,20 +1,24 @@
 package graft.sources
 
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.graph.LinkGraph
+import graft.model.ExecutionPolicy
 
 /** The north-rule input: a catalog of source-code repository files with
   * columns (repo, path, commit, lang, content), synthesized deterministically
-  * (seed-pinned, no wall clock) at any scale — plus the pattern-extraction and
-  * shared-pattern self-join that turn it into the engine's edge table
-  * (repos as vertices, shared import links as edges).
-  *
-  * Everything is pure Catalyst expressions (xxhash64/sha2/sequence/transform),
-  * so generation is distributed, columnar, and reproducible at any
-  * parallelism. The per-row invariant `sha2(content, 256)` is exposed for the
-  * input-hint equality check.
+  * (seed-pinned, no wall clock) at any scale with pure Catalyst expressions
+  * (xxhash64/sha2/sequence/transform) — plus the pattern extraction and the
+  * shared-pattern graph over it (repos as vertices, shared import tokens as
+  * weighted edges): [[sharedPatternEdges]] states it as a Catalyst self-join,
+  * [[linkGraph]] builds it with one scan, one exchange and primitive stages.
+  * The per-row invariant `sha2(content, 256)` serves the input-hint check.
   */
 object RepoFiles {
 
@@ -99,27 +103,26 @@ object RepoFiles {
     files.withColumn("content_sha256", sha2(col("content"), 256))
 
   /** Extract (repo, token) incidences from content — one literal regex per
-    * language (regexp_extract_all + explode; no UDFs). ONE scan: the regex
-    * is selected per row by a `when` chain over `lang` (each branch keeps a
-    * foldable pattern literal, so every regex still compiles once in
-    * codegen) — the previous per-lang filter+union re-scanned, and for a
-    * generated frame re-synthesized, the whole table once per language.
+    * language (regexp_extract_all + explode; no UDFs).
     */
-  def repoTokens(files: DataFrame): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val extracted = Langs.tail.foldLeft(
-      when($"lang" === Langs.head,
-        regexp_extract_all($"content", lit(importPattern(Langs.head)), lit(1)))) {
-      case (acc, lg) =>
-        acc.when($"lang" === lg, regexp_extract_all($"content", lit(importPattern(lg)), lit(1)))
+  def repoTokens(files: DataFrame): DataFrame =
+    files.select(col("repo"), explode(importTokens).as("token"))
+
+  /** A file's import tokens, in ONE scan: the regex is selected per row by a
+    * `when` chain over `lang` (each branch keeps a foldable pattern literal,
+    * so every regex still compiles once in codegen); null for another
+    * language.
+    */
+  private def importTokens: Column =
+    Langs.tail.foldLeft(when(col("lang") === Langs.head,
+      regexp_extract_all(col("content"), lit(importPattern(Langs.head)), lit(1)))) {
+      case (acc, lg) => acc.when(col("lang") === lg, regexp_extract_all(col("content"), lit(importPattern(lg)), lit(1)))
     }
-    files.select($"repo", explode(extracted).as("token"))
-  }
 
   /** Shared-pattern edges: distinct (repo, token) incidences self-joined on
     * token → directed edges both ways between distinct repos sharing a token;
-    * duplicate pairs (many shared tokens) fold to weights downstream.
+    * duplicate pairs (many shared tokens) fold to weights downstream. The
+    * Catalyst statement of what [[linkGraph]] builds.
     *
     * Skew guard (north rule): tokens shared by more than `maxReposPerToken`
     * repos are dropped before the self-join — a hot token over T repos emits
@@ -130,7 +133,10 @@ object RepoFiles {
   def sharedPatternEdges(files: DataFrame, maxReposPerToken: Int = 1000): DataFrame = {
     val spark = files.sparkSession
     import spark.implicits._
-    val kept = keptTokens(files, maxReposPerToken)
+    val rt = repoTokens(files).distinct()
+    val kept = rt.join(
+      rt.groupBy($"token").agg(count(lit(1)).as("nRepos")).filter($"nRepos" <= maxReposPerToken).select($"token"),
+      Seq("token"))
     val a = kept.select($"token", $"repo".as("repoA"))
     val b = kept.select($"token", $"repo".as("repoB"))
     a.join(b, Seq("token"))
@@ -147,46 +153,41 @@ object RepoFiles {
     files.select($"repo").distinct().select($"repo", xxhash64($"repo").as("extId"))
   }
 
-  /** Full pipeline: synthesize (or take) a repo-file table and build the graph.
-    *
-    * The shared-pattern pair stream is symmetric by construction (both
-    * orientations of every repo pair, identical multiplicities), so the fold
-    * runs on the a<b HALF of the self-join output and mirrors the folded
-    * result — the join emits half the rows and the fold exchange carries half
-    * the bytes (guide §2.3), while the folded edge set handed to the graph
-    * build is identical to folding the full both-orientations stream: the
-    * weight of (a, b) is the shared-token count either way.
+  /** Full pipeline: the graph of [[sharedPatternEdges]] (repos whose 64-bit
+    * ids collide count as one), weight = shared-token count.
+    *  1. One Catalyst scan extracts each file's tokens and hashes its repo
+    *     once; each task keeps token → its sorted distinct repo ids.
+    *  1. One exchange keyed by token merges each token's lists; a token with
+    *     2 ≤ T ≤ `maxReposPerToken` repos emits its T(T−1)/2 pairs a < b once
+    *     into a cached per-task half stream ([[halfPairs]]).
+    *  1. The half stream takes [[LinkGraph.fromEdgeList]]'s gate (32 B per
+    *     pair): the driver fold mirrors each folded pair with its weight, or
+    *     route 1 sends each pair in both orientations.
     */
-  def linkGraph(spark: SparkSession, files: DataFrame, maxReposPerToken: Int = 1000): LinkGraph = {
-    import spark.implicits._
-    val rt = keptTokens(files, maxReposPerToken)
-    val a = rt.select($"token", $"repo".as("repoA"))
-    val b = rt.select($"token", $"repo".as("repoB"))
-    val half = a.join(b, Seq("token"))
-      .filter($"repoA" < $"repoB")
-      .select(xxhash64($"repoA").as("src"), xxhash64($"repoB").as("dst"))
-      .groupBy($"src", $"dst")
-      .agg(count(lit(1)).cast("double").as("weight"))
-    // mirror INSIDE one projection: the previous union shape re-ran the final
-    // fold aggregation once per branch (ReuseExchange dedups only the
-    // exchange underneath) — same folded row set, one evaluation (guide §2.4)
-    val folded = half
-      .select(explode(array(
-        struct($"src", $"dst", $"weight"),
-        struct($"dst".as("src"), $"src".as("dst"), $"weight"))).as("e"))
-      .select($"e.src", $"e.dst", $"e.weight")
-    LinkGraph.fromFoldedEdgeList(spark, folded)
-  }
+  def linkGraph(spark: SparkSession, files: DataFrame, maxReposPerToken: Int = 1000): LinkGraph =
+    LinkGraph.fromScan(spark, halfPairs(files, maxReposPerToken), numBlocks = 0, ExecutionPolicy(), mirror = true)
 
-  /** Distinct (repo, token) incidences surviving the hot-token cap — the
-    * candidate-generation input shared by [[sharedPatternEdges]] and
-    * [[linkGraph]].
-    */
-  private def keptTokens(files: DataFrame, maxReposPerToken: Int): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val rt = repoTokens(files).distinct()
-    val tokenCounts = rt.groupBy($"token").agg(count(lit(1)).as("nRepos"))
-    rt.join(tokenCounts.filter($"nRepos" <= maxReposPerToken).select($"token"), Seq("token"))
+  /** Steps 1–2 of [[linkGraph]]: one cached batch per task of repo-id pairs a < b. */
+  private[graft] def halfPairs(files: DataFrame, cap: Int): RDD[LinkGraph.Rows] = {
+    val groups = files.select(xxhash64(col("repo")), importTokens).queryExecution.toRdd
+      .mapPartitions { it =>
+        val byToken = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofLong]
+        it.filter(!_.isNullAt(1)).foreach { r =>
+          val tokens = r.getArray(1)
+          for (i <- 0 until tokens.numElements())
+            byToken.getOrElseUpdate(tokens.getUTF8String(i).toString, new mutable.ArrayBuilder.ofLong) += r.getLong(0)
+        }
+        byToken.iterator.map { case (t, ids) => (t, LinkGraph.sortedDistinct(ids.result())) }
+      }
+      .partitionBy(new HashPartitioner(math.max(1, files.sparkSession.sparkContext.defaultParallelism)))
+    groups.mapPartitions { it =>
+      val lists = mutable.HashMap.empty[String, List[Array[Long]]]
+      it.foreach { case (t, ids) => lists(t) = ids :: lists.getOrElse(t, Nil) }
+      val out = new LinkGraph.Rows(packed = false, weighted = false)
+      lists.valuesIterator.map(l => LinkGraph.sortedDistinct(Array.concat(l: _*)))
+        .filter(ids => ids.length >= 2 && ids.length <= cap)
+        .foreach(ids => for (a <- ids.indices; b <- a + 1 until ids.length) out.add(ids(a), ids(b)))
+      Iterator.single(out.trimmed)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
   }
 }

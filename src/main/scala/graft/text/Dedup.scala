@@ -194,8 +194,9 @@ object Dedup {
   }
 
   /** SimHash over whitespace tokens: bit b is 1 iff the weighted sum of
-    * token-hash bit b (+1/−1) is positive. Pure column expressions: per-doc
-    * fold over the token array, no explode, no UDAF. Default: 64-bit over
+    * token-hash bit b (+1/−1) is positive. Pure column expressions: one
+    * per-doc fold over the token hashes with a per-bit sum array, so a doc
+    * costs tokens × width; no explode, no UDAF. Default: 64-bit over
     * xxhash64. `portable`: 60-bit over [[portableHash60]] with empty tokens
     * dropped — exactly reproducible in DuckDB for a value-level oracle.
     */
@@ -205,21 +206,16 @@ object Dedup {
     val tokens =
       if (portable) filter(rawTokens, t => length(t) > 0) else rawTokens
     val hashes = transform(tokens, t => if (portable) portableHash60(t) else xxhash64(t))
-    // for each bit: sum of +-1 across token hashes, then assemble the sign bits
-    val bits = transform(
-      sequence(lit(0), lit(width - 1)),
-      b =>
-        when(
-          aggregate(
-            hashes,
-            lit(0L),
-            (acc, h) => acc + when(call_function("shiftright", h, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-            > 0,
-          1L).otherwise(0L))
+    // one pass over the token hashes: per-bit sums of +-1, then the sign bits
     aggregate(
-      sequence(lit(0), lit(width - 1)),
-      lit(0L),
-      (acc, b) => acc.bitwiseOR(call_function("shiftleft", element_at(bits, b + 1), b)))
+      hashes,
+      array_repeat(lit(0L), width),
+      (sums, h) => transform(sums, (s, b) =>
+        s + when(call_function("shiftright", h, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)),
+      sums => aggregate(
+        transform(sums, (s, b) => when(s > 0, call_function("shiftleft", lit(1L), b)).otherwise(0L)),
+        lit(0L),
+        (acc, bit) => acc.bitwiseOR(bit)))
   }
 
   /** Hamming distance between two 64-bit simhashes. */

@@ -3,6 +3,7 @@ package graft
 import graft.graph.{AdjacencySource, LinkGraph}
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, PrefixStudy, TriangleCount}
 import graft.model.ExecutionPolicy
+import graft.sources.RepoFiles
 
 class GraphAlgoSpec extends GraftSuite {
   import spark.implicits._
@@ -358,17 +359,97 @@ class GraphAlgoSpec extends GraftSuite {
       } else assert(edgesOf(b).map(_._3).sorted == Seq(1.0, 2.0, 3.0))
       a.unpersistAll(); b.unpersistAll()
     }
-    // pre-folded, fractional weights: the resident dictionary against the
-    // same scan, dictionary and route 1 (which has no copies to sum)
+    // pre-folded, fractional weights: the resident fold summing weights
+    // against the same scan, dictionary and route 1 (no copies to sum)
     val folded = signedIds.distinct.zipWithIndex.map { case ((s, d), i) => (s, d, 0.25 + i % 7) }
       .toDF("src", "dst", "weight").repartition(p)
     val a = LinkGraph.fromFoldedEdgeList(spark, folded, numBlocks = 4)
     val b = routedBuild(p => LinkGraph.fromFoldedEdgeList(spark, folded, numBlocks = 4, policy = p))
+    assert(a.source.isInstanceOf[AdjacencySource.Resident])
     assert(dictOf(a) == dictOf(b))
     assert(edgesOf(a) == edgesOf(b))
     assert(layoutsOf(a) == layoutsOf(b))
     assert(ranksOf(a) == ranksOf(b))
     a.unpersistAll(); b.unpersistAll()
+  }
+
+  /** A repo-file row whose content imports `libNNN` for each of `tokens`, in `lang`'s syntax. */
+  private def repoFile(repo: String, path: String, lang: String, tokens: Int*) = {
+    def line(t: Int) = {
+      val lib = f"lib$t%03d"
+      lang match {
+        case "scala" => s"import $lib._"
+        case "python" => s"import $lib"
+        case "java" => s"import $lib.*;"
+        case "go" => s"import \"$lib\""
+      }
+    }
+    (repo, path, "c0", lang, ("// fixture" +: tokens.map(line)).mkString("\n"))
+  }
+
+  /** [[RepoFiles.linkGraph]] built under `policy`. */
+  private def repoGraph(files: org.apache.spark.sql.DataFrame, cap: Int, policy: ExecutionPolicy): LinkGraph =
+    LinkGraph.fromScan(spark, RepoFiles.halfPairs(files, cap), numBlocks = 0, policy, mirror = true)
+
+  test("repo graph equals the fold of the shared-pattern self-join: cap edges, lone repos, duplicate imports") {
+    // cap 3: lib001 is in exactly 3 repos (kept), lib002 in 4 (dropped);
+    // rE's only token is its own and rF's only token is lib002, so neither
+    // becomes a vertex; rA imports lib003 twice in one file and again in another
+    val fixture = Seq(
+      repoFile("rA", "f0.scala", "scala", 1, 2, 3, 3),
+      repoFile("rA", "f1.java", "java", 3, 4),
+      repoFile("rB", "f0.py", "python", 1, 2, 3),
+      repoFile("rC", "f0.go", "go", 1),
+      repoFile("rD", "f0.java", "java", 2, 4),
+      repoFile("rE", "f0.scala", "scala", 9),
+      repoFile("rF", "f0.go", "go", 2)
+    ).toDF("repo", "path", "commit", "lang", "content").repartition(3)
+    val generated = RepoFiles.table(spark, numRepos = 60, filesPerRepo = 3, vocab = 40)
+    for ((files, cap) <- Seq((fixture, 3), (generated, 12))) {
+      val want = LinkGraph.fromEdgeList(spark, RepoFiles.sharedPatternEdges(files, cap))
+      val a = RepoFiles.linkGraph(spark, files, cap) // the driver fold and mirror
+      val b = routedBuild(repoGraph(files, cap, _))
+      assert(a.source.isInstanceOf[AdjacencySource.Resident])
+      for (g <- Seq(a, b)) {
+        assert(g.numVertices == want.numVertices && g.numEdges == want.numEdges && g.numBlocks == want.numBlocks)
+        assert(dictOf(g) == dictOf(want))
+        assert(edgesOf(g) == edgesOf(want))
+      }
+      assert(layoutsOf(a) == layoutsOf(b))
+      assert(ranksOf(a) == ranksOf(b))
+      if (files eq fixture) {
+        val id = RepoFiles.repoIdMap(files).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val vid = dictOf(a).toMap
+        assert(vid.keySet == Set("rA", "rB", "rC", "rD").map(id))
+        val half = Seq(("rA", "rB", 2.0), ("rA", "rC", 1.0), ("rB", "rC", 1.0), ("rA", "rD", 1.0))
+          .map { case (x, y, w) => (vid(id(x)), vid(id(y)), w) }
+        assert(edgesOf(a) == (half ++ half.map(e => (e._2, e._1, e._3))).sorted)
+      }
+      want.unpersistAll(); a.unpersistAll(); b.unpersistAll()
+    }
+  }
+
+  test("repo graph computes each file partition once and leaves no cache behind") {
+    val table = RepoFiles.table(spark, numRepos = 40, filesPerRepo = 3, vocab = 30)
+    val rows = table.collect().toSeq
+    val parts = 5
+    for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val scanned = spark.sparkContext.collectionAccumulator[Int]("scanned partitions")
+      val files = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, parts).mapPartitionsWithIndex { (k, it) => scanned.add(k); it },
+        table.schema)
+      val g =
+        if (policy == ExecutionPolicy()) RepoFiles.linkGraph(spark, files, maxReposPerToken = 20)
+        else repoGraph(files, 20, policy)
+      g.adjParts.count(); g.gatherPartsRdd.count(); g.degreeTable.count(); g.numEdges
+      import scala.jdk.CollectionConverters._
+      assert(scanned.value.asScala.toSeq.map(_.intValue).sorted == (0 until parts))
+      assert(g.source.isInstanceOf[AdjacencySource.Resident] == (policy == ExecutionPolicy()))
+      g.unpersistAll()
+      val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      assert(left.isEmpty, s"left cached ($policy): ${left.values.mkString(", ")}")
+    }
   }
 
   test("above the fold cap the build scans its input once and collects no raw pairs") {

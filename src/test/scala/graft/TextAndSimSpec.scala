@@ -70,6 +70,40 @@ class TextAndSimSpec extends GraftSuite {
     assert(ham(sh(0L), sh(1L)) < ham(sh(0L), sh(4L)))
   }
 
+  test("simhash equals a driver-side sign sum over each token hash, in both widths") {
+    // whitespace runs at either end give empty tokens: hashed in the 64-bit
+    // variant, dropped in the portable one
+    val rng = new scala.util.Random(19)
+    val vocab = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta", "iota", "kappa")
+    val seps = Seq(" ", "  ", "\t", " \n ")
+    val texts = Seq("", " ", "one", " lead and trail ") ++ Seq.fill(36) {
+      val words = Seq.fill(1 + rng.nextInt(12))(vocab(rng.nextInt(vocab.length)))
+      (if (rng.nextBoolean()) " " else "") + words.mkString(seps(rng.nextInt(seps.length))) +
+        (if (rng.nextBoolean()) "\t" else "")
+    }
+    def xxh(t: String): Long = {
+      val b = t.getBytes("UTF-8")
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+    }
+    def md5h60(t: String): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5").digest(t.getBytes("UTF-8")).map(x => f"$x%02x").mkString
+      java.lang.Long.parseLong(hex.take(15), 16)
+    }
+    def reference(text: String, portable: Boolean): Long = {
+      val raw = text.split("\\s+", -1).toSeq
+      val hashes = if (portable) raw.filter(_.nonEmpty).map(md5h60) else raw.map(xxh)
+      (0 until (if (portable) 60 else 64)).foldLeft(0L) { (acc, b) =>
+        if (hashes.map(h => if (((h >> b) & 1L) == 1L) 1L else -1L).sum > 0) acc | (1L << b) else acc
+      }
+    }
+    val got = texts.zipWithIndex.toDF("text", "i").repartition(3)
+      .select($"i", Dedup.simhash($"text").as("s"), Dedup.simhash($"text", portable = true).as("p"))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    texts.zipWithIndex.foreach { case (t, i) =>
+      assert(got(i) == (reference(t, portable = false), reference(t, portable = true)), s"doc $i: '$t'")
+    }
+  }
+
   test("portableHash60 matches the cross-engine md5 definition") {
     // ('0x' || substr(md5('abc'),1,15))::BIGINT in DuckDB = 648541476951500027
     val got = Seq("abc").toDF("s")
