@@ -37,52 +37,31 @@ object ConnectedComponents {
 
   /** Returns (vid, label) for every vertex in the dictionary.
     *
-    * Under the graph policy's driver budget (16 B per folded edge) the labels
-    * are computed DRIVER-RESIDENT: one collect + union-find with
-    * min-representative roots, which produces the IDENTICAL canonical
-    * labeling (label = min vid of the component — a property of the result,
-    * not of the algorithm) in O(E α(E)) driver time instead of 3+ shuffle
-    * rounds of 6 exchanges each. A 100 TB graph takes the star-contraction
-    * path; the contract-scale graph doesn't pay cluster-coordination prices
-    * for sub-second work.
+    * When the graph's resident operators fit its driver budget
+    * ([[LinkGraph.residentOperators]]) the labels are computed on the driver:
+    * union-find with min-representative roots over the graph's driver edge
+    * copy, which produces the IDENTICAL canonical labeling (label = min vid of
+    * the component — a property of the result, not of the algorithm) in
+    * O(E α(E)) driver time instead of 3+ shuffle rounds of 6 exchanges each.
+    * A 100 TB graph takes the star-contraction path; the contract-scale graph
+    * doesn't pay cluster-coordination prices for sub-second work.
     */
   def run(graph: LinkGraph, maxIterations: Int = 50): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
     // Per-vertex frames pinned via Lineage.pin report DEFAULT (huge)
-    // statistics, so the planner would sort-merge-join them against the
-    // edge-scale side — shuffling the big side once per round. When the
-    // label frame (≤ numVertices rows of two longs) fits the driver budget it
-    // gets an explicit broadcast hint instead; above it the joins stay
-    // shuffle-based, which is the right shape at cluster scale.
-    val hintSmall: DataFrame => DataFrame =
-      if (graph.numVertices * 16 < graph.policy.driverBytes) broadcast(_) else identity
+    // statistics, so every label-frame join below takes the graph's
+    // size-gated broadcast hint (LinkGraph.hintSmall).
     // (measured: disabling AQE inside this loop cut job count 31→19 but left
     // the wall unchanged at contract scale, while losing AQE's runtime skew
     // handling at cluster scale — so AQE stays ON here, with the join
-    // strategy pinned by the explicit size-gated hints above)
+    // strategy pinned by the explicit size-gated hints)
+    import graph.hintSmall
 
-    // Resident regime decides from the (already counted) FOLDED edge cache —
     // union-find is insensitive to duplicates, orientation and self-loops, so
     // the undirected-dedup exchange the distributed path needs is pure setup
-    // cost here (guide §2.4): one collect of the cached edge frame replaces
-    // distinct + persist + count + collect. The folded count bounds the
-    // undirected count from above, so the gate is (slightly) conservative.
-    if (graph.numEdges * 16 < graph.policy.driverBytes && graph.numVertices <= Int.MaxValue.toLong) {
-      val labels = residentLabels(graph, graph.edgesLocal)
-      val b = spark.sparkContext.broadcast(labels)
-      val out = spark
-        .range(graph.numVertices)
-        .as[Long]
-        .mapPartitions { it =>
-          val l = b.value
-          it.map(v => (v, l(v.toInt)))
-        }
-        .toDF("vid", "label")
-      val (pinned, _) = Lineage.pin(out)
-      b.destroy()
-      return pinned
-    }
+    // cost here (guide §2.4)
+    if (graph.residentOperators) return graph.vertexFrame("label" -> residentLabels(graph))
 
     val orig = graph.edges
       .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
@@ -187,8 +166,9 @@ object ConnectedComponents {
     * The fixpoint certificate survives as a driver-side pass: every edge's
     * endpoints must share a label, or we throw rather than return.
     */
-  private def residentLabels(graph: LinkGraph, edges: Array[graft.model.Edge]): Array[Long] = {
+  private def residentLabels(graph: LinkGraph): Array[Long] = {
     val n = graph.numVertices.toInt
+    val edges = graph.edgesLocal
     val parent = new Array[Int](n)
     var i = 0
     while (i < n) { parent(i) = i; i += 1 }
@@ -200,16 +180,10 @@ object ConnectedComponents {
       r
     }
     var e = 0
-    while (e < edges.length) {
-      val u = edges(e).src.toInt
-      val v = edges(e).dst.toInt
-      if (u != v) {
-        val ru = find(u)
-        val rv = find(v)
-        if (ru != rv) {
-          if (ru < rv) parent(rv) = ru else parent(ru) = rv
-        }
-      }
+    while (e < edges.n) {
+      val ru = find((edges.a(e) >>> 32).toInt)
+      val rv = find(edges.a(e).toInt) // the low 32 bits: dst
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
       e += 1
     }
     val labels = new Array[Long](n)
@@ -217,12 +191,10 @@ object ConnectedComponents {
     while (i < n) { labels(i) = find(i).toLong; i += 1 }
     // definitive certificate, same property the distributed path proves
     e = 0
-    while (e < edges.length) {
-      val u = edges(e).src.toInt
-      val v = edges(e).dst.toInt
-      if (labels(u) != labels(v))
-        throw new IllegalStateException(
-          s"cc resident labeling violates edge (${edges(e).src}, ${edges(e).dst})")
+    while (e < edges.n) {
+      val (u, v) = (edges.a(e) >>> 32, edges.a(e) & 0xffffffffL)
+      if (labels(u.toInt) != labels(v.toInt))
+        throw new IllegalStateException(s"cc resident labeling violates edge ($u, $v)")
       e += 1
     }
     labels

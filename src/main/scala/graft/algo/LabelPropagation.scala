@@ -33,31 +33,28 @@ import graft.graph.LinkGraph
   * frame, never the 2|E|-row edge table (at contract sizes the planner
   * broadcasts the label side and the edge cache never moves at all).
   *
-  * `pinEvery = 1` (measured fastest, default): `labels` feeds each superstep
-  * TWICE — the neighbor join and the self-vote union — so an un-pinned plan
-  * tree DOUBLES per superstep (2^k leaves by superstep k; measured 4-superstep
-  * sf0.1 walls: pin-every-step 6.8 s, every-3rd 11.9 s, never 18.1 s).
-  * Pinning each superstep keeps the plan flat for the cost of one
-  * materialization that the next superstep needs anyway.
+  * The distributed loop pins `labels` every superstep: `labels` feeds each
+  * superstep TWICE (the neighbor join and the self-vote union), so an
+  * un-pinned plan tree doubles per superstep (measured 4-superstep sf0.1
+  * walls: pin-every-step 6.8 s, every-3rd 11.9 s, never 18.1 s).
   */
 object LabelPropagation {
 
   /** Returns (vid, label) after `iterations` synchronous supersteps.
     *
-    * Under the graph policy's driver budget (≤ 2|E| undirected entries at
-    * 24 B each) the supersteps run DRIVER-RESIDENT: one collect of the cached
-    * folded edges, a local undirected fold, and k array/hash passes — the
-    * same labels as the distributed loop (vote sums are commutative per pair
-    * and exact for fold-multiplicity weights; the argmax tie-break is the
+    * When the graph's resident operators fit its driver budget
+    * ([[LinkGraph.residentOperators]]) the supersteps run on the driver over
+    * the graph's symmetric CSR — the same labels as the distributed loop (vote
+    * sums are exact for fold-multiplicity weights; the argmax tie-break is the
     * identical (w, smallest-label) order) without paying 3 exchanges per
     * superstep for sub-second work. A 100 TB graph takes the distributed loop.
     */
-  def run(graph: LinkGraph, iterations: Int = 10, pinEvery: Int = 1): DataFrame = {
+  def run(graph: LinkGraph, iterations: Int = 10): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
+    import graph.hintSmall
 
-    if (graph.numEdges * 48 < graph.policy.driverBytes && graph.numVertices <= Int.MaxValue.toLong)
-      return residentRun(graph, iterations)
+    if (graph.residentOperators) return residentRun(graph, iterations)
 
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     // ONE exchange builds the undirected fold in join-key layout: the
@@ -76,14 +73,9 @@ object LabelPropagation {
       .persist(StorageLevel.MEMORY_AND_DISK)
     und.count()
 
-    // pinned frames report default (huge) stats, so without the hint the
-    // planner sort-merge-joins the n-row label frame against the cached edge
-    // table — re-sorting 2|E| rows per superstep. Broadcast only below the
-    // graph policy's driver budget; at cluster scale the shuffle join is the
-    // right shape.
-    val hintSmall: DataFrame => DataFrame =
-      if (graph.numVertices * 16 < graph.policy.driverBytes) broadcast(_) else identity
-
+    // the size-gated hint keeps the planner from sort-merge-joining the n-row
+    // label frame against the cached edge table (re-sorting 2|E| rows per
+    // superstep)
     var (labels, freeLabels) = graft.graph.Lineage.pin(
       graph.vertexDict.select($"vid", $"vid".as("label")).toDF())
 
@@ -102,14 +94,10 @@ object LabelPropagation {
         .agg(max(struct($"w", (-$"label").as("nl"))).as("m"))
         .select($"vid", (-$"m.nl").as("label"))
       k += 1
-      if (k % pinEvery == 0 || k == iterations) {
-        val (newLabels, freeNew) = graft.graph.Lineage.pin(adopted)
-        freeLabels()
-        labels = newLabels
-        freeLabels = freeNew
-      } else {
-        labels = adopted
-      }
+      val (newLabels, freeNew) = graft.graph.Lineage.pin(adopted)
+      freeLabels()
+      labels = newLabels
+      freeLabels = freeNew
       if (debug)
         System.err.println(
           f"[graft] lpa superstep=$k ${(System.nanoTime() - stepT0) / 1e9}%.2f s")
@@ -119,99 +107,51 @@ object LabelPropagation {
   }
 
   /** Driver-resident supersteps. Semantics mirror the distributed loop
-    * exactly: undirected fold with per-pair weight sums (commutative — at
-    * most two directed contributions per pair), aggregate weights ≤ 0
-    * dropped, a weight-0 self-vote per vertex, and the weighted mode with
-    * ties to the smallest label.
+    * exactly: the symmetric CSR sums each pair's weights over both
+    * orientations, entries whose sum is ≤ 0 are absent, every vertex casts a
+    * weight-0 self-vote, and the weighted mode breaks ties to the smallest
+    * label. Labels are vids, so the votes add into a dense per-label array and
+    * a list of the labels touched.
     */
   private def residentRun(graph: LinkGraph, iterations: Int): DataFrame = {
-    val spark = graph.spark
-    import spark.implicits._
     val n = graph.numVertices.toInt
-
-    // local undirected fold of the collected folded edges
-    val raw = graph.edgesLocal
-    val undMap = new java.util.HashMap[Long, java.lang.Double]()
-    raw.foreach { e =>
-      val k1 = e.src * graph.numVertices + e.dst
-      val k2 = e.dst * graph.numVertices + e.src
-      undMap.merge(k1, e.weight, (a, b) => a + b)
-      undMap.merge(k2, e.weight, (a, b) => a + b)
-      ()
-    }
-    // CSR keyed by the receiving vertex (votes flow src-label -> dst)
-    val kept = new Array[Long](undMap.size())
-    val keptW = new Array[Double](undMap.size())
-    var m = 0
-    val entries = undMap.entrySet().iterator()
-    while (entries.hasNext) {
-      val ent = entries.next()
-      val w = ent.getValue.doubleValue()
-      if (w > 0) { kept(m) = ent.getKey.longValue(); keptW(m) = w; m += 1 }
-    }
-    val deg = new Array[Int](n + 1)
-    var i = 0
-    while (i < m) { deg(((kept(i) / graph.numVertices)).toInt + 1) += 1; i += 1 }
-    i = 0
-    while (i < n) { deg(i + 1) += deg(i); i += 1 }
-    val srcArr = new Array[Int](m)
-    val wArr = new Array[Double](m)
-    val fill = java.util.Arrays.copyOf(deg, n)
-    i = 0
-    while (i < m) {
-      val dst = (kept(i) / graph.numVertices).toInt
-      val src = (kept(i) % graph.numVertices).toInt
-      val p = fill(dst)
-      srcArr(p) = src
-      wArr(p) = keptW(i)
-      fill(dst) = p + 1
-      i += 1
-    }
-
-    var labels = new Array[Long](n)
-    i = 0
-    while (i < n) { labels(i) = i.toLong; i += 1 }
-    val sums = new java.util.HashMap[Long, java.lang.Double]()
+    val (off, und) = graph.symmetricCsr()
+    var labels = Array.tabulate(n)(identity)
+    var next = new Array[Int](n)
+    val sums = Array.fill(n)(-1.0) // a label's vote sum; < 0 while it has no vote
+    val touched = new Array[Int](n)
     var k = 0
     while (k < iterations) {
-      val next = new Array[Long](n)
       var v = 0
       while (v < n) {
-        sums.clear()
-        sums.put(labels(v), 0.0) // self-vote
-        var j = deg(v)
-        val end = deg(v + 1)
-        while (j < end) {
-          sums.merge(labels(srcArr(j)), wArr(j), (a, b) => a + b)
+        sums(labels(v)) = 0.0 // self-vote
+        touched(0) = labels(v)
+        var t = 1
+        var j = off(v)
+        while (j < off(v + 1)) {
+          if (und.w(j) > 0) {
+            val l = labels(und.a(j).toInt) // the low 32 bits: the neighbour
+            if (sums(l) < 0) { sums(l) = 0.0; touched(t) = l; t += 1 }
+            sums(l) += und.w(j)
+          }
           j += 1
         }
-        var bestW = Double.NegativeInfinity
-        var bestL = Long.MaxValue
-        val it = sums.entrySet().iterator()
-        while (it.hasNext) {
-          val ent = it.next()
-          val w = ent.getValue.doubleValue()
-          val l = ent.getKey.longValue()
-          if (w > bestW || (w == bestW && l < bestL)) { bestW = w; bestL = l }
+        var best = -1
+        var bestW = -1.0
+        while (t > 0) { // the mode, ties to the smallest label; resets the sums
+          t -= 1
+          val l = touched(t)
+          if (sums(l) > bestW || (sums(l) == bestW && l < best)) { best = l; bestW = sums(l) }
+          sums(l) = -1.0
         }
-        next(v) = bestL
+        next(v) = best
         v += 1
       }
+      val done = labels
       labels = next
+      next = done
       k += 1
     }
-
-    val b = spark.sparkContext.broadcast(labels)
-    val out = spark
-      .range(n.toLong)
-      .as[Long]
-      .mapPartitions { it =>
-        val l = b.value
-        it.map(v => (v, l(v.toInt)))
-      }
-      .toDF("vid", "label")
-    val (pinned, _) = graft.graph.Lineage.pin(out)
-    b.destroy()
-    pinned
+    graph.vertexFrame("label" -> labels.map(_.toLong))
   }
 }

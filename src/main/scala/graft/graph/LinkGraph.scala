@@ -3,9 +3,10 @@ package graft.graph
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.model._
@@ -45,8 +46,13 @@ import graft.model._
   * Edges that were not laid out by this build (the resident fold, the public
   * constructor, [[LinkGraph.fromDenseWeighted]], dense-by-max) are routed by
   * dst block once before the kernel. When the edges fit the policy's driver
-  * budget the same kernel runs on the driver over [[edgesLocal]]; restored
-  * parts replace the kernel altogether.
+  * budget the same kernel runs on the driver over [[edgesLocal]], the one
+  * primitive driver copy of the folded edges (packed keys and weights, 16 B
+  * per edge); restored parts replace the kernel altogether.
+  *
+  * Connected components reads the same copy, and LPA and triangles one
+  * [[symmetricCsr]] built from it per call; one predicate picks their regime
+  * ([[residentOperators]]) and one emitter returns their arrays ([[vertexFrame]]).
   *
   * Per-task memory of the kernel is about 32 B × the edges in one block: a
   * packed (slot, vid) long and a weight per edge, plus the parts it emits.
@@ -88,14 +94,64 @@ final class LinkGraph(
 
   lazy val numEdges: Long = if (knownNumEdges >= 0) knownNumEdges else edges.count()
 
-  /** Folded edges collected ONCE for every driver-resident consumer (CC, LPA,
-    * triangle counting, the resident parts assembler) — they each used to pay
-    * their own collect of the same cached frame. Lazy: only consumers below
-    * their own size gates touch it. The resident fold hands over its own copy.
+  /** The folded edges on the driver for every driver-side consumer: packed
+    * `(src << 32) | dst` keys in `a`, weights in `w` (16 B per edge). The
+    * resident fold hands over its own arrays, sorted by key; any other edge
+    * frame is collected once, in collect order. Lazy.
     */
-  lazy val edgesLocal: Array[Edge] = source match {
+  private[graft] lazy val edgesLocal: LinkGraph.Rows = source match {
     case AdjacencySource.Resident(local) => local
-    case _ => edges.collect()
+    case _ =>
+      edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd
+        .mapPartitions { it =>
+          val r = new LinkGraph.Rows(packed = true)
+          it.foreach(e => r.add((e.getLong(0) << 32) | e.getLong(1), e.getDouble(2)))
+          Iterator.single(r.trimmed)
+        }
+        .collect().foldLeft(new LinkGraph.Rows(packed = true))(LinkGraph.append).trimmed
+  }
+
+  /** True when CC, LPA, triangles and clustering run on the driver: the
+    * symmetric CSR (32 B per folded edge) and their vertex arrays (at most
+    * 24 B per vertex: LPA's labels, next labels, vote sums, touched list and
+    * CSR offsets) fit the driver budget.
+    */
+  private[graft] def residentOperators: Boolean =
+    numVertices <= Int.MaxValue.toLong && numEdges * 32 + numVertices * 24 < policy.driverBytes
+
+  /** Broadcast hint for an n-row label frame (two longs per row) that the
+    * distributed operators join against edge-scale frames: pinned frames report
+    * default (huge) statistics. Over the driver budget the shuffle join stays.
+    */
+  private[graft] def hintSmall(df: DataFrame): DataFrame =
+    if (numVertices * 16 < policy.driverBytes) broadcast(df) else df
+
+  /** The undirected view of [[edgesLocal]], built per call: row v is
+    * `a(offsets(v) until offsets(v + 1))`, a key `(v << 32) | u` per neighbour
+    * u ascending, with the weights of (v, u) and (u, v) summed (a self-loop
+    * gets 2w).
+    */
+  private[graft] def symmetricCsr(): (Array[Int], LinkGraph.Rows) = {
+    val rows = LinkGraph.foldRuns(LinkGraph.mirrored(edgesLocal))
+    val offsets = new Array[Int](numVertices.toInt + 1)
+    var i = 0
+    for (v <- offsets.indices) {
+      while (i < rows.n && (rows.a(i) >>> 32) < v) i += 1
+      offsets(v) = i
+    }
+    (offsets, rows)
+  }
+
+  /** Per-vertex driver arrays as a (vid, name…) frame of longs, one slice per
+    * task: no broadcast, no pin, no job.
+    */
+  private[graft] def vertexFrame(cols: (String, Array[Long])*): DataFrame = {
+    val rows = LinkGraph.sliced(spark, numVertices.toInt) { (lo, hi) =>
+      (lo, cols.map(c => java.util.Arrays.copyOfRange(c._2, lo, hi)))
+    }.flatMap { case (lo, cs) =>
+      Iterator.range(0, cs.head.length).map(i => Row.fromSeq((lo + i).toLong +: cs.map(_(i))))
+    }
+    spark.createDataFrame(rows, StructType(("vid" +: cols.map(_._1)).map(StructField(_, LongType, nullable = false))))
   }
 
   /** Broadcasts this graph's caches read; destroyed by [[unpersistAll]]. */
@@ -121,7 +177,9 @@ final class LinkGraph(
     if (!residentAssembleOk) None
     else {
       val rows = new Array[LinkGraph.Rows](numBlocks)
-      edgesLocal.foreach(e => LinkGraph.addByDst(rows, blockSize, e.src, e.dst, e.weight))
+      val e = edgesLocal
+      var i = 0
+      while (i < e.n) { LinkGraph.addByDst(rows, blockSize, e.a(i) >>> 32, e.a(i) & 0xffffffffL, e.w(i)); i += 1 }
       Some(LinkGraph.partsOf(rows, normalize = true))
     }
 
@@ -378,8 +436,8 @@ object LinkGraph {
   val MaxEdgesPerPart: Int = 2 << 20
 
   /** Growable primitive edge rows, and the batch one map task ships to one
-    * block or dictionary run. Packed rows carry `(local slot << 32) | vid` in
-    * `a` and leave `b` null; triple rows carry two ids in `a` and `b`. Unweighted
+    * block or dictionary run. Packed rows carry `(local slot << 32) | vid` (or,
+    * on the driver, `(src << 32) | dst`) in `a` and leave `b` null; triple rows carry two ids in `a` and `b`. Unweighted
     * rows (raw pairs) leave `w` null: every weight is 1. Shipped trimmed.
     */
   private[graft] final class Rows(packed: Boolean, weighted: Boolean = true) extends Serializable {
@@ -818,48 +876,74 @@ object LinkGraph {
     val n = ids.length
     // remapped (src, dst) vid pairs packed into one long (vids dense < 2³¹):
     // sorted, every copy of a pair is adjacent
-    val keys = new Array[Long](total)
-    val w = if (chunks.exists(_.w != null)) new Array[Double](total) else null
-    var k = 0
+    val pairs = new Rows(packed = true, weighted = chunks.exists(_.w != null))
+    pairs.a = new Array[Long](total)
+    pairs.w = if (pairs.w == null) null else new Array[Double](total)
     chunks.foreach { c =>
       var i = 0
       while (i < c.n) {
-        keys(k) = (vidIn(ids, c.a(i), 0L) << 32) | vidIn(ids, c.b(i), 0L)
-        if (w != null) w(k) = c.w(i)
-        k += 1; i += 1
+        pairs.a(pairs.n) = (vidIn(ids, c.a(i), 0L) << 32) | vidIn(ids, c.b(i), 0L)
+        if (pairs.w != null) pairs.w(pairs.n) = c.w(i)
+        pairs.n += 1; i += 1
       }
     }
-    if (w == null) java.util.Arrays.sort(keys) else dualSort(keys, w, 0, total - 1)
-    // fold each run of copies; with `mirror` the swapped pair follows it
-    val folded = new Array[Long](if (mirror) 2 * total else total)
-    val weights = new Array[Double](folded.length)
-    var m = 0
-    var i = 0
-    while (i < total) {
-      var j = i
-      var sum = 0.0
-      while (j < total && keys(j) == keys(i)) { sum += (if (w == null) 1.0 else w(j)); j += 1 }
-      folded(m) = keys(i); weights(m) = sum; m += 1
-      if (mirror) { folded(m) = (keys(i) << 32) | (keys(i) >>> 32); weights(m) = sum; m += 1 }
-      i = j
-    }
-    if (mirror) dualSort(folded, weights, 0, m - 1)
-    val local = Array.tabulate(m)(e => Edge(folded(e) >>> 32, folded(e) & 0xffffffffL, weights(e)))
-    val sc = spark.sparkContext
-    val p = math.max(1, sc.defaultParallelism)
-    def slices[T](len: Int)(cut: (Int, Int) => T): Seq[T] =
-      (0 until p).map(s => cut((s.toLong * len / p).toInt, ((s + 1).toLong * len / p).toInt))
-    val dict = spark.createDataset(sc.parallelize(slices(n)((lo, hi) => (lo, java.util.Arrays.copyOfRange(ids, lo, hi))), p)
+    if (pairs.w == null) java.util.Arrays.sort(pairs.a) else dualSort(pairs.a, pairs.w, 0, total - 1)
+    // fold each run of copies; with `mirror` each folded pair gains its swap
+    val local = if (mirror) mirrored(foldRuns(pairs)) else foldRuns(pairs).trimmed
+    val m = local.n
+    val dict = spark.createDataset(sliced(spark, n)((lo, hi) => (lo, java.util.Arrays.copyOfRange(ids, lo, hi)))
       .flatMap { case (lo, s) => Iterator.range(0, s.length).map(v => VertexMapping(s(v), lo + v.toLong)) })
     dict.persist(StorageLevel.MEMORY_AND_DISK)
     dict.count()
-    val edges = spark.createDataset(sc.parallelize(slices(m)((lo, hi) =>
-        (java.util.Arrays.copyOfRange(folded, lo, hi), java.util.Arrays.copyOfRange(weights, lo, hi))), p)
+    val edges = spark.createDataset(sliced(spark, m)((lo, hi) =>
+        (java.util.Arrays.copyOfRange(local.a, lo, hi), java.util.Arrays.copyOfRange(local.w, lo, hi)))
       .flatMap { case (ks, ws) => Iterator.range(0, ks.length).map(e => Edge(ks(e) >>> 32, ks(e) & 0xffffffffL, ws(e))) })
       .persist(StorageLevel.MEMORY_AND_DISK)
     edges.count()
     val (blocks, bs) = geometry(spark, n, m, numBlocks)
     new LinkGraph(spark, dict, edges, n, blocks, bs, m, AdjacencySource.Resident(local), policy)
+  }
+
+  /** `len` positions cut into one slice per task (`cut(lo, hi)`), parallelized in slice order. */
+  private def sliced[T: scala.reflect.ClassTag](spark: SparkSession, len: Int)(cut: (Int, Int) => T): RDD[T] = {
+    val p = math.max(1, spark.sparkContext.defaultParallelism)
+    spark.sparkContext.parallelize(
+      (0 until p).map(s => cut((s.toLong * len / p).toInt, ((s + 1).toLong * len / p).toInt)), p)
+  }
+
+  /** Folds sorted packed `rows` in place: each run of equal keys becomes one
+    * row with the run's weights summed in order (its length when unweighted).
+    */
+  private def foldRuns(rows: Rows): Rows = {
+    val sums = if (rows.w == null) new Array[Double](rows.n) else rows.w
+    var m = 0
+    var i = 0
+    while (i < rows.n) {
+      var j = i
+      var sum = 0.0
+      while (j < rows.n && rows.a(j) == rows.a(i)) { sum += rows.weight(j); j += 1 }
+      rows.a(m) = rows.a(i); sums(m) = sum; m += 1
+      i = j
+    }
+    rows.w = sums
+    rows.n = m
+    rows
+  }
+
+  /** Packed `rows` and each one's swap `(b << 32) | a`, sorted into new arrays. */
+  private def mirrored(rows: Rows): Rows = {
+    val out = new Rows(packed = true)
+    out.a = new Array[Long](2 * rows.n)
+    out.w = new Array[Double](2 * rows.n)
+    var i = 0
+    while (i < rows.n) {
+      val k = rows.a(i)
+      out.add(k, rows.w(i))
+      out.add((k << 32) | (k >>> 32), rows.w(i))
+      i += 1
+    }
+    dualSort(out.a, out.w, 0, out.n - 1)
+    out
   }
 
   /** [[fromEdgeList]] for a caller that already folded duplicates into
@@ -1237,10 +1321,11 @@ object AdjacencySource {
     */
   case object BlockLaid extends AdjacencySource
 
-  /** The resident fold's driver copy of the folded edges: every
-    * driver-resident consumer reads it instead of collecting the edge frame.
+  /** The resident fold's driver copy of the folded edges (packed keys and
+    * weights, sorted by key): every driver-side consumer reads it instead of
+    * collecting the edge frame.
     */
-  final case class Resident(edges: Array[Edge]) extends AdjacencySource
+  final case class Resident(edges: LinkGraph.Rows) extends AdjacencySource
 
   /** Parts restored in the build's layout (partition b = block b's parts in
     * partId order), in either orientation; they replace the kernel.

@@ -108,13 +108,13 @@ object PageRankMode {
   *    weight)
   *  - the driver-local PageRank gather: 16 B per edge (the collected
   *    src-major parts)
-  *  - connected components and triangles: 16 B per edge (one collect of the
-  *    folded edges)
-  *  - label propagation: 48 B per edge (at most two undirected entries of
-  *    24 B per edge)
+  *  - the resident graph operators (connected components, label propagation,
+  *    triangles and clustering, one predicate for all): 32 B per folded edge
+  *    (the symmetric CSR, two entries of a packed key and a weight) plus 24 B
+  *    per vertex (the operators' vertex arrays)
   *  - the vector-resident PageRank regime: 8 B per vertex (the rank vector)
-  *  - the broadcast hint on connected components' label frame: 16 B per
-  *    vertex (two longs per row)
+  *  - the broadcast hint on the label frames of distributed connected
+  *    components and label propagation: 16 B per vertex (two longs per row)
   * `driverBytes = 0` sends every operator down its distributed path.
   *
   * `taskBytes` bounds one task's contribution slabs in the distributed

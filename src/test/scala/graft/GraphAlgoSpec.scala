@@ -205,7 +205,7 @@ class GraphAlgoSpec extends GraftSuite {
       tags.toArray.count(_.toString.contains("broadcast exchange")) // the tag Spark gives that job
     }
     // distributed supersteps with the n-row label frame under the budget: hinted
-    assert(broadcastJobs(ExecutionPolicy(driverBytes = g.numEdges * 48)) > 0)
+    assert(broadcastJobs(ExecutionPolicy(driverBytes = g.numVertices * 16 + 1)) > 0)
     assert(broadcastJobs(distributedOnly) == 0)
     g.unpersistAll()
   }
@@ -233,6 +233,8 @@ class GraphAlgoSpec extends GraftSuite {
     val d = under(g, distributedOnly)
     assert(triRes == triOf(d))
     assert(ccRes == ccOf(d)) // exact incl. the double coeff: identical op sequence
+    val total = TriangleCount.totalTriangles(g)
+    assert(total > 0 && total == TriangleCount.totalTriangles(d) && total * 3 == triRes.map(_._2).sum)
     d.unpersistAll()
     g.unpersistAll()
   }
@@ -561,6 +563,9 @@ class GraphAlgoSpec extends GraftSuite {
       g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
       g.degreeTable.count()
       PageRank.run(g, tolerance = 0.0, maxIterations = 2).free()
+      if (policy == ExecutionPolicy()) // the resident operators hold nothing either
+        Seq(ConnectedComponents.run(g), LabelPropagation.run(g, 4), TriangleCount.perVertexTriangles(g),
+          TriangleCount.clusteringCoefficients(g)).foreach(_.collect())
       g.unpersistAll()
       val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
       assert(left.isEmpty, s"left cached ($policy): ${left.values.mkString(", ")}")
@@ -601,6 +606,49 @@ class GraphAlgoSpec extends GraftSuite {
       val view = new LinkGraph(spark, dict, g.edges, g.numVertices, g.numBlocks, g.blockSize)
       val e = intercept[IllegalArgumentException](view.degreeTable)
       assert(e.getMessage.contains("contiguous ascending vid runs"), e.getMessage)
+    }
+    g.unpersistAll()
+  }
+
+  test("resident operators equal their distributed twins on public-constructor weights") {
+    import graft.model.{Edge, VertexMapping}
+    // a triangle 0-1-2; a self-loop on 3; both orientations of 3-4 (2 and 3);
+    // a duplicate row 4→5; a zero-weight 5-6 and a 4-6 closing the triangle
+    // 4-5-6; a pair 6-7 whose orientations carry −1 and +1; 8 isolated
+    val edges = Seq(Edge(0, 1, 1), Edge(1, 2, 1), Edge(2, 0, 1), Edge(3, 3, 2), Edge(3, 4, 2), Edge(4, 3, 3),
+      Edge(4, 5, 1), Edge(4, 5, 1), Edge(5, 6, 0), Edge(4, 6, 1), Edge(6, 7, -1), Edge(7, 6, 1))
+    val dict = spark.range(0, 9, 1, 2).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
+    val g = new LinkGraph(spark, dict, edges.toDS(), 9, 3, 3)
+    val d = under(g, distributedOnly)
+    assert(g.residentOperators && !d.residentOperators)
+    def byVid(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    def outputs(v: LinkGraph) = Seq(
+      byVid(ConnectedComponents.run(v)),
+      byVid(LabelPropagation.run(v, 4)),
+      byVid(TriangleCount.perVertexTriangles(v)),
+      byVid(TriangleCount.clusteringCoefficients(v)),
+      Seq(Seq(TriangleCount.totalTriangles(v))))
+    val (want, got) = (outputs(d), outputs(g))
+    want.zip(got).zipWithIndex.foreach { case ((w, r), i) => assert(r == w, s"output $i") }
+    val lpa = got(1).map(r => r(1)).toIndexedSeq
+    assert(lpa(7) == 7L, s"a pair whose weights sum to 0 is absent: $lpa")
+    assert(got(2).map(r => r(1)) == Seq(1L, 1L, 1L, 0L, 1L, 1L, 1L, 0L, 0L), "self-loops never close a triangle")
+    assert(got(4) == Seq(Seq(2L)))
+    g.unpersistAll()
+  }
+
+  test("the resident operators charge vertices: a dense-by-max graph with a large max id runs distributed") {
+    val tiny = ExecutionPolicy(driverBytes = 256L * 1024) // 3 edges, 50,001 vertices
+    val g = LinkGraph.fromEdgeList(spark, Seq((0L, 50000L), (50000L, 7L), (7L, 0L)).toDF("src", "dst"),
+      idMode = LinkGraph.IdMode.DenseByMax, policy = tiny)
+    assert(g.numVertices == 50001L && g.numEdges == 3L)
+    def byVid(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val operators = Seq[LinkGraph => org.apache.spark.sql.DataFrame](
+      ConnectedComponents.run(_), LabelPropagation.run(_, 4), TriangleCount.perVertexTriangles)
+    for (op <- operators) {
+      val (distributed, shuffles) = shuffleWritingStages(byVid(op(g)))
+      assert(shuffles > 0, "over the budget the operator runs distributed")
+      assert(shuffleWritingStages(byVid(op(under(g, ExecutionPolicy())))) == ((distributed, 0)))
     }
     g.unpersistAll()
   }

@@ -53,6 +53,38 @@ abstract class GraftSuite extends AnyFunSuite {
   def degreeRows(g: LinkGraph): Seq[(Long, Long, Double, Double)] =
     g.degreeTable.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
 
+  /** `body`'s result and how many stages of the jobs it runs wrote shuffle
+    * output: a driver-resident operator writes none.
+    */
+  def shuffleWritingStages[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = "graft.test.regime"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val shuffles = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      private def groupOf(p: java.util.Properties) = Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (groupOf(e.properties) == "graft.test.marker") flushed.countDown()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (groupOf(e.properties) == group) stages.add(e.stageInfo.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId) && e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffles.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val result = try {
+      sc.setJobGroup(group, "regime check")
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup("graft.test.marker", "flush the listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally sc.removeSparkListener(listener)
+    (result, shuffles.get)
+  }
+
   def assertAllClose(got: Array[Double], want: Array[Double], tol: Double = 1e-9): Unit = {
     assert(got.length == want.length, s"length ${got.length} != ${want.length}")
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
