@@ -44,7 +44,8 @@ object ConnectedComponents {
     * the component — a property of the result, not of the algorithm) in
     * O(E α(E)) driver time instead of 3+ shuffle rounds of 6 exchanges each.
     * A 100 TB graph takes the star-contraction path; the contract-scale graph
-    * doesn't pay cluster-coordination prices for sub-second work.
+    * doesn't pay cluster-coordination prices for sub-second work. Its output
+    * is pinned until the graph's `unpersistAll`.
     */
   def run(graph: LinkGraph, maxIterations: Int = 50): DataFrame = {
     val spark = graph.spark
@@ -152,7 +153,8 @@ object ConnectedComponents {
     val out = graph.vertexDict
       .join(hintSmall(labels.select($"x".as("vid"), $"l")), Seq("vid"), "left")
       .select($"vid", coalesce($"l", $"vid").as("label"))
-    val (pinned, _) = Lineage.pin(out)
+    val (pinned, freePinned) = Lineage.pin(out)
+    graph.releaseOnUnpersist(freePinned)
     freeLabels()
     freeCur()
     orig.unpersist()

@@ -47,7 +47,8 @@ object LabelPropagation {
     * the graph's symmetric CSR — the same labels as the distributed loop (vote
     * sums are exact for fold-multiplicity weights; the argmax tie-break is the
     * identical (w, smallest-label) order) without paying 3 exchanges per
-    * superstep for sub-second work. A 100 TB graph takes the distributed loop.
+    * superstep for sub-second work. A 100 TB graph takes the distributed loop,
+    * whose last pinned labels stay pinned until the graph's `unpersistAll`.
     */
   def run(graph: LinkGraph, iterations: Int = 10): DataFrame = {
     val spark = graph.spark
@@ -103,6 +104,7 @@ object LabelPropagation {
           f"[graft] lpa superstep=$k ${(System.nanoTime() - stepT0) / 1e9}%.2f s")
     }
     und.unpersist()
+    graph.releaseOnUnpersist(freeLabels)
     labels
   }
 

@@ -5,31 +5,121 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.LinkGraph
 
-/** Degree-ordered triangle counting + clustering coefficient (north rule).
+/** Triangle counting + clustering coefficient over the undirected simple
+  * graph (north rule): self-loops dropped, duplicate rows and both
+  * orientations folded, weights ignored.
   *
   * Realizes what the reference *claims* to compute for "isolation risk"
-  * (/root/reference/README.md:161 "Inverse of clustering coefficient") but
-  * never implements — its code uses inverse total degree instead
-  * (/root/reference/pagerank.py:702); both variants are offered (see
-  * [[graft.analytics.RiskScores]] for the reference-faithful one).
+  * (its README.md:161, "Inverse of clustering coefficient") but never
+  * implements — its code uses inverse total degree instead (pagerank.py:702);
+  * both variants are offered (see [[graft.analytics.RiskScores]] for the
+  * reference-faithful one).
   *
-  * Algorithm: undirected-dedupe edges, orient each edge from the endpoint with
-  * smaller (degree, vid) to the larger — every triangle is then counted exactly
-  * once, and each vertex's oriented out-degree is O(sqrt(m)), which bounds the
-  * self-join's intermediate size (the standard degree-ordering trick). The
-  * wedge self-join hashes on the shared lower endpoint; the closing-edge check
-  * is an inner join against the oriented edge set.
+  * Distributed (over [[LinkGraph.residentOperators]]): undirected-dedupe the
+  * edges and orient each from the endpoint with smaller (degree, vid) to the
+  * larger, so every triangle is counted exactly once and each vertex's
+  * oriented out-degree is O(sqrt(m)), which bounds the intermediate size of
+  * the wedge self-join (hashed on the shared lower endpoint); an inner join
+  * against the oriented edge set closes each wedge.
+  *
+  * Resident, two kernels over the graph's driver edge copy, chosen by bytes
+  * ([[bitsetKernel]]), with the same integer counts:
+  *  - bitset: one row of ⌈n/64⌉ longs per vertex, built from the edges in
+  *    O(m); each undirected edge ANDs its endpoints' rows and popcounts the
+  *    common neighbours. Taken when the rows cost no more than the 32 B per
+  *    folded edge the resident charge already reserves for the symmetric CSR
+  *    they replace, so dense graphs skip the CSR's mirror sort and the
+  *    per-entry merges.
+  *  - compact-forward: the symmetric CSR's sorted rows, oriented by
+  *    (degree, vid) and merge-intersected per oriented edge. Sparse graphs
+  *    take it, where n² bits would exceed that charge.
   */
 object TriangleCount {
 
-  /** (triangles, undirected simple degree) per vertex on the driver, from the
-    * symmetric CSR with weights and self-loops ignored — integer counts, so
-    * EXACTLY the distributed plan's. Each row keeps, in place and sorted, the
-    * neighbours above it in (degree, vid) order, and every oriented edge
-    * (x, y) merge-intersects the rows of x and y (compact-forward): each
-    * triangle is found once, from its apex, at O(Σ d⁺(x) + d⁺(y)) probes.
+  /** True when the resident kernel is the bitset one: n rows of ⌈n/64⌉ longs
+    * (one array) cost at most the 32 B per folded edge that
+    * [[LinkGraph.residentOperators]] charges for the symmetric CSR.
     */
-  private def residentData(graph: LinkGraph): (Array[Long], Array[Long]) = {
+  private[graft] def bitsetKernel(graph: LinkGraph): Boolean = {
+    val cells = graph.numVertices * ((graph.numVertices + 63) / 64)
+    cells <= Int.MaxValue && cells * 8 <= graph.numEdges * 32
+  }
+
+  /** (triangles, undirected simple degree) per vertex on the driver — integer
+    * counts, so EXACTLY the distributed plan's.
+    */
+  private def residentData(graph: LinkGraph): (Array[Long], Array[Long]) =
+    if (bitsetKernel(graph)) bitsetData(graph) else forwardData(graph)
+
+  /** Row v is the bitset of v's neighbours other than v. Each undirected
+    * edge (u, v), u < v, adds the popcount of `row(u) & row(v)` to both
+    * endpoints, so every triangle adds 2 at each of its corners.
+    */
+  private def bitsetData(graph: LinkGraph): (Array[Long], Array[Long]) = {
+    val n = graph.numVertices.toInt
+    val words = (n + 63) >>> 6
+    val rows = new Array[Long](n * words)
+    val e = graph.edgesLocal
+    var i = 0
+    while (i < e.n) {
+      val s = (e.a(i) >>> 32).toInt
+      val d = e.a(i).toInt // the low 32 bits: dst
+      if (s != d) {
+        rows(s * words + (d >>> 6)) |= 1L << d
+        rows(d * words + (s >>> 6)) |= 1L << s
+      }
+      i += 1
+    }
+    val deg = new Array[Long](n)
+    val lo = new Array[Int](n) // row v's first and last non-zero words: the AND
+    val hi = new Array[Int](n) // of two rows spans only where both have bits
+    var u = 0
+    while (u < n) {
+      val ru = u * words
+      lo(u) = words
+      hi(u) = -1
+      var k = 0
+      while (k < words) {
+        val x = rows(ru + k)
+        if (x != 0) { deg(u) += java.lang.Long.bitCount(x); if (lo(u) == words) lo(u) = k; hi(u) = k }
+        k += 1
+      }
+      u += 1
+    }
+    val tri = new Array[Long](n)
+    u = 0
+    while (u < n) {
+      val ru = u * words
+      var k = u >>> 6
+      var bits = rows(ru + k) & (-2L << (u & 63)) // the neighbours above u
+      while (k <= hi(u)) {
+        while (bits != 0) {
+          val v = (k << 6) + java.lang.Long.numberOfTrailingZeros(bits)
+          bits &= bits - 1
+          val rv = v * words
+          var c = 0L
+          var j = math.max(lo(u), lo(v))
+          val end = math.min(hi(u), hi(v))
+          while (j <= end) { c += java.lang.Long.bitCount(rows(ru + j) & rows(rv + j)); j += 1 }
+          tri(u) += c
+          tri(v) += c
+        }
+        k += 1
+        if (k <= hi(u)) bits = rows(ru + k)
+      }
+      u += 1
+    }
+    u = 0
+    while (u < n) { tri(u) >>= 1; u += 1 }
+    (tri, deg)
+  }
+
+  /** Compact-forward over the symmetric CSR. Each row keeps, in place and
+    * sorted, the neighbours above it in (degree, vid) order, and every
+    * oriented edge (x, y) merge-intersects the rows of x and y: each triangle
+    * is found once, from its apex, at O(Σ d⁺(x) + d⁺(y)) probes.
+    */
+  private def forwardData(graph: LinkGraph): (Array[Long], Array[Long]) = {
     val n = graph.numVertices.toInt
     val (off, und) = graph.symmetricCsr()
     val nbr = und.a // the low 32 bits of an entry: the neighbour

@@ -50,9 +50,10 @@ import graft.model._
   * primitive driver copy of the folded edges (packed keys and weights, 16 B
   * per edge); restored parts replace the kernel altogether.
   *
-  * Connected components reads the same copy, and LPA and triangles one
-  * [[symmetricCsr]] built from it per call; one predicate picks their regime
-  * ([[residentOperators]]) and one emitter returns their arrays ([[vertexFrame]]).
+  * Connected components and dense triangles (bitset rows) read the same copy,
+  * LPA and sparse triangles one [[symmetricCsr]] built from it per call; one
+  * predicate picks their regime ([[residentOperators]]) and one emitter
+  * returns their arrays ([[vertexFrame]]).
   *
   * Per-task memory of the kernel is about 32 B × the edges in one block: a
   * packed (slot, vid) long and a weight per edge, plus the parts it emits.
@@ -112,9 +113,10 @@ final class LinkGraph(
   }
 
   /** True when CC, LPA, triangles and clustering run on the driver: the
-    * symmetric CSR (32 B per folded edge) and their vertex arrays (at most
-    * 24 B per vertex: LPA's labels, next labels, vote sums, touched list and
-    * CSR offsets) fit the driver budget.
+    * symmetric CSR (32 B per folded edge; the triangle kernel swaps it for
+    * bitset rows only when they cost no more) and their vertex arrays (at
+    * most 24 B per vertex: LPA's labels, next labels, vote sums, touched list
+    * and CSR offsets) fit the driver budget.
     */
   private[graft] def residentOperators: Boolean =
     numVertices <= Int.MaxValue.toLong && numEdges * 32 + numVertices * 24 < policy.driverBytes
@@ -154,10 +156,14 @@ final class LinkGraph(
     spark.createDataFrame(rows, StructType(("vid" +: cols.map(_._1)).map(StructField(_, LongType, nullable = false))))
   }
 
-  /** Broadcasts this graph's caches read; destroyed by [[unpersistAll]]. */
-  @transient private val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
+  /** Release handles run by [[unpersistAll]]: the broadcasts this graph's
+    * caches read and the pinned outputs of the distributed operators.
+    */
+  @transient private val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
-  private def track[T](b: Broadcast[T]): Broadcast[T] = { broadcasts += b; b }
+  private def track[T](b: Broadcast[T]): Broadcast[T] = { releases += (() => b.destroy()); b }
+
+  private[graft] def releaseOnUnpersist(free: () => Unit): Unit = releases += free
 
   /** True when the blocked adjacency can be ASSEMBLED on the driver: parts
     * not restored, adjacency bytes under the driver budget, vids in Int range.
@@ -414,11 +420,11 @@ final class LinkGraph(
     LinkGraph.fromDenseWeighted(spark, edges.filter($"src" < kk && $"dst" < kk), kk, policy = policy)
   }
 
-  /** Release every cache and broadcast this graph MATERIALIZED. Each lazy
-    * layout checks its built flag first — unconditionally touching the lazy
-    * vals used to FORCE a full build of layouts the caller never used (e.g. a
-    * resident-regime run paid for the dst-major columnar build inside its own
-    * teardown).
+  /** Release every cache, broadcast and operator-output pin this graph
+    * MATERIALIZED. Each lazy layout checks its built flag first —
+    * unconditionally touching the lazy vals used to FORCE a full build of
+    * layouts the caller never used (e.g. a resident-regime run paid for the
+    * dst-major columnar build inside its own teardown).
     */
   def unpersistAll(): Unit = {
     if (dstLayoutBuilt) dstLayout.unpersist(false)
@@ -426,8 +432,8 @@ final class LinkGraph(
     if (degreeTableBuilt) degreeTable.unpersist()
     edges.unpersist()
     vertexDict.unpersist()
-    broadcasts.foreach(_.destroy())
-    broadcasts.clear()
+    releases.foreach(_())
+    releases.clear()
   }
 }
 

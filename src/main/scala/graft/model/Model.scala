@@ -110,8 +110,9 @@ object PageRankMode {
   *    src-major parts)
   *  - the resident graph operators (connected components, label propagation,
   *    triangles and clustering, one predicate for all): 32 B per folded edge
-  *    (the symmetric CSR, two entries of a packed key and a weight) plus 24 B
-  *    per vertex (the operators' vertex arrays)
+  *    (the symmetric CSR, two entries of a packed key and a weight; the
+  *    triangle kernel's bitset rows are taken only where they cost no more)
+  *    plus 24 B per vertex (the operators' vertex arrays)
   *  - the vector-resident PageRank regime: 8 B per vertex (the rank vector)
   *  - the broadcast hint on the label frames of distributed connected
   *    components and label propagation: 16 B per vertex (two longs per row)

@@ -239,6 +239,60 @@ class GraphAlgoSpec extends GraftSuite {
     g.unpersistAll()
   }
 
+  /** Per-vertex (triangles, simple degree) of the undirected simple graph of
+    * `edges` over vids 0 until n: self-loops dropped, weights ignored.
+    */
+  private def bruteTriangles(n: Int, edges: Seq[graft.model.Edge]): (Seq[Long], Seq[Long]) = {
+    val adj = Array.fill(n)(Set.empty[Int])
+    edges.filter(e => e.src != e.dst).foreach { e =>
+      adj(e.src.toInt) += e.dst.toInt; adj(e.dst.toInt) += e.src.toInt
+    }
+    val tri = adj.map(nb => nb.toSeq.map(a => (nb & adj(a)).size.toLong).sum / 2)
+    (tri.toSeq, adj.map(_.size.toLong).toSeq)
+  }
+
+  test("resident triangle kernels equal brute force and the distributed twins: bitset around word edges, sparse compact-forward") {
+    import graft.model.{Edge, VertexMapping}
+    val rng = new scala.util.Random(97)
+    // dense graphs whose row length straddles one and two words: self-loops,
+    // duplicate rows and both orientations; 0-2 is only a zero-weight edge and
+    // closes the triangle 0-1-2, and 3-4 only a −1/+1 pair
+    def dense(n: Int): Seq[Edge] = {
+      val random = for {
+        s <- 0 until n; d <- 0 until n
+        if rng.nextDouble() < 0.3 && !Set(Set(0, 2), Set(3, 4))(Set(s, d))
+      } yield Edge(s, d, 1)
+      val dups = random.take(n) ++ Seq.tabulate(5)(i => Edge(10 + i, 10 + i, 2))
+      random ++ dups ++ Seq(Edge(0, 1, 1), Edge(1, 2, 1), Edge(0, 2, 0), Edge(3, 4, -1), Edge(4, 3, 1))
+    }
+    // a band of width 40 over 192 vertices: most rows span one or two of
+    // their three words
+    val band = for (s <- 0 until 192; d <- s + 1 to (s + 40 min 191) if rng.nextDouble() < 0.5) yield Edge(s, d, 1)
+    // 2,000 vertices and 3,000 edges: n² bits cost more than the CSR
+    val sparse = Seq.fill(3000)(Edge(rng.nextInt(2000), rng.nextInt(2000), 1)) ++
+      Seq(Edge(5, 5, 1), Edge(6, 7, 1), Edge(6, 7, 1), Edge(7, 6, 1))
+    val graphs = Seq(63, 64, 65, 128, 129).map(n => (n, dense(n), true)) ++
+      Seq((192, band, true), (2000, sparse, false))
+    for ((n, edges, bitset) <- graphs) {
+      val dict = spark.range(0, n, 1, 2).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
+      val g = new LinkGraph(spark, dict, edges.toDS(), n, 3, (n + 2) / 3)
+      val d = under(g, distributedOnly)
+      assert(g.residentOperators && TriangleCount.bitsetKernel(g) == bitset, s"n=$n")
+      val (tri, deg) = bruteTriangles(n, edges)
+      def byVid(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+      val per = byVid(TriangleCount.perVertexTriangles(g))
+      val clustering = byVid(TriangleCount.clusteringCoefficients(g))
+      assert(per.map(_(1)) == tri, s"n=$n")
+      assert(clustering.map(r => (r(1), r(2))) == tri.zip(deg), s"n=$n")
+      assert(clustering.map(_(3)) == tri.zip(deg).map { case (t, k) => if (k >= 2) 2.0 * t / (k * (k - 1)) else 0.0 })
+      assert(TriangleCount.totalTriangles(g) == tri.sum / 3)
+      assert(per == byVid(TriangleCount.perVertexTriangles(d)), s"n=$n")
+      assert(clustering == byVid(TriangleCount.clusteringCoefficients(d)), s"n=$n")
+      assert(TriangleCount.totalTriangles(d) == tri.sum / 3)
+      g.unpersistAll()
+    }
+  }
+
   /** Sparse signed 64-bit ids (negatives, values past 2³², both extremes) over
     * 4 blocks of 10 vids. The 10 smallest ids are only ever sources, so
     * block 0 has no in-edges; duplicate pairs fold into weights.
@@ -563,12 +617,16 @@ class GraphAlgoSpec extends GraftSuite {
       g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
       g.degreeTable.count()
       PageRank.run(g, tolerance = 0.0, maxIterations = 2).free()
-      if (policy == ExecutionPolicy()) // the resident operators hold nothing either
-        Seq(ConnectedComponents.run(g), LabelPropagation.run(g, 4), TriangleCount.perVertexTriangles(g),
-          TriangleCount.clusteringCoefficients(g)).foreach(_.collect())
+      // resident outputs hold nothing; distributed ones are released with the
+      // graph while the caller still holds them (the context tracks persisted
+      // RDDs weakly, so a dropped output would hide its pin)
+      val outputs = Seq(ConnectedComponents.run(g), LabelPropagation.run(g, 4), TriangleCount.perVertexTriangles(g),
+        TriangleCount.clusteringCoefficients(g))
+      outputs.foreach(_.collect())
       g.unpersistAll()
       val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
       assert(left.isEmpty, s"left cached ($policy): ${left.values.mkString(", ")}")
+      assert(outputs.length == 4) // the outputs stay reachable until the check
     }
   }
 
