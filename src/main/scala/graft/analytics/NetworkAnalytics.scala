@@ -1,8 +1,13 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 import graft.graph.LinkGraph
 
@@ -17,6 +22,12 @@ import graft.graph.LinkGraph
   * sample stddev. Threshold-dependent aggregates run as two phases
   * (percentile scalars first, then the conditional agg with literal
   * thresholds) because SQL forbids nesting aggregates.
+  *
+  * The risk path keeps the reference's NumPy shape on driver arrays when its
+  * vectors are small: [[compositeRisk]] collects the degree table once and
+  * builds the prior on the driver (gated by [[LinkGraph.residentPrior]]), and
+  * [[highRiskProviders]] joins, masks and sorts collected vectors of at most
+  * [[ValueDist.MaxLocalDistinct]] rows. Larger inputs run the Catalyst plans.
   */
 object NetworkAnalytics {
 
@@ -177,9 +188,60 @@ object NetworkAnalytics {
   /** Composite risk scores (pagerank.py:690-713): equal-weight mix of
     * connectivity, referral imbalance, and (inverse-degree) isolation risk,
     * each min-max scaled, plus 0.001 baseline; normalized to sum 1.
-    * Returns (vid, value).
+    * Returns (vid, value), vid-ascending.
+    *
+    * When the graph's vertex arrays fit the driver budget
+    * ([[LinkGraph.residentPrior]]) this is the reference's own shape: one job
+    * collects (inDeg, outDeg) from the cached degree table, the driver
+    * computes the maxes, each row's `0.001 + ⅓·(c/max) + …` in that order and
+    * the total, and the prior is returned through [[LinkGraph.vertexFrame]].
+    * Otherwise the same per-row expression runs as a Catalyst plan, pinned
+    * once and released by the graph's `unpersistAll`.
     */
-  def compositeRisk(graph: LinkGraph): DataFrame = {
+  def compositeRisk(graph: LinkGraph): DataFrame =
+    if (graph.residentPrior) compositeRiskOnDriver(graph) else compositeRiskPlan(graph)
+
+  private def compositeRiskOnDriver(graph: LinkGraph): DataFrame = {
+    val spark = graph.spark
+    import spark.implicits._
+    // the degree table holds vid-ascending runs tiling 0..n-1 in partition
+    // order, so each partition is (first vid, its in- and out-degrees)
+    val parts = graph.degreeTable.select($"vid", $"inDeg", $"outDeg").queryExecution.toRdd
+      .mapPartitions { rows =>
+        var first = -1L
+        val (in, out) = (new mutable.ArrayBuilder.ofDouble, new mutable.ArrayBuilder.ofDouble)
+        rows.foreach { r =>
+          if (first < 0) first = r.getLong(0)
+          in += r.getDouble(1); out += r.getDouble(2)
+        }
+        Iterator.single((first, in.result(), out.result()))
+      }
+      .collect()
+    val n = graph.numVertices.toInt
+    val in = new Array[Double](n)
+    val out = new Array[Double](n)
+    var at = 0
+    parts.foreach { case (first, pi, po) =>
+      require(pi.isEmpty || first == at, s"degree table partition starts at vid $first, expected $at")
+      System.arraycopy(pi, 0, in, at, pi.length); System.arraycopy(po, 0, out, at, po.length)
+      at += pi.length
+    }
+    require(at == n, s"degree table has $at rows, expected $n")
+    def imb(v: Int): Double = if (in(v) > 0) out(v) / (in(v) + 1e-10) else out(v)
+    def iso(v: Int): Double = 1.0 / (1.0 + (in(v) + out(v)))
+    var (mT, mI, mO) = (0.0, 0.0, 0.0)
+    for (v <- 0 until n) {
+      mT = math.max(mT, in(v) + out(v)); mI = math.max(mI, imb(v)); mO = math.max(mO, iso(v))
+    }
+    def term(c: Double, m: Double): Double = if (m > 0) 1.0 / 3 * (c / m) else 1.0 / 3 * 0.0
+    val prior = Array.tabulate(n)(v => 0.001 + term(in(v) + out(v), mT) + term(imb(v), mI) + term(iso(v), mO))
+    var total = 0.0
+    prior.foreach(total += _)
+    for (v <- 0 until n) prior(v) /= total
+    graph.vertexFrame("value" -> prior)
+  }
+
+  private def compositeRiskPlan(graph: LinkGraph): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
     val deg = graph.degreeTable.withColumn("totalDeg", $"inDeg" + $"outDeg")
@@ -187,10 +249,7 @@ object NetworkAnalytics {
       .withColumn("imb", when($"inDeg" > 0, $"outDeg" / ($"inDeg" + lit(1e-10))).otherwise($"outDeg"))
       .withColumn("iso", lit(1.0) / (lit(1.0) + $"totalDeg"))
     // maxes as DRIVER LITERALS: max() is order-insensitive (exact), and with
-    // the scalars known at plan time the when()-branch resolves statically —
-    // same per-row arithmetic (1/3 · c/max, or 1/3 · 0.0) as the previous
-    // crossJoin(broadcast(maxes)) shape, minus one broadcast-exchange job and
-    // a join in every downstream evaluation of the prior's plan (guide §2.4).
+    // the scalars known at plan time the when()-branch resolves statically
     val mrow = withComponents
       .agg(max($"totalDeg").as("mT"), max($"imb").as("mI"), max($"iso").as("mO"))
       .first()
@@ -204,13 +263,10 @@ object NetworkAnalytics {
           + term($"totalDeg", mx(0))
           + term($"imb", mx(1))
           + term($"iso", mx(2))).as("raw"))
-    // pin the scored frame ONCE: the returned prior is consumed repeatedly
-    // (the total below, the engine's normalization sum, its chunking pass,
-    // risk statistics…) and every consumption used to replay the maxes
-    // broadcast + degree join chain — 3+ full evaluations per risk query.
-    // The localCheckpoint cache is reclaimed by the ContextCleaner when the
-    // frame becomes unreferenced (same pattern as keyProviders).
-    val (scoredP, _) = graft.graph.Lineage.pin(scored)
+    // pinned once: the prior is consumed repeatedly (the total below, the
+    // engine's normalization sum and chunking pass, risk statistics…)
+    val (scoredP, free) = graft.graph.Lineage.pin(scored)
+    graph.releaseOnUnpersist(free)
     val total = scoredP.agg(sum($"raw")).first().getDouble(0)
     scoredP.select($"vid", ($"raw" / lit(total)).as("value"))
   }
@@ -259,18 +315,101 @@ object NetworkAnalytics {
     spark.createDataFrame(java.util.Collections.singletonList(row), aggDf.schema)
   }
 
-  /** Per-provider high-risk records (pagerank.py:364-386): providers above the
-    * p90 threshold with amplification and empirical-CDF percentile, sorted by
-    * risk desc (vid tiebreak for determinism).
+  /** Per-provider high-risk records (pagerank.py:364-386): the inner join of
+    * the propagated risk x and the prior r0 on vid, kept where x is above its
+    * p90, with amplification and empirical-CDF percentile, sorted by risk desc
+    * (vid tiebreak for determinism).
+    *
+    * Inputs of at most [[ValueDist.MaxLocalDistinct]] rows each, as (long vid,
+    * double value) with no null and no repeated vid, run in the reference's
+    * shape on the driver: two jobs with no shuffle count and collect both,
+    * and the driver joins them by vid, takes p90 and the CDF from one
+    * driver-built [[ValueDist]], masks, sorts and returns a driver-built
+    * frame. Any other input runs the Catalyst plan ([[highRiskPlan]]), with
+    * the same columns, types and row order.
     */
-  def highRiskProviders(propagated: DataFrame, prior: DataFrame): DataFrame = {
+  def highRiskProviders(propagated: DataFrame, prior: DataFrame): DataFrame =
+    driverVectors(Seq(propagated, prior), ValueDist.MaxLocalDistinct)
+      .flatMap(v => highRiskOnDriver(propagated.sparkSession, v(0), v(1)))
+      .getOrElse(highRiskPlan(propagated, prior))
+
+  /** [[highRiskProviders]] on collected (vid, x) and (vid, r0) vectors; None
+    * when a vid repeats. Comparisons follow Spark SQL's double order (−0.0
+    * equals 0.0, NaN above every number).
+    */
+  private def highRiskOnDriver(
+      spark: SparkSession, x: (Array[Long], Array[Double]), r0: (Array[Long], Array[Double])): Option[DataFrame] = {
+    val ((xk, xv), (rk, rv)) = (x, r0)
+    LinkGraph.dualSort(xk, xv, 0, xk.length - 1)
+    LinkGraph.dualSort(rk, rv, 0, rk.length - 1)
+    if (Seq(xk, rk).exists(k => (1 until k.length).exists(i => k(i) == k(i - 1)))) return None
+    val (vid, xs, rs) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofDouble,
+      new mutable.ArrayBuilder.ofDouble)
+    var (i, j) = (0, 0)
+    while (i < xk.length && j < rk.length) {
+      if (xk(i) < rk(j)) i += 1
+      else if (xk(i) > rk(j)) j += 1
+      else { vid += xk(i); xs += xv(i); rs += rv(j); i += 1; j += 1 }
+    }
+    val (vids, risk, orig) = (vid.result(), xs.result(), rs.result())
+    def gt(a: Double, b: Double): Boolean = SQLOrderingUtil.compareDoubles(a, b) > 0
+    val dist = ValueDist.ofValues(spark, risk)
+    val thr = dist.percentile(0.9)
+    val keep = risk.indices.filter(k => gt(risk(k), thr)).toArray.sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(risk(a), risk(b))
+      c > 0 || c == 0 && vids(a) < vids(b)
+    }
+    def column(f: Int => Double): Array[Double] = keep.map(f)
+    val keptVids: Array[Long] = keep.map(vids(_))
+    Some(LinkGraph.arraysFrame(spark, keep.length, None, Seq(
+      "vid" -> keptVids,
+      "risk_score" -> column(risk(_)),
+      "original_risk" -> column(orig(_)),
+      "amplification_factor" -> column(k => if (gt(orig(k), 0.0)) risk(k) / orig(k) else 1.0),
+      "risk_percentile" -> column(k => dist.cdfAt(risk(k))))))
+  }
+
+  /** Each frame's (vid, value) rows as driver arrays in row order, or None
+    * when a frame is not (long vid, double value), has more than `cap` rows
+    * or holds a null. Two jobs with no shuffle: one counts each partition's
+    * rows, and only when every frame is within `cap` does the second collect.
+    */
+  private def driverVectors(frames: Seq[DataFrame], cap: Long): Option[Seq[(Array[Long], Array[Double])]] = {
+    def typed(f: DataFrame, name: String, t: DataType) = f.schema.exists(c => c.name == name && c.dataType == t)
+    if (!frames.forall(f => typed(f, "vid", LongType) && typed(f, "value", DoubleType))) return None
+    val sc = frames.head.sparkSession.sparkContext
+    val rows = frames.map(_.select("vid", "value").queryExecution.toRdd)
+    def each[T](f: Iterator[InternalRow] => T): Array[(Int, T)] =
+      sc.union(rows.zipWithIndex.map { case (r, side) => r.mapPartitions(it => Iterator.single((side, f(it)))) })
+        .collect()
+    val counts = each(_.size.toLong)
+    if (frames.indices.exists(side => counts.filter(_._1 == side).map(_._2).sum > cap)) return None
+    val parts = each { it =>
+      val (vids, vals) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofDouble)
+      var nulls = false
+      it.foreach { r =>
+        nulls ||= r.isNullAt(0) || r.isNullAt(1)
+        if (!nulls) { vids += r.getLong(0); vals += r.getDouble(1) }
+      }
+      if (nulls) None else Some((vids.result(), vals.result()))
+    }
+    if (parts.exists(_._2.isEmpty)) None
+    else Some(frames.indices.map { side =>
+      val mine = parts.filter(_._1 == side).map(_._2.get)
+      (mine.flatMap(_._1), mine.flatMap(_._2))
+    })
+  }
+
+  /** [[highRiskProviders]] as a Catalyst plan: a join, one [[ValueDist]]
+    * build for both the p90 threshold and the CDF join, a filter and a sort.
+    */
+  private[graft] def highRiskPlan(propagated: DataFrame, prior: DataFrame): DataFrame = {
     val spark = propagated.sparkSession
     import spark.implicits._
     val joined = propagated
       .select($"vid", $"value".as("x"))
       .join(prior.select($"vid", $"value".as("r0")), Seq("vid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE distribution build serves both the p90 threshold and the CDF join
     val dist = ValueDist.of(joined, "x")
     val thr = dist.percentile(0.9)
     val withCdf = joinCdf(joined, "x", dist)
@@ -318,7 +457,7 @@ object NetworkAnalytics {
     val centThr = { val t = dCent.percentile(0.9); dCent.release(); t }
     // pin the (≤ 3n/10-row) result BEFORE dropping the scratch cache — round 3
     // unpersisted first, so every later consumption re-ran the degree⋈ranks
-    // join; the pin is reclaimed by the ContextCleaner when unreferenced
+    // join; the graph's unpersistAll releases the pin
     val result = joined
       .select(
         $"vid", $"score".as("centrality_score"),
@@ -327,7 +466,8 @@ object NetworkAnalytics {
         ($"inDeg" > lit(authThr)).as("is_authority"),
         ($"score" > lit(centThr)).as("is_central"))
       .filter($"is_hub" || $"is_authority" || $"is_central")
-    val (pinned, _) = graft.graph.Lineage.pin(result)
+    val (pinned, free) = graft.graph.Lineage.pin(result)
+    graph.releaseOnUnpersist(free)
     joined.unpersist(false)
     pinned.orderBy($"vid")
   }

@@ -91,7 +91,7 @@ final class ValueDist private (
       val rows = new java.util.ArrayList[Row](vs.length)
       var i = 0
       while (i < vs.length) {
-        rows.add(Row(vs(i), cum(i).toDouble / n * 100.0))
+        rows.add(Row(vs(i), pctRank(cum(i))))
         i += 1
       }
       spark.createDataFrame(
@@ -100,6 +100,16 @@ final class ValueDist private (
     case None =>
       distributed.get._1.select(col("__v"), (col("__cum") / lit(n.toDouble) * 100.0).as("pct_rank"))
   }
+
+  /** [[cdf]]'s pct_rank at `v`, a value of the column (driver-local regime). */
+  private[analytics] def cdfAt(v: Double): Double = {
+    val (vs, cum) = local.get
+    val i = java.util.Arrays.binarySearch(vs, v + 0.0)
+    require(i >= 0, s"$v is not a value of the column")
+    pctRank(cum(i))
+  }
+
+  private def pctRank(cum: Long): Double = cum.toDouble / n * 100.0
 
   /** Free cluster state (no-op in the driver-local regime). The [[cdf]] frame
     * of the distributed regime must not be evaluated after this.
@@ -181,17 +191,35 @@ object ValueDist {
       perPartition.foreach(_(i).foreach { case (v, c) =>
         merged.merge(v, c, (a, b) => a + b); ()
       })
-      val pairs = merged.entrySet().iterator().asScala
-        .map(e => (e.getKey.doubleValue(), e.getValue.longValue())).toArray
-        .sortBy(_._1)
-      val vs = pairs.map(_._1)
-      val cum = new Array[Long](pairs.length)
-      var acc = 0L
-      var j = 0
-      while (j < pairs.length) { acc += pairs(j)._2; cum(j) = acc; j += 1 }
-      require(acc == knownN, s"distinct-count sum $acc != expected n $knownN for ${valueCols(i)}")
-      new ValueDist(knownN, spark, Some((vs, cum)), None)
+      fromCounts(spark, knownN, pairsOf(merged), valueCols(i))
     }
+  }
+
+  /** The driver-local distribution of values already on the driver, by the
+    * same sort, prefix sums and percentile rule as a collected column. As in
+    * Spark's grouping, −0.0 counts as 0.0.
+    */
+  private[analytics] def ofValues(spark: SparkSession, values: Array[Double]): ValueDist = {
+    val counts = new java.util.HashMap[Double, Long]()
+    values.foreach(v => counts.merge(v + 0.0, 1L, (a, b) => a + b))
+    fromCounts(spark, values.length, pairsOf(counts), "driver values")
+  }
+
+  private def pairsOf(counts: java.util.HashMap[Double, Long]): Array[(Double, Long)] =
+    counts.entrySet().iterator().asScala.map(e => (e.getKey.doubleValue(), e.getValue.longValue())).toArray
+
+  /** The driver-local regime from (distinct value, count) pairs: sorted by
+    * value, with cumulative counts that must sum to `n`.
+    */
+  private def fromCounts(spark: SparkSession, n: Long, counts: Array[(Double, Long)], what: String): ValueDist = {
+    val pairs = counts.sortBy(_._1)
+    val vs = pairs.map(_._1)
+    val cum = new Array[Long](pairs.length)
+    var acc = 0L
+    var i = 0
+    while (i < pairs.length) { acc += pairs(i)._2; cum(i) = acc; i += 1 }
+    require(acc == n, s"distinct-count sum $acc != expected n $n for $what")
+    new ValueDist(n, spark, Some((vs, cum)), None)
   }
 
   /** Build the distribution of `valueCol` (cast to double). Nulls are dropped
@@ -222,14 +250,7 @@ object ValueDist {
         .agg(count(lit(1)).as("__c"))
         .as[(Double, Long)] // primitive-friendly collect: tuples, not boxed Rows
         .collect()
-        .sortBy(_._1)
-      val vs = pairs.map(_._1)
-      val cum = new Array[Long](pairs.length)
-      var acc = 0L
-      var i = 0
-      while (i < pairs.length) { acc += pairs(i)._2; cum(i) = acc; i += 1 }
-      require(acc == n, s"distinct-count sum $acc != expected n $n for $valueCol")
-      new ValueDist(n, spark, Some((vs, cum)), None)
+      fromCounts(spark, n, pairs, valueCol)
     } else {
       val (cumFrame, total, release) = NetworkAnalytics.cumulativeCounts(vals, "__v")
       new ValueDist(total, spark, None, Some((cumFrame, release)))

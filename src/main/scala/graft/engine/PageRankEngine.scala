@@ -198,12 +198,13 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     def result(norm: Option[Double]): (Dataset[RankChunk], () => Unit)
   }
 
+  private def rawPrior: DataFrame = cfg.prior.filter(_ != null).getOrElse(
+    throw new IllegalArgumentException("RiskPropagation requires cfg.prior (vid, value)"))
+
   /** The prior scaled to sum 1 (pagerank.py:285), as (vid, value) rows. */
   private def normalizedPrior: DataFrame = {
-    val prior = cfg.prior.filter(_ != null).getOrElse(
-      throw new IllegalArgumentException("RiskPropagation requires cfg.prior (vid, value)"))
-    val total = prior.agg(sum($"value")).first().getDouble(0)
-    prior.select($"vid".cast("long").as("vid"), ($"value" / lit(total)).as("value"))
+    val total = rawPrior.agg(sum($"value")).first().getDouble(0)
+    rawPrior.select($"vid".cast("long").as("vid"), ($"value" / lit(total)).as("value"))
   }
 
   /** z = 1/n − (d/n)·[c ≠ 0] (original_pagerank/pagerank.py:130-134): its
@@ -217,14 +218,25 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
   private final class OnDriver(start: Option[DataFrame]) extends RankVector {
     private val size = n.toInt
 
+    private def rowsOf(df: DataFrame): Array[(Long, Double)] =
+      df.select($"vid".cast("long"), $"value".cast("double")).as[(Long, Double)].collect()
+
     private def collected(rows: DataFrame, fill: Double): Array[Double] = {
       val arr = Array.fill(size)(fill)
-      rows.select($"vid".cast("long"), $"value".cast("double")).as[(Long, Double)].collect()
-        .foreach { case (vid, v) => arr(vid.toInt) = v }
+      rowsOf(rows).foreach { case (vid, v) => arr(vid.toInt) = v }
       arr
     }
 
-    private lazy val prior = collected(normalizedPrior, 0.0)
+    /** The prior scaled to sum 1 (pagerank.py:285): collected once, its total
+      * taken from the collected rows.
+      */
+    private lazy val prior = {
+      val rows = rowsOf(rawPrior)
+      val total = rows.foldLeft(0.0)(_ + _._2)
+      val arr = new Array[Double](size)
+      rows.foreach { case (vid, v) => arr(vid.toInt) = v / total }
+      arr
+    }
     private val aux: Array[Double] = mode match {
       case PageRankMode.RiskPropagation => PageRankEngine.times(prior, 1.0 - d) // delta, pagerank.py:295
       case PageRankMode.MolerDangling => collected(zLinkedRows, zBase)

@@ -6,7 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.model._
@@ -121,6 +121,12 @@ final class LinkGraph(
   private[graft] def residentOperators: Boolean =
     numVertices <= Int.MaxValue.toLong && numEdges * 32 + numVertices * 24 < policy.driverBytes
 
+  /** True when the composite risk prior is built on the driver: the collected
+    * in- and out-degrees, the prior and its output slices, 32 B per vertex.
+    */
+  private[graft] def residentPrior: Boolean =
+    numVertices <= Int.MaxValue.toLong && numVertices * 32 < policy.driverBytes
+
   /** Broadcast hint for an n-row label frame (two longs per row) that the
     * distributed operators join against edge-scale frames: pinned frames report
     * default (huge) statistics. Over the driver budget the shuffle join stays.
@@ -144,17 +150,11 @@ final class LinkGraph(
     (offsets, rows)
   }
 
-  /** Per-vertex driver arrays as a (vid, name…) frame of longs, one slice per
-    * task: no broadcast, no pin, no job.
+  /** Per-vertex driver arrays (longs or doubles) as a (vid, name…) frame, one
+    * slice per task: no broadcast, no pin, no job.
     */
-  private[graft] def vertexFrame(cols: (String, Array[Long])*): DataFrame = {
-    val rows = LinkGraph.sliced(spark, numVertices.toInt) { (lo, hi) =>
-      (lo, cols.map(c => java.util.Arrays.copyOfRange(c._2, lo, hi)))
-    }.flatMap { case (lo, cs) =>
-      Iterator.range(0, cs.head.length).map(i => Row.fromSeq((lo + i).toLong +: cs.map(_(i))))
-    }
-    spark.createDataFrame(rows, StructType(("vid" +: cols.map(_._1)).map(StructField(_, LongType, nullable = false))))
-  }
+  private[graft] def vertexFrame(cols: (String, Array[_])*): DataFrame =
+    LinkGraph.arraysFrame(spark, numVertices.toInt, Some("vid"), cols)
 
   /** Release handles run by [[unpersistAll]]: the broadcasts this graph's
     * caches read and the pinned outputs of the distributed operators.
@@ -915,6 +915,31 @@ object LinkGraph {
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     spark.sparkContext.parallelize(
       (0 until p).map(s => cut((s.toLong * len / p).toInt, ((s + 1).toLong * len / p).toInt)), p)
+  }
+
+  /** Driver columns of length `len` (each an `Array[Long]` or an
+    * `Array[Double]`) as a frame in array order, one slice per task: no
+    * broadcast, no pin, no job. `index` names a leading long column that holds
+    * each row's position.
+    */
+  private[graft] def arraysFrame(
+      spark: SparkSession, len: Int, index: Option[String], cols: Seq[(String, Array[_])]): DataFrame = {
+    def cut(a: Array[_], lo: Int, hi: Int): Array[_] = a match {
+      case d: Array[Double] => java.util.Arrays.copyOfRange(d, lo, hi)
+      case l: Array[Long] => java.util.Arrays.copyOfRange(l, lo, hi)
+    }
+    val indexed = index.isDefined
+    val rows = sliced(spark, len)((lo, hi) => (lo, hi - lo, cols.map(c => cut(c._2, lo, hi)))).flatMap {
+      case (lo, k, cs) =>
+        Iterator.range(0, k).map { i =>
+          val vs = cs.map(c => c(i))
+          Row.fromSeq(if (indexed) (lo + i).toLong +: vs else vs)
+        }
+    }
+    val fields = index.map(StructField(_, LongType, nullable = false)).toSeq ++ cols.map { case (name, a) =>
+      StructField(name, if (a.isInstanceOf[Array[Double]]) DoubleType else LongType, nullable = false)
+    }
+    spark.createDataFrame(rows, StructType(fields))
   }
 
   /** Folds sorted packed `rows` in place: each run of equal keys becomes one

@@ -114,6 +114,8 @@ object PageRankMode {
   *    triangle kernel's bitset rows are taken only where they cost no more)
   *    plus 24 B per vertex (the operators' vertex arrays)
   *  - the vector-resident PageRank regime: 8 B per vertex (the rank vector)
+  *  - the driver-built composite risk prior: 32 B per vertex (the collected
+  *    in- and out-degrees, the prior, and the output frame's slices)
   *  - the broadcast hint on the label frames of distributed connected
   *    components and label propagation: 16 B per vertex (two longs per row)
   * `driverBytes = 0` sends every operator down its distributed path.

@@ -97,16 +97,100 @@ class AnalyticsSpec extends GraftSuite {
     assert(last.getAs[Long]("cnt") == 10) // 91..100, max inclusive
   }
 
+  /** pagerank.py:690-713 on degree arrays: each component min-max scaled
+    * (zero when its max is not positive), mixed with ⅓ weights on a 0.001
+    * baseline, normalized to sum 1.
+    */
+  private def compositeReference(in: Array[Double], out: Array[Double]): Array[Double] = {
+    val total = in.indices.map(v => in(v) + out(v)).toArray
+    val imbalance = in.indices.map(v => if (in(v) > 0) out(v) / (in(v) + 1e-10) else out(v)).toArray
+    val isolation = total.map(t => 1.0 / (1.0 + t))
+    def scaled(a: Array[Double]) = { val m = a.max; a.map(x => if (m > 0) x / m else 0.0) }
+    val (c, i, o) = (scaled(total), scaled(imbalance), scaled(isolation))
+    val raw = in.indices.map(v => 0.001 + (1.0 / 3) * c(v) + (1.0 / 3) * i(v) + (1.0 / 3) * o(v)).toArray
+    raw.map(_ / raw.sum)
+  }
+
   test("composite risk is a probability distribution with the 0.001 baseline mix") {
-    val g = LinkGraph.fromEdgeList(
-      spark,
-      Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)).toDF("src", "dst"),
-      numBlocks = 2)
-    val risk = NetworkAnalytics.compositeRisk(g)
-    val total = risk.agg(sum($"value")).first().getDouble(0)
-    assert(math.abs(total - 1.0) < 1e-12)
-    assert(risk.filter($"value" <= 0).count() == 0)
+    // dense-by-max ids: vertex 4 has no edge at all, vertex 5 no in-edge, and
+    // the duplicate 1→2 rows give a weight of 2
+    val edges = Seq((0L, 1L), (1L, 2L), (1L, 2L), (2L, 0L), (3L, 0L), (5L, 3L), (2L, 6L), (6L, 6L))
+    val g = LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"), numBlocks = 2, idMode = LinkGraph.IdMode.DenseByMax)
+    val n = g.numVertices.toInt
+    val (in, out) = (new Array[Double](n), new Array[Double](n))
+    edges.foreach { case (s, d) => out(s.toInt) += 1; in(d.toInt) += 1 }
+    assert(in(4) + out(4) == 0.0 && in(5) == 0.0 && out(5) > 0)
+    val want = compositeReference(in, out)
+    val d = under(g, distributedOnly)
+    assert(g.residentPrior && !d.residentPrior)
+    for (view <- Seq(g, d)) {
+      val risk = NetworkAnalytics.compositeRisk(view)
+      assert(risk.schema.map(f => (f.name, f.dataType)) ==
+        Seq("vid" -> org.apache.spark.sql.types.LongType, "value" -> org.apache.spark.sql.types.DoubleType))
+      val got = risk.as[(Long, Double)].collect()
+      assert(got.map(_._1).toSeq == (0L until n), "one row per vertex, vid-ascending")
+      got.foreach { case (v, x) =>
+        assert(math.abs(x - want(v.toInt)) <= 1e-12 * want(v.toInt), s"vid $v (${view.policy}): $x vs ${want(v.toInt)}")
+      }
+      assert(math.abs(got.map(_._2).sum - 1.0) < 1e-12)
+      assert(got.forall(_._2 > 0))
+    }
+    d.unpersistAll()
     g.unpersistAll()
+  }
+
+  test("high-risk providers equal a brute-force reference and the Catalyst plan") {
+    // np.percentile's linear rule over the joined x, share <= v as the CDF,
+    // rows above p90 by (risk desc, vid)
+    def reference(x: Seq[(Long, Double)], r0: Seq[(Long, Double)]): Seq[(Long, Double, Double, Double, Double)] = {
+      val prior = r0.toMap
+      val joined = x.filter(r => prior.contains(r._1)).map { case (v, xv) => (v, xv, prior(v)) }
+      val sorted = joined.map(_._2).sorted.toArray
+      val thr = npPercentile(sorted, 90)
+      joined.filter(_._2 > thr)
+        .map { case (v, xv, r) =>
+          (v, xv, r, if (r > 0) xv / r else 1.0, sorted.count(_ <= xv).toDouble / sorted.length * 100.0)
+        }
+        .sortBy(r => (-r._2, r._1))
+    }
+    def frame(rows: Seq[(Long, Double)]) = spark.sparkContext.parallelize(rows, 3).toDF("vid", "value")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Double, Double, Double, Double)].collect().toSeq
+    val rng = new scala.util.Random(29)
+    val cases = Seq(
+      // ties straddling p90: sorted x(16..18) = 0.5 and the threshold is 0.5
+      "ties at p90" -> (Seq.tabulate(20)(i => (i.toLong, if (i < 16) i / 100.0 else if (i < 19) 0.5 else 0.7)),
+        Seq.tabulate(20)(i => (i.toLong, 0.05))),
+      // heavy random ties over shuffled vids: equal risks are ordered by vid alone
+      "vid breaks ties" -> (rng.shuffle((0 until 300).toList).map(v => (v.toLong, rng.nextInt(12) / 8.0)),
+        (0 until 300).map(v => (v.toLong, rng.nextInt(5) / 4.0))),
+      // vids on one side only are dropped by the inner join; r0 = 0 amplifies by 1.0
+      "missing vids, r0 = 0" -> ((0 until 60).map(v => (v.toLong * 2, ((v * 37) % 23).toDouble)),
+        (0 until 90).filter(_ % 3 != 0).map(v => (v.toLong, if (v % 4 == 2) 0.0 else v / 10.0))),
+      "single row" -> (Seq((7L, 0.25)), Seq((7L, 0.5))))
+    for ((name, (x, r0)) <- cases) {
+      val want = reference(x, r0)
+      val ((got, schema), shuffles) = shuffleWritingStages {
+        val out = NetworkAnalytics.highRiskProviders(frame(x), frame(r0))
+        (rowsOf(out), out.schema)
+      }
+      val plan = NetworkAnalytics.highRiskPlan(frame(x), frame(r0))
+      assert(got == want, name)
+      assert(rowsOf(plan) == want, name)
+      assert(shuffles == 0, s"$name: the driver path writes no shuffle")
+      assert(schema.map(f => (f.name, f.dataType)) == plan.schema.map(f => (f.name, f.dataType)), name)
+    }
+    // a repeated vid, a null or an int vid takes the Catalyst plan
+    val x = frame((1 to 10).map(v => (v.toLong, v / 10.0)))
+    val r0 = (1 to 10).map(v => (v.toLong, 1.0))
+    for ((p, q) <- Seq(x -> frame(r0 :+ ((1L, 2.0))),
+        x -> (r0.init.map { case (v, w) => (v, Double.box(w)) } :+ ((10L, null: java.lang.Double))).toDF("vid", "value"),
+        x.select($"vid".cast("int").as("vid"), $"value") -> frame(r0))) {
+      val (got, shuffles) = shuffleWritingStages(NetworkAnalytics.highRiskProviders(p, q).collect().toSeq)
+      assert(shuffles > 0 && got.nonEmpty && got == NetworkAnalytics.highRiskPlan(p, q).collect().toSeq)
+    }
+    assert(reference(cases(0)._2._1, cases(0)._2._2).map(_._1) == Seq(19L))
+    assert(reference(cases(2)._2._1, cases(2)._2._2).exists(r => r._3 == 0.0 && r._4 == 1.0))
   }
 
   test("seeded sample is exact-k, a subset, and parallelism-independent") {
@@ -163,6 +247,7 @@ class AnalyticsSpec extends GraftSuite {
     NetworkAnalytics.percentileRank(df, "value").count()
     NetworkAnalytics.riskStatistics(df, df).collect()
     NetworkAnalytics.highRiskProviders(df, df).count()
+    NetworkAnalytics.highRiskPlan(df, df).count()
     assert((ids -- before).isEmpty, s"leaked persistent RDDs: ${ids -- before}")
 
     // distributed regime: release() must drop the cumulative cache

@@ -1,5 +1,6 @@
 package graft
 
+import graft.analytics.NetworkAnalytics
 import graft.graph.{AdjacencySource, LinkGraph}
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, PrefixStudy, TriangleCount}
 import graft.model.ExecutionPolicy
@@ -616,17 +617,19 @@ class GraphAlgoSpec extends GraftSuite {
       val g = graphOf(edges, policy = policy)
       g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
       g.degreeTable.count()
-      PageRank.run(g, tolerance = 0.0, maxIterations = 2).free()
+      val ranks = PageRank.run(g, tolerance = 0.0, maxIterations = 2)
       // resident outputs hold nothing; distributed ones are released with the
       // graph while the caller still holds them (the context tracks persisted
       // RDDs weakly, so a dropped output would hide its pin)
       val outputs = Seq(ConnectedComponents.run(g), LabelPropagation.run(g, 4), TriangleCount.perVertexTriangles(g),
-        TriangleCount.clusteringCoefficients(g))
+        TriangleCount.clusteringCoefficients(g), NetworkAnalytics.compositeRisk(g),
+        NetworkAnalytics.keyProviders(g, ranks.toVertexDf(g)))
       outputs.foreach(_.collect())
+      ranks.free()
       g.unpersistAll()
       val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
       assert(left.isEmpty, s"left cached ($policy): ${left.values.mkString(", ")}")
-      assert(outputs.length == 4) // the outputs stay reachable until the check
+      assert(outputs.length == 6) // the outputs stay reachable until the check
     }
   }
 

@@ -7,6 +7,7 @@ import org.scalacheck.{Gen, Prop}
 import org.scalacheck.rng.Seed
 
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, TriangleCount}
+import graft.analytics.NetworkAnalytics
 import graft.engine.PageRankEngine
 import graft.graph.LinkGraph
 import graft.model.{AdjPart, ExecutionPolicy}
@@ -231,6 +232,20 @@ class PropertyAndPlanSpec extends GraftSuite {
     assert(shuffles.get == 1, s"${shuffles.get} shuffle dependencies in ${jobs.get} jobs")
     assert(jobs.get <= 3, s"${jobs.get} jobs")
     assert(plans.asScala.nonEmpty && plans.asScala.forall(!_.contains("Join")), plans.asScala.mkString("\n"))
+    g.unpersistAll()
+  }
+
+  test("plans: over a built degree table the risk path writes no shuffle stage") {
+    val edges = DenseReference.randomEdges(200, 0.03, seed = 47).map(e => (e._1.toLong, e._2.toLong))
+    val g = LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"), numBlocks = 3)
+    g.degreeTable.count()
+    val ((prior, risk, high), shuffles) = shuffleWritingStages {
+      val prior = NetworkAnalytics.compositeRisk(g)
+      val risk = PageRank.propagateRisk(g, prior, tolerance = 0.0, maxIterations = 6).toVertexDf(g)
+      (prior, risk, NetworkAnalytics.highRiskProviders(risk, prior).collect().toSeq)
+    }
+    assert(shuffles == 0, "composite prior, risk propagation and high-risk selection stay on the driver")
+    assert(high.nonEmpty && high == NetworkAnalytics.highRiskPlan(risk, prior).collect().toSeq)
     g.unpersistAll()
   }
 
