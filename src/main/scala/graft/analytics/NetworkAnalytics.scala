@@ -2,7 +2,7 @@ package graft.analytics
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
@@ -10,24 +10,25 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 import graft.graph.LinkGraph
+import graft.model.ExecutionPolicy
 
 /** The reference's relational analytics re-expressed as Catalyst plans.
   * Every percentile is EXACT with np.percentile's linear-interpolation rule
   * (never percentile_approx: it breaks 1e-6 parity), served by [[ValueDist]] —
   * ONE distribution build per (frame, column) answers every threshold, the
-  * median, and the CDF; above ValueDist.SmallN it is a two-phase ranked sum
-  * over distinct values, so no single task ever holds all n values (SQL
-  * `percentile` is one ObjectHashAggregate buffer: 8 GB in one task at 10⁹
-  * vertices). NumPy std is population σ → `stddev_pop`, not Spark's default
-  * sample stddev. Threshold-dependent aggregates run as two phases
-  * (percentile scalars first, then the conditional agg with literal
+  * median, and the CDF; a column too wide for the driver budget takes a
+  * two-phase ranked sum over distinct values, so no single task ever holds
+  * all n values (SQL `percentile` is one ObjectHashAggregate buffer: 8 GB in
+  * one task at 10⁹ vertices). NumPy std is population σ → `stddev_pop`, not
+  * Spark's default sample stddev. Threshold-dependent aggregates run as two
+  * phases (percentile scalars first, then the conditional agg with literal
   * thresholds) because SQL forbids nesting aggregates.
   *
-  * The risk path keeps the reference's NumPy shape on driver arrays when its
-  * vectors are small: [[compositeRisk]] collects the degree table once and
-  * builds the prior on the driver (gated by [[LinkGraph.residentPrior]]), and
-  * [[highRiskProviders]] joins, masks and sorts collected vectors of at most
-  * [[ValueDist.MaxLocalDistinct]] rows. Larger inputs run the Catalyst plans.
+  * The risk path keeps the reference's NumPy shape: [[compositeRisk]] is one
+  * partials job and a per-partition map over the cached degree table at every
+  * size, and [[highRiskProviders]] joins, masks and sorts collected vectors
+  * on the driver while their rows fit the driver budget (its Catalyst plan
+  * above).
   */
 object NetworkAnalytics {
 
@@ -133,7 +134,7 @@ object NetworkAnalytics {
     * ever holds all n values in either regime).
     */
   def percentilesExact(df: DataFrame, valueCol: String, ps: Seq[Double]): Seq[Double] = {
-    val dist = ValueDist.of(df, valueCol)
+    val Seq(dist) = ValueDist.of(df, Seq(valueCol))
     try dist.percentiles(ps)
     finally dist.release()
   }
@@ -153,11 +154,9 @@ object NetworkAnalytics {
     val nnz = graph.numEdges // distinct (src,dst) pairs = G.nnz
     val n = graph.numVertices
 
-    // thresholds + medians: ONE fused distribution job over the CACHED degree
-    // table serves all three columns (degreeTable has exactly n rows — the
-    // count job is skipped), each dist then serving both of its probes
-    val Seq(distOut, distIn, distTot) =
-      ValueDist.ofColumns(deg, Seq("outDeg", "inDeg", "totalDeg"), knownN = n)
+    // thresholds + medians: ONE distribution job over the CACHED degree table
+    // serves all three columns, each dist then serving both of its probes
+    val Seq(distOut, distIn, distTot) = ValueDist.of(deg, Seq("outDeg", "inDeg", "totalDeg"), graph.policy)
     val Seq(p90out, medOut) = distOut.percentiles(Seq(0.9, 0.5))
     val Seq(p90in, medIn) = distIn.percentiles(Seq(0.9, 0.5))
     val p95tot = distTot.percentile(0.95)
@@ -188,88 +187,45 @@ object NetworkAnalytics {
   /** Composite risk scores (pagerank.py:690-713): equal-weight mix of
     * connectivity, referral imbalance, and (inverse-degree) isolation risk,
     * each min-max scaled, plus 0.001 baseline; normalized to sum 1.
-    * Returns (vid, value), vid-ascending.
+    * Returns non-null (long vid, double value), vid-ascending.
     *
-    * When the graph's vertex arrays fit the driver budget
-    * ([[LinkGraph.residentPrior]]) this is the reference's own shape: one job
-    * collects (inDeg, outDeg) from the cached degree table, the driver
-    * computes the maxes, each row's `0.001 + ⅓·(c/max) + …` in that order and
-    * the total, and the prior is returned through [[LinkGraph.vertexFrame]].
-    * Otherwise the same per-row expression runs as a Catalyst plan, pinned
-    * once and released by the graph's `unpersistAll`.
+    * One implementation for every size, over the rows of the cached degree
+    * table: one job of per-partition partials gives the three maxes and the
+    * column sums whose scaled mix is the total (combined in partition order).
+    * The result is a lazy per-partition map of that table — each row's
+    * `(0.001 + ⅓·(c/max) + …) / total` with the maxes and the total captured
+    * as scalars — so nothing is collected, pinned or cached beside the table.
     */
-  def compositeRisk(graph: LinkGraph): DataFrame =
-    if (graph.residentPrior) compositeRiskOnDriver(graph) else compositeRiskPlan(graph)
-
-  private def compositeRiskOnDriver(graph: LinkGraph): DataFrame = {
+  def compositeRisk(graph: LinkGraph): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
-    // the degree table holds vid-ascending runs tiling 0..n-1 in partition
-    // order, so each partition is (first vid, its in- and out-degrees)
-    val parts = graph.degreeTable.select($"vid", $"inDeg", $"outDeg").queryExecution.toRdd
-      .mapPartitions { rows =>
-        var first = -1L
-        val (in, out) = (new mutable.ArrayBuilder.ofDouble, new mutable.ArrayBuilder.ofDouble)
-        rows.foreach { r =>
-          if (first < 0) first = r.getLong(0)
-          in += r.getDouble(1); out += r.getDouble(2)
-        }
-        Iterator.single((first, in.result(), out.result()))
+    val rows = graph.degreeTable.select($"vid", $"inDeg", $"outDeg").queryExecution.toRdd
+    // per partition: max and sum of connectivity, imbalance and isolation, rows
+    val partials = rows.mapPartitions { it =>
+      val p = new Array[Double](7)
+      it.foreach { r =>
+        val c = components(r.getDouble(1), r.getDouble(2))
+        for (k <- 0 until 3) { p(k) = math.max(p(k), c(k)); p(3 + k) += c(k) }
+        p(6) += 1
       }
-      .collect()
-    val n = graph.numVertices.toInt
-    val in = new Array[Double](n)
-    val out = new Array[Double](n)
-    var at = 0
-    parts.foreach { case (first, pi, po) =>
-      require(pi.isEmpty || first == at, s"degree table partition starts at vid $first, expected $at")
-      System.arraycopy(pi, 0, in, at, pi.length); System.arraycopy(po, 0, out, at, po.length)
-      at += pi.length
-    }
-    require(at == n, s"degree table has $at rows, expected $n")
-    def imb(v: Int): Double = if (in(v) > 0) out(v) / (in(v) + 1e-10) else out(v)
-    def iso(v: Int): Double = 1.0 / (1.0 + (in(v) + out(v)))
-    var (mT, mI, mO) = (0.0, 0.0, 0.0)
-    for (v <- 0 until n) {
-      mT = math.max(mT, in(v) + out(v)); mI = math.max(mI, imb(v)); mO = math.max(mO, iso(v))
-    }
-    def term(c: Double, m: Double): Double = if (m > 0) 1.0 / 3 * (c / m) else 1.0 / 3 * 0.0
-    val prior = Array.tabulate(n)(v => 0.001 + term(in(v) + out(v), mT) + term(imb(v), mI) + term(iso(v), mO))
-    var total = 0.0
-    prior.foreach(total += _)
-    for (v <- 0 until n) prior(v) /= total
-    graph.vertexFrame("value" -> prior)
+      Iterator.single(p)
+    }.collect()
+    val maxes = Array.tabulate(3)(k => partials.foldLeft(0.0)((m, p) => math.max(m, p(k))))
+    val sums = Array.tabulate(3)(k => partials.foldLeft(0.0)(_ + _(3 + k)))
+    val total = 0.001 * partials.foldLeft(0.0)(_ + _(6)) +
+      mixTerm(sums(0), maxes(0)) + mixTerm(sums(1), maxes(1)) + mixTerm(sums(2), maxes(2))
+    spark.createDataset(rows.mapPartitions(_.map { r =>
+      val c = components(r.getDouble(1), r.getDouble(2))
+      (r.getLong(0), (0.001 + mixTerm(c(0), maxes(0)) + mixTerm(c(1), maxes(1)) + mixTerm(c(2), maxes(2))) / total)
+    })).toDF("vid", "value")
   }
 
-  private def compositeRiskPlan(graph: LinkGraph): DataFrame = {
-    val spark = graph.spark
-    import spark.implicits._
-    val deg = graph.degreeTable.withColumn("totalDeg", $"inDeg" + $"outDeg")
-    val withComponents = deg
-      .withColumn("imb", when($"inDeg" > 0, $"outDeg" / ($"inDeg" + lit(1e-10))).otherwise($"outDeg"))
-      .withColumn("iso", lit(1.0) / (lit(1.0) + $"totalDeg"))
-    // maxes as DRIVER LITERALS: max() is order-insensitive (exact), and with
-    // the scalars known at plan time the when()-branch resolves statically
-    val mrow = withComponents
-      .agg(max($"totalDeg").as("mT"), max($"imb").as("mI"), max($"iso").as("mO"))
-      .first()
-    def mx(i: Int): Double = if (mrow.isNullAt(i)) 0.0 else mrow.getDouble(i)
-    def term(c: Column, m: Double): Column =
-      if (m > 0) lit(1.0 / 3) * (c / lit(m)) else lit(1.0 / 3) * lit(0.0)
-    val scored = withComponents
-      .select(
-        $"vid",
-        (lit(0.001)
-          + term($"totalDeg", mx(0))
-          + term($"imb", mx(1))
-          + term($"iso", mx(2))).as("raw"))
-    // pinned once: the prior is consumed repeatedly (the total below, the
-    // engine's normalization sum and chunking pass, risk statistics…)
-    val (scoredP, free) = graft.graph.Lineage.pin(scored)
-    graph.releaseOnUnpersist(free)
-    val total = scoredP.agg(sum($"raw")).first().getDouble(0)
-    scoredP.select($"vid", ($"raw" / lit(total)).as("value"))
-  }
+  /** Connectivity, referral imbalance and isolation of one vertex. */
+  private def components(in: Double, out: Double): Array[Double] =
+    Array(in + out, if (in > 0) out / (in + 1e-10) else out, 1.0 / (1.0 + (in + out)))
+
+  /** One ⅓-weighted min-max term (zero when the component's max is not positive). */
+  private def mixTerm(c: Double, max: Double): Double = if (max > 0) 1.0 / 3 * (c / max) else 0.0
 
   /** risk_statistics block (pagerank.py:307-362) over propagated risk (vid,
     * value) joined with the original prior (vid, value). Single-row DataFrame.
@@ -284,7 +240,7 @@ object NetworkAnalytics {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ONE distribution build serves all four thresholds + the median
-    val dist = ValueDist.of(joined, "x")
+    val Seq(dist) = ValueDist.of(joined, Seq("x"))
     val Seq(t90, t95, t99, medRisk) = dist.percentiles(Seq(0.9, 0.95, 0.99, 0.5))
     dist.release()
 
@@ -320,16 +276,17 @@ object NetworkAnalytics {
     * p90, with amplification and empirical-CDF percentile, sorted by risk desc
     * (vid tiebreak for determinism).
     *
-    * Inputs of at most [[ValueDist.MaxLocalDistinct]] rows each, as (long vid,
-    * double value) with no null and no repeated vid, run in the reference's
-    * shape on the driver: two jobs with no shuffle count and collect both,
+    * Inputs as (long vid, double value) with no null and no repeated vid run
+    * in the reference's shape on the driver when their rows, charged 32 B each
+    * over both sides, fit the default policy's `driverBytes` (about 1M rows
+    * per side): two jobs with no shuffle count and collect both,
     * and the driver joins them by vid, takes p90 and the CDF from one
     * driver-built [[ValueDist]], masks, sorts and returns a driver-built
     * frame. Any other input runs the Catalyst plan ([[highRiskPlan]]), with
     * the same columns, types and row order.
     */
   def highRiskProviders(propagated: DataFrame, prior: DataFrame): DataFrame =
-    driverVectors(Seq(propagated, prior), ValueDist.MaxLocalDistinct)
+    driverVectors(Seq(propagated, prior), ExecutionPolicy().driverBytes)
       .flatMap(v => highRiskOnDriver(propagated.sparkSession, v(0), v(1)))
       .getOrElse(highRiskPlan(propagated, prior))
 
@@ -370,11 +327,12 @@ object NetworkAnalytics {
   }
 
   /** Each frame's (vid, value) rows as driver arrays in row order, or None
-    * when a frame is not (long vid, double value), has more than `cap` rows
-    * or holds a null. Two jobs with no shuffle: one counts each partition's
-    * rows, and only when every frame is within `cap` does the second collect.
+    * when a frame is not (long vid, double value), the frames' rows at 32 B
+    * each reach `driverBytes`, or a frame holds a null. Two jobs with no
+    * shuffle: one counts each partition's rows, and only under the budget
+    * does the second collect.
     */
-  private def driverVectors(frames: Seq[DataFrame], cap: Long): Option[Seq[(Array[Long], Array[Double])]] = {
+  private def driverVectors(frames: Seq[DataFrame], driverBytes: Long): Option[Seq[(Array[Long], Array[Double])]] = {
     def typed(f: DataFrame, name: String, t: DataType) = f.schema.exists(c => c.name == name && c.dataType == t)
     if (!frames.forall(f => typed(f, "vid", LongType) && typed(f, "value", DoubleType))) return None
     val sc = frames.head.sparkSession.sparkContext
@@ -383,7 +341,7 @@ object NetworkAnalytics {
       sc.union(rows.zipWithIndex.map { case (r, side) => r.mapPartitions(it => Iterator.single((side, f(it)))) })
         .collect()
     val counts = each(_.size.toLong)
-    if (frames.indices.exists(side => counts.filter(_._1 == side).map(_._2).sum > cap)) return None
+    if (counts.map(_._2).sum * 32 >= driverBytes) return None
     val parts = each { it =>
       val (vids, vals) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofDouble)
       var nulls = false
@@ -410,7 +368,7 @@ object NetworkAnalytics {
       .select($"vid", $"value".as("x"))
       .join(prior.select($"vid", $"value".as("r0")), Seq("vid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dist = ValueDist.of(joined, "x")
+    val Seq(dist) = ValueDist.of(joined, Seq("x"))
     val thr = dist.percentile(0.9)
     val withCdf = joinCdf(joined, "x", dist)
       .withColumnRenamed("pct_rank", "risk_percentile")
@@ -448,10 +406,8 @@ object NetworkAnalytics {
       .join(ranks.select($"vid", $"value".as("score")), Seq("vid"), "left")
       .na.fill(0.0, Seq("score"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // left join on the full vertex table keeps exactly numVertices rows;
-    // one fused distribution job answers all three thresholds
-    val Seq(dHub, dAuth, dCent) =
-      ValueDist.ofColumns(joined, Seq("outDeg", "inDeg", "score"), knownN = graph.numVertices)
+    // one distribution job answers all three thresholds
+    val Seq(dHub, dAuth, dCent) = ValueDist.of(joined, Seq("outDeg", "inDeg", "score"), graph.policy)
     val hubThr = { val t = dHub.percentile(0.9); dHub.release(); t }
     val authThr = { val t = dAuth.percentile(0.9); dAuth.release(); t }
     val centThr = { val t = dCent.percentile(0.9); dCent.release(); t }
@@ -534,8 +490,9 @@ object NetworkAnalytics {
   }
 
   /** Empirical CDF percentile (pagerank.py:371): share of values <= v, ×100.
-    * Driver-local regime (n ≤ ValueDist.SmallN): broadcast join against a
-    * local CDF relation — zero persisted residue. Large regime: the two-phase
+    * Driver-local regime (the column's runs fit the default policy's driver
+    * budget, see [[ValueDist.of]]): broadcast join against a local CDF
+    * relation — zero persisted residue. Distributed regime: the two-phase
     * ranked sum over distinct values (no single-partition window — round 1
     * fed ~n distinct doubles through one task here); the result is pinned and
     * the cumulative cache released before returning (round 2 leaked it for
@@ -543,7 +500,7 @@ object NetworkAnalytics {
     * reclaimed by the ContextCleaner when the frame is dropped.
     */
   def percentileRank(df: DataFrame, valueCol: String): DataFrame = {
-    val dist = ValueDist.of(df, valueCol)
+    val Seq(dist) = ValueDist.of(df, Seq(valueCol))
     val out = joinCdf(df, valueCol, dist)
     if (dist.isLocal) out
     else {

@@ -1,34 +1,36 @@
 package graft.analytics
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-/** One-pass distribution summary of a single numeric column, serving EVERY
+import graft.model.ExecutionPolicy
+
+/** One-pass distribution summary of a numeric column, serving EVERY
   * percentile / median / empirical-CDF probe from the same build — the fusion
   * layer over [[NetworkAnalytics.cumulativeCounts]] (round 2 rebuilt that
   * pipeline once per probe; `networkMetrics` alone paid for it three times and
   * regressed 41× at sf0.1).
   *
-  * Two regimes, chosen by row count:
+  * Two regimes, chosen per column by one rule ([[ValueDist.of]]):
   *
-  *  - '''Driver-local''' (n ≤ [[ValueDist.SmallN]]): ONE `groupBy(value).count`
-  *    job collects the distinct (value, count) pairs; sort + prefix-sum on the
-  *    driver. Distinct pairs are ≤ n ≤ SmallN (≈64 MB worst case), every probe
-  *    is then O(log d) driver work and [[cdf]] is a broadcastable local
-  *    relation — zero persisted residue, nothing to release.
-  *  - '''Distributed''' (large n): the two-phase ranked sum over distinct
-  *    values (range-partition → local prefix sums → offset broadcast); the
+  *  - '''Driver-local''': every task's sorted (value, count) runs fit its
+  *    share of the policy's `driverBytes`, so the driver merges them and
+  *    prefix-sums the counts. A low-cardinality column of any length stays
+  *    here. Every probe is then O(log d) driver work and [[cdf]] is a
+  *    broadcastable local relation — zero persisted residue, nothing to
+  *    release.
+  *  - '''Distributed''': the two-phase ranked sum over distinct values
+  *    (range-partition → local prefix sums → offset broadcast); the
   *    cumulative frame stays cached until [[release]] — callers own the
   *    lifecycle explicitly instead of leaking a session-lived cache (round-2
   *    `percentileRank` discarded the handle).
   *
-  * Percentile rule in both regimes: NumPy linear interpolation —
-  * t = (n−1)·p, result = v⌊t⌋ + (t−⌊t⌋)·(v⌈t⌉ − v⌊t⌋) over the value owning
-  * each global 0-based sort index (value v with cumulative count cum and
-  * multiplicity c owns indices [cum−c, cum)).
+  * Both regimes group values as Spark does: −0.0 counts as 0.0 and every NaN
+  * is one value, sorted last. Percentile rule in both: NumPy linear
+  * interpolation — t = (n−1)·p, result = v⌊t⌋ + (t−⌊t⌋)·(v⌈t⌉ − v⌊t⌋) over the
+  * value owning each global 0-based sort index (value v with cumulative count
+  * cum and multiplicity c owns indices [cum−c, cum)).
   */
 final class ValueDist private (
     val n: Long,
@@ -44,38 +46,23 @@ final class ValueDist private (
   def percentiles(ps: Seq[Double]): Seq[Double] = {
     require(ps.nonEmpty, "need at least one percentile")
     require(n > 0, "percentile of an empty column")
-    local match {
-      case Some((vs, cum)) =>
-        ps.map { p =>
-          val t = (n - 1) * p
-          val lo = math.floor(t).toLong
-          val vlo = valueAtIndex(vs, cum, lo)
-          val vhi = valueAtIndex(vs, cum, math.ceil(t).toLong)
-          vlo + (vhi - vlo) * (t - lo)
-        }
+    val bounds = ps.map { p => val t = (n - 1) * p; (t, math.floor(t).toLong, math.ceil(t).toLong) }
+    // the value at each 0-based sort index the interpolation reads
+    val valueAt: Long => Double = local match {
+      case Some((vs, cum)) => valueAtIndex(vs, cum, _)
       case None =>
-        val (cum, _, _) = distributed.map(d => (d._1, n, d._2)).get
-        val targets = ps
-          .flatMap { p =>
-            val t = (n - 1) * p
-            Seq(math.floor(t).toLong, math.ceil(t).toLong)
-          }
-          .distinct
         import spark.implicits._
-        val idxDf = targets.toDF("__i")
-        val found = cum
+        val idxDf = bounds.flatMap(b => Seq(b._2, b._3)).distinct.toDF("__i")
+        distributed.get._1
           .join(broadcast(idxDf), col("__i") >= col("__cum") - col("__c") && col("__i") < col("__cum"))
           .select(col("__i"), col("__v"))
           .collect()
           .map(r => r.getLong(0) -> r.getDouble(1))
           .toMap
-        ps.map { p =>
-          val t = (n - 1) * p
-          val lo = math.floor(t).toLong
-          val vlo = found(lo)
-          val vhi = found(math.ceil(t).toLong)
-          vlo + (vhi - vlo) * (t - lo)
-        }
+    }
+    bounds.map { case (t, lo, hi) =>
+      val vlo = valueAt(lo)
+      vlo + (valueAt(hi) - vlo) * (t - lo)
     }
   }
 
@@ -130,130 +117,129 @@ final class ValueDist private (
 
 object ValueDist {
 
-  /** Row-count ceiling for the driver-local regime; between
-    * [[MaxLocalDistinct]] and this bound the regime is additionally gated on
-    * the estimated DISTINCT count — row count alone says nothing about how
-    * many (double, long) pairs the collect materializes.
-    */
-  val SmallN: Long = 4L * 1024 * 1024
+  /** Sorted distinct values (ascending, NaN last) with their counts. */
+  private final case class Runs(vs: Array[Double], cs: Array[Long])
 
-  /** Distinct-pair ceiling for the driver-local collect: ≤ ~16 MB of
-    * primitive (double, long) pairs plus transient tuple boxing. Decided from
-    * the exact n when n ≤ MaxLocalDistinct (distinct ≤ n needs no probe);
-    * otherwise a cheap approx_count_distinct job decides, so a 4M-row column
-    * of unique doubles falls to the distributed regime instead of collecting
-    * hundreds of MB onto a smaller-heap driver (round-3 hardening).
-    */
-  val MaxLocalDistinct: Long = 1L * 1024 * 1024
-
-  /** Build the distributions of SEVERAL columns of one frame in a single job.
+  /** Build the distributions of `valueCols` (each cast to double; nulls
+    * dropped, NumPy-dropna-style) from one read of `df`.
     *
-    * The driver-local regime's per-column build is one `groupBy(col).count`
-    * job each; callers probing three columns of the same cached frame (e.g.
-    * networkMetrics over in/out/total degree) paid three scans. Here one
-    * mapPartitions pass builds a (value → count) map per column and the
-    * driver merges partition maps — identical counts, identical sorted
-    * arrays, so every percentile is bit-identical to the per-column build.
-    *
-    * Only valid when the per-column distinct counts are collectable, so the
-    * caller must pass the exact row count and it must be ≤
-    * [[MaxLocalDistinct]] (distinct ≤ rows needs no probe); otherwise this
-    * falls back to independent [[of]] builds per column.
+    * Each task reduces each column to its [[Runs]] and ships them when they fit
+    * its equal share of `policy.driverBytes`: `driverBytes / (tasks ×
+    * columns)` at 96 B per pair (16 B shipped, 16 B merged, 64 B for the
+    * [[cdf]] relation's row). The driver merges a column's runs when every task
+    * shipped them; `n` is the sum of their counts. A column whose runs
+    * overflow any task's share takes the distributed regime instead.
     */
-  def ofColumns(
-      df: DataFrame,
-      valueCols: Seq[String],
-      knownN: Long
-  ): Seq[ValueDist] = {
+  def of(df: DataFrame, valueCols: Seq[String], policy: ExecutionPolicy = ExecutionPolicy()): Seq[ValueDist] = {
     val spark = df.sparkSession
-    import spark.implicits._
-    if (knownN > MaxLocalDistinct) return valueCols.map(c => of(df, c, Some(knownN)))
     val k = valueCols.length
-    val perPartition = df
-      .select(valueCols.map(c => col(c).cast("double")): _*)
-      .mapPartitions { rows =>
-        val maps = Array.fill(k)(new java.util.HashMap[Double, Long]())
-        rows.foreach { r =>
-          var i = 0
-          while (i < k) {
-            if (!r.isNullAt(i)) maps(i).merge(r.getDouble(i), 1L, (a, b) => a + b)
-            i += 1
-          }
-        }
-        if (maps.exists(!_.isEmpty))
-          Iterator.single(maps.map(m => m.entrySet().iterator().asScala
-            .map(e => (e.getKey.doubleValue(), e.getValue.longValue())).toArray))
-        else Iterator.empty
-      }(org.apache.spark.sql.Encoders.kryo[Array[Array[(Double, Long)]]])
-      .collect()
+    val rows = df.select(valueCols.map(c => col(c).cast("double")): _*).queryExecution.toRdd
+    val cap = policy.driverBytes / (math.max(1, rows.getNumPartitions).toLong * k) / 96
+    val shipped = rows.mapPartitions { it =>
+      val counts = Array.fill(k)(new Counts(cap))
+      it.foreach { r =>
+        var i = 0
+        while (i < k) { if (!r.isNullAt(i)) counts(i).add(r.getDouble(i)); i += 1 }
+      }
+      Iterator.single(counts.map(_.runs))
+    }.collect()
     valueCols.indices.map { i =>
-      val merged = new java.util.HashMap[Double, Long]()
-      perPartition.foreach(_(i).foreach { case (v, c) =>
-        merged.merge(v, c, (a, b) => a + b); ()
-      })
-      fromCounts(spark, knownN, pairsOf(merged), valueCols(i))
+      val runs = shipped.map(_(i))
+      if (runs.forall(_ != null)) local(spark, runs.toSeq)
+      else {
+        val vals = df.select(col(valueCols(i)).cast("double").as("__v")).filter(col("__v").isNotNull)
+        val (cumFrame, total, release) = NetworkAnalytics.cumulativeCounts(vals, "__v")
+        new ValueDist(total, spark, None, Some((cumFrame, release)))
+      }
     }
   }
 
   /** The driver-local distribution of values already on the driver, by the
-    * same sort, prefix sums and percentile rule as a collected column. As in
-    * Spark's grouping, −0.0 counts as 0.0.
+    * same counting, merge and percentile rule as a column of a frame.
     */
   private[analytics] def ofValues(spark: SparkSession, values: Array[Double]): ValueDist = {
-    val counts = new java.util.HashMap[Double, Long]()
-    values.foreach(v => counts.merge(v + 0.0, 1L, (a, b) => a + b))
-    fromCounts(spark, values.length, pairsOf(counts), "driver values")
+    val counts = new Counts(Long.MaxValue)
+    values.foreach(counts.add)
+    local(spark, Seq(counts.runs))
   }
 
-  private def pairsOf(counts: java.util.HashMap[Double, Long]): Array[(Double, Long)] =
-    counts.entrySet().iterator().asScala.map(e => (e.getKey.doubleValue(), e.getValue.longValue())).toArray
-
-  /** The driver-local regime from (distinct value, count) pairs: sorted by
-    * value, with cumulative counts that must sum to `n`.
-    */
-  private def fromCounts(spark: SparkSession, n: Long, counts: Array[(Double, Long)], what: String): ValueDist = {
-    val pairs = counts.sortBy(_._1)
-    val vs = pairs.map(_._1)
-    val cum = new Array[Long](pairs.length)
-    var acc = 0L
-    var i = 0
-    while (i < pairs.length) { acc += pairs(i)._2; cum(i) = acc; i += 1 }
-    require(acc == n, s"distinct-count sum $acc != expected n $n for $what")
-    new ValueDist(n, spark, Some((vs, cum)), None)
+  /** The driver-local regime from per-task runs: merged, then prefix-summed. */
+  private def local(spark: SparkSession, runs: Seq[Runs]): ValueDist = {
+    val m = mergeAll(runs)
+    for (i <- 1 until m.cs.length) m.cs(i) += m.cs(i - 1)
+    new ValueDist(m.cs.lastOption.getOrElse(0L), spark, Some((m.vs, m.cs)), None)
   }
 
-  /** Build the distribution of `valueCol` (cast to double). Nulls are dropped
-    * (probes describe the non-null values, NumPy-dropna-style).
-    *
-    * @param knownN  NON-NULL row count if the caller already knows it (e.g. a
-    *                zero-filled per-vertex table has exactly numVertices
-    *                non-null rows) — skips the count job; the local regime's
-    *                `require(acc == n)` trips loudly on a wrong value.
-    * @param forceDistributed  test hook: exercise the distributed regime at any n.
+  private def mergeAll(runs: Seq[Runs]): Runs =
+    if (runs.isEmpty) Runs(Array.emptyDoubleArray, Array.emptyLongArray)
+    else if (runs.length == 1) runs.head
+    else {
+      val (l, r) = runs.splitAt(runs.length / 2)
+      merge(mergeAll(l), mergeAll(r))
+    }
+
+  /** Two sorted runs as one; a value in both gets the sum of its counts. */
+  private def merge(a: Runs, b: Runs): Runs = {
+    val (na, nb) = (a.vs.length, b.vs.length)
+    val vs = new Array[Double](na + nb)
+    val cs = new Array[Long](na + nb)
+    var (i, j, m) = (0, 0, 0)
+    while (i < na || j < nb) {
+      val c = if (j == nb) -1 else if (i == na) 1 else java.lang.Double.compare(a.vs(i), b.vs(j))
+      vs(m) = if (c <= 0) a.vs(i) else b.vs(j)
+      if (c <= 0) { cs(m) += a.cs(i); i += 1 }
+      if (c >= 0) { cs(m) += b.cs(j); j += 1 }
+      m += 1
+    }
+    Runs(java.util.Arrays.copyOf(vs, m), java.util.Arrays.copyOf(cs, m))
+  }
+
+  /** One column's value counts in one task, open-addressed on the value's
+    * bits. As in Spark's grouping, −0.0 counts as 0.0 and every NaN as one
+    * NaN. Past `cap` distinct values it drops its table and [[runs]] is null.
     */
-  def of(
-      df: DataFrame,
-      valueCol: String,
-      knownN: Option[Long] = None,
-      forceDistributed: Boolean = false
-  ): ValueDist = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val vals = df.select(col(valueCol).cast("double").as("__v")).filter(col("__v").isNotNull)
-    val n = knownN.getOrElse(vals.count())
-    val localOk = n <= SmallN && !forceDistributed &&
-      (n <= MaxLocalDistinct ||
-        vals.agg(approx_count_distinct(col("__v"))).first().getLong(0) <= MaxLocalDistinct)
-    if (localOk) {
-      val pairs = vals
-        .groupBy(col("__v"))
-        .agg(count(lit(1)).as("__c"))
-        .as[(Double, Long)] // primitive-friendly collect: tuples, not boxed Rows
-        .collect()
-      fromCounts(spark, n, pairs, valueCol)
-    } else {
-      val (cumFrame, total, release) = NetworkAnalytics.cumulativeCounts(vals, "__v")
-      new ValueDist(total, spark, None, Some((cumFrame, release)))
+  private final class Counts(cap: Long) {
+    private var keys = new Array[Long](16)
+    private var counts = new Array[Long](16) // 0 marks an empty slot
+    private var size = 0
+
+    def add(v: Double): Unit = if (keys != null) {
+      val bits = java.lang.Double.doubleToLongBits(v + 0.0) // −0.0 + 0.0 is 0.0; one NaN bit pattern
+      val i = slot(bits)
+      if (counts(i) == 0) {
+        if (size >= cap) { keys = null; counts = null; return }
+        keys(i) = bits
+        size += 1
+      }
+      counts(i) += 1
+      if (size * 2 > keys.length) grow()
+    }
+
+    def runs: Runs =
+      if (keys == null) null
+      else {
+        val vs = keys.indices.filter(counts(_) != 0).map(i => java.lang.Double.longBitsToDouble(keys(i))).toArray
+        java.util.Arrays.sort(vs)
+        Runs(vs, vs.map(v => counts(slot(java.lang.Double.doubleToLongBits(v)))))
+      }
+
+    private def slot(bits: Long): Int = {
+      val mask = keys.length - 1
+      val h = bits * 0x9E3779B97F4A7C15L
+      var i = (h ^ (h >>> 32)).toInt & mask
+      while (counts(i) != 0 && keys(i) != bits) i = (i + 1) & mask
+      i
+    }
+
+    private def grow(): Unit = {
+      val (oldKeys, oldCounts) = (keys, counts)
+      keys = new Array[Long](oldKeys.length * 2)
+      counts = new Array[Long](oldKeys.length * 2)
+      for (i <- oldKeys.indices if oldCounts(i) != 0) {
+        val j = slot(oldKeys(i))
+        keys(j) = oldKeys(i)
+        counts(j) = oldCounts(i)
+      }
     }
   }
 }

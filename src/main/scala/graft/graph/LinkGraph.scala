@@ -121,12 +121,6 @@ final class LinkGraph(
   private[graft] def residentOperators: Boolean =
     numVertices <= Int.MaxValue.toLong && numEdges * 32 + numVertices * 24 < policy.driverBytes
 
-  /** True when the composite risk prior is built on the driver: the collected
-    * in- and out-degrees, the prior and its output slices, 32 B per vertex.
-    */
-  private[graft] def residentPrior: Boolean =
-    numVertices <= Int.MaxValue.toLong && numVertices * 32 < policy.driverBytes
-
   /** Broadcast hint for an n-row label frame (two longs per row) that the
     * distributed operators join against edge-scale frames: pinned frames report
     * default (huge) statistics. Over the driver budget the shuffle join stays.
@@ -341,8 +335,6 @@ final class LinkGraph(
   lazy val gatherPartsLocal: Array[AdjPart] =
     gatherAssembled.getOrElse(gatherPartsRdd.collect())
 
-  def blockOf(vid: Long): Int = (vid / blockSize).toInt
-
   /** Uniform initial rank chunks x = 1/n (pagerank.py:180). */
   def uniformChunks(): Dataset[RankChunk] = constantChunks(1.0 / numVertices)
 
@@ -396,19 +388,6 @@ final class LinkGraph(
     chunks
       .flatMap { c => c.values.iterator.zipWithIndex.map { case (v, i) => (c.loVid + i, v) } }
       .toDF("vid", "value")
-
-  /** Edges of the induced subgraph on an arbitrary vertex subset — a
-    * left-semi join on each endpoint, so the (potentially huge) edge table
-    * streams once against the membership set and no edge payload is joined
-    * in (reference: boolean row/col masking, visualizations.py:110).
-    */
-  def inducedSubgraphEdges(vids: DataFrame): Dataset[Edge] = {
-    val members = vids.select($"vid".cast("long").as("__m"))
-    edges
-      .join(members, $"src" === $"__m", "left_semi")
-      .join(members, $"dst" === $"__m", "left_semi")
-      .as[Edge]
-  }
 
   /** Induced prefix subgraph G[:k,:k] in dense vid space — all k vertices
     * kept, isolated ones included, exactly the reference's dense slice

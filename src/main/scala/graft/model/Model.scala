@@ -114,8 +114,13 @@ object PageRankMode {
   *    triangle kernel's bitset rows are taken only where they cost no more)
   *    plus 24 B per vertex (the operators' vertex arrays)
   *  - the vector-resident PageRank regime: 8 B per vertex (the rank vector)
-  *  - the driver-built composite risk prior: 32 B per vertex (the collected
-  *    in- and out-degrees, the prior, and the output frame's slices)
+  *  - a `ValueDist` column's driver-local build: 96 B per distinct (value,
+  *    count) pair a task ships (the shipped run, its merged value and
+  *    cumulative count, and its row of the CDF relation), each task and
+  *    column held to an equal share, `driverBytes / (tasks × columns)`
+  *  - the driver-side high-risk selection: 32 B per collected (vid, value)
+  *    row over both inputs (the rows, the joined vectors and the risk
+  *    distribution built from them), against the default `driverBytes`
   *  - the broadcast hint on the label frames of distributed connected
   *    components and label propagation: 16 B per vertex (two longs per row)
   * `driverBytes = 0` sends every operator down its distributed path.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.{NetworkAnalytics, ValueDist}
 import graft.graph.LinkGraph
+import graft.model.ExecutionPolicy
 
 class AnalyticsSpec extends GraftSuite {
   import spark.implicits._
@@ -122,7 +123,6 @@ class AnalyticsSpec extends GraftSuite {
     assert(in(4) + out(4) == 0.0 && in(5) == 0.0 && out(5) > 0)
     val want = compositeReference(in, out)
     val d = under(g, distributedOnly)
-    assert(g.residentPrior && !d.residentPrior)
     for (view <- Seq(g, d)) {
       val risk = NetworkAnalytics.compositeRisk(view)
       assert(risk.schema.map(f => (f.name, f.dataType)) ==
@@ -213,9 +213,9 @@ class AnalyticsSpec extends GraftSuite {
     val data = Array.fill(8000)(math.floor(rng.nextDouble() * 2000.0) / 8.0 - 100.0)
     val df = data.toSeq.toDF("v").repartition(5)
     val ps = Seq(0.0, 0.01, 0.5, 0.9, 0.95, 0.99, 1.0)
-    val local = ValueDist.of(df, "v")
+    val Seq(local) = ValueDist.of(df, Seq("v"))
     assert(local.isLocal)
-    val forced = ValueDist.of(df, "v", forceDistributed = true)
+    val Seq(forced) = ValueDist.of(df, Seq("v"), distributedOnly)
     assert(!forced.isLocal)
     val a = local.percentiles(ps)
     val b = forced.percentiles(ps)
@@ -251,40 +251,85 @@ class AnalyticsSpec extends GraftSuite {
     assert((ids -- before).isEmpty, s"leaked persistent RDDs: ${ids -- before}")
 
     // distributed regime: release() must drop the cumulative cache
-    val dist = ValueDist.of(df, "value", forceDistributed = true)
+    val Seq(dist) = ValueDist.of(df, Seq("value"), distributedOnly)
     dist.percentiles(Seq(0.5, 0.9))
     assert((ids -- before).nonEmpty, "distributed regime should cache while alive")
     dist.release()
     assert((ids -- before).isEmpty, "release() must unpersist the cumulative frame")
   }
 
-  test("ValueDist: wide-distinct column falls to the distributed regime, not a huge collect") {
-    // 2M rows of UNIQUE doubles: n <= SmallN (row count alone would pick the
-    // driver-local collect) but distinct pairs are far over MaxLocalDistinct —
-    // the approx-distinct gate must route this to the distributed regime
-    val n = 2L * 1024 * 1024
-    val wide = spark.range(n).selectExpr("cast(id as double) as v")
-    val d = ValueDist.of(wide, "v", knownN = Some(n))
-    assert(!d.isLocal, "unique-double column must not be collected driver-locally")
-    val Seq(p50) = d.percentiles(Seq(0.5))
-    assert(math.abs(p50 - (n - 1) / 2.0) < 1e-9)
-    d.release()
-    // and a narrow column of the same row count stays driver-local (zero residue)
-    val narrow = spark.range(n).selectExpr("cast(id % 97 as double) as v")
-    val dn = ValueDist.of(narrow, "v", knownN = Some(n))
-    assert(dn.isLocal)
-    dn.release()
+  test("ValueDist: local exactly when every task's runs fit its share of driverBytes") {
+    // four slices of 250 rows; column a has 20 distinct values per slice,
+    // column b 21 in slice 0 and 20 elsewhere. At 96 B per pair, a share of 20
+    // pairs per (task, column) is driverBytes = 96 · 20 · 4 tasks · 2 columns
+    val rows = Seq.tabulate(1000) { j =>
+      val (i, r) = (j / 250, j % 250)
+      (i * 1000.0 + r % 20, i * 1000.0 + r % (if (i == 0) 21 else 20))
+    }
+    val df = spark.sparkContext.parallelize(rows, 4).toDF("a", "b")
+    val perTask = spark.sparkContext.parallelize(rows, 4).glom().collect()
+      .map(p => (p.map(_._1).distinct.length, p.map(_._2).distinct.length))
+    assert(perTask.toSeq == Seq((20, 21), (20, 20), (20, 20), (20, 20)))
+    for ((share, bLocal) <- Seq(20 -> false, 21 -> true)) {
+      val policy = ExecutionPolicy(driverBytes = 96L * share * 4 * 2)
+      val Seq(a, b) = ValueDist.of(df, Seq("a", "b"), policy)
+      assert(a.isLocal && b.isLocal == bLocal, s"share $share")
+      // the runs that fit their share are all a task ships
+      val shipped = perTask.map { case (da, db) => Seq(da, db).filter(_ <= share).sum }.sum
+      assert(shipped * 96L <= policy.driverBytes, s"share $share: $shipped pairs shipped")
+      for ((d, col) <- Seq(a -> rows.map(_._1), b -> rows.map(_._2))) {
+        val sorted = col.sorted.toArray
+        assert(d.n == rows.length)
+        for (p <- Seq(0.0, 0.3, 0.5, 0.9, 1.0))
+          assert(math.abs(d.percentile(p) - npPercentile(sorted, p * 100)) < 1e-9, s"share $share p=$p")
+        d.release()
+      }
+    }
   }
 
-  test("ValueDist: nulls are dropped in both regimes (NumPy-dropna semantics)") {
-    val df = Seq[java.lang.Double](1.0, null, 3.0, null, 5.0).toDF("v")
-    val d = ValueDist.of(df, "v")
-    assert(d.n == 3)
-    assert(math.abs(d.percentile(0.5) - 3.0) < 1e-12)
-    val dd = ValueDist.of(df, "v", forceDistributed = true)
-    assert(dd.n == 3)
-    assert(math.abs(dd.percentile(0.5) - 3.0) < 1e-12)
-    dd.release()
+  test("ValueDist: default policy keeps a narrow 2M-row column local, not a wide one") {
+    val n = 2L * 1024 * 1024
+    // 97 distinct values: one job ships 97 runs per task, no count or probe job
+    val narrow = spark.range(n).selectExpr("cast(id % 97 as double) as v")
+    val (Seq(dn), jobs, _) = jobsAndShuffles(ValueDist.of(narrow, Seq("v")))
+    assert(dn.isLocal && dn.n == n && jobs == 1, s"$jobs jobs")
+    assert(dn.percentile(0.5) == 48.0)
+    // unique doubles: each task's 512K runs overflow its share of 64 MiB
+    val wide = spark.range(n).selectExpr("cast(id as double) as v")
+    val Seq(d) = ValueDist.of(wide, Seq("v"))
+    assert(!d.isLocal, "a unique-double column must not be collected driver-locally")
+    assert(d.n == n && math.abs(d.percentile(0.5) - (n - 1) / 2.0) < 1e-9)
+    d.release()
+  }
+
+  test("ValueDist: nulls, -0.0, NaN and spread ties group as Spark does, both regimes") {
+    // equal values sit in different slices; nulls are dropped (NumPy dropna)
+    val values = Seq[java.lang.Double](1.0, null, 3.0, -0.0, Double.NaN, 5.0, 0.0, null, 3.0, -0.0,
+      Double.NaN, 1.0, 0.0, 5.0, 3.0, null)
+    val df = spark.sparkContext.parallelize(values, 4).toDF("v")
+    // the driver reference: −0.0 is 0.0, NaN sorts last
+    val sorted = values.filter(_ != null).map(_.doubleValue + 0.0).toArray
+    java.util.Arrays.sort(sorted)
+    def same(a: Double, b: Double) = java.lang.Double.compare(a, b) == 0 || math.abs(a - b) < 1e-12
+    val ps = Seq(0.0, 0.1, 0.25, 0.5, 0.75, 0.8, 0.9, 1.0)
+    val Seq(local) = ValueDist.of(df, Seq("v"))
+    val Seq(dist) = ValueDist.of(df, Seq("v"), distributedOnly)
+    assert(local.isLocal && !dist.isLocal)
+    for (d <- Seq(local, dist)) {
+      assert(d.n == sorted.length)
+      d.percentiles(ps).zip(ps).foreach { case (got, p) =>
+        assert(same(got, npPercentile(sorted, p * 100)), s"local=${d.isLocal} p=$p: $got")
+      }
+      // one key for ±0.0 (+0.0 itself) and one for NaN, with the share of values ≤ each
+      val cdf = d.cdf.collect().map(r => (r.getDouble(0), r.getDouble(1))).sortBy(_._1)(Ordering.Double.TotalOrdering)
+      assert(cdf.map(k => java.lang.Double.doubleToRawLongBits(k._1)).toSeq ==
+        Seq(0.0, 1.0, 3.0, 5.0, Double.NaN).map(java.lang.Double.doubleToRawLongBits), s"local=${d.isLocal}")
+      cdf.foreach { case (v, pct) =>
+        val le = sorted.count(x => java.lang.Double.compare(x, v) <= 0)
+        assert(same(pct, le * 100.0 / sorted.length), s"local=${d.isLocal} v=$v")
+      }
+    }
+    dist.release()
   }
 
   test("network metrics mirror hand-computed values on a tiny graph") {
@@ -303,18 +348,19 @@ class AnalyticsSpec extends GraftSuite {
     g.unpersistAll()
   }
 
-  test("ValueDist.ofColumns: fused multi-column build matches per-column builds") {
+  test("ValueDist.of: one multi-column build matches per-column builds") {
     import spark.implicits._
-    // ties, negatives, and several partitions — the fused single-job build
-    // must produce bit-identical percentiles to three independent builds
+    // ties, negatives, and several partitions — the one-job build of three
+    // columns must produce bit-identical percentiles to three single builds
     val rng = new scala.util.Random(7)
     val rows = Seq.tabulate(5000)(i =>
       (rng.nextInt(40).toDouble - 20.0, rng.nextDouble() * 10.0, (i % 17).toDouble))
     val df = rows.toDF("a", "b", "c").repartition(7)
-    val fused = ValueDist.ofColumns(df, Seq("a", "b", "c"), knownN = rows.length.toLong)
-    val single = Seq("a", "b", "c").map(c => ValueDist.of(df, c, Some(rows.length.toLong)))
+    val fused = ValueDist.of(df, Seq("a", "b", "c"))
+    val single = Seq("a", "b", "c").map(c => ValueDist.of(df, Seq(c)).head)
     val ps = Seq(0.0, 0.01, 0.25, 0.5, 0.9, 0.95, 0.99, 1.0)
     fused.zip(single).foreach { case (f, s) =>
+      assert(f.isLocal && s.isLocal && f.n == rows.length)
       val fp = f.percentiles(ps)
       val sp = s.percentiles(ps)
       fp.zip(sp).foreach { case (x, y) => assert(x == y, s"fused $x != single $y") }

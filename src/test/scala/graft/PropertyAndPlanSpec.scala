@@ -246,7 +246,25 @@ class PropertyAndPlanSpec extends GraftSuite {
     }
     assert(shuffles == 0, "composite prior, risk propagation and high-risk selection stay on the driver")
     assert(high.nonEmpty && high == NetworkAnalytics.highRiskPlan(risk, prior).collect().toSeq)
+    // the prior is one implementation at every size: over a distributedOnly
+    // view's built degree table it exchanges nothing and persists nothing
+    val d = under(g, distributedOnly)
+    d.degreeTable.count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (dPrior, dShuffles) = shuffleWritingStages(NetworkAnalytics.compositeRisk(d).collect().toSeq)
+    assert(dShuffles == 0, "the prior over a distributed view writes no shuffle")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty, "the prior persists nothing")
+    assert(dPrior == prior.collect().toSeq)
+    d.unpersistAll()
     g.unpersistAll()
+  }
+
+  test("plans: ValueDist's local regime reads a cached column in one job") {
+    val df = spark.range(20000).selectExpr("cast(id % 97 as double) as v").cache()
+    df.count()
+    val (Seq(dist), jobs, _) = jobsAndShuffles(graft.analytics.ValueDist.of(df, Seq("v")))
+    assert(dist.isLocal && dist.n == 20000 && jobs == 1, s"$jobs jobs")
+    df.unpersist()
   }
 
   test("plans: filters and projections push down to the parquet scan") {

@@ -57,16 +57,28 @@ abstract class GraftSuite extends AnyFunSuite {
     * output: a driver-resident operator writes none.
     */
   def shuffleWritingStages[T](body: => T): (T, Int) = {
+    val (r, _, shuffles) = jobsAndShuffles(body)
+    (r, shuffles)
+  }
+
+  /** `body`'s result, how many jobs it runs and how many of their stages
+    * wrote shuffle output.
+    */
+  def jobsAndShuffles[T](body: => T): (T, Int, Int) = {
     import org.apache.spark.scheduler._
     val sc = spark.sparkContext
     val group = "graft.test.regime"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
     val shuffles = new java.util.concurrent.atomic.AtomicInteger
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       private def groupOf(p: java.util.Properties) = Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (groupOf(e.properties) == "graft.test.marker") flushed.countDown()
+      override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e.properties) match {
+        case `group` => jobs.incrementAndGet()
+        case "graft.test.marker" => flushed.countDown()
+        case _ =>
+      }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (groupOf(e.properties) == group) stages.add(e.stageInfo.stageId)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -82,7 +94,7 @@ abstract class GraftSuite extends AnyFunSuite {
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
       r
     } finally sc.removeSparkListener(listener)
-    (result, shuffles.get)
+    (result, jobs.get, shuffles.get)
   }
 
   def assertAllClose(got: Array[Double], want: Array[Double], tol: Double = 1e-9): Unit = {
