@@ -342,19 +342,11 @@ object NetworkAnalytics {
         .collect()
     val counts = each(_.size.toLong)
     if (counts.map(_._2).sum * 32 >= driverBytes) return None
-    val parts = each { it =>
-      val (vids, vals) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofDouble)
-      var nulls = false
-      it.foreach { r =>
-        nulls ||= r.isNullAt(0) || r.isNullAt(1)
-        if (!nulls) { vids += r.getLong(0); vals += r.getDouble(1) }
-      }
-      if (nulls) None else Some((vids.result(), vals.result()))
-    }
+    val parts = each(LinkGraph.vectorBatch)
     if (parts.exists(_._2.isEmpty)) None
     else Some(frames.indices.map { side =>
       val mine = parts.filter(_._1 == side).map(_._2.get)
-      (mine.flatMap(_._1), mine.flatMap(_._2))
+      (mine.flatMap(_.a), mine.flatMap(_.w))
     })
   }
 

@@ -103,17 +103,19 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     val dir = cfg.checkpointDir.getOrElse(
       throw new IllegalArgumentException("resume() requires checkpointDir"))
     CheckpointManager.latest(dir) match {
-      case Some((snap, k, residual)) => runFrom(Some(CheckpointManager.readRanks(spark, dir, snap)), k, residual)
+      case Some((snap, k, residual)) =>
+        runFrom(Some((CheckpointManager.readRanks(spark, dir, snap), s"checkpoint snapshot $snap of $dir")), k, residual)
       case None => run()
     }
   }
 
   // ---------------------------------------------------------------- the loop
 
-  /** Iterate from `start` ((vid, value) ranks; None = x₀ of the mode) after
-    * `startIter` supersteps whose last residual was `startResidual`.
+  /** Iterate from `start` ((vid, value) ranks holding every vid once, and
+    * their name; None = x₀ of the mode) after `startIter` supersteps whose
+    * last residual was `startResidual`.
     */
-  private def runFrom(start: Option[DataFrame], startIter: Int, startResidual: Double): PageRankOutcome = {
+  private def runFrom(start: Option[(DataFrame, String)], startIter: Int, startResidual: Double): PageRankOutcome = {
     if (ran)
       throw new IllegalStateException(
         "PageRankEngine is single-shot: its pinned aux vectors were released when the " +
@@ -215,16 +217,21 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     graph.degreeTable.where($"inDeg" =!= 0.0).select($"vid", lit(zBase - d / n).as("value"))
 
   /** Vector-resident regime: x is a driver array, the whole vector one chunk. */
-  private final class OnDriver(start: Option[DataFrame]) extends RankVector {
+  private final class OnDriver(start: Option[(DataFrame, String)]) extends RankVector {
     private val size = n.toInt
 
-    private def rowsOf(df: DataFrame): Array[(Long, Double)] =
-      df.select($"vid".cast("long"), $"value".cast("double")).as[(Long, Double)].collect()
+    /** (vid, value) rows in collect order, vids in `a` and values in `w`. */
+    private def rowsOf(df: DataFrame): LinkGraph.Rows =
+      df.select($"vid".cast("long"), $"value".cast("double")).queryExecution.toRdd
+        .mapPartitions(it => LinkGraph.vectorBatch(it).orElse(throw new IllegalArgumentException(
+          "a (vid, value) row holds a null")).iterator)
+        .collect().foldLeft(new LinkGraph.Rows(packed = true))(LinkGraph.append)
 
-    private def collected(rows: DataFrame, fill: Double): Array[Double] = {
-      val arr = Array.fill(size)(fill)
-      rowsOf(rows).foreach { case (vid, v) => arr(vid.toInt) = v }
-      arr
+    /** `rows` over `fill`, each value divided by `scale`; see [[LinkGraph.Slots]] for `whole`. */
+    private def filled(rows: LinkGraph.Rows, fill: Double, whole: Option[String] = None, scale: Double = 1.0) = {
+      val slots = new LinkGraph.Slots(0L, size, fill, whole)
+      for (i <- 0 until rows.n) slots.set(rows.a(i), rows.w(i) / scale)
+      slots.done()
     }
 
     /** The prior scaled to sum 1 (pagerank.py:285): collected once, its total
@@ -232,18 +239,15 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
       */
     private lazy val prior = {
       val rows = rowsOf(rawPrior)
-      val total = rows.foldLeft(0.0)(_ + _._2)
-      val arr = new Array[Double](size)
-      rows.foreach { case (vid, v) => arr(vid.toInt) = v / total }
-      arr
+      filled(rows, 0.0, scale = (0 until rows.n).foldLeft(0.0)((t, i) => t + rows.w(i)))
     }
     private val aux: Array[Double] = mode match {
       case PageRankMode.RiskPropagation => PageRankEngine.times(prior, 1.0 - d) // delta, pagerank.py:295
-      case PageRankMode.MolerDangling => collected(zLinkedRows, zBase)
+      case PageRankMode.MolerDangling => filled(rowsOf(zLinkedRows), zBase)
       case PageRankMode.ReferenceRenorm => null
     }
     private var x: Array[Double] = start match {
-      case Some(ranks) => collected(ranks, 0.0)
+      case Some((ranks, name)) => filled(rowsOf(ranks), 0.0, Some(name))
       case None if mode == PageRankMode.RiskPropagation => prior // x₀ = r₀ (pagerank.py:292)
       case None => Array.fill(size)(1.0 / n) // x = ones(n)/n (pagerank.py:180)
     }
@@ -328,11 +332,9 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
   }
 
   /** Distributed regime: x is block-laid chunk RDDs, zipped each superstep
-    * against the co-partitioned adjacency (no join, no exchange of adjacency:
-    * round 1 joined the cached Dataset per superstep and the planner
-    * broadcast / sort-merge-exchanged all ~16 B/edge of it every iteration).
+    * against the co-partitioned adjacency (no join, no exchange of adjacency).
     */
-  private final class OnCluster(start: Option[DataFrame]) extends RankVector {
+  private final class OnCluster(start: Option[(DataFrame, String)]) extends RankVector {
     private val adj = graph.adjPartsByBlock
     // counts mid-block drains, so a probe run can prove the bounded-scratch path fired
     private val accFlush = spark.sparkContext.longAccumulator("graft.slabFlushes")
@@ -350,7 +352,7 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
       case PageRankMode.ReferenceRenorm => null
     }
     private var x: RDD[RankChunk] = start match {
-      case Some(ranks) => laid(graph.chunksOf(ranks))
+      case Some((ranks, name)) => laid(graph.chunksOf(ranks, whole = Some(name)))
       case None if mode == PageRankMode.RiskPropagation => prior
       case None => laid(graph.uniformChunks())
     }

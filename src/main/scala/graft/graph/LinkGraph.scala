@@ -34,21 +34,23 @@ import graft.model._
   *     route 2 sends every folded edge by its `dst` id to its block's slice,
   *     which remaps `dst`. Rows cross every exchange as per-(map task, target)
   *     primitive batches.
-  *  1. After the `dst` route, partition b holds exactly block b's in-edges:
-  *     that is the [[edges]] cache, sorted by (dst, src).
-  *  1. The per-block kernel ([[LinkGraph.blockParts]]) turns partition b into
-  *     the dst-major parts where it lies: each vertex's in-degree is the sum
-  *     over its sorted run, `wNorm = w / inDeg`, and the run is split into parts
-  *     of at most [[LinkGraph.MaxEdgesPerPart]] edges. Both [[adjParts]] and
-  *     [[adjPartsByBlock]] read this one result.
+  *  1. Partition b then holds block b's in-edges, sorted by (dst, src) where
+  *     they land: the edge store (one job materializes it), beside the runs
+  *     as the dictionary store ([[LinkGraph.Store]]). [[vertexDict]] and
+  *     [[edges]] are uncached views over them, in the same layout.
+  *  1. The per-block kernel ([[LinkGraph.blockParts]]) turns a copy of store
+  *     partition b into the dst-major parts where it lies: each vertex's
+  *     in-degree is the sum over its sorted run, `wNorm = w / inDeg`, and the
+  *     run is split into parts of at most [[LinkGraph.MaxEdgesPerPart]]
+  *     edges. Both [[adjParts]] and [[adjPartsByBlock]] read this one result.
   *  1. The same wNorm rows cross one src-block exchange, and the same kernel
   *     (without normalizing) gives the gather parts [[gatherPartsRdd]].
-  * Edges that were not laid out by this build (the resident fold, the public
-  * constructor, [[LinkGraph.fromDenseWeighted]], dense-by-max) are routed by
-  * dst block once before the kernel. When the edges fit the policy's driver
-  * budget the same kernel runs on the driver over [[edgesLocal]], the one
-  * primitive driver copy of the folded edges (packed keys and weights, 16 B
-  * per edge); restored parts replace the kernel altogether.
+  * The resident fold's store is slices of its driver arrays. Its edges, and
+  * the frames of the public constructor and [[LinkGraph.fromDenseWeighted]]
+  * (packed on the fly), are routed by dst block once before the kernel. When
+  * the edges fit the policy's driver budget the same kernel runs on the
+  * driver over [[edgesLocal]], the one primitive driver copy of the folded
+  * edges (16 B per edge); restored parts replace the kernel altogether.
   *
   * Connected components and dense triangles (bitset rows) read the same copy,
   * LPA and sparse triangles one [[symmetricCsr]] built from it per call; one
@@ -56,12 +58,13 @@ import graft.model._
   * returns their arrays ([[vertexFrame]]).
   *
   * Per-task memory of the kernel is about 32 B × the edges in one block: a
-  * packed (slot, vid) long and a weight per edge, plus the parts it emits.
-  * Route 1's fold holds about 44 B × the raw pairs of one run: the received
-  * pairs and the counting sort by `src`.
+  * copy of the store's packed (slot, vid) longs and weights, plus the parts
+  * it emits. The stores hold 16 B per edge and 8 B per vertex. Route 1's fold
+  * holds about 44 B × the raw pairs of one run: the received pairs and the
+  * counting sort by `src`.
   * Packing needs vids below 2³² and blocks below 2³¹ slots (required).
   *
-  * The [[degreeTable]] is one scan of the edge frame, whatever its layout, and
+  * The [[degreeTable]] is one scan of the edges, whatever their layout, and
   * one exchange keyed by dictionary partition ([[LinkGraph.degreesOf]]).
   *
   * @param vertexDict  (extId, vid) dictionary; vid dense 0..n-1 ascending by extId
@@ -95,21 +98,67 @@ final class LinkGraph(
 
   lazy val numEdges: Long = if (knownNumEdges >= 0) knownNumEdges else edges.count()
 
+  private def store: Option[LinkGraph.Store] = source match {
+    case AdjacencySource.BlockLaid(s) => Some(s)
+    case AdjacencySource.Resident(s, _) => Some(s)
+    case _ => None
+  }
+
+  /** [[edges]] as one primitive batch per partition, in row order: the
+    * build's store, else the frame's partitions packed on the fly.
+    */
+  private def edgeBatches: RDD[LinkGraph.EdgeBatch] = store.map(_.edges).getOrElse {
+    val n = numVertices
+    edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd.mapPartitions { it =>
+      val r = new LinkGraph.Rows(packed = true)
+      it.foreach { e =>
+        val src = e.getLong(0)
+        val dst = e.getLong(1)
+        if (src < 0 || src >= n || dst < 0 || dst >= n)
+          throw new IllegalStateException(s"edge ($src, $dst) has an endpoint vid outside 0..${n - 1}")
+        r.add((src << 32) | dst, e.getDouble(2))
+      }
+      Iterator.single(LinkGraph.EdgeBatch(-1L, r.trimmed))
+    }
+  }
+
+  /** The dictionary as the store's runs and their first vids: the build's, or
+    * the frame's partitions, which one small job checks are contiguous
+    * ascending vid runs tiling 0..n−1 (any other layout is rejected).
+    */
+  private def dictRuns(): (RDD[Array[Long]], Array[Long]) = store.map(s => (s.runs, s.starts)).getOrElse {
+    val rows = vertexDict.select($"extId", $"vid").queryExecution.toRdd
+    // (first vid, count, vids contiguous) per partition
+    val runs = rows.mapPartitions { it =>
+      var first = -1L
+      var count = 0L
+      var contiguous = true
+      it.foreach { r =>
+        val v = r.getLong(1)
+        if (count == 0) first = v else contiguous &&= v == first + count
+        count += 1
+      }
+      Iterator.single((first, count, contiguous))
+    }.collect()
+    val starts = runs.map(_._2).scanLeft(0L)(_ + _)
+    require(starts.last == numVertices && runs.forall(_._2 <= Int.MaxValue) &&
+      runs.indices.forall(k => runs(k)._2 == 0 || (runs(k)._1 == starts(k) && runs(k)._3)),
+      s"the degree table needs the dictionary in contiguous ascending vid runs tiling 0..${numVertices - 1}; " +
+        s"found (first vid, count, contiguous) per partition: ${runs.mkString(", ")}")
+    (rows.mapPartitions(it => Iterator.single(it.map(_.getLong(0)).toArray)), starts)
+  }
+
   /** The folded edges on the driver for every driver-side consumer: packed
     * `(src << 32) | dst` keys in `a`, weights in `w` (16 B per edge). The
-    * resident fold hands over its own arrays, sorted by key; any other edge
-    * frame is collected once, in collect order. Lazy.
+    * resident fold hands over its own arrays, sorted by key; other edge
+    * batches are collected once, in partition order. Lazy.
     */
   private[graft] lazy val edgesLocal: LinkGraph.Rows = source match {
-    case AdjacencySource.Resident(local) => local
+    case AdjacencySource.Resident(_, local) => local
     case _ =>
-      edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd
-        .mapPartitions { it =>
-          val r = new LinkGraph.Rows(packed = true)
-          it.foreach(e => r.add((e.getLong(0) << 32) | e.getLong(1), e.getDouble(2)))
-          Iterator.single(r.trimmed)
-        }
-        .collect().foldLeft(new LinkGraph.Rows(packed = true))(LinkGraph.append).trimmed
+      val r = new LinkGraph.Rows(packed = true)
+      edgeBatches.collect().foreach(e => for (i <- 0 until e.rows.n) r.add((e.src(i) << 32) | e.dst(i), e.rows.w(i)))
+      r.trimmed
   }
 
   /** True when CC, LPA, triangles and clustering run on the driver: the
@@ -217,42 +266,36 @@ final class LinkGraph(
     */
   @volatile private var degreeTableBuilt = false
   lazy val degreeTable: DataFrame = {
-    val t = LinkGraph.degreesOf(spark, vertexDict, edges, numVertices, policy.taskBytes)
+    val (runs, starts) = dictRuns()
+    val t = LinkGraph.degreesOf(spark, runs, starts, edgeBatches, policy.taskBytes)
     t.persist(StorageLevel.MEMORY_AND_DISK)
     degreeTableBuilt = true
     t
   }
 
-  /** The cluster build of the dst-major parts: block-laid edges go straight
-    * through the per-block kernel; any other edge frame is routed by dst block
-    * once first. Partition b = block b's parts in partId order.
+  /** The cluster build of the dst-major parts: the block-laid store's batches
+    * go through the per-block kernel as copies (it normalizes in place); any
+    * other edge batches are routed by dst block once first. Partition b =
+    * block b's parts in partId order.
     */
   private def buildDstLayout(): RDD[AdjPart] = {
     val bs = blockSize
     val nb = numBlocks
-    val rows = edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd
-    val byBlock: RDD[(Int, LinkGraph.Rows)] =
-      if (source == AdjacencySource.BlockLaid) {
-        require(rows.getNumPartitions == nb,
-          s"block-laid edges need $nb partitions, found ${rows.getNumPartitions}")
-        rows.mapPartitionsWithIndex { (b, it) =>
-          val out = new Array[LinkGraph.Rows](nb)
-          it.foreach { r =>
-            val dst = r.getLong(1)
-            if (dst / bs != b)
-              throw new IllegalStateException(s"edge to vid $dst found in partition $b of the block-laid edges")
-            LinkGraph.addByDst(out, bs, r.getLong(0), dst, r.getDouble(2))
-          }
-          Option(out(b)).iterator.map(r => (b, r))
-        }
-      } else
-        rows
+    val byBlock: RDD[(Int, LinkGraph.Rows)] = source match {
+      case AdjacencySource.BlockLaid(s) =>
+        s.edges.mapPartitionsWithIndex((b, it) => it.map(e => (b, e.rows.slice(0, e.rows.n))))
+      case _ =>
+        edgeBatches
           .mapPartitions { it =>
             val out = new Array[LinkGraph.Rows](nb)
-            it.foreach(r => LinkGraph.addByDst(out, bs, r.getLong(0), r.getLong(1), r.getDouble(2)))
+            it.foreach { e =>
+              var i = 0
+              while (i < e.rows.n) { LinkGraph.addByDst(out, bs, e.src(i), e.dst(i), e.rows.w(i)); i += 1 }
+            }
             LinkGraph.batches(out)
           }
           .partitionBy(blockPartitioner)
+    }
     LinkGraph.kernel(byBlock, normalize = true)
   }
 
@@ -285,9 +328,7 @@ final class LinkGraph(
     * block b. The distributed superstep zipPartitions this against
     * identically-laid-out rank chunks, so the adjacency NEVER moves after the
     * build — only the O(n)-sized rank/contribution chunks cross the wire each
-    * superstep. (Round-1 regression: joining the cached `adjParts` Dataset per
-    * superstep erased its partitioning through MapPartitions and the planner
-    * broadcast / sort-merged the whole adjacency every iteration.)
+    * superstep.
     */
   lazy val adjPartsByBlock: RDD[(Int, AdjPart)] = dstLayout.map(p => (p.blockId, p))
 
@@ -352,21 +393,17 @@ final class LinkGraph(
   }
 
   /** Chunked form of an arbitrary per-vertex vector (vid, value); missing vids
-    * get `default`.
+    * get `default`. With `whole` (the vector's name) every vid must appear
+    * exactly once, checked while the chunks fill ([[LinkGraph.Slots]]).
     */
-  def chunksOf(vec: DataFrame, default: Double = 0.0): Dataset[RankChunk] = {
+  def chunksOf(vec: DataFrame, default: Double = 0.0, whole: Option[String] = None): Dataset[RankChunk] = {
     val n = numVertices
     val bs = blockSize
     val nb = numBlocks
     // ONE shuffle: rows route straight to their block's partition (the
-    // HashPartitioner is the identity on blockIds 0..nb-1) and each partition
-    // fills its dense chunk directly — empty partitions still emit a default
-    // chunk, so no second union+reduce pass over the chunk arrays is needed
-    // (the previous groupByKey → union(defaults) → reduceGroups shape paid a
-    // second O(n)-byte shuffle and a merge pass per call; this is the fused
-    // outer-join flagged in the round-5 review). Values are identical: a slot
-    // is `v` when (vid, v) exists, `default` otherwise — the old merge
-    // computed v + default − default.
+    // HashPartitioner is the identity on blockIds 0..nb-1; a vid outside
+    // 0..n−1 lands in a block whose slots reject it) and each partition fills
+    // its dense chunk directly — empty partitions still emit a default chunk
     val rdd = vec
       .select($"vid".cast("long"), $"value".cast("double"))
       .as[(Long, Double)]
@@ -375,10 +412,9 @@ final class LinkGraph(
       .partitionBy(blockPartitioner)
       .mapPartitionsWithIndex { (blockId, it) =>
         val lo = blockId.toLong * bs
-        val len = math.min(bs, n - lo).toInt
-        val arr = Array.fill(len)(default)
-        it.foreach { case (_, (vid, v)) => arr((vid - lo).toInt) = v }
-        Iterator.single(RankChunk(blockId, lo, arr))
+        val slots = new LinkGraph.Slots(lo, math.min(bs, n - lo).toInt, default, whole)
+        it.foreach { case (_, (vid, v)) => slots.set(vid, v) }
+        Iterator.single(RankChunk(blockId, lo, slots.done()))
       }
     spark.createDataset(rdd)
   }
@@ -399,16 +435,15 @@ final class LinkGraph(
     LinkGraph.fromDenseWeighted(spark, edges.filter($"src" < kk && $"dst" < kk), kk, policy = policy)
   }
 
-  /** Release every cache, broadcast and operator-output pin this graph
-    * MATERIALIZED. Each lazy layout checks its built flag first —
-    * unconditionally touching the lazy vals used to FORCE a full build of
-    * layouts the caller never used (e.g. a resident-regime run paid for the
-    * dst-major columnar build inside its own teardown).
+  /** Release the build's store and every cache, broadcast and operator-output
+    * pin this graph materialized. Each lazy layout checks its built flag
+    * first: touching the lazy val would build a layout the caller never used.
     */
   def unpersistAll(): Unit = {
     if (dstLayoutBuilt) dstLayout.unpersist(false)
     if (gatherPartsBuilt) gatherPartsRdd.unpersist(false)
     if (degreeTableBuilt) degreeTable.unpersist()
+    store.foreach { s => s.runs.unpersist(false); s.edges.unpersist(false) }
     edges.unpersist()
     vertexDict.unpersist()
     releases.foreach(_())
@@ -458,6 +493,12 @@ object LinkGraph {
       n += 1
     }
     def weight(i: Int): Double = if (w == null) 1.0 else w(i)
+    /** A copy of packed weighted rows `lo until hi`. */
+    def slice(lo: Int, hi: Int): Rows = {
+      val r = new Rows(packed = true)
+      r.a = java.util.Arrays.copyOfRange(a, lo, hi); r.w = java.util.Arrays.copyOfRange(w, lo, hi); r.n = hi - lo
+      r
+    }
     def trimmed: Rows = {
       if (a.length != n) {
         a = java.util.Arrays.copyOf(a, n)
@@ -468,8 +509,54 @@ object LinkGraph {
     }
   }
 
+  /** One partition of the folded edges: keys `(src << 32) | dst` when `lo` < 0,
+    * else the kernel's `((dst − lo) << 32) | src` of the block at vid `lo`.
+    */
+  private[graft] final case class EdgeBatch(lo: Long, rows: Rows) {
+    def src(i: Int): Long = if (lo < 0) rows.a(i) >>> 32 else rows.a(i) & 0xffffffffL
+    def dst(i: Int): Long = if (lo < 0) rows.a(i) & 0xffffffffL else lo + (rows.a(i) >>> 32)
+  }
+
+  /** A build's one copy of the graph, which [[LinkGraph.vertexDict]] and
+    * [[LinkGraph.edges]] view: ascending external-id runs (run k holds vids
+    * `[starts(k), starts(k + 1))`, `starts.last` = n) and one [[EdgeBatch]]
+    * per edge partition.
+    */
+  private[graft] final case class Store(runs: RDD[Array[Long]], starts: Array[Long], edges: RDD[EdgeBatch])
+
+  /** Slots `[lo, lo + len)` of a per-vertex vector, `default` where unset. A
+    * vid outside them raises; with `whole` (the vector's name) so does a vid
+    * set twice or, at [[done]], one never set.
+    */
+  private[graft] final class Slots(lo: Long, len: Int, default: Double, whole: Option[String]) {
+    private val values = Array.fill(len)(default)
+    private val seen = whole.map(_ => new java.util.BitSet(len)).orNull
+    private def fail(what: String) =
+      throw new IllegalStateException(s"${whole.getOrElse("vector")} over vids $lo..${lo + len - 1}: $what")
+    def set(vid: Long, v: Double): Unit = {
+      if (vid < lo || vid >= lo + len) fail(s"vid $vid is out of range")
+      val i = (vid - lo).toInt
+      if (seen != null) { if (seen.get(i)) fail(s"vid $vid appears twice"); seen.set(i) }
+      values(i) = v
+    }
+    def done(): Array[Double] = {
+      if (seen != null && seen.cardinality != len) fail(s"${len - seen.cardinality} vids are missing")
+      values
+    }
+  }
+
+  /** One partition of (vid, value) rows as one batch (vids in `a`, values in
+    * `w`), or None when a row holds a null.
+    */
+  private[graft] def vectorBatch(it: Iterator[InternalRow]): Option[Rows] = {
+    val r = new Rows(packed = true)
+    var nulls = false
+    it.foreach { x => nulls ||= x.anyNull; if (!nulls) r.add(x.getLong(0), x.getDouble(1)) }
+    if (nulls) None else Some(r.trimmed)
+  }
+
   /** Appends rows `more` to `acc` (null = none yet); returns the accumulator. */
-  private def append(acc: Rows, more: Rows): Rows =
+  private[graft] def append(acc: Rows, more: Rows): Rows =
     if (acc == null) more
     else {
       var i = 0
@@ -534,8 +621,7 @@ object LinkGraph {
     * pagerank.py:173-174 — the one-time sparse-build analog of
     * pagerank.py:638-640), and split the sorted rows into parts of at most
     * `cap` edges — a hub's run may continue in the next part. Rows are sorted
-    * in place; an already-sorted block (the build's own edge cache) skips the
-    * sort.
+    * and normalized in place; an already-sorted block skips the sort.
     */
   private[graft] def blockParts(blockId: Int, rows: Rows, normalize: Boolean, cap: Int): Array[AdjPart] = {
     val ks = rows.a
@@ -588,43 +674,24 @@ object LinkGraph {
   private final case class DegreeSlab(
       task: Int, seq: Int, out: Boolean, lo: Int, dense: Array[Double], idx: Array[Int], vals: Array[Double])
 
-  /** The degree table's kernel, for every graph size: one scan of `edges` and
-    * one exchange keyed by dictionary partition, no joins.
-    *  1. One small job reads each dictionary partition's first vid and count;
-    *     the partitions must be contiguous ascending vid runs tiling 0..n−1
-    *     (required: any other layout is rejected, never mis-summed).
+  /** The degree table's kernel, for every graph size: one scan of the edge
+    * batches and one exchange keyed by dictionary run, no joins.
     *  1. Each map task sums its edges' weights into in- and out-degree slabs
     *     per dictionary partition (allocated at the partition's length when
     *     first touched, flushed when they pass `taskBytes`) and ships each as a
     *     [[DegreeSlab]].
     *  1. Partition k adds its slabs in (map task, flush) order, so every run
     *     adds the same values in the same order whatever the weights, and zips
-    *     with dictionary partition k for the external ids: rows (vid, extId,
-    *     inDeg, outDeg), vid-ascending, in the dictionary's partitions.
+    *     with run k for the external ids: rows (vid, extId, inDeg, outDeg),
+    *     vid-ascending, in the dictionary's partitions.
     */
   private def degreesOf(
-      spark: SparkSession, dict: Dataset[VertexMapping], edges: Dataset[Edge], n: Long, taskBytes: Long): DataFrame = {
+      spark: SparkSession, runs: RDD[Array[Long]], starts: Array[Long], edges: RDD[EdgeBatch], taskBytes: Long
+  ): DataFrame = {
     import spark.implicits._
-    val dictRows = dict.select($"extId", $"vid").queryExecution.toRdd
-    val p = dictRows.getNumPartitions
-    // (first vid, count, vids contiguous) per dictionary partition
-    val runs = dictRows.mapPartitions { it =>
-      var first = -1L
-      var count = 0L
-      var contiguous = true
-      it.foreach { r =>
-        val v = r.getLong(1)
-        if (count == 0) first = v else contiguous &&= v == first + count
-        count += 1
-      }
-      Iterator.single((first, count, contiguous))
-    }.collect()
-    val starts = runs.map(_._2).scanLeft(0L)(_ + _)
-    require(starts.last == n && runs.indices.forall(k => runs(k)._2 == 0 || (runs(k)._1 == starts(k) && runs(k)._3)) &&
-      runs.forall(_._2 <= Int.MaxValue),
-      s"the degree table needs the dictionary in contiguous ascending vid runs tiling 0..${n - 1}; " +
-        s"found (first vid, count, contiguous) per partition: ${runs.mkString(", ")}")
-    val slabs = edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd
+    val n = starts.last
+    val p = runs.getNumPartitions
+    val slabs = edges
       .mapPartitionsWithIndex { (task, it) =>
         val acc = Array.ofDim[Array[Double]](2, p) // in, out × dictionary partition
         val out = scala.collection.mutable.ArrayBuffer.empty[(Int, DegreeSlab)]
@@ -648,17 +715,21 @@ object LinkGraph {
           }
           acc(d)(k)((v - starts(k)).toInt) += w
         }
-        it.foreach { r =>
-          val w = r.getDouble(2)
-          add(0, r.getLong(1), w)
-          add(1, r.getLong(0), w)
+        it.foreach { e =>
+          var i = 0
+          while (i < e.rows.n) {
+            val w = e.rows.w(i)
+            add(0, e.dst(i), w)
+            add(1, e.src(i), w)
+            i += 1
+          }
         }
         flush()
         out.iterator
       }
     val table = slabs
       .partitionBy(new org.apache.spark.HashPartitioner(p)) // identity on partition indices
-      .zipPartitions(dictRows) { (in, dictIt) =>
+      .zipPartitions(runs) { (in, runIt) =>
         val k = TaskContext.getPartitionId()
         val lo = starts(k)
         val len = (starts(k + 1) - lo).toInt
@@ -669,11 +740,8 @@ object LinkGraph {
           if (s.dense != null) while (i < s.dense.length) { d(s.lo + i) += s.dense(i); i += 1 }
           else while (i < s.idx.length) { d(s.idx(i)) += s.vals(i); i += 1 }
         }
-        var i = -1
-        dictIt.map { r =>
-          i += 1
-          (lo + i, r.getLong(0), deg(0)(i), deg(1)(i))
-        }
+        val run = runIt.next()
+        Iterator.range(0, len).map(i => (lo + i, run(i), deg(0)(i), deg(1)(i)))
       }
     spark.createDataset(table).toDF("vid", "extId", "inDeg", "outDeg")
   }
@@ -759,13 +827,10 @@ object LinkGraph {
   /** Edge-budget target per block for the auto block count. */
   private val TargetEdgesPerBlock: Long = 64L * 1024
 
-  /** Auto block count: superstep work is EDGE-dominated, so sizing blocks by
-    * vertex count alone starved small-but-dense graphs (the 2000-repo
-    * shared-pattern graph has 2.1M folded edges — n/1024 gave it ONE block,
-    * i.e. serial supersteps on 32 cores). Blocks now also scale with the
-    * folded edge count (cheap: the build holds the folded frame cached),
-    * capped at 2× parallelism; at cluster scale this is the knob that keeps
-    * per-task gather work bounded regardless of the vertex/edge ratio.
+  /** Auto block count: superstep work is edge-dominated, so blocks scale with
+    * the folded edge count as well as the vertex count, capped at 2×
+    * parallelism: per-task gather work stays bounded whatever the vertex/edge
+    * ratio (a small but dense graph still gets several blocks).
     */
   private def autoBlocks(spark: SparkSession, n: Long, edges: Long): Int =
     math.max(1, math.min(
@@ -849,9 +914,9 @@ object LinkGraph {
   /** Driver fold + dictionary + remap of the collected rows —
     * value-identical to the distributed build: vids are the ascending sort
     * rank of the distinct external ids, and a pair's copies fold into the sum
-    * of their weights (their count when unweighted). The dictionary and the
-    * remapped edges, in (src, dst) vid order, go back as one primitive slice
-    * per task, cut where `parallelize` cuts.
+    * of their weights (their count when unweighted). The sorted ids and the
+    * remapped edges, in (src, dst) vid order, are the graph's store, one
+    * primitive slice per task; no job runs after the collect.
     */
   private def residentFromPairs(
       spark: SparkSession, chunks: Array[Rows], numBlocks: Int, policy: ExecutionPolicy, mirror: Boolean): LinkGraph = {
@@ -876,24 +941,37 @@ object LinkGraph {
     // fold each run of copies; with `mirror` each folded pair gains its swap
     val local = if (mirror) mirrored(foldRuns(pairs)) else foldRuns(pairs).trimmed
     val m = local.n
-    val dict = spark.createDataset(sliced(spark, n)((lo, hi) => (lo, java.util.Arrays.copyOfRange(ids, lo, hi)))
-      .flatMap { case (lo, s) => Iterator.range(0, s.length).map(v => VertexMapping(s(v), lo + v.toLong)) })
-    dict.persist(StorageLevel.MEMORY_AND_DISK)
-    dict.count()
-    val edges = spark.createDataset(sliced(spark, m)((lo, hi) =>
-        (java.util.Arrays.copyOfRange(local.a, lo, hi), java.util.Arrays.copyOfRange(local.w, lo, hi)))
-      .flatMap { case (ks, ws) => Iterator.range(0, ks.length).map(e => Edge(ks(e) >>> 32, ks(e) & 0xffffffffL, ws(e))) })
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
+    val store = Store(sliced(spark, n)(java.util.Arrays.copyOfRange(ids, _, _)), slices(spark, n).map(_.toLong),
+      sliced(spark, m)((lo, hi) => EdgeBatch(-1L, local.slice(lo, hi))))
     val (blocks, bs) = geometry(spark, n, m, numBlocks)
-    new LinkGraph(spark, dict, edges, n, blocks, bs, m, AdjacencySource.Resident(local), policy)
+    storedGraph(spark, store, Some(local), n, m, blocks, bs, policy)
+  }
+
+  /** The bounds of `len` positions cut into one slice per task. */
+  private def slices(spark: SparkSession, len: Int): Array[Int] = {
+    val p = math.max(1, spark.sparkContext.defaultParallelism)
+    Array.tabulate(p + 1)(s => (s.toLong * len / p).toInt)
   }
 
   /** `len` positions cut into one slice per task (`cut(lo, hi)`), parallelized in slice order. */
   private def sliced[T: scala.reflect.ClassTag](spark: SparkSession, len: Int)(cut: (Int, Int) => T): RDD[T] = {
-    val p = math.max(1, spark.sparkContext.defaultParallelism)
-    spark.sparkContext.parallelize(
-      (0 until p).map(s => cut((s.toLong * len / p).toInt, ((s + 1).toLong * len / p).toInt)), p)
+    val b = slices(spark, len)
+    spark.sparkContext.parallelize((0 until b.length - 1).map(s => cut(b(s), b(s + 1))), b.length - 1)
+  }
+
+  /** The graph viewing a build's `store`: resident with the fold's driver
+    * edges `local`, else block-laid.
+    */
+  private def storedGraph(spark: SparkSession, store: Store, local: Option[Rows], n: Long, m: Long, blocks: Int,
+      bs: Long, policy: ExecutionPolicy): LinkGraph = {
+    import spark.implicits._
+    val edges = store.edges.flatMap(e => Iterator.range(0, e.rows.n).map(i => Edge(e.src(i), e.dst(i), e.rows.w(i))))
+    val starts = store.starts
+    val dict = store.runs.mapPartitionsWithIndex { (k, it) =>
+      it.flatMap(run => Iterator.range(0, run.length).map(i => VertexMapping(run(i), starts(k) + i)))
+    }
+    new LinkGraph(spark, spark.createDataset(dict), spark.createDataset(edges), n, blocks, bs, m,
+      local.map(AdjacencySource.Resident(store, _)).getOrElse(AdjacencySource.BlockLaid(store)), policy)
   }
 
   /** Driver columns of length `len` (each an `Array[Long]` or an
@@ -976,8 +1054,8 @@ object LinkGraph {
         fromScan(spark, scanOf(folded.queryExecution.toRdd, weighted = true), numBlocks, policy, mirror = false)
 
       case IdMode.DenseByMax =>
-        // the bounds, the count and the graph's edge cache all read the
-        // folded frame: cached so the upstream plan runs once
+        // the bounds and the graph's edge cache (with its count, when the
+        // geometry is auto) read the folded frame: cached so the upstream plan runs once
         folded.persist(StorageLevel.MEMORY_AND_DISK)
         try {
           val bounds = folded
@@ -985,9 +1063,7 @@ object LinkGraph {
             .first()
           require(!bounds.isNullAt(0), "dense-by-max graph needs at least one edge")
           require(bounds.getLong(1) >= 0L, "dense-by-max ids must be non-negative")
-          val n = bounds.getLong(0) + 1
-          val blocks = if (numBlocks > 0) numBlocks else autoBlocks(spark, n, folded.count())
-          val g = fromDenseWeighted(spark, folded.as[Edge], n, blocks, policy)
+          val g = fromDenseWeighted(spark, folded.as[Edge], bounds.getLong(0) + 1, numBlocks, policy)
           g.numEdges // materialize the graph's edge cache through `folded`
           g
         } finally folded.unpersist(false)
@@ -1000,9 +1076,10 @@ object LinkGraph {
   /** The distributed Compacted build over a cached `scan` of (src, dst[, w])
     * rows in external ids: the dictionary's sorted runs from one exchange of
     * per-task distinct ids, route 1 (remap `src`, fold) to the runs, route 2
-    * (remap `dst`) to the block slices cut from them. With `mirror` route 1
-    * sends every row in both orientations. Every intermediate cache is
-    * released once the graph's dictionary and edge cache are built.
+    * (remap `dst`, sort) to the block slices cut from them. With `mirror`
+    * route 1 sends every row in both orientations. The runs and route 2's
+    * batches are the graph's store; one job materializes the batches, and
+    * every intermediate cache is released.
     */
   private def routedGraph(
       spark: SparkSession, scan: RDD[Rows], numBlocks: Int, policy: ExecutionPolicy, mirror: Boolean): LinkGraph = {
@@ -1052,7 +1129,7 @@ object LinkGraph {
       // first external id of every non-empty block: the routing boundaries
       val firstIds = slices.mapPartitions(_.filter(_.nonEmpty).map(_(0))).collect()
       // route 2: every folded edge by its dst id to its block's slice, which remaps dst
-      val byDst = bySrc
+      val byDst = hold(bySrc
         .mapPartitionsWithIndex { (k, it) =>
           val t = it.next()
           val out = new Array[Rows](blocks)
@@ -1066,18 +1143,22 @@ object LinkGraph {
         .partitionBy(hp)
         .zipPartitions(slices) { (it, sl) =>
           val slice = sl.next()
+          val lo = TaskContext.getPartitionId() * bs
           val out = new Rows(packed = true)
-          it.foreach { case (b, t) =>
-            val lo = b * bs
+          it.foreach { case (_, t) =>
             var i = 0
             while (i < t.n) {
               out.add(((vidIn(slice, t.b(i), lo) - lo) << 32) | t.a(i), t.w(i))
               i += 1
             }
           }
-          Iterator.single(out)
-        }
-      blockLaidGraph(spark, dictionaryOf(spark, runs, starts), n, m, blocks, bs, byDst, policy)
+          val rows = out.trimmed
+          dualSort(rows.a, rows.w, 0, rows.n - 1) // (dst, src): the kernel's order
+          Iterator.single(EdgeBatch(lo, rows))
+        })
+      byDst.count()
+      held --= Seq(runs, byDst) // the graph's store
+      storedGraph(spark, Store(runs, starts, byDst), None, n, m, blocks, bs, policy)
     } finally held.foreach(_.unpersist(false))
   }
 
@@ -1188,39 +1269,6 @@ object LinkGraph {
     out.trimmed
   }
 
-  /** Persists the dictionary and the block-laid edge cache `byDst` feeds
-    * (partition b: block b's packed (dst slot, src vid) rows, or null), and
-    * wraps the graph around them. Materializes both while the caller's scoped
-    * caches are still held.
-    */
-  private def blockLaidGraph(
-      spark: SparkSession,
-      dict: Dataset[VertexMapping],
-      n: Long,
-      m: Long,
-      blocks: Int,
-      bs: Long,
-      byDst: RDD[Rows],
-      policy: ExecutionPolicy
-  ): LinkGraph = {
-    import spark.implicits._
-    dict.persist(StorageLevel.MEMORY_AND_DISK)
-    dict.count()
-    val edges = spark.createDataset(byDst.mapPartitionsWithIndex { (b, it) =>
-      val rows = it.next()
-      if (rows == null) Iterator.empty
-      else {
-        val ks = rows.a
-        dualSort(ks, rows.w, 0, rows.n - 1) // (dst, src): the kernel's order
-        val lo = b * bs
-        Iterator.range(0, rows.n).map(i => Edge(ks(i) & 0xffffffffL, lo + (ks(i) >>> 32), rows.w(i)))
-      }
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    val g = new LinkGraph(spark, dict, edges, n, blocks, bs, m, AdjacencySource.BlockLaid, policy)
-    edges.count()
-    g
-  }
-
   /** All rows one task received for its block, merged (null when none). */
   private def merged(it: Iterator[(Int, Rows)]): Rows =
     it.foldLeft(null: Rows)((acc, r) => append(acc, r._2))
@@ -1265,11 +1313,8 @@ object LinkGraph {
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     val positive = edges.filter(col("weight") > 0) // column filter: stays codegen'd
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // auto path routes through the same edge-aware autoBlocks as fromEdgeList:
-    // the old vertex-only n/1024 fallback gave a small-but-dense graph (e.g. a
-    // dense induced prefix subgraph) ONE block = serial supersteps. The count
-    // materializes the persisted edge cache `numEdges` would count anyway —
-    // and is passed through so numEdges never re-counts.
+    // the auto geometry counts the edges (autoBlocks): the count materializes
+    // the persisted frame and is passed through, so numEdges never re-counts
     val cnt = if (numBlocks > 0) -1L else positive.count()
     val (blocks, bs) = geometry(spark, numVertices, cnt, numBlocks)
     new LinkGraph(spark, identityDict(spark, numVertices, p), positive, numVertices, blocks, bs, cnt,
@@ -1308,13 +1353,6 @@ object LinkGraph {
       numVertices, numBlocks, math.max(bs, 1), numEdges, AdjacencySource.Restored(dstParts, gatherParts), policy)
   }
 
-  /** (extId, vid) rows of the sorted runs, in the runs' partitions. */
-  private def dictionaryOf(spark: SparkSession, runs: RDD[Array[Long]], starts: Array[Long]): Dataset[VertexMapping] = {
-    import spark.implicits._
-    spark.createDataset(runs.mapPartitionsWithIndex { (k, it) =>
-      it.flatMap(run => Iterator.range(0, run.length).map(i => VertexMapping(run(i), starts(k) + i)))
-    })
-  }
 }
 
 /** Where a [[LinkGraph]]'s blocked adjacency comes from. */
@@ -1326,16 +1364,17 @@ object AdjacencySource {
     */
   case object Edges extends AdjacencySource
 
-  /** The edge frame as the routed build lays it out: partition b holds exactly
-    * block b's in-edges, sorted by (dst, src), so the kernel runs in place.
+  /** The routed build's store, persisted: edge partition b holds exactly block
+    * b's in-edges as block-laid keys sorted by (dst, src), so the kernel runs
+    * on a copy of it where it lies.
     */
-  case object BlockLaid extends AdjacencySource
+  final case class BlockLaid(store: LinkGraph.Store) extends AdjacencySource
 
-  /** The resident fold's driver copy of the folded edges (packed keys and
-    * weights, sorted by key): every driver-side consumer reads it instead of
-    * collecting the edge frame.
+  /** The resident fold's store (slices of its driver arrays, one per task) and
+    * its driver copy of the folded edges (packed keys and weights, sorted by
+    * key), which every driver-side consumer reads.
     */
-  final case class Resident(edges: LinkGraph.Rows) extends AdjacencySource
+  final case class Resident(store: LinkGraph.Store, edges: LinkGraph.Rows) extends AdjacencySource
 
   /** Parts restored in the build's layout (partition b = block b's parts in
     * partId order), in either orientation; they replace the kernel.

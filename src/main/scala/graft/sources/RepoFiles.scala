@@ -16,8 +16,8 @@ import graft.model.ExecutionPolicy
   * (seed-pinned, no wall clock) at any scale with pure Catalyst expressions
   * (xxhash64/sha2/sequence/transform) — plus the pattern extraction and the
   * shared-pattern graph over it (repos as vertices, shared import tokens as
-  * weighted edges): [[sharedPatternEdges]] states it as a Catalyst self-join,
-  * [[linkGraph]] builds it with one scan, one exchange and primitive stages.
+  * weighted edges), which [[linkGraph]] builds with one scan, one exchange
+  * and primitive stages.
   * The per-row invariant `sha2(content, 256)` serves the input-hint check.
   */
 object RepoFiles {
@@ -119,42 +119,9 @@ object RepoFiles {
       case (acc, lg) => acc.when(col("lang") === lg, regexp_extract_all(col("content"), lit(importPattern(lg)), lit(1)))
     }
 
-  /** Shared-pattern edges: distinct (repo, token) incidences self-joined on
-    * token → directed edges both ways between distinct repos sharing a token;
-    * duplicate pairs (many shared tokens) fold to weights downstream. The
-    * Catalyst statement of what [[linkGraph]] builds.
-    *
-    * Skew guard (north rule): tokens shared by more than `maxReposPerToken`
-    * repos are dropped before the self-join — a hot token over T repos emits
-    * T² pairs, so ubiquitous "stop tokens" would quadratically dominate while
-    * carrying no linkage signal (the same reasoning as stopword removal). The
-    * cutoff is an explicit knob.
-    */
-  def sharedPatternEdges(files: DataFrame, maxReposPerToken: Int = 1000): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val rt = repoTokens(files).distinct()
-    val kept = rt.join(
-      rt.groupBy($"token").agg(count(lit(1)).as("nRepos")).filter($"nRepos" <= maxReposPerToken).select($"token"),
-      Seq("token"))
-    val a = kept.select($"token", $"repo".as("repoA"))
-    val b = kept.select($"token", $"repo".as("repoB"))
-    a.join(b, Seq("token"))
-      .filter($"repoA" =!= $"repoB") // both orientations emerge from the join
-      .select(
-        xxhash64($"repoA").as("src"), // stable 64-bit external vertex ids
-        xxhash64($"repoB").as("dst"))
-  }
-
-  /** repo → stable external vertex id used by [[sharedPatternEdges]]. */
-  def repoIdMap(files: DataFrame): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select($"repo").distinct().select($"repo", xxhash64($"repo").as("extId"))
-  }
-
-  /** Full pipeline: the graph of [[sharedPatternEdges]] (repos whose 64-bit
-    * ids collide count as one), weight = shared-token count.
+  /** Full pipeline: the graph of the repos' shared import tokens (directed
+    * both ways between distinct repos sharing a token; repos whose 64-bit ids
+    * collide count as one), weight = shared-token count.
     *  1. One Catalyst scan extracts each file's tokens and hashes its repo
     *     once; each task keeps token → its sorted distinct repo ids.
     *  1. One exchange keyed by token merges each token's lists; a token with

@@ -235,27 +235,30 @@ class AnalyticsSpec extends GraftSuite {
   }
 
   test("percentile machinery leaves no cached state behind (round-2 leak fix)") {
-    val sc = spark.sparkContext
     import graft.analytics.ValueDist
     val df = (1 to 3000).map(i => (i.toLong, (i % 97).toDouble)).toDF("vid", "value")
-    // set-difference, not counts: the ContextCleaner may concurrently reap
-    // stale RDDs from earlier tests, which would shrink a raw count
-    def ids = sc.getPersistentRDDs.keySet
-    val before = ids
 
     // driver-local consumers: zero residue
-    NetworkAnalytics.percentileRank(df, "value").count()
-    NetworkAnalytics.riskStatistics(df, df).collect()
-    NetworkAnalytics.highRiskProviders(df, df).count()
-    NetworkAnalytics.highRiskPlan(df, df).count()
-    assert((ids -- before).isEmpty, s"leaked persistent RDDs: ${ids -- before}")
+    val (_, leaked) = persistedBy {
+      NetworkAnalytics.percentileRank(df, "value").count()
+      NetworkAnalytics.riskStatistics(df, df).collect()
+      NetworkAnalytics.highRiskProviders(df, df).count()
+      NetworkAnalytics.highRiskPlan(df, df).count()
+    }
+    assert(leaked.isEmpty, s"leaked persistent RDDs: ${leaked.keySet}")
 
     // distributed regime: release() must drop the cumulative cache
-    val Seq(dist) = ValueDist.of(df, Seq("value"), distributedOnly)
-    dist.percentiles(Seq(0.5, 0.9))
-    assert((ids -- before).nonEmpty, "distributed regime should cache while alive")
-    dist.release()
-    assert((ids -- before).isEmpty, "release() must unpersist the cumulative frame")
+    val (alive, left) = persistedBy {
+      val (dist, alive) = persistedBy {
+        val Seq(dist) = ValueDist.of(df, Seq("value"), distributedOnly)
+        dist.percentiles(Seq(0.5, 0.9))
+        dist
+      }
+      dist.release()
+      alive
+    }
+    assert(alive.nonEmpty, "distributed regime should cache while alive")
+    assert(left.isEmpty, "release() must unpersist the cumulative frame")
   }
 
   test("ValueDist: local exactly when every task's runs fit its share of driverBytes") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.storage.StorageLevel
+
 import graft.analytics.NetworkAnalytics
 import graft.graph.{AdjacencySource, LinkGraph}
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, PrefixStudy, TriangleCount}
@@ -315,7 +317,7 @@ class GraphAlgoSpec extends GraftSuite {
     */
   private def routedBuild(build: ExecutionPolicy => LinkGraph): LinkGraph = {
     val b = under(build(distributedOnly), ExecutionPolicy())
-    assert(b.source == AdjacencySource.BlockLaid)
+    assert(b.source.isInstanceOf[AdjacencySource.BlockLaid])
     b
   }
 
@@ -366,7 +368,7 @@ class GraphAlgoSpec extends GraftSuite {
       for (fold <- Seq(false, true)) {
         val base = if (fold) graphOf(edges, blocks, distributedOnly) else a
         val b = residentJob(base)
-        assert((b.source == AdjacencySource.BlockLaid) == fold)
+        assert(b.source.isInstanceOf[AdjacencySource.BlockLaid] == fold)
         val got = (layoutsOf(b), ranksOf(b))
         b.unpersistAll()
         assert(got == want) // identical keys/offsets/adjacency AND wNorm doubles
@@ -463,7 +465,7 @@ class GraphAlgoSpec extends GraftSuite {
     ).toDF("repo", "path", "commit", "lang", "content").repartition(3)
     val generated = RepoFiles.table(spark, numRepos = 60, filesPerRepo = 3, vocab = 40)
     for ((files, cap) <- Seq((fixture, 3), (generated, 12))) {
-      val want = LinkGraph.fromEdgeList(spark, RepoFiles.sharedPatternEdges(files, cap))
+      val want = LinkGraph.fromEdgeList(spark, SharedPatterns.sharedPatternEdges(files, cap))
       val a = RepoFiles.linkGraph(spark, files, cap) // the driver fold and mirror
       val b = routedBuild(repoGraph(files, cap, _))
       assert(a.source.isInstanceOf[AdjacencySource.Resident])
@@ -475,7 +477,7 @@ class GraphAlgoSpec extends GraftSuite {
       assert(layoutsOf(a) == layoutsOf(b))
       assert(ranksOf(a) == ranksOf(b))
       if (files eq fixture) {
-        val id = RepoFiles.repoIdMap(files).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val id = SharedPatterns.repoIdMap(files).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val vid = dictOf(a).toMap
         assert(vid.keySet == Set("rA", "rB", "rC", "rD").map(id))
         val half = Seq(("rA", "rB", 2.0), ("rA", "rC", 1.0), ("rB", "rC", 1.0), ("rA", "rD", 1.0))
@@ -491,21 +493,45 @@ class GraphAlgoSpec extends GraftSuite {
     val rows = table.collect().toSeq
     val parts = 5
     for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val scanned = spark.sparkContext.collectionAccumulator[Int]("scanned partitions")
-      val files = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, parts).mapPartitionsWithIndex { (k, it) => scanned.add(k); it },
-        table.schema)
-      val g =
-        if (policy == ExecutionPolicy()) RepoFiles.linkGraph(spark, files, maxReposPerToken = 20)
-        else repoGraph(files, 20, policy)
-      g.adjParts.count(); g.gatherPartsRdd.count(); g.degreeTable.count(); g.numEdges
-      import scala.jdk.CollectionConverters._
-      assert(scanned.value.asScala.toSeq.map(_.intValue).sorted == (0 until parts))
-      assert(g.source.isInstanceOf[AdjacencySource.Resident] == (policy == ExecutionPolicy()))
-      g.unpersistAll()
-      val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      val (_, left) = persistedBy {
+        val scanned = spark.sparkContext.collectionAccumulator[Int]("scanned partitions")
+        val files = spark.createDataFrame(
+          spark.sparkContext.parallelize(rows, parts).mapPartitionsWithIndex { (k, it) => scanned.add(k); it },
+          table.schema)
+        val g =
+          if (policy == ExecutionPolicy()) RepoFiles.linkGraph(spark, files, maxReposPerToken = 20)
+          else repoGraph(files, 20, policy)
+        g.adjParts.count(); g.gatherPartsRdd.count(); g.degreeTable.count(); g.numEdges
+        import scala.jdk.CollectionConverters._
+        assert(scanned.value.asScala.toSeq.map(_.intValue).sorted == (0 until parts))
+        assert(g.source.isInstanceOf[AdjacencySource.Resident] == (policy == ExecutionPolicy()))
+        g.unpersistAll()
+      }
       assert(left.isEmpty, s"left cached ($policy): ${left.values.mkString(", ")}")
+    }
+  }
+
+  test("the build runs no job after its collect, or one store job after route 2, and caches no frame") {
+    val rng = new scala.util.Random(91)
+    val raw = spark.sparkContext.parallelize(Seq.fill(600)((rng.nextInt(300).toLong * 5, rng.nextInt(300) - 150L)), 4)
+      .toDF("src", "dst")
+    val table = RepoFiles.table(spark, numRepos = 40, filesPerRepo = 3, vocab = 30)
+    val files = spark.createDataFrame(spark.sparkContext.parallelize(table.collect().toSeq, 3), table.schema)
+    // resident: the scan's count and its collect; routed: the scan's count,
+    // the splitter samples, the run lengths, the folded count, the block
+    // boundaries and the one job that materializes route 2's store
+    val builds = Seq(
+      ("resident edge list", () => LinkGraph.fromEdgeList(spark, raw), 2),
+      ("resident repo graph", () => RepoFiles.linkGraph(spark, files, maxReposPerToken = 20), 2),
+      ("routed edge list", () => LinkGraph.fromEdgeList(spark, raw, policy = distributedOnly), 6),
+      ("routed repo graph", () => repoGraph(files, 20, distributedOnly), 6))
+    for ((tag, build, want) <- builds) {
+      val (g, jobs, _) = jobsAndShuffles(build())
+      assert(jobs == want, s"$tag: $jobs jobs")
+      assert(g.source.isInstanceOf[AdjacencySource.BlockLaid] == (want == 6), tag)
+      // the session's cache manager holds no entry for either view
+      assert(g.vertexDict.storageLevel == StorageLevel.NONE && g.edges.storageLevel == StorageLevel.NONE, tag)
+      g.unpersistAll()
     }
   }
 
@@ -526,7 +552,7 @@ class GraphAlgoSpec extends GraftSuite {
       // over the budget the routed build, with no driver copy of the pairs;
       // under it the resident fold of the collected scan
       val routed = driverBytes == pairs.length * 32L
-      assert((g.source == AdjacencySource.BlockLaid) == routed)
+      assert(g.source.isInstanceOf[AdjacencySource.BlockLaid] == routed)
       assert(g.source.isInstanceOf[AdjacencySource.Resident] == !routed)
       g.unpersistAll()
     }
@@ -613,21 +639,29 @@ class GraphAlgoSpec extends GraftSuite {
   test("unpersistAll leaves no cached RDD of the graph behind") {
     val edges = DenseReference.randomEdges(120, 0.05, seed = 71).map(e => (e._1.toLong, e._2.toLong))
     for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val g = graphOf(edges, policy = policy)
-      g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
-      g.degreeTable.count()
-      val ranks = PageRank.run(g, tolerance = 0.0, maxIterations = 2)
-      // resident outputs hold nothing; distributed ones are released with the
-      // graph while the caller still holds them (the context tracks persisted
-      // RDDs weakly, so a dropped output would hide its pin)
-      val outputs = Seq(ConnectedComponents.run(g), LabelPropagation.run(g, 4), TriangleCount.perVertexTriangles(g),
-        TriangleCount.clusteringCoefficients(g), NetworkAnalytics.compositeRisk(g),
-        NetworkAnalytics.keyProviders(g, ranks.toVertexDf(g)))
-      outputs.foreach(_.collect())
-      ranks.free()
-      g.unpersistAll()
-      val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+      val (outputs, left) = persistedBy {
+        // the build persists its store and nothing else: the routed build's
+        // dictionary runs and edge batches; the resident fold's are driver slices
+        val (g, stored) = persistedBy(graphOf(edges, policy = policy))
+        val store = g.source match {
+          case AdjacencySource.BlockLaid(s) => Set(s.runs.id, s.edges.id)
+          case _ => Set.empty[Int]
+        }
+        assert(stored.keySet == store && store.nonEmpty == (policy == distributedOnly), s"$policy: $stored")
+        g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
+        g.degreeTable.count()
+        val ranks = PageRank.run(g, tolerance = 0.0, maxIterations = 2)
+        // resident outputs hold nothing; distributed ones are released with the
+        // graph while the caller still holds them (the context tracks persisted
+        // RDDs weakly, so a dropped output would hide its pin)
+        val outputs = Seq(ConnectedComponents.run(g), LabelPropagation.run(g, 4), TriangleCount.perVertexTriangles(g),
+          TriangleCount.clusteringCoefficients(g), NetworkAnalytics.compositeRisk(g),
+          NetworkAnalytics.keyProviders(g, ranks.toVertexDf(g)))
+        outputs.foreach(_.collect())
+        ranks.free()
+        g.unpersistAll()
+        outputs
+      }
       assert(left.isEmpty, s"left cached ($policy): ${left.values.mkString(", ")}")
       assert(outputs.length == 6) // the outputs stay reachable until the check
     }

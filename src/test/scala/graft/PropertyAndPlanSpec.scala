@@ -79,10 +79,57 @@ class PropertyAndPlanSpec extends GraftSuite {
       blocks <- Gen.choose(0, 4)
     } yield (pairs ++ pairs.take(copies), blocks)
 
+  private def parts(ps: Array[AdjPart]) = ps
+    .map(p => (p.blockId, p.partId, p.keys.toSeq, p.offsets.toSeq, p.adj.toSeq, p.wNorm.toSeq))
+    .sortBy(t => (t._1, t._2)).toSeq
+
+  test("property: the views keep the store's layout, and a public-constructor view reads the same graph") {
+    val p = spark.sparkContext.defaultParallelism
+    def cuts(len: Long) = (0 until p).map(s => ((s + 1) * len / p) - (s * len / p))
+    def check(g: LinkGraph, tag: String): Unit = {
+      // the dictionary: contiguous ascending vid runs tiling 0..n−1, external ids ascending
+      val dict = g.vertexDict.rdd.glom().collect().map(_.toSeq).toSeq
+      assert(dict.flatten.map(_.vid) == (0L until g.numVertices), tag)
+      assert(dict.flatten.map(_.extId).sliding(2).forall(w => w.length < 2 || w(0) < w(1)), tag)
+      val edges = g.edges.rdd.glom().collect().map(_.map(e => (e.src, e.dst, e.weight)).toSeq).toSeq
+      assert(edges.map(_.length).sum == g.numEdges, tag)
+      g.source match {
+        case graft.graph.AdjacencySource.BlockLaid(_) =>
+          // one dictionary partition per run; edge partition b = block b's in-edges, sorted (dst, src)
+          assert(dict.length == p && edges.length == g.numBlocks, tag)
+          edges.zipWithIndex.foreach { case (es, b) =>
+            assert(es.forall(_._2 / g.blockSize == b) && es.map(e => (e._2, e._1)) == es.map(e => (e._2, e._1)).sorted,
+              s"$tag: block $b")
+          }
+        case _ =>
+          // the resident fold's arrays, one slice per task: edges sorted (src, dst)
+          assert(dict.map(_.length) == cuts(g.numVertices) && edges.map(_.length) == cuts(g.numEdges), tag)
+          assert(edges.flatten.map(e => (e._1, e._2)) == edges.flatten.map(e => (e._1, e._2)).sorted, tag)
+      }
+      // the bench's analytics pattern: a public-constructor view over the built graph
+      for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+        val view = new LinkGraph(spark, g.vertexDict, g.edges, g.numVertices, g.numBlocks, g.blockSize, policy = policy)
+        assert(degreeRows(view) == degreeRows(g), s"$tag: degree table, view under $policy")
+        assert(parts(view.adjParts.collect()) == parts(g.adjParts.collect()), s"$tag: dst-major parts, view under $policy")
+        view.unpersistAll()
+      }
+    }
+    forAllSeeded(signedMultigraph, 4) { case (pairs, blocks) =>
+      for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+        val g = LinkGraph.fromEdgeList(spark, pairs.toDF("src", "dst"), numBlocks = blocks, policy = policy)
+        check(g, s"$pairs under $policy")
+        g.unpersistAll()
+      }
+    }
+    val files = RepoFiles.table(spark, numRepos = 40, filesPerRepo = 3, vocab = 30)
+    for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+      val g = LinkGraph.fromScan(spark, RepoFiles.halfPairs(files, 20), numBlocks = 0, policy, mirror = true)
+      check(g, s"repo graph under $policy")
+      g.unpersistAll()
+    }
+  }
+
   test("property: every resident regime equals its distributed twin on random signed multigraphs") {
-    def parts(ps: Array[AdjPart]) = ps
-      .map(p => (p.blockId, p.partId, p.keys.toSeq, p.offsets.toSeq, p.adj.toSeq, p.wNorm.toSeq))
-      .sortBy(t => (t._1, t._2)).toSeq
     def byVid(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     /** Everything whose regimes must agree exactly, and the ranks. */
@@ -250,10 +297,9 @@ class PropertyAndPlanSpec extends GraftSuite {
     // view's built degree table it exchanges nothing and persists nothing
     val d = under(g, distributedOnly)
     d.degreeTable.count()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (dPrior, dShuffles) = shuffleWritingStages(NetworkAnalytics.compositeRisk(d).collect().toSeq)
+    val ((dPrior, dShuffles), added) = persistedBy(shuffleWritingStages(NetworkAnalytics.compositeRisk(d).collect().toSeq))
     assert(dShuffles == 0, "the prior over a distributed view writes no shuffle")
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty, "the prior persists nothing")
+    assert(added.isEmpty, "the prior persists nothing")
     assert(dPrior == prior.collect().toSeq)
     d.unpersistAll()
     g.unpersistAll()

@@ -78,6 +78,36 @@ class ResumeAndSourcesSpec extends GraftSuite {
     }
   }
 
+  test("resume rejects a snapshot with a row dropped, a vid duplicated or another graph's vids, naming it") {
+    for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+      val g = LinkGraph.fromEdgeList(spark, rand.toDF("src", "dst"), numBlocks = 3, policy = policy)
+      val larger = LinkGraph.fromEdgeList(spark,
+        DenseReference.randomEdges(60, 0.1, seed = 6).map(e => (e._1.toLong, e._2.toLong)).toDF("src", "dst"),
+        numBlocks = 3, policy = policy)
+      val cfg = PageRankConfig(0.85, 1e-10, 200, PageRankMode.ReferenceRenorm, checkpointEvery = 2)
+      /** A checkpoint dir of `from` whose newest snapshot is the last commit edited by `edit`. */
+      def checkpoint(from: LinkGraph)(edit: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+        val dir = Files.createTempDirectory("graft-corrupt").toString
+        new PageRankEngine(from, cfg.copy(maxIterations = 2, checkpointDir = Some(dir))).run().free()
+        val (snap, _, _) = CheckpointManager.latest(dir).get
+        graft.sources.IcebergLite.commit(edit(CheckpointManager.readRanks(spark, dir, snap)), dir,
+          properties = graft.sources.IcebergLite.properties(dir, snap))
+        dir
+      }
+      val dirs = Seq(
+        "dropped" -> checkpoint(g)(_.filter($"vid" =!= 5L)),
+        "duplicated" -> checkpoint(g)(df => df.union(df.filter($"vid" === 5L))),
+        "other n" -> checkpoint(larger)(identity))
+      for ((tag, dir) <- dirs) {
+        val e = intercept[Exception](PageRank.resume(g, cfg.copy(checkpointDir = Some(dir))))
+        val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+        val snap = CheckpointManager.latest(dir).get._1
+        assert(messages.contains(s"checkpoint snapshot $snap of $dir"), s"$tag under $policy: $messages")
+      }
+      g.unpersistAll(); larger.unpersistAll()
+    }
+  }
+
   test("checkpoint manifest records per-superstep metrics (rows/bytes/residual)") {
     val dir = Files.createTempDirectory("graft-metrics").toString
     val g = LinkGraph.fromEdgeList(spark, rand.toDF("src", "dst"), numBlocks = 3)
@@ -152,7 +182,7 @@ class ResumeAndSourcesSpec extends GraftSuite {
     assert(toks.count() >= t1.count())
     assert(toks.filter(!$"token".rlike("^lib\\d{3}$")).count() == 0)
     // shared-pattern edges are symmetric (both orientations present)
-    val e = RepoFiles.sharedPatternEdges(t1, maxReposPerToken = 50)
+    val e = SharedPatterns.sharedPatternEdges(t1, maxReposPerToken = 50)
     val asym = e.select($"src", $"dst")
       .except(e.select($"dst".as("src"), $"src".as("dst")))
     assert(asym.count() == 0)

@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.LinkGraph
 import graft.model.ExecutionPolicy
+import graft.sources.RepoFiles
 
 /** Shared local session for all suites. */
 object TestSpark {
@@ -18,7 +20,8 @@ abstract class GraftSuite extends AnyFunSuite {
   val distributedOnly: ExecutionPolicy = ExecutionPolicy(driverBytes = 0L)
 
   /** The same graph under another policy: it shares `g`'s dictionary and edge
-    * caches (its `unpersistAll` releases them too) and builds its own layouts.
+    * views and the build's store behind them (its `unpersistAll` releases the
+    * store too) and builds its own layouts.
     */
   def under(g: LinkGraph, policy: ExecutionPolicy): LinkGraph =
     new LinkGraph(g.spark, g.vertexDict, g.edges, g.numVertices, g.numBlocks, g.blockSize, g.numEdges, g.source,
@@ -52,6 +55,15 @@ abstract class GraftSuite extends AnyFunSuite {
   /** The degree table's rows in the order it emits them. */
   def degreeRows(g: LinkGraph): Seq[(Long, Long, Double, Double)] =
     g.degreeTable.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+
+  /** `body`'s result and the persisted RDDs it added to the context (a set
+    * difference, so RDDs that the cleaner reaps meanwhile do not count).
+    */
+  def persistedBy[T](body: => T): (T, Map[Int, org.apache.spark.rdd.RDD[_]]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val r = body
+    (r, spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.toMap)
+  }
 
   /** `body`'s result and how many stages of the jobs it runs wrote shuffle
     * output: a driver-resident operator writes none.
@@ -102,6 +114,45 @@ abstract class GraftSuite extends AnyFunSuite {
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
       assert(math.abs(g - w) <= tol + tol * math.abs(w), s"at $i: got $g want $w")
     }
+  }
+}
+
+/** The shared-pattern graph as a Catalyst self-join: the parity reference for
+  * [[graft.sources.RepoFiles.linkGraph]].
+  */
+object SharedPatterns {
+  /** Shared-pattern edges: distinct (repo, token) incidences self-joined on
+    * token → directed edges both ways between distinct repos sharing a token;
+    * duplicate pairs (many shared tokens) fold to weights downstream. The
+    * Catalyst statement of what [[graft.sources.RepoFiles.linkGraph]] builds.
+    *
+    * Skew guard (north rule): tokens shared by more than `maxReposPerToken`
+    * repos are dropped before the self-join — a hot token over T repos emits
+    * T² pairs, so ubiquitous "stop tokens" would quadratically dominate while
+    * carrying no linkage signal (the same reasoning as stopword removal). The
+    * cutoff is an explicit knob.
+    */
+  def sharedPatternEdges(files: DataFrame, maxReposPerToken: Int = 1000): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    val rt = RepoFiles.repoTokens(files).distinct()
+    val kept = rt.join(
+      rt.groupBy($"token").agg(count(lit(1)).as("nRepos")).filter($"nRepos" <= maxReposPerToken).select($"token"),
+      Seq("token"))
+    val a = kept.select($"token", $"repo".as("repoA"))
+    val b = kept.select($"token", $"repo".as("repoB"))
+    a.join(b, Seq("token"))
+      .filter($"repoA" =!= $"repoB") // both orientations emerge from the join
+      .select(
+        xxhash64($"repoA").as("src"), // stable 64-bit external vertex ids
+        xxhash64($"repoB").as("dst"))
+  }
+
+  /** repo → stable external vertex id used by [[sharedPatternEdges]]. */
+  def repoIdMap(files: DataFrame): DataFrame = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    files.select($"repo").distinct().select($"repo", xxhash64($"repo").as("extId"))
   }
 }
 
