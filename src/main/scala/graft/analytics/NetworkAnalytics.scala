@@ -1,13 +1,16 @@
 package graft.analytics
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
+import org.apache.spark.util.StatCounter
 
 import graft.graph.LinkGraph
 import graft.model.ExecutionPolicy
@@ -24,11 +27,12 @@ import graft.model.ExecutionPolicy
   * phases (percentile scalars first, then the conditional agg with literal
   * thresholds) because SQL forbids nesting aggregates.
   *
-  * The risk path keeps the reference's NumPy shape: [[compositeRisk]] is one
-  * partials job and a per-partition map over the cached degree table at every
-  * size, and [[highRiskProviders]] joins, masks and sorts collected vectors
-  * on the driver while their rows fit the driver budget (its Catalyst plan
-  * above).
+  * The degree analytics and the risk path keep the reference's NumPy shape,
+  * as primitive passes rather than Catalyst plans: [[networkMetrics]] and
+  * [[compositeRisk]] each read the cached degree table's rows in one partials
+  * job ([[degreePartials]]), combined in partition order, and
+  * [[highRiskProviders]] joins, masks and sorts collected vectors on the
+  * driver while their rows fit the driver budget (its Catalyst plan above).
   */
 object NetworkAnalytics {
 
@@ -143,9 +147,16 @@ object NetworkAnalytics {
   def percentileOfExact(df: DataFrame, valueCol: String, p: Double): Double =
     percentilesExact(df, valueCol, Seq(p)).head
 
-  /** network_metrics block (pagerank.py:459-486) as a single-row DataFrame.
-    * Degrees are weighted row/column sums over the folded matrix, zero-filled
-    * across all n vertices (reference arrays have length n).
+  /** network_metrics block (pagerank.py:459-486) as a local single-row
+    * DataFrame. Degrees are weighted row/column sums over the folded matrix,
+    * zero-filled across all n vertices (reference arrays have length n).
+    *
+    * Two jobs over the cached degree table: one [[ValueDist]] build gives the
+    * thresholds and medians, then one partials pass ([[degreePartials]])
+    * gives each partition's out- and in-degree `StatCounter`s (count, max,
+    * Welford mean and M2, as `stddev_pop` keeps them), the counts above the
+    * thresholds, the isolated count and the imbalance sum, merged in
+    * partition order. No Catalyst aggregate or exchange runs.
     */
   def networkMetrics(graph: LinkGraph): DataFrame = {
     val spark = graph.spark
@@ -162,26 +173,46 @@ object NetworkAnalytics {
     val p95tot = distTot.percentile(0.95)
     distOut.release(); distIn.release(); distTot.release()
 
-    deg.agg(
-      lit(n).as("total_providers"),
-      lit(nnz).as("total_referrals"),
-      lit(if (n > 1) nnz.toDouble / (n.toDouble * (n - 1)) else 0.0).as("network_density"),
-      avg($"outDeg").as("average_referrals_out"),
-      lit(medOut).as("median_referrals_out"),
-      stddev_pop($"outDeg").as("std_referrals_out"),
-      max($"outDeg").cast("long").as("max_referrals_out"),
-      (sum(when($"outDeg" > lit(p90out), 1L).otherwise(0L)).cast("double") / lit(n.toDouble))
-        .as("referral_concentration_out"),
-      avg($"inDeg").as("average_referrals_in"),
-      lit(medIn).as("median_referrals_in"),
-      stddev_pop($"inDeg").as("std_referrals_in"),
-      max($"inDeg").cast("long").as("max_referrals_in"),
-      (sum(when($"inDeg" > lit(p90in), 1L).otherwise(0L)).cast("double") / lit(n.toDouble))
-        .as("referral_concentration_in"),
-      sum(when($"totalDeg" === 0.0, 1L).otherwise(0L)).as("isolated_providers"),
-      sum(when($"totalDeg" > lit(p95tot), 1L).otherwise(0L)).as("hub_providers"),
-      avg(when($"inDeg" > 0, $"outDeg" / ($"inDeg" + lit(1e-10))).otherwise($"outDeg"))
-        .as("referral_imbalance_ratio"))
+    // per partition: out- and in-degree stats; above p90 out, in; isolated; above p95 total; imbalance sum
+    val (_, partials) = degreePartials(graph)(() => (new StatCounter, new StatCounter, new Array[Double](5))) {
+      case ((o, i, c), in, out) =>
+        o.merge(out); i.merge(in)
+        if (out > p90out) c(0) += 1
+        if (in > p90in) c(1) += 1
+        if (in + out == 0.0) c(2) += 1
+        if (in + out > p95tot) c(3) += 1
+        c(4) += imbalance(in, out)
+    }
+    val (o, i) = (new StatCounter, new StatCounter) // merged in partition order (Chan et al.)
+    partials.foreach { case (po, pi, _) => o.merge(po); i.merge(pi) }
+    val c = Array.tabulate(5)(k => partials.foldLeft(0.0)(_ + _._3(k)))
+    val row = Row(n, nnz, if (n > 1) nnz.toDouble / (n.toDouble * (n - 1)) else 0.0,
+      o.mean, medOut, o.popStdev, o.max.toLong, c(0) / n, i.mean, medIn, i.popStdev, i.max.toLong, c(1) / n,
+      c(2).toLong, c(3).toLong, c(4) / o.count)
+    spark.createDataFrame(java.util.Collections.singletonList(row), MetricsSchema)
+  }
+
+  /** [[networkMetrics]]' columns, in order, typed as the reference's aggregate types them. */
+  private val MetricsSchema = StructType.fromDDL(
+    "total_providers BIGINT NOT NULL, total_referrals BIGINT NOT NULL, network_density DOUBLE NOT NULL, " +
+      "average_referrals_out DOUBLE, median_referrals_out DOUBLE NOT NULL, std_referrals_out DOUBLE, " +
+      "max_referrals_out BIGINT, referral_concentration_out DOUBLE, average_referrals_in DOUBLE, " +
+      "median_referrals_in DOUBLE NOT NULL, std_referrals_in DOUBLE, max_referrals_in BIGINT, " +
+      "referral_concentration_in DOUBLE, isolated_providers BIGINT, hub_providers BIGINT, " +
+      "referral_imbalance_ratio DOUBLE")
+
+  /** One job over the cached degree table's (vid, inDeg, outDeg) rows (also
+    * returned, for a lazy map): each partition folds every row's `add(p, in,
+    * out)` into a fresh `init()`; the partials come back in partition order.
+    */
+  private def degreePartials[P: ClassTag](graph: LinkGraph)(init: () => P)(add: (P, Double, Double) => Unit)
+      : (RDD[InternalRow], Array[P]) = {
+    val rows = graph.degreeTable.select(col("vid"), col("inDeg"), col("outDeg")).queryExecution.toRdd
+    (rows, rows.mapPartitions { it =>
+      val p = init()
+      it.foreach(r => add(p, r.getDouble(1), r.getDouble(2)))
+      Iterator.single(p)
+    }.collect())
   }
 
   /** Composite risk scores (pagerank.py:690-713): equal-weight mix of
@@ -199,17 +230,12 @@ object NetworkAnalytics {
   def compositeRisk(graph: LinkGraph): DataFrame = {
     val spark = graph.spark
     import spark.implicits._
-    val rows = graph.degreeTable.select($"vid", $"inDeg", $"outDeg").queryExecution.toRdd
     // per partition: max and sum of connectivity, imbalance and isolation, rows
-    val partials = rows.mapPartitions { it =>
-      val p = new Array[Double](7)
-      it.foreach { r =>
-        val c = components(r.getDouble(1), r.getDouble(2))
-        for (k <- 0 until 3) { p(k) = math.max(p(k), c(k)); p(3 + k) += c(k) }
-        p(6) += 1
-      }
-      Iterator.single(p)
-    }.collect()
+    val (rows, partials) = degreePartials(graph)(() => new Array[Double](7)) { (p, in, out) =>
+      val c = components(in, out)
+      for (k <- 0 until 3) { p(k) = math.max(p(k), c(k)); p(3 + k) += c(k) }
+      p(6) += 1
+    }
     val maxes = Array.tabulate(3)(k => partials.foldLeft(0.0)((m, p) => math.max(m, p(k))))
     val sums = Array.tabulate(3)(k => partials.foldLeft(0.0)(_ + _(3 + k)))
     val total = 0.001 * partials.foldLeft(0.0)(_ + _(6)) +
@@ -222,7 +248,10 @@ object NetworkAnalytics {
 
   /** Connectivity, referral imbalance and isolation of one vertex. */
   private def components(in: Double, out: Double): Array[Double] =
-    Array(in + out, if (in > 0) out / (in + 1e-10) else out, 1.0 / (1.0 + (in + out)))
+    Array(in + out, imbalance(in, out), 1.0 / (1.0 + (in + out)))
+
+  /** Referral imbalance of one vertex (pagerank.py:483, :699). */
+  private def imbalance(in: Double, out: Double): Double = if (in > 0) out / (in + 1e-10) else out
 
   /** One ⅓-weighted min-max term (zero when the component's max is not positive). */
   private def mixTerm(c: Double, max: Double): Double = if (max > 0) 1.0 / 3 * (c / max) else 0.0

@@ -5,6 +5,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.SerializeFromObject
+import org.apache.spark.sql.execution.ExternalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -45,9 +47,13 @@ import graft.model._
   *     edges. Both [[adjParts]] and [[adjPartsByBlock]] read this one result.
   *  1. The same wNorm rows cross one src-block exchange, and the same kernel
   *     (without normalizing) gives the gather parts [[gatherPartsRdd]].
-  * The resident fold's store is slices of its driver arrays. Its edges, and
-  * the frames of the public constructor and [[LinkGraph.fromDenseWeighted]]
-  * (packed on the fly), are routed by dst block once before the kernel. When
+  * The resident fold's store is slices of its driver arrays. Its edges,
+  * [[LinkGraph.fromDenseWeighted]]'s store (the positive edges, one batch per
+  * input partition) and any other frames of the public constructor (packed on
+  * the fly) are routed by dst block once before the kernel. A graph
+  * constructed over the two unmodified views of one store reads that store
+  * for its edge count, degree table and driver edge copy, and borrows it:
+  * only the graph whose `source` carries a store releases it. When
   * the edges fit the policy's driver budget the same kernel runs on the
   * driver over [[edgesLocal]], the one primitive driver copy of the folded
   * edges (16 B per edge); restored parts replace the kernel altogether.
@@ -71,9 +77,13 @@ import graft.model._
   *                    (reference: `enumerate(np.unique(edges))`, pagerank.py:622-627),
   *                    laid out in contiguous ascending vid runs: partition k
   *                    holds the next vids after partition k−1's, in order (every
-  *                    builder lays it out so; the degree table rejects any other)
+  *                    builder lays it out so; the degree table rejects any other).
+  *                    Passed with `edges` as a build's own two views, both are
+  *                    read through the store they view, which this graph
+  *                    borrows: its [[unpersistAll]] leaves it
   * @param edges       folded edges in vid space; weight = duplicate multiplicity
-  *                    (csc_matrix duplicate-summing, pagerank.py:638-640)
+  *                    (csc_matrix duplicate-summing, pagerank.py:638-640); a
+  *                    build's own view is read through its store, as `vertexDict` is
   * @param source      where the blocked adjacency comes from
   * @param policy      the byte budgets that pick the regime of this graph's
   *                    lazy layouts and of every operator run on it
@@ -96,31 +106,33 @@ final class LinkGraph(
     s"block adjacency packs (slot, vid) into one long: needs numVertices ≤ 2^32 and " +
       s"blockSize < 2^31, got numVertices=$numVertices blockSize=$blockSize")
 
-  lazy val numEdges: Long = if (knownNumEdges >= 0) knownNumEdges else edges.count()
+  lazy val numEdges: Long = if (knownNumEdges >= 0) knownNumEdges else store.map(_.m).getOrElse(edges.count())
 
-  private def store: Option[LinkGraph.Store] = source match {
+  /** The store this graph owns: the one its `source` carries, released by [[unpersistAll]]. */
+  private def ownStore: Option[LinkGraph.Store] = source match {
     case AdjacencySource.BlockLaid(s) => Some(s)
     case AdjacencySource.Resident(s, _) => Some(s)
+    case AdjacencySource.Keyed(s) => Some(s)
     case _ => None
   }
 
-  /** [[edges]] as one primitive batch per partition, in row order: the
-    * build's store, else the frame's partitions packed on the fly.
+  /** The store behind [[vertexDict]] and [[edges]]: the owned one, else the
+    * store both frames view unmodified when they are the two views of one
+    * store of `numVertices` vertices (borrowed: never released here).
     */
-  private def edgeBatches: RDD[LinkGraph.EdgeBatch] = store.map(_.edges).getOrElse {
-    val n = numVertices
-    edges.select($"src", $"dst", $"weight".cast("double")).queryExecution.toRdd.mapPartitions { it =>
-      val r = new LinkGraph.Rows(packed = true)
-      it.foreach { e =>
-        val src = e.getLong(0)
-        val dst = e.getLong(1)
-        if (src < 0 || src >= n || dst < 0 || dst >= n)
-          throw new IllegalStateException(s"edge ($src, $dst) has an endpoint vid outside 0..${n - 1}")
-        r.add((src << 32) | dst, e.getDouble(2))
-      }
-      Iterator.single(LinkGraph.EdgeBatch(-1L, r.trimmed))
+  @transient private lazy val store: Option[LinkGraph.Store] = ownStore.orElse {
+    (LinkGraph.viewOf(vertexDict), LinkGraph.viewOf(edges)) match {
+      case (Some(d), Some(e)) if (d.store eq e.store) && (d.of eq d.store.runs) && (e.of eq e.store.edges) &&
+          d.store.starts.last == numVertices => Some(d.store)
+      case _ => None
     }
   }
+
+  /** [[edges]] as one primitive batch per partition, in row order: the
+    * store, else the frame's partitions packed on the fly.
+    */
+  private def edgeBatches: RDD[LinkGraph.EdgeBatch] =
+    store.map(_.edges).getOrElse(LinkGraph.batchesOf(edges, numVertices))
 
   /** The dictionary as the store's runs and their first vids: the build's, or
     * the frame's partitions, which one small job checks are contiguous
@@ -435,15 +447,16 @@ final class LinkGraph(
     LinkGraph.fromDenseWeighted(spark, edges.filter($"src" < kk && $"dst" < kk), kk, policy = policy)
   }
 
-  /** Release the build's store and every cache, broadcast and operator-output
-    * pin this graph materialized. Each lazy layout checks its built flag
-    * first: touching the lazy val would build a layout the caller never used.
+  /** Release the owned store and every cache, broadcast and operator-output
+    * pin this graph materialized (a borrowed store stays). Each lazy layout
+    * checks its built flag first: touching the lazy val would build a layout
+    * the caller never used.
     */
   def unpersistAll(): Unit = {
     if (dstLayoutBuilt) dstLayout.unpersist(false)
     if (gatherPartsBuilt) gatherPartsRdd.unpersist(false)
     if (degreeTableBuilt) degreeTable.unpersist()
-    store.foreach { s => s.runs.unpersist(false); s.edges.unpersist(false) }
+    ownStore.foreach { s => s.runs.unpersist(false); s.edges.unpersist(false) }
     edges.unpersist()
     vertexDict.unpersist()
     releases.foreach(_())
@@ -520,9 +533,31 @@ object LinkGraph {
   /** A build's one copy of the graph, which [[LinkGraph.vertexDict]] and
     * [[LinkGraph.edges]] view: ascending external-id runs (run k holds vids
     * `[starts(k), starts(k + 1))`, `starts.last` = n) and one [[EdgeBatch]]
-    * per edge partition.
+    * per edge partition, `m` edges in all.
     */
-  private[graft] final case class Store(runs: RDD[Array[Long]], starts: Array[Long], edges: RDD[EdgeBatch])
+  private[graft] final case class Store(runs: RDD[Array[Long]], starts: Array[Long], edges: RDD[EdgeBatch], m: Long)
+
+  /** The store view `ds` is, when its plan is exactly one (unfiltered, unprojected). */
+  private def viewOf(ds: Dataset[_]): Option[StoreView[_, _]] = ds.queryExecution.logical match {
+    case SerializeFromObject(_, ExternalRDD(_, v: StoreView[_, _])) => Some(v)
+    case _ => None
+  }
+
+  /** `edges`' partitions packed into one batch each, in row order, rejecting
+    * an endpoint outside vids 0..n−1.
+    */
+  private def batchesOf(edges: Dataset[Edge], n: Long): RDD[EdgeBatch] =
+    edges.select(col("src"), col("dst"), col("weight").cast("double")).queryExecution.toRdd.mapPartitions { it =>
+      val r = new Rows(packed = true)
+      it.foreach { e =>
+        val src = e.getLong(0)
+        val dst = e.getLong(1)
+        if (src < 0 || src >= n || dst < 0 || dst >= n)
+          throw new IllegalStateException(s"edge ($src, $dst) has an endpoint vid outside 0..${n - 1}")
+        r.add((src << 32) | dst, e.getDouble(2))
+      }
+      Iterator.single(EdgeBatch(-1L, r.trimmed))
+    }
 
   /** Slots `[lo, lo + len)` of a per-vertex vector, `default` where unset. A
     * vid outside them raises; with `whole` (the vector's name) so does a vid
@@ -942,9 +977,9 @@ object LinkGraph {
     val local = if (mirror) mirrored(foldRuns(pairs)) else foldRuns(pairs).trimmed
     val m = local.n
     val store = Store(sliced(spark, n)(java.util.Arrays.copyOfRange(ids, _, _)), slices(spark, n).map(_.toLong),
-      sliced(spark, m)((lo, hi) => EdgeBatch(-1L, local.slice(lo, hi))))
+      sliced(spark, m)((lo, hi) => EdgeBatch(-1L, local.slice(lo, hi))), m)
     val (blocks, bs) = geometry(spark, n, m, numBlocks)
-    storedGraph(spark, store, Some(local), n, m, blocks, bs, policy)
+    storedGraph(spark, store, AdjacencySource.Resident(store, local), blocks, bs, policy)
   }
 
   /** The bounds of `len` positions cut into one slice per task. */
@@ -959,19 +994,17 @@ object LinkGraph {
     spark.sparkContext.parallelize((0 until b.length - 1).map(s => cut(b(s), b(s + 1))), b.length - 1)
   }
 
-  /** The graph viewing a build's `store`: resident with the fold's driver
-    * edges `local`, else block-laid.
-    */
-  private def storedGraph(spark: SparkSession, store: Store, local: Option[Rows], n: Long, m: Long, blocks: Int,
-      bs: Long, policy: ExecutionPolicy): LinkGraph = {
+  /** The graph owning a build's `store` (carried by `source`), whose frames are its two views. */
+  private def storedGraph(spark: SparkSession, store: Store, source: AdjacencySource, blocks: Int, bs: Long,
+      policy: ExecutionPolicy): LinkGraph = {
     import spark.implicits._
-    val edges = store.edges.flatMap(e => Iterator.range(0, e.rows.n).map(i => Edge(e.src(i), e.dst(i), e.rows.w(i))))
+    val edges = new StoreView(store, store.edges, (_: Int, it: Iterator[EdgeBatch]) =>
+      it.flatMap(e => Iterator.range(0, e.rows.n).map(i => Edge(e.src(i), e.dst(i), e.rows.w(i)))))
     val starts = store.starts
-    val dict = store.runs.mapPartitionsWithIndex { (k, it) =>
-      it.flatMap(run => Iterator.range(0, run.length).map(i => VertexMapping(run(i), starts(k) + i)))
-    }
-    new LinkGraph(spark, spark.createDataset(dict), spark.createDataset(edges), n, blocks, bs, m,
-      local.map(AdjacencySource.Resident(store, _)).getOrElse(AdjacencySource.BlockLaid(store)), policy)
+    val dict = new StoreView(store, store.runs, (k: Int, it: Iterator[Array[Long]]) =>
+      it.flatMap(run => Iterator.range(0, run.length).map(i => VertexMapping(run(i), starts(k) + i))))
+    new LinkGraph(spark, spark.createDataset(dict), spark.createDataset(edges), starts.last, blocks, bs, store.m,
+      source, policy)
   }
 
   /** Driver columns of length `len` (each an `Array[Long]` or an
@@ -1054,8 +1087,8 @@ object LinkGraph {
         fromScan(spark, scanOf(folded.queryExecution.toRdd, weighted = true), numBlocks, policy, mirror = false)
 
       case IdMode.DenseByMax =>
-        // the bounds and the graph's edge cache (with its count, when the
-        // geometry is auto) read the folded frame: cached so the upstream plan runs once
+        // the bounds and the graph's store read the folded frame: cached so
+        // the upstream plan runs once
         folded.persist(StorageLevel.MEMORY_AND_DISK)
         try {
           val bounds = folded
@@ -1063,9 +1096,7 @@ object LinkGraph {
             .first()
           require(!bounds.isNullAt(0), "dense-by-max graph needs at least one edge")
           require(bounds.getLong(1) >= 0L, "dense-by-max ids must be non-negative")
-          val g = fromDenseWeighted(spark, folded.as[Edge], bounds.getLong(0) + 1, numBlocks, policy)
-          g.numEdges // materialize the graph's edge cache through `folded`
-          g
+          fromDenseWeighted(spark, folded.as[Edge], bounds.getLong(0) + 1, numBlocks, policy)
         } finally folded.unpersist(false)
     }
   }
@@ -1158,7 +1189,8 @@ object LinkGraph {
         })
       byDst.count()
       held --= Seq(runs, byDst) // the graph's store
-      storedGraph(spark, Store(runs, starts, byDst), None, n, m, blocks, bs, policy)
+      val store = Store(runs, starts, byDst, m)
+      storedGraph(spark, store, AdjacencySource.BlockLaid(store), blocks, bs, policy)
     } finally held.foreach(_.unpersist(false))
   }
 
@@ -1302,6 +1334,10 @@ object LinkGraph {
     * zero column sum, and LPA's weight-0 self-vote requires every surviving
     * neighbor vote to be strictly positive). fromEdgeList weights are fold
     * multiplicities ≥ 1, so only this entry point can see them.
+    *
+    * The graph's store is the positive edges packed one batch per input
+    * partition (persisted; one job materializes and counts them) beside the
+    * identity dictionary's runs, computed when read.
     */
   def fromDenseWeighted(
       spark: SparkSession,
@@ -1311,20 +1347,14 @@ object LinkGraph {
       policy: ExecutionPolicy = ExecutionPolicy()
   ): LinkGraph = {
     val p = math.max(1, spark.sparkContext.defaultParallelism)
-    val positive = edges.filter(col("weight") > 0) // column filter: stays codegen'd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the auto geometry counts the edges (autoBlocks): the count materializes
-    // the persisted frame and is passed through, so numEdges never re-counts
-    val cnt = if (numBlocks > 0) -1L else positive.count()
-    val (blocks, bs) = geometry(spark, numVertices, cnt, numBlocks)
-    new LinkGraph(spark, identityDict(spark, numVertices, p), positive, numVertices, blocks, bs, cnt,
-      AdjacencySource.Edges, policy)
-  }
-
-  /** The identity dictionary of a dense vid space, in `p` explicit slices. */
-  private def identityDict(spark: SparkSession, n: Long, p: Int): Dataset[VertexMapping] = {
-    import spark.implicits._
-    spark.range(0, n, 1, p).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
+    val batches = batchesOf(edges.filter(col("weight") > 0), numVertices).persist(StorageLevel.MEMORY_AND_DISK)
+    val m = batches.map(_.rows.n.toLong).fold(0L)(_ + _)
+    val starts = Array.tabulate(p + 1)(k => k * numVertices / p)
+    val runs = spark.sparkContext.parallelize(0 until p, p)
+      .map(k => Array.tabulate((starts(k + 1) - starts(k)).toInt)(starts(k) + _))
+    val store = Store(runs, starts, batches, m)
+    val (blocks, bs) = geometry(spark, numVertices, m, numBlocks)
+    storedGraph(spark, store, AdjacencySource.Keyed(store), blocks, bs, policy)
   }
 
   /** Graph whose blocked adjacency was PRE-ASSEMBLED by a prior process and
@@ -1349,7 +1379,8 @@ object LinkGraph {
     require(numBlocks > 0, "fromPrebuiltParts needs the geometry the parts were built with")
     val p = math.max(1, spark.sparkContext.defaultParallelism)
     val bs = (numVertices + numBlocks - 1) / numBlocks
-    new LinkGraph(spark, identityDict(spark, numVertices, p), spark.emptyDataset[Edge],
+    val identity = spark.range(0, numVertices, 1, p).select($"id".as("extId"), $"id".as("vid")).as[VertexMapping]
+    new LinkGraph(spark, identity, spark.emptyDataset[Edge],
       numVertices, numBlocks, math.max(bs, 1), numEdges, AdjacencySource.Restored(dstParts, gatherParts), policy)
   }
 
@@ -1376,10 +1407,28 @@ object AdjacencySource {
     */
   final case class Resident(store: LinkGraph.Store, edges: LinkGraph.Rows) extends AdjacencySource
 
+  /** A store whose edge batches carry `(src, dst)` keys in the input's
+    * partitions ([[LinkGraph.fromDenseWeighted]]): routed by dst block once
+    * before the kernel, as [[Edges]] is.
+    */
+  final case class Keyed(store: LinkGraph.Store) extends AdjacencySource
+
   /** Parts restored in the build's layout (partition b = block b's parts in
     * partId order), in either orientation; they replace the kernel.
     */
   final case class Restored(dst: Option[RDD[AdjPart]], gather: Option[RDD[AdjPart]]) extends AdjacencySource
+}
+
+/** One of a store's two views ([[LinkGraph.vertexDict]] or [[LinkGraph.edges]]):
+  * `rows(k, it)` of partition k of the store RDD `of`, through a one-to-one
+  * dependency. It carries its store, so a graph constructed over a build's own
+  * frames reads the store they view.
+  */
+private[graph] final class StoreView[P, T: scala.reflect.ClassTag](
+    @transient val store: LinkGraph.Store, val of: RDD[P], rows: (Int, Iterator[P]) => Iterator[T])
+    extends RDD[T](of) {
+  override protected def getPartitions: Array[Partition] = of.partitions
+  override def compute(split: Partition, ctx: TaskContext): Iterator[T] = rows(split.index, of.iterator(split, ctx))
 }
 
 /** Block b's slice of the sorted dictionary: the ascending external ids of

@@ -170,14 +170,14 @@ class AnalyticsSpec extends GraftSuite {
       "single row" -> (Seq((7L, 0.25)), Seq((7L, 0.5))))
     for ((name, (x, r0)) <- cases) {
       val want = reference(x, r0)
-      val ((got, schema), shuffles) = shuffleWritingStages {
+      val ((got, schema), ran) = recorded {
         val out = NetworkAnalytics.highRiskProviders(frame(x), frame(r0))
         (rowsOf(out), out.schema)
       }
       val plan = NetworkAnalytics.highRiskPlan(frame(x), frame(r0))
       assert(got == want, name)
       assert(rowsOf(plan) == want, name)
-      assert(shuffles == 0, s"$name: the driver path writes no shuffle")
+      assert(ran.shuffles == 0, s"$name: the driver path writes no shuffle")
       assert(schema.map(f => (f.name, f.dataType)) == plan.schema.map(f => (f.name, f.dataType)), name)
     }
     // a repeated vid, a null or an int vid takes the Catalyst plan
@@ -186,8 +186,8 @@ class AnalyticsSpec extends GraftSuite {
     for ((p, q) <- Seq(x -> frame(r0 :+ ((1L, 2.0))),
         x -> (r0.init.map { case (v, w) => (v, Double.box(w)) } :+ ((10L, null: java.lang.Double))).toDF("vid", "value"),
         x.select($"vid".cast("int").as("vid"), $"value") -> frame(r0))) {
-      val (got, shuffles) = shuffleWritingStages(NetworkAnalytics.highRiskProviders(p, q).collect().toSeq)
-      assert(shuffles > 0 && got.nonEmpty && got == NetworkAnalytics.highRiskPlan(p, q).collect().toSeq)
+      val (got, ran) = recorded(NetworkAnalytics.highRiskProviders(p, q).collect().toSeq)
+      assert(ran.shuffles > 0 && got.nonEmpty && got == NetworkAnalytics.highRiskPlan(p, q).collect().toSeq)
     }
     assert(reference(cases(0)._2._1, cases(0)._2._2).map(_._1) == Seq(19L))
     assert(reference(cases(2)._2._1, cases(2)._2._2).exists(r => r._3 == 0.0 && r._4 == 1.0))
@@ -294,8 +294,8 @@ class AnalyticsSpec extends GraftSuite {
     val n = 2L * 1024 * 1024
     // 97 distinct values: one job ships 97 runs per task, no count or probe job
     val narrow = spark.range(n).selectExpr("cast(id % 97 as double) as v")
-    val (Seq(dn), jobs, _) = jobsAndShuffles(ValueDist.of(narrow, Seq("v")))
-    assert(dn.isLocal && dn.n == n && jobs == 1, s"$jobs jobs")
+    val (Seq(dn), ran) = recorded(ValueDist.of(narrow, Seq("v")))
+    assert(dn.isLocal && dn.n == n && ran.jobs.length == 1, s"${ran.jobs.length} jobs")
     assert(dn.percentile(0.5) == 48.0)
     // unique doubles: each task's 512K runs overflow its share of 64 MiB
     val wide = spark.range(n).selectExpr("cast(id as double) as v")

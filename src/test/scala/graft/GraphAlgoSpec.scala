@@ -190,22 +190,9 @@ class GraphAlgoSpec extends GraftSuite {
     val edges = DenseReference.randomEdges(40, 0.1, seed = 11).map(e => (e._1.toLong, e._2.toLong))
     val g = LinkGraph.fromEdgeList(s, s.createDataFrame(edges).toDF("src", "dst"), numBlocks = 3)
     def broadcastJobs(policy: ExecutionPolicy): Int = {
-      val sc = spark.sparkContext
-      val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      val flushed = new java.util.concurrent.CountDownLatch(1)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (e.properties.getProperty("graft.test.marker") != null) flushed.countDown()
-          else tags.add(String.valueOf(e.properties.getProperty("spark.job.tags")))
-      }
-      sc.addSparkListener(listener)
-      try {
-        LabelPropagation.run(under(g, policy), 3).collect()
-        sc.setLocalProperty("graft.test.marker", "1")
-        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
-        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      } finally sc.removeSparkListener(listener)
-      tags.toArray.count(_.toString.contains("broadcast exchange")) // the tag Spark gives that job
+      val (_, ran) = recorded(LabelPropagation.run(under(g, policy), 3).collect())
+      val tags = ran.jobs.map(p => String.valueOf(p.getProperty("spark.job.tags")))
+      tags.count(_.contains("broadcast exchange")) // the tag Spark gives that job
     }
     // distributed supersteps with the n-row label frame under the budget: hinted
     assert(broadcastJobs(ExecutionPolicy(driverBytes = g.numVertices * 16 + 1)) > 0)
@@ -526,8 +513,8 @@ class GraphAlgoSpec extends GraftSuite {
       ("routed edge list", () => LinkGraph.fromEdgeList(spark, raw, policy = distributedOnly), 6),
       ("routed repo graph", () => repoGraph(files, 20, distributedOnly), 6))
     for ((tag, build, want) <- builds) {
-      val (g, jobs, _) = jobsAndShuffles(build())
-      assert(jobs == want, s"$tag: $jobs jobs")
+      val (g, ran) = recorded(build())
+      assert(ran.jobs.length == want, s"$tag: ${ran.jobs.length} jobs")
       assert(g.source.isInstanceOf[AdjacencySource.BlockLaid] == (want == 6), tag)
       // the session's cache manager holds no entry for either view
       assert(g.vertexDict.storageLevel == StorageLevel.NONE && g.edges.storageLevel == StorageLevel.NONE, tag)
@@ -638,19 +625,38 @@ class GraphAlgoSpec extends GraftSuite {
 
   test("unpersistAll leaves no cached RDD of the graph behind") {
     val edges = DenseReference.randomEdges(120, 0.05, seed = 71).map(e => (e._1.toLong, e._2.toLong))
-    for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+    val builds = Seq[(String, () => LinkGraph)](
+      "resident" -> (() => graphOf(edges)),
+      "routed" -> (() => graphOf(edges, policy = distributedOnly)),
+      "dense-by-max" -> (() => LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"), numBlocks = 3,
+        idMode = LinkGraph.IdMode.DenseByMax)))
+    for ((tag, build) <- builds) {
       val (outputs, left) = persistedBy {
         // the build persists its store and nothing else: the routed build's
-        // dictionary runs and edge batches; the resident fold's are driver slices
-        val (g, stored) = persistedBy(graphOf(edges, policy = policy))
+        // dictionary runs and edge batches, dense-by-max its edge batches (its
+        // identity runs are computed when read); the resident fold's are driver slices
+        val (g, stored) = persistedBy(build())
         val store = g.source match {
           case AdjacencySource.BlockLaid(s) => Set(s.runs.id, s.edges.id)
+          case AdjacencySource.Keyed(s) => Set(s.edges.id)
           case _ => Set.empty[Int]
         }
-        assert(stored.keySet == store && store.nonEmpty == (policy == distributedOnly), s"$policy: $stored")
+        assert(stored.keySet == store && store.nonEmpty == (tag != "resident"), s"$tag: $stored")
         g.adjParts.count(); g.adjPartsByBlock.count(); g.gatherPartsRdd.count(); g.gatherPartsLocal
-        g.degreeTable.count()
+        val degrees = degreeRows(g)
         val ranks = PageRank.run(g, tolerance = 0.0, maxIterations = 2)
+        def values(o: graft.engine.PageRankOutcome) = o.ranks.collect().sortBy(_.blockId).flatMap(_.values).toSeq
+        val rankValues = values(ranks)
+        // a view over g's own frames borrows g's store: releasing the view
+        // leaves the store, g's degree table and g's layouts as they were
+        val view = new LinkGraph(spark, g.vertexDict, g.edges, g.numVertices, g.numBlocks, g.blockSize)
+        view.degreeTable.count(); view.adjParts.count()
+        view.unpersistAll()
+        assert(store.subsetOf(spark.sparkContext.getPersistentRDDs.keySet), s"$tag: the view released g's store")
+        assert(degreeRows(g) == degrees, tag)
+        val again = PageRank.run(g, tolerance = 0.0, maxIterations = 2)
+        assert(values(again) == rankValues, tag)
+        again.free()
         // resident outputs hold nothing; distributed ones are released with the
         // graph while the caller still holds them (the context tracks persisted
         // RDDs weakly, so a dropped output would hide its pin)
@@ -662,7 +668,7 @@ class GraphAlgoSpec extends GraftSuite {
         g.unpersistAll()
         outputs
       }
-      assert(left.isEmpty, s"left cached ($policy): ${left.values.mkString(", ")}")
+      assert(left.isEmpty, s"left cached ($tag): ${left.values.mkString(", ")}")
       assert(outputs.length == 6) // the outputs stay reachable until the check
     }
   }
@@ -741,9 +747,10 @@ class GraphAlgoSpec extends GraftSuite {
     val operators = Seq[LinkGraph => org.apache.spark.sql.DataFrame](
       ConnectedComponents.run(_), LabelPropagation.run(_, 4), TriangleCount.perVertexTriangles)
     for (op <- operators) {
-      val (distributed, shuffles) = shuffleWritingStages(byVid(op(g)))
-      assert(shuffles > 0, "over the budget the operator runs distributed")
-      assert(shuffleWritingStages(byVid(op(under(g, ExecutionPolicy())))) == ((distributed, 0)))
+      val (distributed, ran) = recorded(byVid(op(g)))
+      assert(ran.shuffles > 0, "over the budget the operator runs distributed")
+      val (resident, residentRan) = recorded(byVid(op(under(g, ExecutionPolicy()))))
+      assert((resident, residentRan.shuffles) == ((distributed, 0)))
     }
     g.unpersistAll()
   }

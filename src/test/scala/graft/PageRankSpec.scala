@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.model._
@@ -153,28 +152,12 @@ class PageRankSpec extends GraftSuite {
 
   test("a checkpointed run leaves the session conf alone: no job sees adaptive execution off") {
     // SQL jobs (the checkpoint commits) carry the session's set confs as job
-    // properties; a marker job after the run flushes the in-order listener queue
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("graft.test.marker") != null) flushed.countDown()
-        else seen.add((e.properties.getProperty("spark.sql.session.timeZone"),
-          e.properties.getProperty("spark.sql.adaptive.enabled")))
-    }
+    // properties
     val g = graphOf(rand50)
     val dir = java.nio.file.Files.createTempDirectory("graft-conf").toString
-    sc.addSparkListener(listener)
-    try {
-      PageRank.resume(g, PageRankConfig(tolerance = 0.0, maxIterations = 4, checkpointDir = Some(dir),
-        checkpointEvery = 2)).free()
-      sc.setLocalProperty("graft.test.marker", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val jobs = seen.asScala.toSeq
+    val (_, ran) = recorded(PageRank.resume(g, PageRankConfig(tolerance = 0.0, maxIterations = 4,
+      checkpointDir = Some(dir), checkpointEvery = 2)).free())
+    val jobs = ran.jobs.map(p => (p.getProperty("spark.sql.session.timeZone"), p.getProperty("spark.sql.adaptive.enabled")))
     assert(jobs.exists(_._1 == "UTC"), "no job of the run carried the session's confs")
     assert(!jobs.exists(_._2 == "false"), s"${jobs.count(_._2 == "false")} jobs ran with AQE off")
     g.unpersistAll()

@@ -129,6 +129,82 @@ class PropertyAndPlanSpec extends GraftSuite {
     }
   }
 
+  test("a public-constructor view of a build's own frames reads its store; other frames decode as before") {
+    val rng = new scala.util.Random(53)
+    val pairs = Seq.fill(300)((rng.nextInt(90).toLong * 7, rng.nextInt(90).toLong * 7))
+    val files = RepoFiles.table(spark, numRepos = 40, filesPerRepo = 3, vocab = 30)
+    val builds = Seq[(String, () => LinkGraph)](
+      "resident fold" -> (() => LinkGraph.fromEdgeList(spark, pairs.toDF("src", "dst"))),
+      "routed build" -> (() => LinkGraph.fromEdgeList(spark, pairs.toDF("src", "dst"), policy = distributedOnly)),
+      "repo graph" -> (() => LinkGraph.fromScan(spark, RepoFiles.halfPairs(files, 20), 0, ExecutionPolicy(), mirror = true)),
+      "dense-by-max" -> (() => LinkGraph.fromEdgeList(spark, pairs.toDF("src", "dst"), idMode = LinkGraph.IdMode.DenseByMax)))
+    def view(g: LinkGraph, edges: org.apache.spark.sql.Dataset[graft.model.Edge], n: Long) =
+      new LinkGraph(spark, g.vertexDict, edges, n, g.numBlocks, g.blockSize)
+    for ((tag, build) <- builds) {
+      val g = build()
+      val (_, built) = recorded(g.degreeTable.count())
+      val v = view(g, g.edges, g.numVertices)
+      val (m, counted) = recorded(v.numEdges)
+      assert(m == g.numEdges && counted.jobs.isEmpty, s"$tag: ${counted.jobs.length} jobs for numEdges")
+      val (_, viewed) = recorded(v.degreeTable.count())
+      assert(viewed.jobs.length == built.jobs.length, s"$tag: ${viewed.jobs.length} vs ${built.jobs.length} jobs")
+      assert(degreeRows(v) == degreeRows(g), tag)
+      v.unpersistAll()
+      // not the two views of one store: decoded and checked as before
+      decoded(g, view(g, g.edges.filter(lit(true)), g.numVertices), s"$tag, filtered")
+      val e = intercept[IllegalArgumentException](view(g, g.edges, g.numVertices + 1).degreeTable)
+      assert(e.getMessage.contains("contiguous ascending vid runs"), s"$tag: ${e.getMessage}")
+      g.unpersistAll()
+    }
+    // the same vids from two graphs' stores
+    val (g, other) = (builds.head._2(), builds(1)._2())
+    decoded(g, view(g, other.edges, g.numVertices), "frames of two graphs")
+    g.unpersistAll(); other.unpersistAll()
+  }
+
+  /** `u`, a view of `g`'s graph that reads no store: it counts its edges in a job and gives `g`'s degree table. */
+  private def decoded(g: LinkGraph, u: LinkGraph, tag: String): Unit = {
+    val (m, counted) = recorded(u.numEdges)
+    assert(m == g.numEdges && counted.jobs.nonEmpty, tag)
+    assert(degreeRows(u) == degreeRows(g), tag)
+    u.unpersistAll()
+  }
+
+  test("property: networkMetrics equals the Catalyst aggregate, both ValueDist regimes") {
+    def check(g: LinkGraph, tag: String): Unit = for (v <- Seq(g, under(g, distributedOnly))) {
+      val (got, want) = (NetworkAnalytics.networkMetrics(v), MetricsPlan.networkMetrics(v))
+      assert(got.schema == want.schema, s"$tag: ${got.schema} != ${want.schema}")
+      val (r, w) = (got.collect().head, want.collect().head)
+      got.schema.fieldNames.indices.foreach { i =>
+        val name = s"$tag under ${v.policy}: ${got.schema.fieldNames(i)}"
+        (r.get(i), w.get(i)) match {
+          case (a: Double, b: Double) => assert(math.abs(a - b) <= 1e-12 * math.abs(b), s"$name: $a != $b")
+          case (a, b) => assert(a == b, s"$name: $a != $b")
+        }
+      }
+      v.degreeTable.unpersist()
+    }
+    forAllSeeded(signedMultigraph, 4) { case (pairs, blocks) =>
+      for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+        val g = LinkGraph.fromEdgeList(spark, pairs.toDF("src", "dst"), numBlocks = blocks, policy = policy)
+        check(g, s"$pairs under $policy")
+        g.unpersistAll()
+      }
+    }
+    // n = 1 with no edge, a lone self-loop, and a planted star hub among sparse edges
+    val rng = new scala.util.Random(59)
+    val star = (1L to 80L).map(i => (0L, i)) ++ (1L to 40L).map(i => (i, 0L)) ++
+      Seq.fill(60)((1L + rng.nextInt(80), 1L + rng.nextInt(80)))
+    val graphs = Seq(
+      "n = 1" -> LinkGraph.fromDenseWeighted(spark, Seq(graft.model.Edge(0, 0, 0.0)).toDS(), 1),
+      "lone self-loop" -> LinkGraph.fromEdgeList(spark, Seq((9L, 9L)).toDF("src", "dst")),
+      "star hub" -> LinkGraph.fromEdgeList(spark, star.toDF("src", "dst"), numBlocks = 3))
+    for ((tag, g) <- graphs) {
+      check(g, tag)
+      g.unpersistAll()
+    }
+  }
+
   test("property: every resident regime equals its distributed twin on random signed multigraphs") {
     def byVid(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
@@ -239,46 +315,10 @@ class PropertyAndPlanSpec extends GraftSuite {
     val rng = new scala.util.Random(43)
     val pairs = Seq.fill(400)((rng.nextInt(120).toLong * 5, rng.nextInt(120).toLong * 5))
     val g = LinkGraph.fromEdgeList(spark, pairs.toDF("src", "dst"), numBlocks = 3, policy = distributedOnly)
-    val sc = spark.sparkContext
-    val group = "graft.test.degreeTable"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
-    val shuffles = new java.util.concurrent.atomic.AtomicInteger
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => jobs.incrementAndGet()
-          case "graft.test.marker" => flushed.countDown()
-          case _ =>
-        }
-      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) stages.add(e.stageInfo.stageId)
-      // a stage that ran and wrote shuffle output (the graph's cached layouts
-      // skip the stages behind them; adaptive execution runs each of its
-      // exchanges as a job of its own)
-      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stages.contains(e.stageInfo.stageId) && e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
-          shuffles.incrementAndGet()
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
-          plans.add(s.physicalPlanDescription)
-        case _ =>
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one degree table build")
-      try g.degreeTable.collect() finally sc.clearJobGroup()
-      sc.setJobGroup("graft.test.marker", "flush the listener bus")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    assert(shuffles.get == 1, s"${shuffles.get} shuffle dependencies in ${jobs.get} jobs")
-    assert(jobs.get <= 3, s"${jobs.get} jobs")
-    assert(plans.asScala.nonEmpty && plans.asScala.forall(!_.contains("Join")), plans.asScala.mkString("\n"))
+    val (_, ran) = recorded(g.degreeTable.collect())
+    assert(ran.shuffles == 1, s"${ran.shuffles} shuffle dependencies in ${ran.jobs.length} jobs")
+    assert(ran.jobs.length <= 3, s"${ran.jobs.length} jobs")
+    assert(ran.plans.nonEmpty && ran.plans.forall(!_.contains("Join")), ran.plans.mkString("\n"))
     g.unpersistAll()
   }
 
@@ -286,19 +326,19 @@ class PropertyAndPlanSpec extends GraftSuite {
     val edges = DenseReference.randomEdges(200, 0.03, seed = 47).map(e => (e._1.toLong, e._2.toLong))
     val g = LinkGraph.fromEdgeList(spark, edges.toDF("src", "dst"), numBlocks = 3)
     g.degreeTable.count()
-    val ((prior, risk, high), shuffles) = shuffleWritingStages {
+    val ((prior, risk, high), ran) = recorded {
       val prior = NetworkAnalytics.compositeRisk(g)
       val risk = PageRank.propagateRisk(g, prior, tolerance = 0.0, maxIterations = 6).toVertexDf(g)
       (prior, risk, NetworkAnalytics.highRiskProviders(risk, prior).collect().toSeq)
     }
-    assert(shuffles == 0, "composite prior, risk propagation and high-risk selection stay on the driver")
+    assert(ran.shuffles == 0, "composite prior, risk propagation and high-risk selection stay on the driver")
     assert(high.nonEmpty && high == NetworkAnalytics.highRiskPlan(risk, prior).collect().toSeq)
     // the prior is one implementation at every size: over a distributedOnly
     // view's built degree table it exchanges nothing and persists nothing
     val d = under(g, distributedOnly)
     d.degreeTable.count()
-    val ((dPrior, dShuffles), added) = persistedBy(shuffleWritingStages(NetworkAnalytics.compositeRisk(d).collect().toSeq))
-    assert(dShuffles == 0, "the prior over a distributed view writes no shuffle")
+    val ((dPrior, dRan), added) = persistedBy(recorded(NetworkAnalytics.compositeRisk(d).collect().toSeq))
+    assert(dRan.shuffles == 0, "the prior over a distributed view writes no shuffle")
     assert(added.isEmpty, "the prior persists nothing")
     assert(dPrior == prior.collect().toSeq)
     d.unpersistAll()
@@ -308,8 +348,8 @@ class PropertyAndPlanSpec extends GraftSuite {
   test("plans: ValueDist's local regime reads a cached column in one job") {
     val df = spark.range(20000).selectExpr("cast(id % 97 as double) as v").cache()
     df.count()
-    val (Seq(dist), jobs, _) = jobsAndShuffles(graft.analytics.ValueDist.of(df, Seq("v")))
-    assert(dist.isLocal && dist.n == 20000 && jobs == 1, s"$jobs jobs")
+    val (Seq(dist), ran) = recorded(graft.analytics.ValueDist.of(df, Seq("v")))
+    assert(dist.isLocal && dist.n == 20000 && ran.jobs.length == 1, s"${ran.jobs.length} jobs")
     df.unpersist()
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analytics.ValueDist
 import graft.graph.LinkGraph
 import graft.model.ExecutionPolicy
 import graft.sources.RepoFiles
@@ -12,6 +13,13 @@ import graft.sources.RepoFiles
 object TestSpark {
   lazy val spark: SparkSession = graft.util.Sessions.local(4, "graft-test")
 }
+
+/** What one body ran, as the listener bus saw it: the properties of each
+  * job it started, its stages, how many of them wrote shuffle output (a
+  * driver-resident operator writes none) and the physical plan of each SQL
+  * execution.
+  */
+final case class Ran(jobs: Seq[java.util.Properties], stages: Int, shuffles: Int, plans: Seq[String])
 
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -65,48 +73,49 @@ abstract class GraftSuite extends AnyFunSuite {
     (r, spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.toMap)
   }
 
-  /** `body`'s result and how many stages of the jobs it runs wrote shuffle
-    * output: a driver-resident operator writes none.
+  /** `body`'s result and what it ran: every job, stage and SQL execution of
+    * its job group, flushed by a marker job after it.
     */
-  def shuffleWritingStages[T](body: => T): (T, Int) = {
-    val (r, _, shuffles) = jobsAndShuffles(body)
-    (r, shuffles)
-  }
-
-  /** `body`'s result, how many jobs it runs and how many of their stages
-    * wrote shuffle output.
-    */
-  def jobsAndShuffles[T](body: => T): (T, Int, Int) = {
+  def recorded[T](body: => T): (T, Ran) = {
     import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val group = "graft.test.regime"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val group = "graft.test.recorded"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
     val shuffles = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       private def groupOf(p: java.util.Properties) = Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
       override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e.properties) match {
-        case `group` => jobs.incrementAndGet()
+        case `group` => jobs.add(e.properties)
         case "graft.test.marker" => flushed.countDown()
         case _ =>
       }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (groupOf(e.properties) == group) stages.add(e.stageInfo.stageId)
+      // a stage that ran and wrote shuffle output (stages behind a cached
+      // RDD are skipped; adaptive execution runs each exchange as its own job)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (stages.contains(e.stageInfo.stageId) && e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
           shuffles.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     val result = try {
-      sc.setJobGroup(group, "regime check")
+      sc.setJobGroup(group, "recorded body")
       val r = try body finally sc.clearJobGroup()
       sc.setJobGroup("graft.test.marker", "flush the listener bus")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
       r
     } finally sc.removeSparkListener(listener)
-    (result, jobs.get, shuffles.get)
+    (result, Ran(jobs.asScala.toSeq, stages.size, shuffles.get, plans.asScala.toSeq))
   }
 
   def assertAllClose(got: Array[Double], want: Array[Double], tol: Double = 1e-9): Unit = {
@@ -153,6 +162,48 @@ object SharedPatterns {
     val spark = files.sparkSession
     import spark.implicits._
     files.select($"repo").distinct().select($"repo", xxhash64($"repo").as("extId"))
+  }
+}
+
+/** `NetworkAnalytics.networkMetrics` as the Catalyst aggregate it was: the
+  * parity reference for its primitive pass.
+  */
+object MetricsPlan {
+  def networkMetrics(graph: LinkGraph): DataFrame = {
+    val spark = graph.spark
+    import spark.implicits._
+    val deg = graph.degreeTable.withColumn("totalDeg", $"inDeg" + $"outDeg")
+    val nnz = graph.numEdges // distinct (src,dst) pairs = G.nnz
+    val n = graph.numVertices
+
+    // thresholds + medians: ONE distribution job over the CACHED degree table
+    // serves all three columns, each dist then serving both of its probes
+    val Seq(distOut, distIn, distTot) = ValueDist.of(deg, Seq("outDeg", "inDeg", "totalDeg"), graph.policy)
+    val Seq(p90out, medOut) = distOut.percentiles(Seq(0.9, 0.5))
+    val Seq(p90in, medIn) = distIn.percentiles(Seq(0.9, 0.5))
+    val p95tot = distTot.percentile(0.95)
+    distOut.release(); distIn.release(); distTot.release()
+
+    deg.agg(
+      lit(n).as("total_providers"),
+      lit(nnz).as("total_referrals"),
+      lit(if (n > 1) nnz.toDouble / (n.toDouble * (n - 1)) else 0.0).as("network_density"),
+      avg($"outDeg").as("average_referrals_out"),
+      lit(medOut).as("median_referrals_out"),
+      stddev_pop($"outDeg").as("std_referrals_out"),
+      max($"outDeg").cast("long").as("max_referrals_out"),
+      (sum(when($"outDeg" > lit(p90out), 1L).otherwise(0L)).cast("double") / lit(n.toDouble))
+        .as("referral_concentration_out"),
+      avg($"inDeg").as("average_referrals_in"),
+      lit(medIn).as("median_referrals_in"),
+      stddev_pop($"inDeg").as("std_referrals_in"),
+      max($"inDeg").cast("long").as("max_referrals_in"),
+      (sum(when($"inDeg" > lit(p90in), 1L).otherwise(0L)).cast("double") / lit(n.toDouble))
+        .as("referral_concentration_in"),
+      sum(when($"totalDeg" === 0.0, 1L).otherwise(0L)).as("isolated_providers"),
+      sum(when($"totalDeg" > lit(p95tot), 1L).otherwise(0L)).as("hub_providers"),
+      avg(when($"inDeg" > 0, $"outDeg" / ($"inDeg" + lit(1e-10))).otherwise($"outDeg"))
+        .as("referral_imbalance_ratio"))
   }
 }
 
