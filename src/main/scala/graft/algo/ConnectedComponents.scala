@@ -77,9 +77,7 @@ object ConnectedComponents {
     var converged = false
     var iteration = 0
 
-    val debug = sys.env.contains("GRAFT_DEBUG")
     while (iteration < maxIterations && !converged) {
-      val roundT0 = System.nanoTime()
       // candidate labels from the current edge set: l(x) = min(x, Γ(x)) —
       // ONE pinned aggregation serves BOTH the fixpoint check and large-star
       // (they are the same groupBy-min; round 3 computed it twice per round)
@@ -137,9 +135,6 @@ object ConnectedComponents {
         freeCur = freeNext
         iteration += 1
       }
-      if (debug)
-        System.err.println(
-          f"[graft] cc round=$iteration converged=$converged ${(System.nanoTime() - roundT0) / 1e9}%.2f s")
     }
 
     if (!converged) {

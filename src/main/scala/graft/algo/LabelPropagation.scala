@@ -80,10 +80,8 @@ object LabelPropagation {
     var (labels, freeLabels) = graft.graph.Lineage.pin(
       graph.vertexDict.select($"vid", $"vid".as("label")).toDF())
 
-    val debug = sys.env.contains("GRAFT_DEBUG")
     var k = 0
     while (k < iterations) {
-      val stepT0 = System.nanoTime()
       val votes = und
         .join(hintSmall(labels), und("src") === labels("vid"))
         .select(und("dst").as("vid"), $"label", $"weight".as("w"))
@@ -99,9 +97,6 @@ object LabelPropagation {
       freeLabels()
       labels = newLabels
       freeLabels = freeNew
-      if (debug)
-        System.err.println(
-          f"[graft] lpa superstep=$k ${(System.nanoTime() - stepT0) / 1e9}%.2f s")
     }
     und.unpersist()
     graph.releaseOnUnpersist(freeLabels)

@@ -30,8 +30,7 @@ object CheckpointManager {
     val metricsJson = recent
       .map(m =>
         s"""{"superstep":${m.superstep},"residual":${m.residual},""" +
-          s""""shuffleReadBytes":${m.shuffleReadBytes},"shuffleWriteBytes":${m.shuffleWriteBytes},""" +
-          s""""shuffleReadRows":${m.shuffleReadRows},"shuffleWriteRows":${m.shuffleWriteRows},""" +
+          s""""shuffleRows":${m.shuffleRows},"shuffleBytes":${m.shuffleBytes},""" +
           s""""wallMs":${m.wallMs}}""")
       .mkString("[", ",", "]")
     IcebergLite.commit(

@@ -9,7 +9,6 @@ import org.apache.spark.util.CollectionAccumulator
 
 import graft.model._
 import graft.graph.LinkGraph
-import graft.util.HostProbe
 
 /** Result bundle of an engine run. */
 final case class PageRankOutcome(
@@ -66,22 +65,19 @@ final case class PageRankOutcome(
   *    a run repeats exactly; lineage is cut per superstep ([[pinRdd]]).
   *
   * Optional durable checkpoints (IcebergLite snapshots) give mid-iteration
-  * resume through the same loop. Per-superstep shuffle rows/bytes are
-  * captured by a SparkListener.
+  * resume through the same loop. Each superstep's shuffle rows and bytes are
+  * counted by the superstep itself: the [[BlockContrib]] records each block
+  * gathers and their payload (8 B per dense value, 12 B per sparse entry),
+  * reported with the block's partials; the driver regimes shuffle nothing.
   */
 final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serializable {
   import graph.spark
   import spark.implicits._
+  import PageRankEngine.BlockPartial
 
   private val n: Long = graph.numVertices
   private val d: Double = cfg.damping
   private val mode: PageRankMode = cfg.mode
-
-  /** Counter delta in ms for the per-superstep attribution columns; -1
-    * propagates "counter unavailable" without poisoning the row.
-    */
-  private def deltaMs(before: Double, after: Double): Long =
-    if (before < 0 || after < 0) -1L else math.max(0L, ((after - before) * 1000).toLong)
 
   /** Pinned helper RDDs (z / delta / prior chunks) released when the run finishes. */
   @transient private val auxPins = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
@@ -122,9 +118,6 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
           "first run finished. Construct a fresh engine for every run()/resume().")
     ran = true
     val t0 = System.nanoTime()
-    val sc = spark.sparkContext
-    val listener = new ShuffleMetricsListener
-    sc.addSparkListener(listener)
     try {
       // building the regime builds and caches its adjacency layout
       val x: RankVector = if (n * 8L < graph.policy.driverBytes) new OnDriver(start) else new OnCluster(start)
@@ -138,26 +131,11 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
 
       while (!converged && iteration < cfg.maxIterations) {
         val iterT0 = System.nanoTime()
-        val cpu0 = HostProbe.procCpuSec()
-        val steal0 = HostProbe.stealSec()
-        val gc0 = HostProbe.gcSec()
-        val jit0 = HostProbe.jitSec()
-        listener.snapshot()
-
-        val (err, next) = x.superstep(PageRankEngine.teleportOf(m, d, n, carry))
+        val (err, next, rows, bytes) = x.superstep(PageRankEngine.teleportOf(m, d, n, carry))
         error = err
         carry = next
         iteration += 1
-
-        val sh = listener.delta()
-        metrics += SuperstepMetrics(iteration, error, sh.readBytes, sh.writeBytes,
-          sh.readRows, sh.writeRows, (System.nanoTime() - iterT0) / 1000000L,
-          procCpuMs = deltaMs(cpu0, HostProbe.procCpuSec()),
-          stealMs = deltaMs(steal0, HostProbe.stealSec()),
-          gcMs = deltaMs(gc0, HostProbe.gcSec()),
-          jitMs = deltaMs(jit0, HostProbe.jitSec()))
-        if (PageRankEngine.debug)
-          System.err.println(s"[graft] superstep=$iteration ms=${metrics.last.wallMs} residual=$error")
+        metrics += SuperstepMetrics(iteration, error, rows, bytes, (System.nanoTime() - iterT0) / 1000000L)
         cfg.checkpointDir.foreach { dir =>
           if (converged || iteration % cfg.checkpointEvery == 0)
             CheckpointManager.write(graph, dir, iteration, error,
@@ -175,7 +153,6 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
         metrics.toSeq,
         free)
     } finally {
-      sc.removeSparkListener(listener)
       auxPins.foreach(_.unpersist(false))
       auxPins.clear()
     }
@@ -186,9 +163,10 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
   /** Where the rank vector lives. [[runFrom]] does everything else. */
   private abstract class RankVector {
     /** One superstep with teleport scalar `t`: x ← settle(teleport(G·x));
-      * returns the (residual, carry) totals, added in block order.
+      * returns the (residual, carry) totals, added in block order, and the
+      * contribution rows and payload bytes it shuffled.
       */
-    def superstep(t: Double): (Double, Double)
+    def superstep(t: Double): (Double, Double, Long, Long)
 
     /** Σ over chunks, in block order, of f(x chunk, aux chunk — z or delta, else null). */
     def total(f: (Array[Double], Array[Double]) => Double): Double
@@ -259,14 +237,14 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
       if (graph.numEdges * 16 < graph.policy.driverBytes) graph.gatherPartsLocal
       else { graph.gatherPartsRdd; null }
 
-    def superstep(t: Double): (Double, Double) = {
+    def superstep(t: Double): (Double, Double, Long, Long) = {
       val gx =
         if (localParts != null) PageRankEngine.localGather(localParts, x, size, graph.blockSize, n)
         else jobGather()
       val sumY = PageRankEngine.teleport(mode, gx, d, t, aux)
-      val totals = PageRankEngine.settle(mode, gx, x, aux, sumY)
+      val (err, carry) = PageRankEngine.settle(mode, gx, x, aux, sumY)
       x = gx
-      totals
+      (err, carry, 0L, 0L)
     }
 
     /** One shuffle-free job: broadcast x; each src-major part GATHERS its own
@@ -336,8 +314,6 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
     */
   private final class OnCluster(start: Option[(DataFrame, String)]) extends RankVector {
     private val adj = graph.adjPartsByBlock
-    // counts mid-block drains, so a probe run can prove the bounded-scratch path fired
-    private val accFlush = spark.sparkContext.longAccumulator("graft.slabFlushes")
 
     private def laid(ds: Dataset[RankChunk]): RDD[RankChunk] = pinRdd(graph.toBlockLayout(ds))
     private def forRun(r: RDD[RankChunk]): RDD[RankChunk] = { auxPins += r; r }
@@ -362,21 +338,21 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
       if (auxRdd == null) xs.map(c => (c, null: Array[Double]))
       else xs.zipPartitions(auxRdd)((xi, ai) => xi.zip(ai).map { case (c, a) => (c, a.values) })
 
-    /** Per-block (partial, partial) pairs reported from result-stage tasks —
-      * Spark applies each partition's update once, retries included.
+    /** Per-block partials reported from result-stage tasks — Spark applies
+      * each partition's update once, retries included.
       */
-    private def blockSums(name: String): CollectionAccumulator[(Int, Double, Double)] =
-      spark.sparkContext.collectionAccumulator[(Int, Double, Double)](name)
+    private def blockSums(name: String): CollectionAccumulator[BlockPartial] =
+      spark.sparkContext.collectionAccumulator[BlockPartial](name)
 
     /** Totals of the partials added in block order: a sum never depends on
       * which task finished first.
       */
-    private def inBlockOrder(acc: CollectionAccumulator[(Int, Double, Double)]): (Double, Double) = {
-      val ps = acc.value.asScala.sortBy(_._1)
-      (ps.foldLeft(0.0)(_ + _._2), ps.foldLeft(0.0)(_ + _._3))
-    }
+    private def inBlockOrder(acc: CollectionAccumulator[BlockPartial]): BlockPartial =
+      acc.value.asScala.sortBy(_.block).foldLeft(BlockPartial(-1, 0.0, 0.0, 0L, 0L)) { (s, p) =>
+        BlockPartial(-1, s.a + p.a, s.b + p.b, s.rows + p.rows, s.bytes + p.bytes)
+      }
 
-    def superstep(t: Double): (Double, Double) = {
+    def superstep(t: Double): (Double, Double, Long, Long) = {
       val m = mode
       val d0 = d
       val normalizes = m == PageRankMode.ReferenceRenorm
@@ -385,25 +361,27 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
       val teleported = contribsOf(x).zipPartitions(withAux(x)) { (cit, xit) =>
         xit.map { case (old, a) =>
           val y = new Array[Double](old.values.length)
-          PageRankEngine.gatherContribs(cit, y)
-          sumsY.add((old.blockId, PageRankEngine.teleport(m, y, d0, t, a), 0.0))
+          val (rows, bytes) = PageRankEngine.gatherContribs(cit, y)
+          sumsY.add(BlockPartial(old.blockId, PageRankEngine.teleport(m, y, d0, t, a), 0.0, rows, bytes))
           (old, a, y)
         }
       }
       // renorm settles against Σy over EVERY block: pin between the two passes;
       // the other modes settle in the same job
       val raw = if (normalizes) pinRdd(teleported) else teleported
-      val sumY = if (normalizes) inBlockOrder(sumsY)._1 else Double.NaN
+      val sumY = if (normalizes) inBlockOrder(sumsY).a else Double.NaN
       val next = pinRdd(raw.map { case (old, a, y0) =>
         val y = if (normalizes) y0.clone() else y0 // never write into a pinned block
         val (err, carry) = PageRankEngine.settle(m, y, old.values, a, sumY)
-        totals.add((old.blockId, err, carry))
+        totals.add(BlockPartial(old.blockId, err, carry, 0L, 0L))
         RankChunk(old.blockId, old.loVid, y)
       })
       if (normalizes) raw.unpersist(false)
       x.unpersist(false)
       x = next
-      inBlockOrder(totals)
+      val gathered = inBlockOrder(sumsY)
+      val settled = inBlockOrder(totals)
+      (settled.a, settled.b, gathered.rows, gathered.bytes)
     }
 
     /** The gather-scatter matvec: zipPartitions the CACHED co-partitioned
@@ -416,21 +394,22 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
       * and made shuffle volume grow with parallelism.
       *
       * Per-task scratch is HARD-BOUNDED by the policy's `taskBytes`:
-      * when allocated slab bytes exceed the budget mid-block, the current
-      * slabs are FLUSHED to the shuffle (the downstream gather sums multiple
+      * when allocated slab bytes exceed the budget, checked after each dst
+      * vertex (a block is often one part), the current slabs are FLUSHED to
+      * the shuffle (the downstream gather sums multiple
       * contribs per block, so partial slabs are correct) and scratch restarts
       * empty. Without the flush, peak superstep memory is
       * concurrentTasks × touched-slots × 8 B — at hub-heavy 100×-scale blocks
       * that is the executor-memory ceiling; with it, the peak is
       * concurrentTasks × budget, at the cost of a slightly larger shuffle in
-      * exactly the (rare) tasks that overflow.
+      * exactly the (rare) tasks that overflow (they show as extra
+      * contribution rows in the superstep's metrics).
       */
     private def contribsOf(x: RDD[RankChunk]): RDD[(Int, BlockContrib)] = {
       val nb = graph.numBlocks
       val bs = graph.blockSize
       val nv = n
       val budget = graph.policy.taskBytes
-      val flushes = accFlush
       adj.zipPartitions(x) { (adjIt, xIt) =>
         if (!xIt.hasNext) Iterator.empty
         else {
@@ -442,6 +421,8 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
             private var anySlab = false
             private var pending: Iterator[(Int, BlockContrib)] = Iterator.empty
             private var nextElem: (Int, BlockContrib) = _
+            private var part: AdjPart = _
+            private var at = 0 // the next key of `part` to scatter
             advance()
 
             private def drain(): Iterator[(Int, BlockContrib)] = {
@@ -469,9 +450,10 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
               out.iterator
             }
 
-            private def processPart(part: graft.model.AdjPart): Unit = {
-              var i = 0
-              while (i < part.keys.length) {
+            /** Scatters `part`'s keys from `at` until it ends or the slabs pass the budget. */
+            private def processPart(): Unit = {
+              var i = at
+              while (i < part.keys.length && allocBytes <= budget) {
                 val xv = chunk.values(part.keys(i))
                 if (xv != 0.0) {
                   var j = part.offsets(i)
@@ -494,16 +476,18 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
                 }
                 i += 1
               }
+              at = i
             }
 
             private def advance(): Unit = {
               nextElem = null
               while (nextElem == null) {
                 if (pending.hasNext) nextElem = pending.next()
-                else if (adjIt.hasNext) {
-                  processPart(adjIt.next()._2)
-                  if (allocBytes > budget) { flushes.add(1); pending = drain() }
-                } else if (anySlab) pending = drain()
+                else if (part != null && at < part.keys.length) {
+                  processPart()
+                  if (allocBytes > budget) pending = drain()
+                } else if (adjIt.hasNext) { part = adjIt.next()._2; at = 0 }
+                else if (anySlab) pending = drain()
                 else return
               }
             }
@@ -535,17 +519,16 @@ final class PageRankEngine(graph: LinkGraph, cfg: PageRankConfig) extends Serial
         r
       }
       auxPins -= out // the ranks outlive the run, even when they are still x₀ = r₀
-      if (accFlush.value > 0)
-        System.err.println(
-          s"[graft] slab budget flushes: ${accFlush.value} mid-block drains (budget ${graph.policy.taskBytes} B)")
       (spark.createDataset(out), () => { out.unpersist(false); () })
     }
   }
 }
 
 object PageRankEngine {
-  /** Per-superstep stderr progress (env GRAFT_DEBUG). */
-  val debug: Boolean = sys.env.contains("GRAFT_DEBUG")
+  /** One block's partials from a result-stage task: two sums, and the
+    * contribution rows and payload bytes the block gathered.
+    */
+  private[engine] final case class BlockPartial(block: Int, a: Double, b: Double, rows: Long, bytes: Long)
 
   // Per-chunk kernels shared by both regimes, each a small while-loop method:
   // HotSpot does not compile methods over 8000 bytecodes, and loops inlined
@@ -649,23 +632,33 @@ object PageRankEngine {
     s
   }
 
-  /** Sum incoming contribution slabs (dense or compacted sparse) into gx. */
+  /** Sum incoming contribution slabs (dense or compacted sparse) into gx;
+    * returns how many slabs it gathered and their payload bytes (8 B per
+    * dense value, 12 B per sparse (idx, val) entry).
+    */
   private[engine] def gatherContribs(
       cit: Iterator[(Int, BlockContrib)],
       gx: Array[Double]
-  ): Unit =
+  ): (Long, Long) = {
+    var rows = 0L
+    var bytes = 0L
     cit.foreach { case (_, bc) =>
+      rows += 1
       if (bc.dense != null) {
         val d = bc.dense
+        bytes += d.length * 8L
         var i = 0
         while (i < d.length) { gx(i) += d(i); i += 1 }
       } else {
         val idx = bc.idx
         val vs = bc.vals
+        bytes += idx.length * 12L
         var i = 0
         while (i < idx.length) { gx(idx(i)) += vs(i); i += 1 }
       }
     }
+    (rows, bytes)
+  }
 
   /** Gather one src-major part (resident regime): out[srcLocal] = Σ over its
     * edges of wNorm · x[dst] — sequential writes, the JVM twin of SciPy's C

@@ -1,5 +1,7 @@
 package graft.graph
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -1087,17 +1089,32 @@ object LinkGraph {
         fromScan(spark, scanOf(folded.queryExecution.toRdd, weighted = true), numBlocks, policy, mirror = false)
 
       case IdMode.DenseByMax =>
-        // the bounds and the graph's store read the folded frame: cached so
-        // the upstream plan runs once
-        folded.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val bounds = folded
-            .agg(max(greatest($"src", $"dst")).as("mx"), min(least($"src", $"dst")).as("mn"))
-            .first()
-          require(!bounds.isNullAt(0), "dense-by-max graph needs at least one edge")
-          require(bounds.getLong(1) >= 0L, "dense-by-max ids must be non-negative")
-          fromDenseWeighted(spark, folded.as[Edge], bounds.getLong(0) + 1, numBlocks, policy)
-        } finally folded.unpersist(false)
+        // one job packs the positive edges (the store), counts them and
+        // bounds the ids of every row, weight ≤ 0 included: each result task
+        // reports its partition's (rows, min id, max id) once
+        val bounds = spark.sparkContext.collectionAccumulator[(Long, Long, Long)]("graft.idBounds")
+        val batches = folded.queryExecution.toRdd.mapPartitions { it =>
+          val r = new Rows(packed = true)
+          var rows = 0L
+          var lo = Long.MaxValue
+          var hi = Long.MinValue
+          it.foreach { e =>
+            val src = e.getLong(0)
+            val dst = e.getLong(1)
+            rows += 1
+            lo = math.min(lo, math.min(src, dst))
+            hi = math.max(hi, math.max(src, dst))
+            if (e.getDouble(2) > 0) r.add((src << 32) | dst, e.getDouble(2))
+          }
+          bounds.add((rows, lo, hi))
+          Iterator.single(EdgeBatch(-1L, r.trimmed))
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+        val m = batches.map(_.rows.n.toLong).fold(0L)(_ + _)
+        val parts = bounds.value.asScala.filter(_._1 > 0)
+        if (parts.isEmpty || parts.exists(_._2 < 0)) batches.unpersist(false)
+        require(parts.nonEmpty, "dense-by-max graph needs at least one edge")
+        require(!parts.exists(_._2 < 0), "dense-by-max ids must be non-negative")
+        denseGraph(spark, batches, m, parts.map(_._3).max + 1, numBlocks, policy)
     }
   }
 
@@ -1346,9 +1363,16 @@ object LinkGraph {
       numBlocks: Int = 0,
       policy: ExecutionPolicy = ExecutionPolicy()
   ): LinkGraph = {
-    val p = math.max(1, spark.sparkContext.defaultParallelism)
     val batches = batchesOf(edges.filter(col("weight") > 0), numVertices).persist(StorageLevel.MEMORY_AND_DISK)
-    val m = batches.map(_.rows.n.toLong).fold(0L)(_ + _)
+    denseGraph(spark, batches, batches.map(_.rows.n.toLong).fold(0L)(_ + _), numVertices, numBlocks, policy)
+  }
+
+  /** The graph over vids 0..n−1 whose store is `batches` (persisted, packed
+    * `(src << 32) | dst`, `m` edges) beside the identity dictionary's runs.
+    */
+  private def denseGraph(spark: SparkSession, batches: RDD[EdgeBatch], m: Long, numVertices: Long, numBlocks: Int,
+      policy: ExecutionPolicy): LinkGraph = {
+    val p = math.max(1, spark.sparkContext.defaultParallelism)
     val starts = Array.tabulate(p + 1)(k => k * numVertices / p)
     val runs = spark.sparkContext.parallelize(0 until p, p)
       .map(k => Array.tabulate((starts(k + 1) - starts(k)).toInt)(starts(k) + _))

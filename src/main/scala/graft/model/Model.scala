@@ -161,24 +161,19 @@ final case class PageRankRun(
 
 /** Per-superstep observability row (north rule: rows, bytes shuffled, residual).
   *
-  * procCpuMs/stealMs (-1 when unavailable) attribute a slow superstep from
-  * inside the metrics: wall >> procCpu/cores with ~0 steal = the process
-  * WAITED (scheduler, fetch, lock); wall ≈ stolen share = hypervisor took
-  * the cpu; wall ≈ procCpu/cores = the step genuinely computed that long.
-  * On the shared-VM bench host these three look identical from wall alone.
+  * `shuffleRows` and `shuffleBytes` are counted by the superstep itself: the
+  * [[BlockContrib]] records the distributed scatter exchanges and their
+  * payload (8 B per dense value, 12 B per sparse (idx, val) entry; keys and
+  * serialization framing are not counted). They are exact and repeat from
+  * run to run, and work outside the run adds nothing to them. The driver
+  * regimes shuffle nothing and report 0.
   */
 final case class SuperstepMetrics(
     superstep: Int,
     residual: Double,
-    shuffleReadBytes: Long,
-    shuffleWriteBytes: Long,
-    shuffleReadRows: Long,
-    shuffleWriteRows: Long,
-    wallMs: Long,
-    procCpuMs: Long = -1L,
-    stealMs: Long = -1L,
-    gcMs: Long = -1L,
-    jitMs: Long = -1L
+    shuffleRows: Long,
+    shuffleBytes: Long,
+    wallMs: Long
 )
 
 final case class ConvergenceRow(

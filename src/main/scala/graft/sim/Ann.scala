@@ -99,10 +99,10 @@ object Ann {
     * (explode of an L-entry struct array — vectors are NEVER replicated per
     * table; round 2's unionAll shipped the corpus L times), the id-only
     * banded frame is pinned and self-joined, and candidate pairs join their
-    * vectors back by id. The Σ c·(c−1)/2 candidate estimate over actual
-    * bucket sizes is computed from the pinned frame and logged — when it
-    * approaches n(n−1)/2 the caller has asked an inherently quadratic
-    * question (low threshold) and should raise it or use brute force.
+    * vectors back by id. [[candidatePairEstimate]] gives the Σ c·(c−1)/2
+    * candidate count over actual bucket sizes up front — when it approaches
+    * n(n−1)/2 the caller has asked an inherently quadratic question (low
+    * threshold) and should raise it or use brute force.
     *
     * bits/tables default to 0 = auto-sized by [[lshParams]] from the corpus
     * count and threshold. Output is exact on the candidate set; completeness
@@ -140,13 +140,6 @@ object Ann {
     val (banded, _) = graft.graph.Lineage.pin(
       emb.select(col("id"), explode(array(tb: _*)).as("tb"))
         .select(col("id"), col("tb.table"), col("tb.bucket")))
-    val candEst = banded
-      .groupBy($"table", $"bucket")
-      .agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum($"c" * ($"c" - 1) / 2), lit(0.0)).cast("long"))
-      .first().getLong(0)
-    System.err.println(
-      s"[graft] cosinePairsLsh: bits=$b tables=$l candidate-pair estimate (pre-dedup) = $candEst")
     val cands = banded.as("lb")
       .join(banded.as("rb"),
         col("lb.table") === col("rb.table") && col("lb.bucket") === col("rb.bucket")

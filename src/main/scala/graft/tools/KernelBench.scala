@@ -143,10 +143,8 @@ object KernelBench {
     val weather = memGbps() // DRAM weather snapshot, right before the timed region
     phase("probe-done")
     val steal0 = stealSec()
-    val classes0 = graft.util.HostProbe.loadedClasses()
     val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = iters)
     phase("supersteps-done")
-    val classesPerStep = (graft.util.HostProbe.loadedClasses() - classes0) / math.max(1, iters)
     val steal1 = stealSec()
     // median superstep with warm-up excluded — a core-confined leg JIT-warms
     // IN its own cpu budget (exactly like a real pinned executor), which
@@ -174,17 +172,6 @@ object KernelBench {
       .mapToLong(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L))
       .sum() / (1024 * 1024)
     val stepsJson = all.map(t => f"$t%.3f").mkString("[", ",", "]")
-    // per-step attribution columns (engine metrics, see SuperstepMetrics):
-    // cpu ≈ wall×cores and steal ≈ 0 → genuine compute; cpu << wall×cores →
-    // the process waited; steal ≈ the gap → the hypervisor took the cpu
-    val stepsCpuJson =
-      out.metrics.map(m => f"${m.procCpuMs / 1000.0}%.3f").mkString("[", ",", "]")
-    val stepsStealJson =
-      out.metrics.map(m => f"${m.stealMs / 1000.0}%.3f").mkString("[", ",", "]")
-    val stepsGcJson =
-      out.metrics.map(m => f"${m.gcMs / 1000.0}%.3f").mkString("[", ",", "]")
-    val stepsJitJson =
-      out.metrics.map(m => f"${m.jitMs / 1000.0}%.3f").mkString("[", ",", "]")
     // stolen cpu-seconds normalized by this leg's busy cpu-time: ~0 on a
     // quiet host, ~0.5 when the hypervisor takes half of every busy vcpu.
     // Round-5 probes measured 0.48 on a 1-core leg at loadavg 1.3 — the
@@ -197,8 +184,7 @@ object KernelBench {
         f""""superstep_sec":$med%.4f,"superstep_best":$best%.4f,""" +
         f""""edges_per_sec":${folded / med}%.0f,"peak_heap_mb":$peakHeapMb,""" +
         f""""mem_gbps":$weather%.2f,"steal_sec":${steal1 - steal0}%.2f,"steal_frac":$stealFrac%.3f,""" +
-        f""""steps":$stepsJson,"steps_cpu":$stepsCpuJson,"steps_steal":$stepsStealJson,""" +
-        f""""steps_gc":$stepsGcJson,"steps_jit":$stepsJitJson,"classes_per_step":$classesPerStep%.0f,""" +
+        f""""steps":$stepsJson,""" +
         f""""up_main":$upMain%.2f,"up_session":$upSession%.2f,"up_cached":$upCached%.2f,"up_done":${up()}%.2f}"""
     phase("teardown-start")
     println(line)

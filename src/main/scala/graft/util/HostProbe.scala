@@ -1,16 +1,13 @@
 package graft.util
 
-/** Cheap host/process counters for per-superstep attribution on a shared VM.
+/** Stolen cpu time on a shared VM, for the bench harnesses.
   *
   * The bench host steals cpu and DRAM bandwidth from outside the guest on a
-  * minutes timescale; wall time alone cannot distinguish "the engine was
-  * slow" from "the hypervisor took the cpu" from "the process waited".
-  * These two counters close that gap: process cpu time (getrusage-backed via
-  * the JMX OperatingSystemMXBean) and stolen time for THIS process's pinned
-  * cpus (per-cpu rows of /proc/stat, column 8, USER_HZ=100). Both are one
-  * syscall-ish read per superstep — noise-free relative to multi-second
-  * steps — and both return -1 rather than throwing anywhere /proc or the
-  * platform bean is missing, so library callers never fail on exotic hosts.
+  * minutes timescale; wall time alone cannot tell "the engine was slow" from
+  * "the hypervisor took the cpu". [[stealSec]] reads stolen time for THIS
+  * process's pinned cpus (per-cpu rows of /proc/stat, column 8, USER_HZ=100)
+  * and returns -1 rather than throwing wherever /proc is missing, so callers
+  * never fail on exotic hosts.
   */
 object HostProbe {
 
@@ -58,50 +55,5 @@ object HostProbe {
           }
         } else stealOf(lines.head.trim.split("\\s+"))
       } finally src.close()
-    } catch { case _: Exception => -1.0 }
-
-  /** Cumulative cpu-seconds consumed by THIS process (all threads); -1 when
-    * the platform bean is unavailable.
-    */
-  def procCpuSec(): Double =
-    try
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean =>
-          val ns = os.getProcessCpuTime
-          if (ns < 0) -1.0 else ns / 1e9
-        case _ => -1.0
-      }
-    catch { case _: Exception => -1.0 }
-
-  /** Cumulative stop-the-world GC seconds across all collectors; -1 when
-    * unavailable.
-    */
-  def gcSec(): Double =
-    try {
-      var ms = 0L
-      val it = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.iterator()
-      while (it.hasNext) { val t = it.next().getCollectionTime; if (t > 0) ms += t }
-      ms / 1000.0
-    } catch { case _: Exception => -1.0 }
-
-  /** Loaded-class count — a steadily growing value across supersteps means
-    * the engine GENERATES classes per superstep (encoder/codegen churn),
-    * which keeps the JIT busy forever; -1 when unavailable.
-    */
-  def loadedClasses(): Double =
-    try
-      java.lang.management.ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount.toDouble
-    catch { case _: Exception => -1.0 }
-
-  /** Cumulative JIT compilation seconds (compiler-thread time; on a
-    * cpu-pinned JVM the compiler competes with compute for the same cpus,
-    * which round-5 step traces implicate in 8× step-to-step cpu variance);
-    * -1 when unavailable.
-    */
-  def jitSec(): Double =
-    try {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime / 1000.0
-      else -1.0
     } catch { case _: Exception => -1.0 }
 }

@@ -522,6 +522,29 @@ class GraphAlgoSpec extends GraftSuite {
     }
   }
 
+  test("dense-by-max build: one job packs the store and bounds every row's ids, weight <= 0 rows included") {
+    val rows = Seq((0L, 1L, 2.0), (1L, 3L, 1.0), (3L, 7L, 0.0), (5L, 2L, -1.0), (2L, 0L, 0.5))
+    val folded = spark.sparkContext.parallelize(rows, 3).toDF("src", "dst", "weight")
+    val ((g, ran), stored) = persistedBy(recorded(
+      LinkGraph.fromFoldedEdgeList(spark, folded, numBlocks = 2, idMode = LinkGraph.IdMode.DenseByMax)))
+    // n = max(id) + 1 over every row: id 7 comes from a weight-0 row
+    assert(g.numVertices == 8 && g.numEdges == 3)
+    assert(g.edges.collect().map(e => (e.src, e.dst, e.weight)).sorted.toSeq ==
+      Seq((0L, 1L, 2.0), (1L, 3L, 1.0), (2L, 0L, 0.5)))
+    // one job and no SQL execution: no cached frame, no bounds aggregate
+    assert(ran.jobs.length == 1 && ran.plans.isEmpty, s"${ran.jobs.length} jobs, ${ran.plans}")
+    assert(stored.keySet == Set(g.source.asInstanceOf[AdjacencySource.Keyed].store.edges.id), s"$stored")
+    g.unpersistAll()
+    for ((input, message) <- Seq(
+        Seq.empty[(Long, Long, Double)] -> "dense-by-max graph needs at least one edge",
+        Seq((0L, 1L, 1.0), (-2L, 1L, 0.0)) -> "dense-by-max ids must be non-negative")) {
+      val (e, left) = persistedBy(intercept[IllegalArgumentException](LinkGraph.fromFoldedEdgeList(
+        spark, input.toDF("src", "dst", "weight"), idMode = LinkGraph.IdMode.DenseByMax)))
+      assert(e.getMessage.contains(message), e.getMessage)
+      assert(left.isEmpty, s"a refused build left $left persisted")
+    }
+  }
+
   test("above the fold cap the build scans its input once and collects no raw pairs") {
     val rng = new scala.util.Random(29)
     val pairs = Seq.fill(500)((rng.nextInt(200).toLong * 3, rng.nextInt(200).toLong * 3))

@@ -119,9 +119,11 @@ class PageRankSpec extends GraftSuite {
 
   test("distributed superstep never moves the adjacency: shuffle volume is rank-sized") {
     // Dense-ish graph: avg degree 50, so edge volume >> vertex volume. If a
-    // superstep re-shuffled (or sort-merge-joined) the adjacency, per-superstep
-    // shuffle rows would be O(edges); the co-partitioned zipPartitions design
-    // bounds them by numBlocks·n pre-combined contribution rows.
+    // superstep re-shuffled (or sort-merge-joined) the adjacency, its shuffle
+    // rows would be O(edges); the co-partitioned zipPartitions design bounds
+    // them by numBlocks·n pre-combined contribution rows. The bounds are on
+    // the shuffle records Spark saw the run write, not on the engine's own
+    // counts.
     val n = 400
     val edges = DenseReference.randomEdges(n, 0.125, seed = 7)
     val g = under(graphOf(edges, numBlocks = 8), distributedOnly)
@@ -134,19 +136,81 @@ class PageRankSpec extends GraftSuite {
       .count()
     assert(misplaced == 0L, "adjPartsByBlock must be identity-partitioned by blockId")
 
-    val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 5)
-    val steady = out.metrics.drop(1) // first superstep includes layout builds
-    steady.foreach { m =>
-      val bound = g.numBlocks.toLong * n
-      assert(m.shuffleWriteRows <= bound,
-        s"superstep ${m.superstep}: ${m.shuffleWriteRows} shuffle rows > contribution bound $bound")
-      assert(m.shuffleWriteRows < numEdges / 2,
-        s"superstep ${m.superstep}: shuffle rows ${m.shuffleWriteRows} scale with edges ($numEdges) — adjacency moved")
-    }
+    val (out, ran) = recorded(PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 5))
+    // the whole run, its first superstep and layout builds included
+    val bound = g.numBlocks.toLong * n
+    assert(ran.shuffleRows <= bound, s"the run wrote ${ran.shuffleRows} shuffle rows > contribution bound $bound")
+    assert(ran.shuffleRows < numEdges / 2,
+      s"the run's ${ran.shuffleRows} shuffle rows scale with edges ($numEdges) — adjacency moved")
+    // the engine's counts are the contribution records among them
+    val counted = out.metrics.map(_.shuffleRows).sum
+    assert(counted > 0 && counted <= ran.shuffleRows, s"engine counted $counted of ${ran.shuffleRows} rows")
     // and it is still exactly the reference kernel
     val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 5)
     assertAllClose(ranksArray(g, out), want, 1e-12)
     out.free()
+    g.unpersistAll()
+  }
+
+  /** (superstep, residual, shuffle rows, shuffle bytes) of each superstep: the metrics without wall time. */
+  private def rows(o: graft.engine.PageRankOutcome): Seq[(Int, Double, Long, Long)] =
+    o.metrics.map(m => (m.superstep, m.residual, m.shuffleRows, m.shuffleBytes))
+
+  test("distributed supersteps count their own exchange: identical counts on every run, 0 on the driver") {
+    val n = 200
+    val g = graphOf(DenseReference.randomEdges(n, 0.05, seed = 13), numBlocks = 8)
+    val d = under(g, distributedOnly)
+    def runOf(view: LinkGraph) = {
+      val o = PageRank.run(view, tolerance = 0.0, maxIterations = 6)
+      val r = rows(o)
+      o.free()
+      r
+    }
+    val first = runOf(d)
+    assert(first.size == 6 && first.forall { case (_, _, r, b) => r > 0 && b > 0 }, first)
+    assert(runOf(d) == first)
+    // every contribution record carries at least one value, at most a block's
+    assert(first.forall { case (_, _, r, b) => b >= 8 * r && b <= 12 * r * d.blockSize }, first)
+    // the driver-local gather and the job gather shuffle nothing
+    val job = residentJob(g)
+    for ((tag, view) <- Seq("driver-local" -> g, "job gather" -> job)) {
+      val counts = runOf(view)
+      assert(counts.size == 6 && counts.forall { case (_, _, r, b) => r == 0 && b == 0 }, s"$tag: $counts")
+    }
+    Seq(d, job, g).foreach(_.unpersistAll())
+  }
+
+  test("a concurrent job in another group adds nothing to a run's superstep rows") {
+    val n = 200
+    val g = under(graphOf(DenseReference.randomEdges(n, 0.05, seed = 17), numBlocks = 8), distributedOnly)
+    val cfg = PageRankConfig(tolerance = 0.0, maxIterations = 8)
+    val quiet = new PageRankEngine(g, cfg).run()
+    val want = rows(quiet)
+    quiet.free()
+
+    val sc = spark.sparkContext
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.CountDownLatch(1)
+    @volatile var failure: Throwable = null
+    val other = new Thread(() => {
+      try {
+        sc.setJobGroup("graft.test.concurrent", "shuffles beside the run")
+        while (!stop.get) {
+          sc.parallelize(0 until 20000, 4).map(i => (i % 97, 1L)).reduceByKey(_ + _, 4).count()
+          done.incrementAndGet()
+          started.countDown()
+        }
+      } catch { case t: Throwable => failure = t; started.countDown() }
+    })
+    other.start()
+    assert(started.await(120, java.util.concurrent.TimeUnit.SECONDS))
+    val before = done.get
+    val busy = try new PageRankEngine(g, cfg).run() finally { stop.set(true); other.join() }
+    assert(failure == null, s"the concurrent job failed: $failure")
+    assert(done.get > before, "no concurrent job finished during the run")
+    assert(rows(busy) == want)
+    busy.free()
     g.unpersistAll()
   }
 
@@ -175,13 +239,21 @@ class PageRankSpec extends GraftSuite {
   test("slab budget flush: partial contribution slabs still sum to the exact kernel") {
     val n = 120
     val edges = DenseReference.randomEdges(n, 0.15, seed = 23)
-    // distributed regime; flush after EVERY adjacency part
-    val g = under(graphOf(edges, numBlocks = 6), ExecutionPolicy(driverBytes = 0L, taskBytes = 1L))
+    val base = graphOf(edges, numBlocks = 6)
+    // distributed regime; flush after every dst vertex that allocates a slab
+    val g = under(base, ExecutionPolicy(driverBytes = 0L, taskBytes = 1L))
     val out = PageRank.run(g, damping = 0.85, tolerance = 0.0, maxIterations = 6)
     val (want, _, _, _) = DenseReference.pagerank(n, edges, 0.85, 0.0, 6)
     assertAllClose(ranksArray(g, out), want, 1e-12)
-    out.free()
-    g.unpersistAll()
+    // the flushes ran: each one ships extra partial slabs
+    val d = under(base, distributedOnly)
+    val whole = PageRank.run(d, damping = 0.85, tolerance = 0.0, maxIterations = 6)
+    out.metrics.zip(whole.metrics).foreach { case (f, w) =>
+      assert(f.shuffleRows > w.shuffleRows,
+        s"superstep ${f.superstep}: ${f.shuffleRows} rows under taskBytes = 1, ${w.shuffleRows} under the default")
+    }
+    out.free(); whole.free()
+    Seq(g, d, base).foreach(_.unpersistAll())
   }
 
   test("dense-by-max id mode sizes the graph as max(id)+1 (original solver semantics)") {

@@ -125,7 +125,8 @@ class ResumeAndSourcesSpec extends GraftSuite {
     val props = graft.sources.IcebergLite.properties(dir, snaps.last)
     assert(props("superstep") == "4")
     assert(props("residual").toDouble > 0)
-    assert(props("metrics").contains("shuffleReadBytes"))
+    for (key <- Seq("superstep", "residual", "shuffleRows", "shuffleBytes", "wallMs"))
+      assert(("\"" + key + "\":").r.findAllMatchIn(props("metrics")).size == 2, s"$key: ${props("metrics")}")
     assert(CheckpointManager.committedSupersteps(dir) == Seq(2, 4))
     g.unpersistAll()
   }
@@ -279,6 +280,18 @@ class ResumeAndSourcesSpec extends GraftSuite {
     assert(Bench.forkKernelLeg(1, 10, 10, 1, "resident",
       env = Seq("KB_EDGES_PATH" -> "/no/such/path"), heap = "512m").isEmpty)
     assert(Bench.load1 > 0.0 || Bench.load1 == -1.0)
+  }
+
+  test("a kernel leg's JSON line parses into a LegRun") {
+    // the leg prints its line for graft.Bench to parse; scratch stays in a temp dir
+    val scratch = Files.createTempDirectory("graft-leg")
+    try {
+      val leg = Bench.forkKernelLeg(1, 200, 1000, 3, "resident",
+        env = Seq("SPARK_GRAFT_LOCAL_DIR" -> scratch.toString), heap = "512m")
+      assert(leg.isDefined, "the leg failed or printed no superstep_sec/folded_edges")
+      // a superstep this small rounds to 0 ms
+      assert(leg.get.superstepSec >= 0.0 && leg.get.foldedEdges > 0L, s"$leg")
+    } finally Files.walk(scratch).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
   }
 
   test("end-to-end: repo files → shared-pattern graph → pagerank probability simplex") {

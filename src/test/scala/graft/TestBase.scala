@@ -16,10 +16,11 @@ object TestSpark {
 
 /** What one body ran, as the listener bus saw it: the properties of each
   * job it started, its stages, how many of them wrote shuffle output (a
-  * driver-resident operator writes none) and the physical plan of each SQL
-  * execution.
+  * driver-resident operator writes none), the shuffle records they wrote in
+  * all and the physical plan of each SQL execution.
   */
-final case class Ran(jobs: Seq[java.util.Properties], stages: Int, shuffles: Int, plans: Seq[String])
+final case class Ran(
+    jobs: Seq[java.util.Properties], stages: Int, shuffles: Int, shuffleRows: Long, plans: Seq[String])
 
 abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -84,6 +85,7 @@ abstract class GraftSuite extends AnyFunSuite {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
     val shuffles = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleRows = new java.util.concurrent.atomic.AtomicLong
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
@@ -97,9 +99,13 @@ abstract class GraftSuite extends AnyFunSuite {
         if (groupOf(e.properties) == group) stages.add(e.stageInfo.stageId)
       // a stage that ran and wrote shuffle output (stages behind a cached
       // RDD are skipped; adaptive execution runs each exchange as its own job)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (stages.contains(e.stageInfo.stageId) && e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val written = e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
+        if (stages.contains(e.stageInfo.stageId) && written > 0) {
           shuffles.incrementAndGet()
+          shuffleRows.addAndGet(written)
+        }
+      }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
           plans.add(s.physicalPlanDescription)
@@ -115,7 +121,7 @@ abstract class GraftSuite extends AnyFunSuite {
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
       r
     } finally sc.removeSparkListener(listener)
-    (result, Ran(jobs.asScala.toSeq, stages.size, shuffles.get, plans.asScala.toSeq))
+    (result, Ran(jobs.asScala.toSeq, stages.size, shuffles.get, shuffleRows.get, plans.asScala.toSeq))
   }
 
   def assertAllClose(got: Array[Double], want: Array[Double], tol: Double = 1e-9): Unit = {
