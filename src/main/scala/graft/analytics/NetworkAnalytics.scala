@@ -19,10 +19,12 @@ import graft.model.ExecutionPolicy
   * Every percentile is EXACT with np.percentile's linear-interpolation rule
   * (never percentile_approx: it breaks 1e-6 parity), served by [[ValueDist]] —
   * ONE distribution build per (frame, column) answers every threshold, the
-  * median, and the CDF; a column too wide for the driver budget takes a
-  * two-phase ranked sum over distinct values, so no single task ever holds
-  * all n values (SQL `percentile` is one ObjectHashAggregate buffer: 8 GB in
-  * one task at 10⁹ vertices). NumPy std is population σ → `stddev_pop`, not
+  * median, the CDF and the Gini coefficient, each through one code path for
+  * both of its regimes. A column too wide for the driver budget is counted
+  * per task and merged per value range in one exchange, so no single task
+  * ever holds all n values (SQL `percentile` is one ObjectHashAggregate
+  * buffer: 8 GB in one task at 10⁹ vertices), and nothing is cached, pinned
+  * or left to release. NumPy std is population σ → `stddev_pop`, not
   * Spark's default sample stddev. Threshold-dependent aggregates run as two
   * phases (percentile scalars first, then the conditional agg with literal
   * thresholds) because SQL forbids nesting aggregates.
@@ -36,112 +38,21 @@ import graft.model.ExecutionPolicy
   */
 object NetworkAnalytics {
 
-  /** Gini coefficient of a column (pagerank.py:221-243):
-    * sort asc, G = 2·Σ(i·v_i)/(n·Σv) − (n+1)/n with 1-based ranks. Ties share
-    * equal v, so rank order within a tie group cannot change the sum.
+  /** Gini coefficient of a column (pagerank.py:221-243) as a one-row frame:
+    * [[ValueDist.gini]] of one [[ValueDist]] build (nulls dropped).
     */
   def gini(df: DataFrame, valueCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // Distributed global ranking (no single-partition window): range-partition
-    // by value, sort within partitions, then offset per-partition local ranks
-    // by the exclusive prefix of partition counts — Σ((off+j)·v) decomposes as
-    // Σ(j·v) + off·Σv per partition, so one pass computes everything.
-    val p = math.max(1, spark.sparkContext.defaultParallelism)
-    val sorted = df
-      .select(col(valueCol).cast("double").as("v"))
-      .repartitionByRange(p, $"v")
-      .sortWithinPartitions($"v")
-      .select($"v", spark_partition_id().as("pid"))
-      .as[(Double, Int)]
-    val perPartition = sorted
-      .mapPartitions { it =>
-        var pid = -1
-        var cnt = 0L
-        var s = 0.0
-        var iv = 0.0 // Σ (1-based local index · v)
-        it.foreach { case (v, id) =>
-          pid = id; cnt += 1; s += v; iv += cnt * v
-        }
-        if (cnt == 0) Iterator.empty else Iterator.single((pid, cnt, s, iv))
-      }
-      .collect()
-      .sortBy(_._1)
-    var off = 0L
-    var n = 0L
-    var sumV = 0.0
-    var sumIv = 0.0
-    perPartition.foreach { case (_, cnt, s, iv) =>
-      sumIv += iv + off.toDouble * s
-      sumV += s
-      off += cnt
-      n += cnt
-    }
-    val g = if (n == 0 || sumV == 0.0) 0.0
-    else 2.0 * sumIv / (n * sumV) - (n + 1.0) / n
-    Seq(g).toDF("gini")
-  }
-
-  /** Sorted distinct values with global cumulative counts, computed with the
-    * gini-style two-phase pattern (range-partition → local prefix sums →
-    * exclusive-prefix offsets) — NO single-partition window, no single-task
-    * ObjectHashAggregate holding all n values. Returns (frame of
-    * (__v, __c, __cum), total row count, release handle).
-    *
-    * The sorted frame is persisted before the offsets job because
-    * repartitionByRange SAMPLES its bounds per materialization — two
-    * evaluations could disagree on partition boundaries and corrupt the
-    * offsets. The release handle unpersists the sorted frame AND destroys the
-    * offsets broadcast — after calling it the returned frame must not be
-    * evaluated again.
-    */
-  private[analytics] def cumulativeCounts(df: DataFrame, valueCol: String): (DataFrame, Long, () => Unit) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val counts = df
-      .select(col(valueCol).cast("double").as("__v"))
-      .groupBy($"__v")
-      .agg(count(lit(1)).as("__c"))
-    val p = math.max(1, spark.sparkContext.defaultParallelism)
-    val sorted = counts
-      .repartitionByRange(p, $"__v")
-      .sortWithinPartitions($"__v")
-      .as[(Double, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partTotals = sorted
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var s = 0L
-        var any = false
-        it.foreach { case (_, c) => s += c; any = true }
-        if (any) Iterator.single((pid, s)) else Iterator.empty
-      }
-      .collect()
-      .sortBy(_._1)
-    val n = partTotals.map(_._2).sum
-    var acc = 0L
-    val offsets: Map[Int, Long] =
-      partTotals.map { case (pid, c) => val r = (pid, acc); acc += c; r }.toMap
-    val bo = spark.sparkContext.broadcast(offsets)
-    val cum = sorted
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var run = bo.value.getOrElse(pid, 0L)
-        it.map { case (v, c) => run += c; (v, c, run) }
-      }
-      .toDF("__v", "__c", "__cum")
-    (cum, n, () => { sorted.unpersist(); bo.destroy(); () })
+    Seq(ValueDist.of(df, Seq(valueCol)).head.gini).toDF("gini")
   }
 
   /** Exact NumPy-interpolation percentiles, one [[ValueDist]] build serving
     * all requested ps (see ValueDist for the regime split; no single task
     * ever holds all n values in either regime).
     */
-  def percentilesExact(df: DataFrame, valueCol: String, ps: Seq[Double]): Seq[Double] = {
-    val Seq(dist) = ValueDist.of(df, Seq(valueCol))
-    try dist.percentiles(ps)
-    finally dist.release()
-  }
+  def percentilesExact(df: DataFrame, valueCol: String, ps: Seq[Double]): Seq[Double] =
+    ValueDist.of(df, Seq(valueCol)).head.percentiles(ps)
 
   /** Exact percentile (linear interpolation, NumPy-equal), distributed. */
   def percentileOfExact(df: DataFrame, valueCol: String, p: Double): Double =
@@ -171,7 +82,6 @@ object NetworkAnalytics {
     val Seq(p90out, medOut) = distOut.percentiles(Seq(0.9, 0.5))
     val Seq(p90in, medIn) = distIn.percentiles(Seq(0.9, 0.5))
     val p95tot = distTot.percentile(0.95)
-    distOut.release(); distIn.release(); distTot.release()
 
     // per partition: out- and in-degree stats; above p90 out, in; isolated; above p95 total; imbalance sum
     val (_, partials) = degreePartials(graph)(() => (new StatCounter, new StatCounter, new Array[Double](5))) {
@@ -271,7 +181,6 @@ object NetworkAnalytics {
     // ONE distribution build serves all four thresholds + the median
     val Seq(dist) = ValueDist.of(joined, Seq("x"))
     val Seq(t90, t95, t99, medRisk) = dist.percentiles(Seq(0.9, 0.95, 0.99, 0.5))
-    dist.release()
 
     val aggDf = joined.agg(
       avg($"x").as("mean_risk"),
@@ -391,9 +300,8 @@ object NetworkAnalytics {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val Seq(dist) = ValueDist.of(joined, Seq("x"))
     val thr = dist.percentile(0.9)
-    val withCdf = joinCdf(joined, "x", dist)
+    val out = joinCdf(joined, "x", dist)
       .withColumnRenamed("pct_rank", "risk_percentile")
-    val out = withCdf
       .filter($"x" > lit(thr))
       .select(
         $"vid",
@@ -402,19 +310,10 @@ object NetworkAnalytics {
         when($"r0" > 0, $"x" / $"r0").otherwise(lit(1.0)).as("amplification_factor"),
         $"risk_percentile")
       .orderBy($"risk_score".desc, $"vid")
-    if (dist.isLocal) {
-      // result plan only references the (re-computable) join and a local CDF
-      // relation — drop the scratch cache now, consumption re-runs one cheap join
-      joined.unpersist(false)
-      out
-    } else {
-      // large regime: pin the (n/10-row) result so the cumulative cache can be
-      // freed; the pin is reclaimed by the ContextCleaner when unreferenced
-      val (pinned, _) = graft.graph.Lineage.pin(out)
-      dist.release()
-      joined.unpersist(false)
-      pinned
-    }
+    // the result re-runs the (cheap) join when read; the distribution's
+    // ranges hold no cache, so the scratch cache can go now
+    joined.unpersist(false)
+    out
   }
 
   /** hubs/authorities/central categories (pagerank.py:444-455): vertices above
@@ -427,15 +326,14 @@ object NetworkAnalytics {
       .join(ranks.select($"vid", $"value".as("score")), Seq("vid"), "left")
       .na.fill(0.0, Seq("score"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the result reads the cache (round 3 unpersisted it first, so every
+    // later consumption re-ran the degree⋈ranks join); the graph's
+    // unpersistAll releases it
+    graph.releaseOnUnpersist(() => joined.unpersist(false))
     // one distribution job answers all three thresholds
-    val Seq(dHub, dAuth, dCent) = ValueDist.of(joined, Seq("outDeg", "inDeg", "score"), graph.policy)
-    val hubThr = { val t = dHub.percentile(0.9); dHub.release(); t }
-    val authThr = { val t = dAuth.percentile(0.9); dAuth.release(); t }
-    val centThr = { val t = dCent.percentile(0.9); dCent.release(); t }
-    // pin the (≤ 3n/10-row) result BEFORE dropping the scratch cache — round 3
-    // unpersisted first, so every later consumption re-ran the degree⋈ranks
-    // join; the graph's unpersistAll releases the pin
-    val result = joined
+    val Seq(hubThr, authThr, centThr) =
+      ValueDist.of(joined, Seq("outDeg", "inDeg", "score"), graph.policy).map(_.percentile(0.9))
+    joined
       .select(
         $"vid", $"score".as("centrality_score"),
         $"outDeg".as("referrals_out"), $"inDeg".as("referrals_in"),
@@ -443,10 +341,7 @@ object NetworkAnalytics {
         ($"inDeg" > lit(authThr)).as("is_authority"),
         ($"score" > lit(centThr)).as("is_central"))
       .filter($"is_hub" || $"is_authority" || $"is_central")
-    val (pinned, free) = graft.graph.Lineage.pin(result)
-    graph.releaseOnUnpersist(free)
-    joined.unpersist(false)
-    pinned.orderBy($"vid")
+      .orderBy($"vid")
   }
 
   /** Band (quantile-trim) filter: keep rows with value inside the
@@ -510,26 +405,15 @@ object NetworkAnalytics {
       .orderBy($"rank")
   }
 
-  /** Empirical CDF percentile (pagerank.py:371): share of values <= v, ×100.
-    * Driver-local regime (the column's runs fit the default policy's driver
-    * budget, see [[ValueDist.of]]): broadcast join against a local CDF
-    * relation — zero persisted residue. Distributed regime: the two-phase
-    * ranked sum over distinct values (no single-partition window — round 1
-    * fed ~n distinct doubles through one task here); the result is pinned and
-    * the cumulative cache released before returning (round 2 leaked it for
-    * the session), so the only cluster state left is the result itself,
-    * reclaimed by the ContextCleaner when the frame is dropped.
+  /** Empirical CDF percentile (pagerank.py:371): share of values <= v, ×100,
+    * as a join against one [[ValueDist]] build's [[ValueDist.cdf]]: broadcast
+    * when the distribution is driver-local, else a plain join against its
+    * ranges (no single-partition window — round 1 fed ~n distinct doubles
+    * through one task here). Nothing is cached or pinned: the result is lazy
+    * and re-reads the distribution's shuffle output when evaluated.
     */
-  def percentileRank(df: DataFrame, valueCol: String): DataFrame = {
-    val Seq(dist) = ValueDist.of(df, Seq(valueCol))
-    val out = joinCdf(df, valueCol, dist)
-    if (dist.isLocal) out
-    else {
-      val (pinned, _) = graft.graph.Lineage.pin(out)
-      dist.release()
-      pinned
-    }
-  }
+  def percentileRank(df: DataFrame, valueCol: String): DataFrame =
+    joinCdf(df, valueCol, ValueDist.of(df, Seq(valueCol)).head)
 
   private def joinCdf(df: DataFrame, valueCol: String, dist: ValueDist): DataFrame = {
     val cdf = if (dist.isLocal) broadcast(dist.cdf) else dist.cdf

@@ -443,10 +443,20 @@ final class LinkGraph(
     * kept, isolated ones included, exactly the reference's dense slice
     * (original_pagerank/pagerank.py:185). Because vids are assigned ascending
     * by extId, the prefix is equivalently "the k smallest external ids".
+    *
+    * The prefix's store is [[edgeBatches]] filtered to src < k and dst < k
+    * (and positive weights, as [[LinkGraph.fromDenseWeighted]] keeps), one
+    * packed batch per edge partition in row order: no edge is decoded.
     */
   def inducedPrefix(k: Long): LinkGraph = {
     val kk = math.min(k, numVertices)
-    LinkGraph.fromDenseWeighted(spark, edges.filter($"src" < kk && $"dst" < kk), kk, policy = policy)
+    val batches = edgeBatches.map { e =>
+      val r = new LinkGraph.Rows(packed = true)
+      for (i <- 0 until e.rows.n if e.src(i) < kk && e.dst(i) < kk && e.rows.weight(i) > 0)
+        r.add((e.src(i) << 32) | e.dst(i), e.rows.weight(i))
+      LinkGraph.EdgeBatch(-1L, r.trimmed)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    LinkGraph.denseGraph(spark, batches, batches.map(_.rows.n.toLong).fold(0L)(_ + _), kk, 0, policy)
   }
 
   /** Release the owned store and every cache, broadcast and operator-output

@@ -26,7 +26,9 @@ import graft.sources.SkewedEdges
   */
 object KernelBench {
 
-  /** Single-threaded memory-streaming probe (~256 MB of long-stride reads):
+  /** Single-threaded memory-streaming probe (256 MB of long-stride reads, or
+    * a quarter of the heap when that is less, so a small leg's heap is set by
+    * its graph, not by the probe):
     * the cheapest observable proxy for this host's DRAM weather. The box is a
     * shared VM — neighbor tenants' bandwidth use is invisible to loadavg and
     * steal, yet it moved identical legs 2–4× in round-5 probes. One number
@@ -37,7 +39,8 @@ object KernelBench {
   @volatile private var sink = 0L // keeps the probe's loads live past the JIT
 
   private def memGbps(): Double = {
-    val n = 32 * 1024 * 1024 // 256 MB of longs — far past L3, pure DRAM reads
+    // 256 MB of longs — far past L3, pure DRAM reads
+    val n = math.min(32L * 1024 * 1024, Runtime.getRuntime.maxMemory / 4 / 8).toInt
     val a = new Array[Long](n)
     java.util.Arrays.fill(a, 0x9e3779b97f4a7c15L)
     var best = 0.0

@@ -230,35 +230,55 @@ class AnalyticsSpec extends GraftSuite {
     val cdfD = forced.cdf.collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     assert(cdfL.keySet == cdfD.keySet)
     cdfL.foreach { case (v, p) => assert(math.abs(cdfD(v) - p) < 1e-9, s"v=$v") }
-    forced.release()
-    local.release()
+    // each probe of the distributed regime is one job over the ranges' shuffle
+    // output, written once by the build: reading it again writes none
+    val (_, probe) = recorded(forced.percentiles(ps))
+    assert(probe.jobs.length == 1 && probe.shuffles == 0, s"${probe.jobs.length} jobs, ${probe.shuffles} shuffles")
+    val (_, read) = recorded(forced.cdf.collect())
+    assert(read.jobs.nonEmpty && read.shuffles == 0, s"reading the cdf wrote ${read.shuffles} shuffles")
   }
 
   test("percentile machinery leaves no cached state behind (round-2 leak fix)") {
     import graft.analytics.ValueDist
-    val df = (1 to 3000).map(i => (i.toLong, (i % 97).toDouble)).toDF("vid", "value")
-
-    // driver-local consumers: zero residue
-    val (_, leaked) = persistedBy {
-      NetworkAnalytics.percentileRank(df, "value").count()
-      NetworkAnalytics.riskStatistics(df, df).collect()
-      NetworkAnalytics.highRiskProviders(df, df).count()
-      NetworkAnalytics.highRiskPlan(df, df).count()
-    }
-    assert(leaked.isEmpty, s"leaked persistent RDDs: ${leaked.keySet}")
-
-    // distributed regime: release() must drop the cumulative cache
-    val (alive, left) = persistedBy {
-      val (dist, alive) = persistedBy {
+    val narrow = (1 to 3000).map(i => (i.toLong, (i % 97).toDouble)).toDF("vid", "value")
+    // unique doubles: each task's runs overflow its share of the default
+    // driverBytes, so the graph-less callers take the distributed regime
+    val wide = spark.range(0, 1L << 20, 1, 4).selectExpr("id as vid", "cast(id as double) / 8 as value")
+    assert(ValueDist.of(narrow, Seq("value")).head.isLocal && !ValueDist.of(wide, Seq("value")).head.isLocal)
+    for ((name, df) <- Seq("narrow" -> narrow, "wide" -> wide)) {
+      val (_, leaked) = persistedBy {
+        NetworkAnalytics.percentileRank(df, "value").count()
+        NetworkAnalytics.riskStatistics(df, df).collect()
+        NetworkAnalytics.highRiskProviders(df, df).count()
+        NetworkAnalytics.highRiskPlan(df, df).count()
+        NetworkAnalytics.percentilesExact(df, "value", Seq(0.5, 0.9))
+        NetworkAnalytics.gini(df, "value").collect()
         val Seq(dist) = ValueDist.of(df, Seq("value"), distributedOnly)
         dist.percentiles(Seq(0.5, 0.9))
-        dist
+        dist.cdf.count()
+        dist.gini
       }
-      dist.release()
-      alive
+      assert(leaked.isEmpty, s"$name: leaked persistent RDDs: ${leaked.keySet}")
     }
-    assert(alive.nonEmpty, "distributed regime should cache while alive")
-    assert(left.isEmpty, "release() must unpersist the cumulative frame")
+  }
+
+  test("keyProviders keeps its join cached until the graph's unpersistAll") {
+    // out-degrees 2,1,1,1,1 and in-degrees 3,1,1,0,1; vertex 3 has no rank (0):
+    // vertex 0 alone is above every p90
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L), (4L, 0L), (0L, 4L)).toDF("src", "dst")
+    val ranks = Seq((0L, 0.4), (1L, 0.2), (2L, 0.2), (4L, 0.2)).toDF("vid", "value")
+    for (policy <- Seq(ExecutionPolicy(), distributedOnly)) {
+      val v = LinkGraph.fromEdgeList(spark, edges, numBlocks = 2, policy = policy)
+      v.degreeTable.count()
+      val (kp, cached) = persistedBy(NetworkAnalytics.keyProviders(v, ranks))
+      assert(cached.size == 1, s"${v.policy}: ${cached.values.mkString(", ")}")
+      val rows = kp.collect().toSeq
+      assert(rows.map(_.getLong(0)) == Seq(0L), s"${v.policy}: $rows")
+      assert(cached.keySet.subsetOf(spark.sparkContext.getPersistentRDDs.keySet), "alive while the graph is")
+      assert(kp.collect().toSeq == rows)
+      v.unpersistAll()
+      assert(!cached.keySet.exists(spark.sparkContext.getPersistentRDDs.contains), "released by unpersistAll")
+    }
   }
 
   test("ValueDist: local exactly when every task's runs fit its share of driverBytes") {
@@ -285,7 +305,6 @@ class AnalyticsSpec extends GraftSuite {
         assert(d.n == rows.length)
         for (p <- Seq(0.0, 0.3, 0.5, 0.9, 1.0))
           assert(math.abs(d.percentile(p) - npPercentile(sorted, p * 100)) < 1e-9, s"share $share p=$p")
-        d.release()
       }
     }
   }
@@ -302,7 +321,6 @@ class AnalyticsSpec extends GraftSuite {
     val Seq(d) = ValueDist.of(wide, Seq("v"))
     assert(!d.isLocal, "a unique-double column must not be collected driver-locally")
     assert(d.n == n && math.abs(d.percentile(0.5) - (n - 1) / 2.0) < 1e-9)
-    d.release()
   }
 
   test("ValueDist: nulls, -0.0, NaN and spread ties group as Spark does, both regimes") {
@@ -332,7 +350,54 @@ class AnalyticsSpec extends GraftSuite {
         assert(same(pct, le * 100.0 / sorted.length), s"local=${d.isLocal} v=$v")
       }
     }
-    dist.release()
+  }
+
+  test("property: ValueDist's two regimes agree with each other and with NumPy") {
+    def same(a: Double, b: Double) = java.lang.Double.compare(a, b) == 0
+    def close(a: Double, b: Double, tol: Double) = same(a, b) || math.abs(a - b) <= tol
+    val ps = (0 to 20).map(_ / 20.0) ++ Seq(0.01, 0.333, 0.99)
+    for (seed <- 1 to 4) {
+      val rng = new scala.util.Random(seed)
+      val rows = 300 + rng.nextInt(300)
+      def maybe(v: => Double, nulls: Double): Option[Double] = if (rng.nextDouble() < nulls) None else Some(v)
+      val data = Seq.fill(rows)((
+        // nulls, ±0.0, NaN and heavy ties
+        maybe(Seq(0.0, -0.0, Double.NaN, 0.25, 1.0, 1.0, 3.5)(rng.nextInt(7)), 0.1),
+        // one value holds over half the rows: its splitters repeat
+        maybe(if (rng.nextDouble() < 0.6) 7.0 else rng.nextInt(40) / 4.0, 0.05),
+        // two values, fewer than the ranges
+        maybe(1.0 + rng.nextInt(2), 0.2),
+        // nearly all distinct
+        maybe(rng.nextDouble() * 100.0, 0.0)))
+      // 11 slices, every third emptied
+      val df = spark.sparkContext.parallelize(data, 11)
+        .mapPartitionsWithIndex((k, it) => if (k % 3 == 1) Iterator.empty else it)
+        .toDF("ties", "dominant", "two", "wide")
+      val cols = df.columns.toSeq
+      val local = ValueDist.of(df, cols)
+      val dist = ValueDist.of(df, cols, distributedOnly)
+      assert(local.forall(_.isLocal) && !dist.exists(_.isLocal))
+      for (((a, b), c) <- local.zip(dist).zip(cols)) {
+        val tag = s"seed $seed, $c"
+        // the driver reference: nulls dropped, −0.0 as 0.0, NaN last
+        val sorted = df.select(c).collect().filter(!_.isNullAt(0)).map(_.getDouble(0) + 0.0)
+        java.util.Arrays.sort(sorted)
+        assert(a.n == sorted.length && b.n == sorted.length, tag)
+        a.percentiles(ps).zip(b.percentiles(ps)).zip(ps).foreach { case ((x, y), p) =>
+          assert(same(x, y), s"$tag p=$p: $x != $y")
+          assert(close(x, npPercentile(sorted, p * 100), 1e-9), s"$tag p=$p: $x")
+        }
+        def cdf(d: ValueDist) = d.cdf.collect().map(r => (r.getDouble(0), r.getDouble(1))).sortBy(_._1)(Ordering.Double.TotalOrdering)
+        val (ca, cb) = (cdf(a), cdf(b))
+        assert(ca.length == cb.length && ca.zip(cb).forall { case (x, y) => same(x._1, y._1) && same(x._2, y._2) }, tag)
+        ca.foreach { case (v, pct) =>
+          val le = sorted.count(x => java.lang.Double.compare(x, v) <= 0)
+          assert(close(pct, le * 100.0 / sorted.length, 1e-12), s"$tag v=$v")
+        }
+        val want = refGini(sorted)
+        assert(close(a.gini, want, 1e-12) && close(b.gini, want, 1e-12), s"$tag: ${a.gini}, ${b.gini} vs $want")
+      }
+    }
   }
 
   test("network metrics mirror hand-computed values on a tiny graph") {

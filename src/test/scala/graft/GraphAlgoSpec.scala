@@ -110,6 +110,26 @@ class GraphAlgoSpec extends GraftSuite {
     g.unpersistAll()
   }
 
+  test("induced prefix keeps the edge view's in-prefix rows, in order, on every store") {
+    val rng = new scala.util.Random(83)
+    val pairs = Seq.fill(600)((rng.nextInt(90).toLong, rng.nextInt(90).toLong)).toDF("src", "dst")
+    val resident = LinkGraph.fromEdgeList(spark, pairs, numBlocks = 3)
+    val routed = LinkGraph.fromEdgeList(spark, pairs, numBlocks = 3, policy = distributedOnly)
+    // a frame that views no store: its batches are packed from the rows
+    val decoded = new LinkGraph(spark, resident.vertexDict, resident.edges.filter($"weight" > 0),
+      resident.numVertices, resident.numBlocks, resident.blockSize)
+    val graphs = Seq("resident" -> resident, "routed" -> routed, "decoded" -> decoded)
+    for ((name, g) <- graphs; k <- Seq(1L, 37L, 90L, 500L)) {
+      val want = g.edges.filter($"src" < k && $"dst" < k).collect().toSeq
+      val sub = g.inducedPrefix(k)
+      assert(sub.numVertices == math.min(k, g.numVertices), s"$name k=$k")
+      assert(sub.edges.collect().toSeq == want, s"$name k=$k")
+      assert(sub.numEdges == want.length && degreeRows(sub) == degreeReference(sub), s"$name k=$k")
+      sub.unpersistAll()
+    }
+    Seq(decoded, routed, resident).foreach(_.unpersistAll())
+  }
+
   test("triangle counting: 3 islands of 1 triangle each; chain has none") {
     val g = graphOf(islands)
     assert(TriangleCount.totalTriangles(g) == 3)

@@ -188,7 +188,6 @@ object MetricsPlan {
     val Seq(p90out, medOut) = distOut.percentiles(Seq(0.9, 0.5))
     val Seq(p90in, medIn) = distIn.percentiles(Seq(0.9, 0.5))
     val p95tot = distTot.percentile(0.95)
-    distOut.release(); distIn.release(); distTot.release()
 
     deg.agg(
       lit(n).as("total_providers"),
